@@ -479,8 +479,7 @@ object Bench {
     // parquet encode. Best of 3 like the parse metric: the first pass
     // additionally pays whole-stage codegen + JIT for the exchange/sort/
     // parquet paths (~3x on this container), which is startup cost, not
-    // throughput — ParseBench's stage decomposition tracks the same
-    // steady-state number.
+    // throughput.
     val clusteredSec = stableMin(6) { _ =>
       val t0 = System.nanoTime()
       graft.io.Ingest.ingestResp(spark, respDir.getPath, benchPath,

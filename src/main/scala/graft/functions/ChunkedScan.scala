@@ -55,21 +55,21 @@ object ChunkedScan {
     def advance(s: AnyRef, u: AnyRef): AnyRef
   }
 
+  /** Catalyst size estimate from which "auto" routing takes the chunked
+    * path: gate- and bench-sized frames keep the cheaper single-pass
+    * path, 100 TB scans get the chunked one. */
+  private val ChunkedThresholdBytes: Long = 2L << 30
+
   /** Routing: "on" / "off" / "auto" (auto = Catalyst size estimate at
-    * least `graft.scan.chunkedThresholdBytes`, default 2 GiB — gate- and
-    * bench-sized frames keep the cheaper single-pass path, 100 TB scans
-    * get the chunked one). */
-  def eligible(df: DataFrame): Boolean = {
-    val conf = df.sparkSession.conf
-    conf.get("graft.scan.chunked", "auto") match {
+    * least [[ChunkedThresholdBytes]]). */
+  def eligible(df: DataFrame): Boolean =
+    df.sparkSession.conf.get("graft.scan.chunked", "auto") match {
       case "on"  => true
       case "off" => false
       case _ =>
-        val threshold = conf.get("graft.scan.chunkedThresholdBytes",
-          (2L << 30).toString).toLong
-        df.queryExecution.optimizedPlan.stats.sizeInBytes >= threshold
+        df.queryExecution.optimizedPlan.stats.sizeInBytes >=
+          ChunkedThresholdBytes
     }
-  }
 
   /** Deliver entry rows to their chunk's partition: key IS the partition
     * id. Tiny payload (only boundary-spanning keys emit a row). */

@@ -138,21 +138,27 @@ object Ingest {
                   flattenTags: Seq[String] = Nil,
                   bucketNs: Long = DayNs,
                   saltBuckets: Int = 32,
-                  codec: String = DefaultCodec): Unit = {
-    val withBucket = flattenTags
-      .foldLeft(samples) { (d, k) =>
+                  codec: String = DefaultCodec): Unit =
+    writePrepared(flattenTagMap(samples, flattenTags), path, bucketNs,
+      saltBuckets, codec)
+
+  /** The flat layout schema of a frame carrying the `tags` map: the
+    * listed tag keys lifted into `tag_<k>` columns, the canonical `sname`
+    * derived, the map dropped. The `tags` map is NOT stored: `sname`
+    * carries the full tag set (the reference's series-id model,
+    * seriesparser.cpp:389), so the shuffle payload and the parquet schema
+    * stay flat — map<string,string> encoding was the most expensive part
+    * of both. readLayout reconstructs the map lazily; flattened `tag_<k>`
+    * columns carry the pushdown-relevant tags as real columns. */
+  private def flattenTagMap(df: DataFrame, flattenTags: Seq[String])
+      : DataFrame =
+    flattenTags
+      .foldLeft(df) { (d, k) =>
         d.withColumn(s"tag_$k", try_element_at(col("tags"), lit(k)))
       }
       .withColumn("sname",
         TsStore.snameOf(col("metric"), TsStore.tagStr(col("tags"))))
-    // The `tags` map is NOT stored: the canonical `sname` carries the
-    // full tag set (the reference's series-id model, seriesparser.cpp:389),
-    // so the shuffle payload and the parquet schema stay flat —
-    // map<string,string> encoding was the most expensive part of both.
-    // readLayout reconstructs the map lazily; flattened `tag_<k>` columns
-    // carry the pushdown-relevant tags as real columns.
-    writePrepared(withBucket.drop("tags"), path, bucketNs, saltBuckets, codec)
-  }
+      .drop("tags")
 
   /** Parse RESP session files and write the layout in one pipeline — the
     * full wire-to-storage ingest path (the analogue of the reference's
@@ -169,31 +175,6 @@ object Ingest {
     writePrepared(respFilesFlat(spark, inPath, flattenTags, minPartitions),
       outPath, bucketNs, saltBuckets, codec, exchange)
 
-  /** Shared write tail: input already carries
-    * `(metric, sname, ts, value [, event, tag_*])`.
-    *
-    * Two modes, both ending in per-file `(sname, ts)` sorted runs:
-    *
-    *  - `exchange = true` (writeLayout/compactLayout default): hash
-    *    partitioning on (metric, day) + a series salt: write parallelism
-    *    is NOT capped at the distinct (metric, day) count — a hot
-    *    metric-day splits across `saltBuckets` tasks by series hash —
-    *    with no range-sampling job, and each task writes contiguous
-    *    sorted series runs into its partition dirs. One file per
-    *    (metric, day, salt): the fully-clustered layout.
-    *
-    *  - `exchange = false` (the wire-ingest path): NO shuffle — each
-    *    parse task sorts ITS slice and writes one sorted run per
-    *    (metric, day) it touched. Parse -> sort -> parquet fuse into a
-    *    single stage; the 8M-sample exchange (serialize + spill + read
-    *    back, ~25% of the write wall) disappears. This is the LSM shape
-    *    and the honest analogue of the reference's ingest (per-series
-    *    append, no global sort at write time, input_log.cpp): sessions
-    *    arrive partitioned by connection, runs land sorted, and
-    *    [[compactLayout]] (the tree-maintenance analogue) re-clusters
-    *    runs into the salted layout. File count = tasks x touched
-    *    partitions, bounded at scale by routing/compaction cadence, not
-    *    by the writer. */
   /** Sidecar recording the layout's bucket width. Underscore-prefixed so
     * parquet directory listings skip it. The planner prunes `day=`
     * directories with `ts div bucketNs` — reading a layout with a
@@ -227,32 +208,34 @@ object Ingest {
     }
   }
 
+  /** Shared write tail: input already carries
+    * `(metric, sname, ts, value [, event, tag_*])`.
+    *
+    * Two modes, both ending in per-file `(sname, ts)` sorted runs:
+    *
+    *  - `exchange = true` (writeLayout/compactLayout default): hash
+    *    partitioning on (metric, day) + a series salt: write parallelism
+    *    is NOT capped at the distinct (metric, day) count — a hot
+    *    metric-day splits across `saltBuckets` tasks by series hash —
+    *    with no range-sampling job, and each task writes contiguous
+    *    sorted series runs into its partition dirs. One file per
+    *    (metric, day, salt): the fully-clustered layout.
+    *
+    *  - `exchange = false` (the wire-ingest path): NO shuffle — each
+    *    parse task sorts ITS slice and writes one sorted run per
+    *    (metric, day) it touched. Parse -> sort -> parquet fuse into a
+    *    single stage; the 8M-sample exchange (serialize + spill + read
+    *    back, ~25% of the write wall) disappears. This is the LSM shape
+    *    and the honest analogue of the reference's ingest (per-series
+    *    append, no global sort at write time, input_log.cpp): sessions
+    *    arrive partitioned by connection, runs land sorted, and
+    *    [[compactLayout]] (the tree-maintenance analogue) re-clusters
+    *    runs into the salted layout. File count = tasks x touched
+    *    partitions, bounded at scale by routing/compaction cadence, not
+    *    by the writer. */
   private[io] def writePrepared(df: DataFrame, path: String, bucketNs: Long,
                                 saltBuckets: Int, codec: String,
-                                exchange: Boolean = true,
-                                append: Boolean = false): Unit = {
-    if (append) {
-      // appending into an existing layout: the bucket width is part of
-      // the layout's identity — a mismatched fold would scatter rows
-      // into day directories the reader's pruning never visits, and
-      // writeBucketNs below would then stamp the NEW width over the old
-      // rows, hiding them from pruning forever
-      readBucketNs(df.sparkSession, path) match {
-        case Some(w) =>
-          require(w == bucketNs,
-            s"layout $path has bucketNs $w, fold requested $bucketNs")
-        case None =>
-          // no sidecar: either a fresh layout (anything goes) or a
-          // legacy pre-sidecar layout whose implicit width is DayNs
-          val p = new org.apache.hadoop.fs.Path(path)
-          val fs = p.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-          val hasData = fs.exists(p) &&
-            fs.listStatus(p).exists(_.getPath.getName.startsWith("metric="))
-          if (hasData) require(bucketNs == DayNs,
-            s"layout $path predates the bucket sidecar (implicit DayNs); " +
-            s"fold requested $bucketNs")
-      }
-    }
+                                exchange: Boolean = true): Unit = {
     val withDay =
       df.withColumn("day", expr(s"ts div ${bucketNs}L")) // exact integer div:
       // double division would round ts (> 2^53) near bucket boundaries
@@ -276,11 +259,11 @@ object Ingest {
       // attempt that gets abandoned per page; row-group min/max stats
       // (the pruning the reads rely on) don't involve the dictionary
       .option("parquet.enable.dictionary", "false")
-      .mode(if (append) "append" else "overwrite")
+      .mode("overwrite")
       .parquet(path)
-    // written after the parquet commit (overwrite clears the directory;
-    // append just verified the width above), like writeIvf's centroids:
-    // reader and writer can never disagree on the bucket width
+    // written after the parquet commit (overwrite clears the directory),
+    // like writeIvf's centroids: reader and writer can never disagree on
+    // the bucket width
     writeBucketNs(df.sparkSession, path, bucketNs)
   }
 
@@ -301,18 +284,12 @@ object Ingest {
     val eventCol =
       if (raw.columns.contains("event")) col("event")
       else lit(null).cast("string").as("event")
-    // Tags are reconstructed from the canonical sname (exact inverse of
-    // tagStr: space-separated k=v pairs, '=' split at first occurrence
-    // — str_to_map splits each pair with limit 2, like SeriesKey.parse).
-    // Queries that never touch `tags` (flattened-tag filters, aggregates)
-    // prune the projection away entirely.
+    // Tags are reconstructed from the canonical sname. Queries that never
+    // touch `tags` (flattened-tag filters, aggregates) prune the
+    // projection away entirely.
     val tagsCol =
       if (raw.columns.contains("tags")) col("tags")
-      else when(instr(col("sname"), " ") > 0,
-          str_to_map(expr("substring(sname, instr(sname, ' ') + 1)"),
-            lit(" "), lit("=")))
-        .otherwise(map().cast("map<string,string>"))
-        .as("tags")
+      else TsStore.tagsOf(col("sname")).as("tags")
     // flattened tag_<k> columns ride along: the planner routes `where`
     // predicates to them (parquet pushdown) instead of the reconstructed
     // map; projections that don't filter on tags prune them away
@@ -357,13 +334,7 @@ object Ingest {
     // pushdown columns on the way
     val flat =
       if (raw.columns.contains("sname")) raw
-      else flattenTags
-        .foldLeft(raw) { (d, k) =>
-          d.withColumn(s"tag_$k", try_element_at(col("tags"), lit(k)))
-        }
-        .withColumn("sname",
-          TsStore.snameOf(col("metric"), TsStore.tagStr(col("tags"))))
-        .drop("tags")
+      else flattenTagMap(raw, flattenTags)
     writePrepared(flat, outPath, width, saltBuckets, codec)
   }
 
@@ -487,12 +458,8 @@ object Ingest {
     spark.read.parquet(layoutPath)
       .select(col("metric"), col("sname"))
       .dropDuplicates("sname")
-      .withColumn("tagstr", tagstr)
-      .select(col("metric"),
-        when(length(col("tagstr")) > 0,
-          str_to_map(col("tagstr"), lit(" "), lit("=")))
-          .otherwise(map().cast("map<string,string>")).as("tags"),
-        col("tagstr"))
+      .select(col("metric"), TsStore.tagsOf(col("sname")).as("tags"),
+        tagstr.as("tagstr"))
       .write.mode("overwrite").parquet(seriesPath)
   }
 }

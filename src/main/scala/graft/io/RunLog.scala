@@ -401,8 +401,8 @@ object RunLog {
           + s", fold called with [${flattenTags.mkString(",")}]")
       }
       // bucket-width agreement, checked BEFORE anything is staged or
-      // written (the fold output is now generated out-of-place, so the
-      // append-mode check inside writePrepared no longer guards this)
+      // written: a mismatched fold would scatter rows into day
+      // directories the reader's pruning never visits
       Ingest.readBucketNs(spark, layoutPath) match {
         case Some(w) => require(w == bucketNs,
           s"layout $layoutPath has bucketNs $w, fold requested $bucketNs")
@@ -548,11 +548,7 @@ object RunLog {
   def toStore(spark: SparkSession, runsPath: String,
               flattenTags: Seq[String] = Nil): TsStore = {
     val raw = readRuns(spark, runsPath, flattenTags)
-    val tagsCol = when(instr(col("sname"), " ") > 0,
-        str_to_map(expr("substring(sname, instr(sname, ' ') + 1)"),
-          lit(" "), lit("=")))
-      .otherwise(map().cast("map<string,string>"))
-      .as("tags")
+    val tagsCol = TsStore.tagsOf(col("sname")).as("tags")
     val tagCols = raw.columns.filter(_.startsWith("tag_")).toSeq.map(col)
     new TsStore(raw.select(Seq(col("metric"), tagsCol, col("ts"),
       col("value"), col("event"), col("sname")) ++ tagCols: _*))

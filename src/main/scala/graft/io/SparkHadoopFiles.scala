@@ -9,7 +9,7 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * `sc.binaryFiles` wraps every file in a `CombineFileInputFormat` split
   * plus a `PortableDataStream` indirection; measured end-to-end on the
-  * ingest bench (ParseBench) that machinery costs up to 17x over simply
+  * RESP parse stage that machinery costs up to 17x over simply
   * opening the file and `readFully`-ing it. Since the driver lists the
   * files anyway, this does exactly that: list on the driver, parallelize
   * the (path, length) pairs, open via the Hadoop FS API in each task —

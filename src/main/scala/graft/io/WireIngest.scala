@@ -67,122 +67,122 @@ final class WireIngest(spoolDir: File, tcpPort: Int = 0, udpPort: Int = 0,
       StandardCopyOption.ATOMIC_MOVE)
 
   // --- TCP: session file per connection ---------------------------------
-  // The stream is validated INLINE with a resumable parser (strict mode:
-  // empty lines are errors, akumulid issue #94); on a protocol error the
-  // handler answers the reference's `-PARSER <err>\r\n` line on the
-  // socket (protocolparser.cpp error_repr) and keeps only the samples
-  // parsed BEFORE the bad entry — the spool receives validated bytes
-  // only, so downstream batch/stream consumers never see the bad tail.
-  private def handleConn(sock: Socket): Unit =
-    if (protocol == WireIngest.OpenTsdb) handleConnOpenTsdb(sock)
-    else handleConnResp(sock)
+  // The stream is validated INLINE (RESP: a resumable strict-mode parser
+  // that rejects empty lines, as akumulid does; OpenTSDB: line by line);
+  // on a protocol error the handler answers the protocol's error line on
+  // the socket and keeps only the samples validated BEFORE the bad entry
+  // — the spool receives validated bytes only, so downstream batch/stream
+  // consumers never see the bad tail.
+  private def handleConn(sock: Socket): Unit = protocol match {
+    // reference's `-PARSER <err>\r\n` line (protocolparser.cpp error_repr)
+    case WireIngest.Resp =>
+      session(sock, "tcp", m => s"-PARSER $m\r\n", "internal error")(respFeed)
+    case WireIngest.OpenTsdb =>
+      session(sock, "opentsdb", m => s"error: $m\n", "internal")(
+        openTsdbFeed(sock, _))
+  }
 
-  private def handleConnResp(sock: Socket): Unit = {
-    val tmp = Files.createTempFile(tmpDir.toPath, "tcp", ".part")
+  /** One TCP session, shared by both protocols: reads the socket, hands
+    * each run of complete lines to the protocol's `feed` (which spools
+    * what it validated to `out`), and bounds the carried partial line.
+    * Every exit — clean close, protocol error, connection reset, an
+    * unforeseen throw — closes the spool file and publishes it under
+    * `kind` if anything was spooled (the validated prefix, like the
+    * reference's WAL retaining points written before the error), else
+    * deletes it. `reply` frames the error line sent back; `internal`
+    * labels an unforeseen throw in it. */
+  private def session(sock: Socket, kind: String, reply: String => String,
+                      internal: String)(
+      feed: BufferedOutputStream => Array[Byte] => Unit): Unit = {
+    val tmp = Files.createTempFile(tmpDir.toPath, kind, ".part")
     val out = new BufferedOutputStream(new FileOutputStream(tmp.toFile), 1 << 16)
-    val cursor = new LineProtocol.RespCursor[Unit](
-      (_, _, _, _) => (), strict = true)
-    var spooled = false
-    // bytes received but not yet decoded+fed ('\n' is ASCII, so cutting
-    // at the last newline is UTF-8 safe)
-    var tail = Array.emptyByteArray
-
-    def drain(): Unit =
-      while (cursor.step()) while (cursor.hasQueued) cursor.poll()
-    /** Feed `bs`, then spool the prefix the parser consumed (everything
-      * but the suspended entry's text, which is re-spooled once it
-      * completes on a later feed). */
-    def feed(bs: Array[Byte]): Unit = {
-      val before = cursor.pending
-      cursor.append(new String(bs, java.nio.charset.StandardCharsets.UTF_8))
-      // spool in finally: on a protocol error the cursor rewinds to the
-      // bad entry's start, so entries validated earlier in this same
-      // chunk still reach the spool before the error propagates
-      try drain() finally {
-        // consumed this round = (old carry + chunk) minus the new carry;
-        // carries start at line boundaries so the re-encode is exact
-        val consumed = (before + new String(bs,
-          java.nio.charset.StandardCharsets.UTF_8))
-          .dropRight(cursor.pending.length)
-        if (consumed.nonEmpty) {
-          out.write(consumed.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          spooled = true
-        }
-      }
-    }
-
+    def send(msg: String): Unit =
+      try sock.getOutputStream.write(
+        reply(msg).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      catch { case _: java.io.IOException => () }
     try {
-      val in = sock.getInputStream
-      val buf = new Array[Byte](1 << 16)
-      var n = in.read(buf)
-      while (n > 0) {
-        val chunk = tail ++ java.util.Arrays.copyOf(buf, n)
-        var cut = chunk.length - 1
-        while (cut >= 0 && chunk(cut) != '\n') cut -= 1
-        if (cut >= 0) {
-          feed(java.util.Arrays.copyOf(chunk, cut + 1))
-          tail = java.util.Arrays.copyOfRange(chunk, cut + 1, chunk.length)
-        } else tail = chunk
-        // bound the carry: a newline-less stream would otherwise grow
-        // (and re-copy) `tail` without limit
-        if (tail.length > LineProtocol.MaxCarryBytes)
-          throw LineProtocol.ProtocolParseException(
-            s"line exceeds ${LineProtocol.MaxCarryBytes} bytes")
-        n = in.read(buf)
+      try {
+        val onLines = feed(out)
+        val in = sock.getInputStream
+        val buf = new Array[Byte](1 << 16)
+        // bytes received but not yet handed on ('\n' is ASCII, so
+        // cutting at the last newline is UTF-8 safe)
+        var tail = Array.emptyByteArray
+        var n = in.read(buf)
+        while (n > 0) {
+          val chunk = tail ++ java.util.Arrays.copyOf(buf, n)
+          var cut = chunk.length - 1
+          while (cut >= 0 && chunk(cut) != '\n') cut -= 1
+          if (cut >= 0) {
+            onLines(java.util.Arrays.copyOf(chunk, cut + 1))
+            tail = java.util.Arrays.copyOfRange(chunk, cut + 1, chunk.length)
+          } else tail = chunk
+          // bound the carry: a newline-less stream would otherwise grow
+          // (and re-copy) `tail` without limit
+          if (tail.length > LineProtocol.MaxCarryBytes)
+            throw LineProtocol.ProtocolParseException(
+              s"line exceeds ${LineProtocol.MaxCarryBytes} bytes")
+          n = in.read(buf)
+        }
+        // connection closed cleanly: an incomplete trailing entry — a
+        // partial line left in `tail` (no terminator arrived) or an entry
+        // suspended mid-way across complete lines — is discarded
+        // SILENTLY, no error and no data, like the reference's parser
+        // coroutine just ending at stream EOF
+        // (functests/test_incomplete_write.py case 2: "No error message
+        // expected because the write is incomplete"). The suspended text
+        // was never spooled, so nothing torn reaches consumers.
+      } catch {
+        case e: LineProtocol.ProtocolParseException => send(e.msg)
+        case _: java.io.IOException =>
+          // connection reset / server crash mid-session: keep the
+          // validated prefix — test_kill.py restarts after SIGKILL and
+          // reads back whatever arrived before the crash
+          ()
+        case scala.util.control.NonFatal(e) =>
+          // defense in depth: the parser layer normalizes its errors to
+          // ProtocolParseException (fuzz-tested), but an unforeseen throw
+          // must degrade to the error-line contract, never a dead thread
+          send(s"$internal: ${e.getClass.getSimpleName}")
       }
-      // connection closed cleanly: an incomplete trailing entry — a
-      // partial line left in `tail` (no terminator arrived) or an entry
-      // suspended mid-way across complete lines — is discarded SILENTLY,
-      // no error and no data, like the reference's parser coroutine just
-      // ending at stream EOF (functests/test_incomplete_write.py case 2:
-      // "No error message expected because the write is incomplete").
-      // The suspended text was never spooled, so nothing torn reaches
-      // consumers; everything validated before it is published.
       out.close()
-      if (spooled) publish(tmp, "tcp") else Files.deleteIfExists(tmp)
-    } catch {
-      case e: LineProtocol.ProtocolParseException =>
-        try sock.getOutputStream.write(
-          s"-PARSER ${e.msg}\r\n".getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
-        catch { case _: java.io.IOException => () }
-        out.close()
-        // keep the validated prefix (reference: WAL retains points
-        // written before the error)
-        if (spooled) publish(tmp, "tcp") else Files.deleteIfExists(tmp)
-      case _: java.io.IOException =>
-        // connection reset / server crash mid-session: keep the validated
-        // prefix, like the reference's WAL — test_kill.py restarts after
-        // SIGKILL and reads back whatever arrived before the crash. The
-        // suspended entry's text was never spooled, so no torn sample can
-        // surface after recovery.
-        out.close()
-        if (spooled) publish(tmp, "tcp") else Files.deleteIfExists(tmp)
-      case scala.util.control.NonFatal(e) =>
-        // defense in depth: the parser layer normalizes its errors to
-        // ProtocolParseException (fuzz-tested), but an unforeseen throw
-        // must degrade to the -PARSER contract, never a dead thread
-        try sock.getOutputStream.write(
-          s"-PARSER internal error: ${e.getClass.getSimpleName}\r\n"
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        catch { case _: java.io.IOException => () }
-        out.close()
-        if (spooled) publish(tmp, "tcp") else Files.deleteIfExists(tmp)
+      if (Files.size(tmp) > 0) publish(tmp, kind) else Files.deleteIfExists(tmp)
     } finally { conns.remove(sock); sock.close() }
   }
 
-  // --- OpenTSDB telnet over TCP (reference: the second TCPAcceptor on
-  // port 4242, protocolparser.cpp:690-965): line-oriented and stateless.
-  // `put` lines are validated and spooled; stats/version get the
-  // reference's canned responses; rollup/histogram/help/dropcaches are
-  // ignored; an unknown command answers `error: <msg>` and closes with
-  // the validated prefix kept.
-  private def handleConnOpenTsdb(sock: Socket): Unit = {
-    val tmp = Files.createTempFile(tmpDir.toPath, "tsdb", ".part")
-    val out = new BufferedOutputStream(new FileOutputStream(tmp.toFile), 1 << 16)
-    var spooled = false
-    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+  /** RESP: feed each chunk to the connection's resumable parser, then
+    * spool the prefix it consumed (everything but a suspended entry's
+    * text, which is re-spooled once it completes on a later chunk). */
+  private def respFeed(out: BufferedOutputStream): Array[Byte] => Unit = {
+    val cursor = new LineProtocol.RespCursor[Unit](
+      (_, _, _, _) => (), strict = true)
+    bs => {
+      val before = cursor.pending
+      val text = new String(bs, java.nio.charset.StandardCharsets.UTF_8)
+      cursor.append(text)
+      // spool in finally: on a protocol error the cursor rewinds to the
+      // bad entry's start, so entries validated earlier in this same
+      // chunk still reach the spool before the error propagates
+      try while (cursor.step()) while (cursor.hasQueued) cursor.poll()
+      finally {
+        // consumed this round = (old carry + chunk) minus the new carry;
+        // carries start at line boundaries so the re-encode is exact
+        val consumed = (before + text).dropRight(cursor.pending.length)
+        if (consumed.nonEmpty)
+          out.write(consumed.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
+    }
+  }
 
+  // OpenTSDB telnet (reference: the second TCPAcceptor on port 4242,
+  // protocolparser.cpp:690-965): line-oriented and stateless. `put` lines
+  // are validated and spooled; stats/version get the reference's canned
+  // responses; rollup/histogram/help/dropcaches are ignored; an unknown
+  // command answers `error: <msg>` and closes with the validated prefix
+  // kept.
+  private def openTsdbFeed(sock: Socket, out: BufferedOutputStream)
+      : Array[Byte] => Unit = {
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
     def handleLine(line: String): Unit = {
       val cmd = line.trim.takeWhile(!_.isWhitespace)
       cmd match {
@@ -199,49 +199,10 @@ final class WireIngest(spoolDir: File, tcpPort: Int = 0, udpPort: Int = 0,
           // known-no-op commands, throws on unknown commands
           if (LineProtocol.parseOpenTsdb(line).nonEmpty) {
             out.write(line.getBytes(utf8)); out.write('\n')
-            spooled = true
           }
       }
     }
-
-    var tail = Array.emptyByteArray
-    try {
-      val in = sock.getInputStream
-      val buf = new Array[Byte](1 << 16)
-      var n = in.read(buf)
-      while (n > 0) {
-        val chunk = tail ++ java.util.Arrays.copyOf(buf, n)
-        var cut = chunk.length - 1
-        while (cut >= 0 && chunk(cut) != '\n') cut -= 1
-        if (cut >= 0) {
-          new String(chunk, 0, cut + 1, utf8).linesIterator.foreach(handleLine)
-          tail = java.util.Arrays.copyOfRange(chunk, cut + 1, chunk.length)
-        } else tail = chunk
-        if (tail.length > LineProtocol.MaxCarryBytes)
-          throw LineProtocol.ProtocolParseException(
-            s"line exceeds ${LineProtocol.MaxCarryBytes} bytes")
-        n = in.read(buf)
-      }
-      // an unterminated final line is an incomplete write: discarded
-      // silently, same contract as the RESP handler above
-      out.close()
-      if (spooled) publish(tmp, "opentsdb") else Files.deleteIfExists(tmp)
-    } catch {
-      case e: LineProtocol.ProtocolParseException =>
-        try sock.getOutputStream.write(s"error: ${e.msg}\n".getBytes(utf8))
-        catch { case _: java.io.IOException => () }
-        out.close()
-        if (spooled) publish(tmp, "opentsdb") else Files.deleteIfExists(tmp)
-      case _: java.io.IOException =>
-        out.close()
-        if (spooled) publish(tmp, "opentsdb") else Files.deleteIfExists(tmp)
-      case scala.util.control.NonFatal(e) =>
-        try sock.getOutputStream.write(
-          s"error: internal: ${e.getClass.getSimpleName}\n".getBytes(utf8))
-        catch { case _: java.io.IOException => () }
-        out.close()
-        if (spooled) publish(tmp, "opentsdb") else Files.deleteIfExists(tmp)
-    } finally { conns.remove(sock); sock.close() }
+    bs => new String(bs, utf8).linesIterator.foreach(handleLine)
   }
 
   private val tcpThread = new Thread(() => {

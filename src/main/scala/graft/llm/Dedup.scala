@@ -1229,54 +1229,65 @@ object Dedup {
 
   /** Connected components of a near-dup pair graph: `(node, component)`
     * with `component` = the smallest id reachable from the node over the
-    * pair edges. The step a training-data pipeline runs after pair
+    * pair edges, in the id type's own ordering; both columns keep the
+    * input's id type. The step a training-data pipeline runs after pair
     * generation: a transitive family of near-dups collapses to ONE
     * cluster, not a tangle of pairwise drops.
     *
-    * Long-id graphs (every production caller) run alternating
-    * large-star/small-star contraction (Kiveris et al., SoCC'14) on
-    * co-partitioned RDDs — rounds grow with log of the component
-    * structure, NOT its diameter. The r14 neighbor-min + pointer-jump
-    * loop was measured needing rounds ∝ diameter under random id
-    * labeling (585–927 simulated rounds on a 2,000-node random-id path;
-    * the real sf0.1 mutual-kNN graph used 29 of maxIter=30) — a silent
-    * wrong answer waiting at 100 TB. Star contraction converges in ~10
-    * rounds on the same graphs, and BOTH paths now THROW on
-    * non-convergence instead of returning split components.
+    * One algorithm for every id type: alternating large-star/small-star
+    * contraction (Kiveris et al., SoCC'14, [[ccLong]]) on co-partitioned
+    * RDDs — rounds grow with log of the component structure, NOT its
+    * diameter, and non-convergence within `maxIter` THROWS instead of
+    * returning split components. Long ids (every production caller)
+    * run it directly. Any other id type is first mapped to dense Longs
+    * in id order (sorted distinct ids numbered by position), so the Long
+    * minimum IS the type's minimum, and mapped back afterwards.
     * State per round is only (Long, Long) edge pairs on a fixed
-    * HashPartitioner — no driver-side graph, no unbounded collect; the
-    * generic-id DataFrame fallback keeps
-    * [[graft.functions.Lineage.barrier]] to cut iterative lineage and
-    * origin statistics. Nodes appearing in no pair are absent (their
-    * component is themselves). */
+    * HashPartitioner — no driver-side graph, no unbounded collect.
+    * Null ids carry no connectivity and are dropped. Nodes appearing in
+    * no pair are absent (their component is themselves). */
   def connectedComponents(pairs: DataFrame, aCol: String = "a",
                           bCol: String = "b", maxIter: Int = 50): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    // id-typed dispatch (r14): Long ids (every production caller:
-    // doc_id / vec_id graphs) run the co-partitioned RDD star loop —
-    // 2 narrow-row shuffles and ONE action per round, no Catalyst
-    // re-planning, no stats-barrier round-trip, and (r15) rounds that
-    // scale with log of the structure instead of its diameter.
-    // Non-long id graphs keep the DataFrame label-propagation loop
-    // below (generic comparison/min semantics), which now fails loudly
-    // if its diameter-bound rounds run out.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     if (pairs.schema(aCol).dataType == LongType &&
         pairs.schema(bCol).dataType == LongType)
       ccLong(pairs, aCol, bCol, maxIter)
-    else ccDataFrame(pairs, aCol, bCol, maxIter)
+    else {
+      // materialized once: the dictionary and the encoded edges must see
+      // the same pair set, and the upstream pair lineage must not re-run
+      val edges = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
+        .localCheckpoint()
+      val ids = edges.select(col("a").as("id"))
+        .union(edges.select(col("b").as("id")))
+        .where(col("id").isNotNull).distinct().orderBy(col("id"))
+      val dict = pairs.sparkSession.createDataFrame(
+        ids.rdd.zipWithIndex().map { case (r, i) => Row(r.get(0), i) },
+        StructType(Seq(StructField("id", ids.schema("id").dataType),
+          StructField("rank", LongType)))).localCheckpoint()
+      def keyed(id: String, rank: String) =
+        dict.select(col("id").as(id), col("rank").as(rank))
+      // inner joins drop null ids, like the Long path
+      val encoded =
+        edges.join(keyed("a", "ra"), "a").join(keyed("b", "rb"), "b")
+      ccLong(encoded, "ra", "rb", maxIter)
+        .join(keyed("n", "node"), "node")
+        .join(keyed("c", "component"), "component")
+        .select(col("n").as("node"), col("c").as("component"))
+    }
   }
 
-  /** Round count of the most recent [[ccLong]]/[[ccDataFrame]] call —
-    * spec observability for the convergence-rate contract (the
+  /** Round count of the most recent [[connectedComponents]] call (star
+    * rounds) — spec observability for the convergence-rate contract (the
     * pathological-diameter spec pins star contraction's round count). */
   private[graft] val lastCcRounds =
     new java.util.concurrent.atomic.AtomicInteger(-1)
 
   /** Long-id connected components by alternating LARGE-STAR/SMALL-STAR
     * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14) on co-partitioned RDDs. Same fixpoint as
-    * [[ccDataFrame]]: `component` = the smallest reachable id over the
-    * pair edges, one row per node appearing in any pair.
+    * and Beyond", SoCC'14) on co-partitioned RDDs: `component` = the
+    * smallest reachable id over the pair edges, one row per node
+    * appearing in any pair.
     *
     * Why stars and not label propagation: neighbor-min + pointer-jump
     * (the r14 shape) needs rounds ∝ effective diameter under random id
@@ -1406,63 +1417,6 @@ object Dedup {
     nodes.unpersist(blocking = false)
     edges.unpersist(blocking = false)
     out
-  }
-
-  /** DataFrame connected-components loop — the generic-id path (and the
-    * shape [[ccLong]] mirrors). r14: the neighbor-min is FUSED with the
-    * self-label merge — the old shape joined labels against a separate
-    * per-neighbor min frame (edges⋈labels → groupBy(u) → labels⋈prop,
-    * two joins + one agg); unioning the node's own label into the
-    * message stream computes the same min(l(u), min over v in N(u) of
-    * l(v)) with ONE join and ONE aggregation (OptProbe interleaved A/B
-    * at sf0.1: ~15-20% per-round wall cut, identical signatures and
-    * round counts on both gate graph shapes). A double pointer jump per
-    * round was tried and REJECTED: without a materialization between
-    * jumps the round subtree executes 4x (self-joins do not share
-    * un-materialized subtrees) and measured walls roughly doubled. */
-  private def ccDataFrame(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int): DataFrame = {
-    import graft.functions.Lineage.barrier
-    val sym = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .union(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
-    val edges = barrier(sym)
-    var labels = barrier(edges.groupBy(col("u"))
-      .agg(min(col("v")).as("mn"))
-      .select(col("u").as("node"), least(col("u"), col("mn")).as("label")))
-    var prevSig: Option[(Long, Long)] = None
-    var iter = 0
-    var done = false
-    while (iter < maxIter && !done) {
-      val msgs = edges
-        .join(labels.withColumnRenamed("node", "v"), "v")
-        .select(col("u"), col("label"))
-        .union(labels.select(col("node").as("u"), col("label")))
-      val merged = msgs.groupBy(col("u")).agg(min(col("label")).as("label"))
-        .withColumnRenamed("u", "node")
-      // pointer jump: l(u) <- l(l(u)) (labels are node ids, so the label
-      // table joins against itself keyed by label)
-      def jump(df: DataFrame): DataFrame =
-        df.join(df.select(col("node").as("label"), col("label").as("ll")),
-            Seq("label"), "left")
-          .select(col("node"),
-            least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
-      val jumped = barrier(jump(merged))
-      // fixpoint when the (count, content-hash) signature repeats —
-      // bit_xor: order-independent and immune to ANSI long overflow
-      val sig = jumped
-        .agg(count(lit(1)), bit_xor(xxhash64(col("node"), col("label")))).head()
-      val cur = (sig.getLong(0), if (sig.isNullAt(1)) 0L else sig.getLong(1))
-      done = prevSig.contains(cur)
-      prevSig = Some(cur)
-      labels = jumped
-      iter += 1
-    }
-    lastCcRounds.set(iter)
-    if (!done) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter label rounds — " +
-        "label propagation needs rounds ∝ diameter; a split-component " +
-        "result must never return silently")
-    labels.withColumnRenamed("label", "component")
   }
 
   /** Corpus dedup with CLUSTER survivors: ONE document kept per

@@ -1726,7 +1726,7 @@ object Embed {
     *
     * Shape: the mutual filter is one self-join of the (qid, neighbor)
     * edge list on the reversed pair — k·n rows a side, never vectors;
-    * components are [[Dedup.connectedComponents]]' pointer-jumping
+    * components are [[Dedup.connectedComponents]]' star-contraction
     * rounds. Output: `vec_id`, `cluster` (smallest reachable id);
     * vectors with no mutual edge are absent (singletons). */
   def knnClusters(graph: DataFrame): DataFrame = {

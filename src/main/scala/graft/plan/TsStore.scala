@@ -66,4 +66,15 @@ object TsStore {
   def snameOf(metric: Column, tagstr: Column): Column =
     when(length(tagstr) > lit(0), concat(metric, lit(" "), tagstr))
       .otherwise(metric)
+
+  /** Tags map of a canonical series name — the exact inverse of
+    * [[snameOf]] over [[tagStr]]: the space-separated `k=v` pairs after
+    * the metric, each split at its first '=' (str_to_map splits a pair
+    * with limit 2, like SeriesKey.parse); an empty map for a bare
+    * metric. */
+  def tagsOf(sname: Column): Column =
+    when(instr(sname, " ") > 0,
+      str_to_map(call_function("substring", sname, instr(sname, " ") + 1),
+        lit(" "), lit("=")))
+      .otherwise(map().cast("map<string,string>"))
 }

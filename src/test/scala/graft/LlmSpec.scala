@@ -509,17 +509,29 @@ class LlmSpec extends SparkFunSuite {
         val (ra, rb) = (find(a.toInt), find(b.toInt))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      val want = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-        .map(n => n -> {
-          // component = min node of the union-find class
-          val r = find(n.toInt)
-          (0 until nNodes).filter(m => find(m) == r).min.toLong
-        }).toMap
+      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+      // component = min node of the union-find class, in the id type's
+      // own ordering (string ids order "10" before "9")
+      def want[T: Ordering](id: Long => T): Map[T, T] = nodes.map(n =>
+        id(n) -> nodes.filter(m => find(m.toInt) == find(n.toInt)).map(id).min
+      ).toMap
       val sp = SparkSpec.spark
       import sp.implicits._
-      val got = Dedup.connectedComponents(edges.toDF("a", "b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == want, s"trial $trial")
+      val longs = edges.toDF("a", "b")
+      def run(df: org.apache.spark.sql.DataFrame, t: DataType): Array[Row] = {
+        val out = Dedup.connectedComponents(df)
+        assert(out.schema.map(_.dataType) == Seq(t, t), s"trial $trial $t")
+        out.collect()
+      }
+      def as(t: String) =
+        longs.select(col("a").cast(t).as("a"), col("b").cast(t).as("b"))
+      assert(run(longs, LongType).map(r => r.getLong(0) -> r.getLong(1))
+        .toMap == want[Long](identity), s"trial $trial long")
+      assert(run(as("int"), IntegerType).map(r => r.getInt(0) -> r.getInt(1))
+        .toMap == want(_.toInt), s"trial $trial int")
+      assert(run(as("string"), StringType)
+        .map(r => r.getString(0) -> r.getString(1))
+        .toMap == want(_.toString), s"trial $trial string")
     }
   }
 
