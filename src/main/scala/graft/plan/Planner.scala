@@ -72,15 +72,24 @@ object Planner {
     * AND across tags; list form enumerates exact combinations). */
   def wherePred(w: Where): Column = wherePredOver(w, _ => None)
 
-  /** [[wherePred]] with a per-tag column override. When the frame carries
-    * a tag as a flattened top-level `tag_<k>` column (the layout's
-    * pushdown contract, Ingest.writeLayout), the predicate must use THAT
+  /** Rows of `frame` that belong to series of `metrics` under `w` — the
+    * one series-resolution predicate, shared by every scan
+    * ([[baseScan]]) and the existence probe (Api.requireSeries), so the
+    * two never disagree about which series a `where` names. A tag the
+    * frame carries as a flattened top-level `tag_<k>` column (the
+    * layout's pushdown contract, Ingest.writeLayout) is matched on THAT
     * column: a filter on the reconstructed `tags` map evaluates
     * str_to_map over the sname per row and never reaches the parquet
     * scan, while the flat column lands in PushedFilters and skips row
     * groups via min/max stats. Same null semantics either way (absent
     * tag -> null -> predicate false). */
-  def wherePredOver(w: Where, tagCol: String => Option[Column]): Column = {
+  def seriesPred(frame: DataFrame, metrics: Seq[String], w: Where): Column = {
+    val cols = frame.columns.toSet
+    col(Metric).isin(metrics: _*) &&
+      wherePredOver(w, t => Some(s"tag_$t").filter(cols).map(col))
+  }
+
+  private def wherePredOver(w: Where, tagCol: String => Option[Column]): Column = {
     def tc(t: String): Column =
       tagCol(t).getOrElse(try_element_at(col(Tags), lit(t)))
     w match {
@@ -141,14 +150,12 @@ object Planner {
             col(DayCol) <= lit(hiIncl / store.bucketNs)
         }
       else None
-    val flatTag: String => Option[Column] = t =>
-      if (store.samples.columns.contains(s"tag_$t")) Some(col(s"tag_$t"))
-      else None
+    // series last: a tag-map `where` (str_to_map per row) only runs on
+    // rows the cheap range bound keeps
     val preds = Seq(
-      Some(col(Metric).isin(metrics: _*)),
       q.range.map(rangePred),
       dayPred,
-      Some(wherePredOver(q.where, flatTag))).flatten.reduce(_ && _)
+      Some(seriesPred(store.samples, metrics, q.where))).flatten.reduce(_ && _)
     store.samples.filter(preds)
   }
 

@@ -29,15 +29,28 @@ object Api {
   final case class NotFoundException(msg: String = "not found")
       extends RuntimeException(msg)
 
-  /** The reference returns `-not found` when the FIRST select column
-    * resolves to zero series (storage2.cpp:1449-1452: checks
+  /** Series resolution: throws [[NotFoundException]] when the FIRST
+    * select column resolves to zero series. The reference returns
+    * `-not found` in that case (storage2.cpp:1449-1452: checks
     * `columns.at(0).ids.empty()`), while an existing series with an empty
-    * time range streams an empty result. Metadata queries bypass the check
-    * (SELECT_META branch, storage2.cpp:1407-1424). Resolution = first
-    * metric + where-clause against the series index (the inverted-matcher
-    * lookup, queryparser.cpp:86-140) — here a `limit(1)` probe on the
-    * series dimension. */
-  private def requireSeries(store: TsStore, q: graft.ast.Query): Unit = {
+    * time range streams an empty result — so the probe ignores the
+    * range. Metadata queries bypass the check (SELECT_META branch,
+    * storage2.cpp:1407-1424). Resolution = first metric + where-clause
+    * (the inverted-matcher lookup, queryparser.cpp:86-140), built by
+    * [[Planner.seriesPred]] — the predicate every scan uses — over the
+    * maintained series dimension when attached, otherwise over the FACT
+    * table (the derived `store.series` view would put a whole-corpus
+    * dropDuplicates shuffle in front of every request).
+    *
+    * The probe projects `metric` and asks `take(1)`, which plans as
+    * CollectLimitExec: `executeTake` reads one partition and stops at
+    * the first row, so a resolving probe is usually ONE small job
+    * (`Dataset.isEmpty` would plan a second stage). A not-found answer
+    * must read every partition of the metric: each empty round tries 4x
+    * the partitions read so far (`spark.sql.limit.scaleUpFactor`), so it
+    * takes up to ⌈log₄ partitions⌉+1 sequential small jobs, where a
+    * count is one parallel scan. */
+  def requireSeries(store: TsStore, q: graft.ast.Query): Unit = {
     import graft.ast.QueryKind._
     val firstMetric = q.kind match {
       case Select(m)                      => Some(m)
@@ -49,17 +62,10 @@ object Api {
       case MetaNames(_)                   => None
     }
     for (m <- firstMetric) {
-      // probe the maintained dimension when attached; otherwise probe the
-      // FACT table directly — metric lands in PartitionFilters and
-      // CollectLimit(1) stops at the first matching row. The derived
-      // `store.series` view would put a whole-corpus dropDuplicates
-      // shuffle in front of EVERY request just to answer "exists?".
       val base = store.seriesDim.getOrElse(store.samples)
-      val matched = base
-        .filter(org.apache.spark.sql.functions.col(TsStore.Metric) === m &&
-          Planner.wherePred(q.where))
-        .limit(1).count()
-      if (matched == 0L) throw NotFoundException()
+      val hit = base.filter(Planner.seriesPred(base, Seq(m), q.where))
+        .select(TsStore.Metric).take(1)
+      if (hit.isEmpty) throw NotFoundException()
     }
   }
 
