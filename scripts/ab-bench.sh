@@ -13,8 +13,8 @@
 # a gain needs at least 10 pairs, wins in at least 9/10 of them and
 # medians further apart than the parent's interquartile range. Metrics
 # that are not a gain are checked against BENCHMARK.json's bound.
-# Reads the benchmark only; raw result lines go to
-# .bench_build/ab-<workload>-<time>.jsonl.
+# Reads the benchmark only; raw result lines, each with its run's `# `
+# note lines, go to .bench_build/ab-<workload>-<time>.jsonl.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
@@ -37,17 +37,22 @@ log="${out%.jsonl}.log"
 echo "parent $(git -C "$root" rev-parse --short "$rev") vs working tree;" \
   "$workload, ${seconds}s runs; results $out" >&2
 
-# run <side> <dir> <seed> <pair>: one benchmark run, its JSON line appended
+# run <side> <dir> <seed> <pair>: one benchmark run; its JSON line is
+# appended with the run's `# ` note lines (per-round rates, the traced
+# blocking-path remainder, failures) under "notes"
 run() {
-  local line
-  if line="$(cd "$2" && python3 perfbench/run.py --workload "$workload" \
-      --seed "$3" --seconds "$seconds" 2>>"$log" | tail -1)" && [ -n "$line" ]; then
+  local stdout="" line notes
+  if stdout="$(cd "$2" && python3 perfbench/run.py --workload "$workload" \
+      --seed "$3" --seconds "$seconds" 2>>"$log")" &&
+      line="$(printf '%s\n' "$stdout" | tail -1)" && [ -n "$line" ]; then
     :
   else
     line='{"error": "run failed"}'
   fi
-  printf '{"pair": %d, "seed": %d, "side": "%s", "result": %s}\n' \
-    "$4" "$3" "$1" "$line" >>"$out"
+  notes="$(printf '%s\n' "$stdout" | python3 -c 'import json, sys
+print(json.dumps([l[2:].rstrip("\n") for l in sys.stdin if l.startswith("# ")]))')"
+  printf '{"pair": %d, "seed": %d, "side": "%s", "notes": %s, "result": %s}\n' \
+    "$4" "$3" "$1" "$notes" "$line" >>"$out"
 }
 
 pair=0

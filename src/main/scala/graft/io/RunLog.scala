@@ -389,13 +389,24 @@ object RunLog {
       // tag-key agreement with the existing layout: appended files with
       // different tag_ columns would read as all-NULL tags for every
       // folded row (no mergeSchema on the read side) — fail fast, the
-      // readRuns run-header rule applied one level up
+      // readRuns run-header rule applied one level up. Every layout file
+      // carries the same columns (this check keeps it so), so the first
+      // data file's footer answers: a few listings, no Spark job, no
+      // walk of the whole layout.
       val lp = new org.apache.hadoop.fs.Path(layoutPath)
-      val layoutHasData = fs.exists(lp) &&
-        fs.listStatus(lp).exists(_.getPath.getName.startsWith("metric="))
-      if (layoutHasData) {
-        val layoutTags = spark.read.parquet(layoutPath).columns
-          .filter(_.startsWith("tag_")).map(_.stripPrefix("tag_")).toSeq
+      val layoutFile =
+        if (fs.exists(lp)) layoutDataFiles(fs, lp).nextOption() else None
+      val layoutHasData = layoutFile.isDefined
+      layoutFile.foreach { f =>
+        val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+            f, spark.sparkContext.hadoopConfiguration))
+        val layoutTags =
+          try {
+            val schema = footer.getFileMetaData.getSchema
+            (0 until schema.getFieldCount).map(schema.getFieldName)
+              .filter(_.startsWith("tag_")).map(_.stripPrefix("tag_"))
+          } finally footer.close()
         require(layoutTags.sorted == flattenTags.sorted,
           s"layout $layoutPath has flattened tags [${layoutTags.mkString(",")}]"
           + s", fold called with [${flattenTags.mkString(",")}]")
@@ -453,6 +464,21 @@ object RunLog {
       }
   }
 
+  /** The data files of the `metric=/day=` tree under `root`, listed
+    * lazily: a caller that needs one file lists only the first
+    * directories. */
+  private def layoutDataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                              root: org.apache.hadoop.fs.Path)
+      : Iterator[org.apache.hadoop.fs.FileStatus] = {
+    def dirs(p: org.apache.hadoop.fs.Path, prefix: String) =
+      fs.listStatus(p).iterator
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+    dirs(root, "metric=").flatMap(m => dirs(m.getPath, "day="))
+      .flatMap(d => fs.listStatus(d.getPath).iterator)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+  }
+
   /** Steps 2-6 of the fold protocol over one staged snapshot; safe to
     * re-run after a crash at ANY point (see [[foldRuns]]). */
   private def runFold(spark: SparkSession,
@@ -485,20 +511,11 @@ object RunLog {
       Ingest.writePrepared(readRunFiles(spark, staged, flattenTags),
         outDir.toString, bucketNs, saltBuckets, codec)
       // plan the landing and persist it BEFORE moving anything
-      val moves = fs.listStatus(outDir).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("metric="))
-        .flatMap(m => fs.listStatus(m.getPath).toSeq)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("day="))
-        .flatMap { d =>
-          fs.listStatus(d.getPath).toSeq
-            .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith("."))
-            .map { f =>
-              (f.getPath, new Path(s"$layoutPath/" +
-                s"${d.getPath.getParent.getName}/${d.getPath.getName}/" +
-                s"fold-$foldId-${f.getPath.getName}"))
-            }
-        }
+      val moves = layoutDataFiles(fs, outDir).map { f =>
+        val day = f.getPath.getParent
+        (f.getPath, new Path(s"$layoutPath/${day.getParent.getName}/" +
+          s"${day.getName}/fold-$foldId-${f.getPath.getName}"))
+      }.toSeq
       val mo = fs.create(manifest, true)
       try mo.write(moves.map(_._2.toString).mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -1,8 +1,8 @@
 package graft.io
 
-import java.io.{BufferedOutputStream, File, FileOutputStream}
+import java.io.{BufferedOutputStream, File}
 import java.net.{DatagramPacket, DatagramSocket, InetSocketAddress, ServerSocket, Socket}
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
 /** Wire transports for RESP ingestion (reference: akumulid/tcp_server.cpp,
@@ -22,6 +22,18 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
   *    session file; plain data-point datagrams are stateless, so they
   *    concatenate into rolling shared files (identical parse result, far
   *    fewer files).
+  *
+  * Flush policy: never fsync; a session costs page-cache latencies only.
+  * Every spool file is created unique in `.tmp/` and written through the
+  * descriptor that `spoolFile` opens WITHOUT truncation. Reopening the
+  * fresh file with `FileOutputStream` (always `O_TRUNC`) would make ext4
+  * (default `auto_da_alloc`) treat it as a truncate-then-rewrite
+  * replacement: it starts write-back when the file is closed, and every
+  * later unlink of the published file (a consumer retiring a spooled
+  * batch) blocks until that disk write finishes, ~100 ms a file. A
+  * published session survives a process crash (SIGKILL) because the
+  * atomic rename happens only after the close; power-loss durability was
+  * never promised, and is unchanged.
   */
 final class WireIngest(spoolDir: File, tcpPort: Int = 0, udpPort: Int = 0,
                        protocol: WireIngest.Protocol = WireIngest.Resp) {
@@ -61,6 +73,15 @@ final class WireIngest(spoolDir: File, tcpPort: Int = 0, udpPort: Int = 0,
   private val nonce = java.lang.Long.toHexString(
     System.currentTimeMillis() ^ System.nanoTime())
 
+  /** A fresh, uniquely named spool file in `.tmp/` and a buffered writer
+    * over it, opened without truncation (see the flush policy above). */
+  private def spoolFile(prefix: String, bufBytes: Int)
+      : (Path, BufferedOutputStream) = {
+    val tmp = Files.createTempFile(tmpDir.toPath, prefix, ".part")
+    (tmp, new BufferedOutputStream(
+      Files.newOutputStream(tmp, StandardOpenOption.WRITE), bufBytes))
+  }
+
   private def publish(tmp: Path, kind: String): Unit =
     Files.move(tmp,
       new File(spoolDir, s"$kind-$nonce-${seq.incrementAndGet()}.resp").toPath,
@@ -94,8 +115,7 @@ final class WireIngest(spoolDir: File, tcpPort: Int = 0, udpPort: Int = 0,
   private def session(sock: Socket, kind: String, reply: String => String,
                       internal: String)(
       feed: BufferedOutputStream => Array[Byte] => Unit): Unit = {
-    val tmp = Files.createTempFile(tmpDir.toPath, kind, ".part")
-    val out = new BufferedOutputStream(new FileOutputStream(tmp.toFile), 1 << 16)
+    val (tmp, out) = spoolFile(kind, 1 << 16)
     def send(msg: String): Unit =
       try sock.getOutputStream.write(
         reply(msg).getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -225,16 +245,14 @@ final class WireIngest(spoolDir: File, tcpPort: Int = 0, udpPort: Int = 0,
 
   private def udpAppend(data: Array[Byte], len: Int): Unit = synchronized {
     if (len > 0 && data(0) == '*') { // dictionary-bearing packet
-      val tmp = Files.createTempFile(tmpDir.toPath, "udp", ".part")
-      val o = new BufferedOutputStream(new FileOutputStream(tmp.toFile))
+      val (tmp, o) = spoolFile("udp", 8192)
       o.write(data, 0, len); o.write('\n'); o.close()
       publish(tmp, "udp-dict")
     } else {
       val (path, out) = udpRoll.getOrElse {
-        val tmp = Files.createTempFile(tmpDir.toPath, "udp", ".part")
-        val o = new BufferedOutputStream(new FileOutputStream(tmp.toFile), 1 << 16)
-        udpRoll = Some((tmp, o)); udpRollBytes = 0L
-        (tmp, o)
+        val roll = spoolFile("udp", 1 << 16)
+        udpRoll = Some(roll); udpRollBytes = 0L
+        roll
       }
       out.write(data, 0, len); out.write('\n')
       udpRollBytes += len + 1

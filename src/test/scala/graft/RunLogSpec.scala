@@ -182,6 +182,36 @@ class RunLogSpec extends SparkFunSuite {
     assert(liveValues() == (all ++ Seq(7.0, 9.0)).sorted)
   }
 
+  test("foldRuns: a tag-key mismatch with the layout fails before staging") {
+    val dir = Files.createTempDirectory("graft-runlog-tagkeys").toFile
+    val runs = new java.io.File(dir, "runs").getAbsolutePath
+    val layout = new java.io.File(dir, "layout").getAbsolutePath
+    def spool(name: String, tags: Seq[String]): Unit = {
+      val d = new java.io.File(dir, name); d.mkdirs()
+      Files.write(new java.io.File(d, "s.resp").toPath,
+        (0 until 6).flatMap(i => Seq(s"+m$i host=h$i region=r${i % 2}",
+          s":${i * 1000000000L}", s":$i")).mkString("\n").getBytes)
+      RunLog.spoolResp(spark, d.getAbsolutePath, runs, tags)
+    }
+    // the layout is bootstrapped with two flattened tags, across several
+    // metric= directories
+    spool("b1", Seq("host", "region"))
+    assert(RunLog.foldRuns(spark, runs, layout, Seq("host", "region")).nonEmpty)
+    spool("b2", Seq("host"))
+    val pending = RunLog.listRuns(spark, runs)
+    val e = intercept[IllegalArgumentException] {
+      RunLog.foldRuns(spark, runs, layout, Seq("host"))
+    }
+    assert(e.getMessage.contains(s"layout $layout has flattened tags [") &&
+      e.getMessage.contains(", fold called with [host]"), e.getMessage)
+    assert(Seq("host", "region").forall(t =>
+      e.getMessage.contains(t)), e.getMessage)
+    // nothing was staged: the runs stay where they were, servable
+    assert(RunLog.listRuns(spark, runs) == pending && pending.nonEmpty)
+    val folding = new java.io.File(runs, ".folding")
+    assert(!folding.exists() || folding.list().isEmpty)
+  }
+
   test("run names are deterministic per partition (retry-idempotent)") {
     val dir = Files.createTempDirectory("graft-runlog5").toFile
     renderSessions(dir)

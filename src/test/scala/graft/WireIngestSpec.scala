@@ -68,6 +68,64 @@ class WireIngestSpec extends SparkFunSuite {
     } finally srv.stop()
   }
 
+  /** The spool files published under `spool` whose names start with
+    * `kind-`, and the `.part` files left in `.tmp/`. */
+  private def spooled(spool: java.io.File, kind: String): Seq[java.io.File] =
+    spool.listFiles().toSeq.filter(_.getName.startsWith(s"$kind-"))
+  private def parts(spool: java.io.File): Seq[String] =
+    new java.io.File(spool, ".tmp").list().toSeq.filter(_.endsWith(".part"))
+
+  test("every spool writer publishes exactly the validated bytes, no .part left") {
+    val spool = Files.createTempDirectory("graft-wire-writers").toFile
+    val srv = new WireIngest(spool)
+    srv.start()
+    try {
+      // TCP session: a valid prefix larger than the 64 KiB write buffer,
+      // then a bad entry; the file holds the prefix, byte for byte
+      val good = (0 until 4000).map(i =>
+        s"+cpu host=h${i % 7}\n:${1000000000L * i}\n+$i.25\n").mkString
+      assert(good.length > (1 << 16))
+      val sock = new Socket("127.0.0.1", srv.tcpBoundPort)
+      try {
+        sock.getOutputStream.write((good + "+broken\n:1\n:2\n").getBytes(UTF_8))
+        sock.shutdownOutput()
+        // the server closes the connection after publishing the session
+        val reply = new String(sock.getInputStream.readAllBytes(), UTF_8)
+        assert(reply.startsWith("-PARSER"))
+      } finally sock.close()
+      val tcp = spooled(spool, "tcp")
+      assert(tcp.size == 1)
+      assert(new String(Files.readAllBytes(tcp.head.toPath), UTF_8) == good)
+      assert(parts(spool).isEmpty)
+
+      // UDP: two plain packets roll into one file, the dictionary packet
+      // (sent last, so the others are appended once it shows) is its own
+      val udp = new DatagramSocket()
+      val addr = InetAddress.getByName("127.0.0.1")
+      def send(s: String): Unit = {
+        val b = s.getBytes(UTF_8)
+        udp.send(new DatagramPacket(b, b.length, addr, srv.udpBoundPort))
+      }
+      val plain = Seq("+mem host=a\n:1000\n:1", "+mem host=b\n:2000\n:2")
+      val dict = "*2\n+cpu host=c\n:5\n:5\n:3000\n:3"
+      (plain :+ dict).foreach(send)
+      udp.close()
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      while (spooled(spool, "udp-dict").isEmpty &&
+             System.nanoTime() < deadline) Thread.sleep(20)
+      val dicts = spooled(spool, "udp-dict")
+      assert(dicts.size == 1)
+      assert(new String(Files.readAllBytes(dicts.head.toPath), UTF_8) ==
+        dict + "\n")
+      srv.flush()
+      val rolls = spooled(spool, "udp").filterNot(dicts.contains)
+      assert(rolls.size == 1)
+      assert(new String(Files.readAllBytes(rolls.head.toPath), UTF_8) ==
+        plain.map(_ + "\n").mkString)
+      assert(parts(spool).isEmpty)
+    } finally srv.stop()
+  }
+
   // --- functests/test_ingestion_errors.py parity ------------------------
   /** Send `msg`, then read the server's response (the reference answers
     * a `-PARSER <err>\r\n` line while the client keeps the socket open —
