@@ -445,8 +445,8 @@ object Bench {
 
     // warm-up pass (JIT the parser + writer code paths, prime page cache),
     // then measured passes of each stage
-    graft.io.Ingest.respFilesFlat(spark, respDir.getPath, Seq("host"),
-      sessions).count()
+    graft.io.Ingest.respFilesFlat(spark, respDir.getPath, Seq("host"))
+      .count()
 
     // Parse rate = read wire text + decode + full RESP protocol parse,
     // every sample materialized as a ParsedSample — the work the
@@ -460,7 +460,7 @@ object Bench {
     // stand as the official number.
     val parseSec = stableMin(6) { _ =>
       val t0 = System.nanoTime()
-      val parsed = graft.io.Ingest.sessionFiles(spark, respDir.getPath, sessions)
+      val parsed = graft.io.Ingest.sessionFiles(spark, respDir.getPath)
         .mapPartitions { it =>
           var c = 0L
           it.foreach { content =>
@@ -483,7 +483,7 @@ object Bench {
     val clusteredSec = stableMin(6) { _ =>
       val t0 = System.nanoTime()
       graft.io.Ingest.ingestResp(spark, respDir.getPath, benchPath,
-        flattenTags = Seq("host"), minPartitions = sessions)
+        flattenTags = Seq("host"))
       val dt = (System.nanoTime() - t0) / 1e9
       Console.err.println(f"CLUSTERREP $dt%.2f s")
       dt
@@ -511,7 +511,7 @@ object Bench {
       lastSpoolRep = i
       val t0 = System.nanoTime()
       val spooled = graft.io.RunLog.spoolResp(spark, respDir.getPath, dir,
-        flattenTags = Seq("host"), minPartitions = sessions)
+        flattenTags = Seq("host"))
       val dt = (System.nanoTime() - t0) / 1e9
       require(spooled == n, s"spool dropped rows: $spooled != $n")
       Console.err.println(f"SPOOLREP $dt%.2f s")

@@ -1,7 +1,11 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.SeriesKey
 import graft.plan.TsStore
@@ -9,16 +13,21 @@ import graft.plan.TsStore
 /** Spark entry points for batch ingestion and the persistent table layout.
   *
   * Layout contract (the Spark analogue of the reference's
-  * column-per-series NB+tree, column_store.h:50-67): parquet partitioned
-  * by `(metric, day bucket)` and sorted within files by `(series, ts)`.
-  * That gives every query the reference's pruning for free:
+  * column-per-series NB+tree, column_store.h:50-67): ONE flat schema,
+  * `(metric, sname, ts, value, event, tag_<k>…, day)`, parquet
+  * partitioned by `(metric, day bucket)` and sorted within files by
+  * `(sname, ts)`. The canonical `sname` carries the full tag set (the
+  * reference's series-id model, seriesparser.cpp:389); the listed tag
+  * keys are ALSO lifted into `tag_<k>` string columns so `where`
+  * predicates push into the scan instead of evaluating a map lookup per
+  * row. Every writer produces exactly this schema: [[writeLayout]],
+  * [[ingestResp]], [[compactLayout]], `RunLog`'s compaction and fold,
+  * and the streaming sink `StreamIngest.writeLayoutStream`. That gives
+  * every query the reference's pruning for free:
   *  - metric + time range -> partition pruning (directories skipped)
   *  - value filters       -> parquet row-group min/max skipping
   *  - per-series locality -> in-file sort (merge/window ops don't shuffle
   *    already-clustered data)
-  * Filterable tags are ALSO flattened to top-level columns (`tag_<k>`) so
-  * `where` predicates push into the scan instead of evaluating a map
-  * lookup per row (the round-1 scale gap).
   */
 object Ingest {
   import org.apache.spark.sql.Encoders
@@ -32,82 +41,87 @@ object Ingest {
     * + PortableDataStream) measured up to 17x slower for the same bytes
     * on the ingest bench; `new String(bytes, UTF_8)` keeps the JDK's
     * compact-string ASCII fast path. HDFS/S3 work unchanged through the
-    * FS API. `minPartitions` defaults to the cluster parallelism — a
-    * low default would funnel every session through few tasks regardless
-    * of core count. */
-  def sessionFiles(spark: SparkSession, path: String,
-                   minPartitions: Int = 0)
-      : org.apache.spark.rdd.RDD[String] = {
-    val mp = if (minPartitions > 0) minPartitions
-             else spark.sparkContext.defaultParallelism
-    org.apache.spark.sql.graftio.HadoopFiles.wholeFiles(spark, path, mp)
-  }
+    * FS API. Files spread over the cluster parallelism — a low split
+    * count would funnel every session through few tasks regardless of
+    * core count. */
+  def sessionFiles(spark: SparkSession, path: String)
+      : org.apache.spark.rdd.RDD[String] =
+    org.apache.spark.sql.graftio.HadoopFiles.wholeFiles(spark, path,
+      spark.sparkContext.defaultParallelism)
 
   /** Parse RESP session files: one file = one session (dictionary scope),
     * parallel across files. */
-  def respFiles(spark: SparkSession, path: String,
-                minPartitions: Int = 0): DataFrame =
-    spark.createDataset(sessionFiles(spark, path, minPartitions)
+  def respFiles(spark: SparkSession, path: String): DataFrame =
+    spark.createDataset(sessionFiles(spark, path)
       .flatMap(LineProtocol.parseRespText))(sampleEnc).toDF()
 
-  /** RESP sessions parsed straight to the flat layout schema
-    * `(metric, sname, ts, value, event, tag_<k>...)` — the ingest fast
-    * path. The parser emits catalyst `UnsafeRow`s directly (via
-    * [[org.apache.spark.sql.graftio.InternalRows]]): every series-level
-    * string (metric, canonical sname, flattened tag values) is converted
-    * to `UTF8String` ONCE per series, and each sample is written through
-    * a reused `UnsafeRowWriter` + `copy()` — no `SerializeFromObject`
-    * encoder stage, no Object[] + boxed ts/value per sample (the
-    * GenericInternalRow variant measured 2.2x slower through the same
-    * pipeline, the object-encoder one 4x). */
+  /** The flat layout row before partitioning:
+    * `(metric, sname, ts, value, event, tag_<k>...)`. */
+  private def flatSchema(tagKeys: Seq[String]): StructType = StructType(
+    Seq(StructField("metric", StringType), StructField("sname", StringType),
+      StructField("ts", LongType), StructField("value", DoubleType),
+      StructField("event", StringType)) ++
+    tagKeys.map(t => StructField(s"tag_$t", StringType)))
+
+  /** Emits flat layout rows as catalyst `UnsafeRow`s through one reused
+    * `UnsafeRowWriter` + `copy()`: no `SerializeFromObject` encoder stage,
+    * no Object[] + boxed ts/value per sample (the GenericInternalRow
+    * variant measured 2.2x slower through the same pipeline, the
+    * object-encoder one 4x). `series` holds the per-series strings,
+    * converted to `UTF8String` ONCE per series: metric, canonical sname,
+    * then one value per flattened tag key (null = tag absent). One writer
+    * per task; not thread-safe. */
+  private[io] final class FlatRowWriter(nTags: Int) {
+    private val w = new UnsafeRowWriter(5 + nTags)
+
+    def row(series: Array[UTF8String], ts: Long, value: Double,
+            event: UTF8String): InternalRow = {
+      w.reset()
+      w.zeroOutNullBytes()
+      w.write(0, series(0)); w.write(1, series(1)); w.write(2, ts)
+      w.write(3, value)
+      if (event == null) w.setNullAt(4) else w.write(4, event)
+      var i = 0
+      while (i < nTags) {
+        if (series(2 + i) == null) w.setNullAt(5 + i)
+        else w.write(5 + i, series(2 + i))
+        i += 1
+      }
+      w.getRow.copy()
+    }
+  }
+
+  /** [[FlatRowWriter]] output as a DataFrame of the flat schema (via
+    * [[org.apache.spark.sql.graftio.InternalRows]]). */
+  private[io] def flatFrame(spark: SparkSession,
+                            rows: org.apache.spark.rdd.RDD[InternalRow],
+                            tagKeys: Seq[String]): DataFrame =
+    org.apache.spark.sql.graftio.InternalRows.toDF(spark, rows,
+      flatSchema(tagKeys))
+
+  /** RESP sessions parsed straight to the flat layout schema — the ingest
+    * fast path. The parser emits rows through [[FlatRowWriter]]. */
   def respFilesFlat(spark: SparkSession, path: String,
-                    flattenTags: Seq[String] = Nil,
-                    minPartitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
-    import org.apache.spark.sql.types._
-    import org.apache.spark.unsafe.types.UTF8String
+                    flattenTags: Seq[String] = Nil): DataFrame = {
     val tagKeys = flattenTags.toArray
-    val nTags = tagKeys.length
-    val schema = StructType(
-      Seq(StructField("metric", StringType), StructField("sname", StringType),
-        StructField("ts", LongType), StructField("value", DoubleType),
-        StructField("event", StringType)) ++
-      tagKeys.map(t => StructField(s"tag_$t", StringType)))
-    val rdd = sessionFiles(spark, path, minPartitions).flatMap { content =>
+    val rdd = sessionFiles(spark, path).flatMap { content =>
       // identity cache: dictionary sessions reuse one SeriesKey instance
       // per series; bounded so a dictionary-less session can't grow it
       val cache = new java.util.IdentityHashMap[SeriesKey, Array[UTF8String]]()
-      val w = new UnsafeRowWriter(5 + nTags)
+      val w = new FlatRowWriter(tagKeys.length)
       LineProtocol.parseRespWith[InternalRow](content, (k, ts, v, ev) => {
         var d = cache.get(k)
         if (d == null) {
           if (cache.size > 100000) cache.clear()
-          d = new Array[UTF8String](2 + nTags)
-          d(0) = UTF8String.fromString(k.metric)
-          d(1) = UTF8String.fromString(k.canonical)
-          var i = 0
-          while (i < nTags) {
-            d(2 + i) = k.tags.get(tagKeys(i))
-              .map(UTF8String.fromString).orNull
-            i += 1
-          }
+          d = (Iterator(k.metric, k.canonical) ++
+            tagKeys.iterator.map(k.tags.get(_).orNull))
+            .map(UTF8String.fromString).toArray
           cache.put(k, d)
         }
-        w.reset()
-        w.zeroOutNullBytes()
-        w.write(0, d(0)); w.write(1, d(1)); w.write(2, ts); w.write(3, v)
-        if (ev == null) w.setNullAt(4)
-        else w.write(4, UTF8String.fromString(ev))
-        var i = 0
-        while (i < nTags) {
-          if (d(2 + i) == null) w.setNullAt(5 + i) else w.write(5 + i, d(2 + i))
-          i += 1
-        }
-        w.getRow.copy()
+        w.row(d, ts, v, UTF8String.fromString(ev))
       })
     }
-    org.apache.spark.sql.graftio.InternalRows.toDF(spark, rdd, schema)
+    flatFrame(spark, rdd, tagKeys)
   }
 
   /** Parse OpenTSDB telnet put lines (stateless -> line-parallel). */
@@ -129,18 +143,17 @@ object Ingest {
   /** Layout compression: LZ4 (raw frame) — measured both faster to
     * encode AND smaller than snappy on the sorted-run layout (the
     * reference's storage codec family too, compression.cpp LZ4 blocks).
-    * zstd trades ~20% size for encode speed; pass it for cold tiers. */
-  val DefaultCodec = "lz4_raw"
+    * zstd trades ~20% size for encode speed. */
+  private val DefaultCodec = "lz4_raw"
 
   /** Write the partitioned/sorted layout. `flattenTags` lifts the listed
     * tag keys into `tag_<k>` string columns for predicate pushdown. */
   def writeLayout(samples: DataFrame, path: String,
                   flattenTags: Seq[String] = Nil,
                   bucketNs: Long = DayNs,
-                  saltBuckets: Int = 32,
-                  codec: String = DefaultCodec): Unit =
+                  saltBuckets: Int = 32): Unit =
     writePrepared(flattenTagMap(samples, flattenTags), path, bucketNs,
-      saltBuckets, codec)
+      saltBuckets)
 
   /** The flat layout schema of a frame carrying the `tags` map: the
     * listed tag keys lifted into `tag_<k>` columns, the canonical `sname`
@@ -149,8 +162,9 @@ object Ingest {
     * seriesparser.cpp:389), so the shuffle payload and the parquet schema
     * stay flat — map<string,string> encoding was the most expensive part
     * of both. readLayout reconstructs the map lazily; flattened `tag_<k>`
-    * columns carry the pushdown-relevant tags as real columns. */
-  private def flattenTagMap(df: DataFrame, flattenTags: Seq[String])
+    * columns carry the pushdown-relevant tags as real columns. Stateless
+    * per row, so the streaming sink writes through it too. */
+  private[graft] def flattenTagMap(df: DataFrame, flattenTags: Seq[String])
       : DataFrame =
     flattenTags
       .foldLeft(df) { (d, k) =>
@@ -168,12 +182,9 @@ object Ingest {
   def ingestResp(spark: SparkSession, inPath: String, outPath: String,
                  flattenTags: Seq[String] = Nil,
                  bucketNs: Long = DayNs,
-                 saltBuckets: Int = 32,
-                 codec: String = DefaultCodec,
-                 minPartitions: Int = 0,
-                 exchange: Boolean = false): Unit =
-    writePrepared(respFilesFlat(spark, inPath, flattenTags, minPartitions),
-      outPath, bucketNs, saltBuckets, codec, exchange)
+                 saltBuckets: Int = 32): Unit =
+    writePrepared(respFilesFlat(spark, inPath, flattenTags), outPath,
+      bucketNs, saltBuckets, exchange = false)
 
   /** Sidecar recording the layout's bucket width. Underscore-prefixed so
     * parquet directory listings skip it. The planner prunes `day=`
@@ -213,7 +224,8 @@ object Ingest {
     *
     * Two modes, both ending in per-file `(sname, ts)` sorted runs:
     *
-    *  - `exchange = true` (writeLayout/compactLayout default): hash
+    *  - `exchange = true` (writeLayout, compactLayout and RunLog's
+    *    compaction and fold): hash
     *    partitioning on (metric, day) + a series salt: write parallelism
     *    is NOT capped at the distinct (metric, day) count — a hot
     *    metric-day splits across `saltBuckets` tasks by series hash —
@@ -221,10 +233,10 @@ object Ingest {
     *    sorted series runs into its partition dirs. One file per
     *    (metric, day, salt): the fully-clustered layout.
     *
-    *  - `exchange = false` (the wire-ingest path): NO shuffle — each
-    *    parse task sorts ITS slice and writes one sorted run per
-    *    (metric, day) it touched. Parse -> sort -> parquet fuse into a
-    *    single stage; the 8M-sample exchange (serialize + spill + read
+    *  - `exchange = false` ([[ingestResp]], the wire-ingest path): NO
+    *    shuffle — each parse task sorts ITS slice and writes one sorted
+    *    run per (metric, day) it touched. Parse -> sort -> parquet fuse
+    *    into a single stage; the 8M-sample exchange (serialize + spill + read
     *    back, ~25% of the write wall) disappears. This is the LSM shape
     *    and the honest analogue of the reference's ingest (per-series
     *    append, no global sort at write time, input_log.cpp): sessions
@@ -234,7 +246,7 @@ object Ingest {
     *    partitions, bounded at scale by routing/compaction cadence, not
     *    by the writer. */
   private[io] def writePrepared(df: DataFrame, path: String, bucketNs: Long,
-                                saltBuckets: Int, codec: String,
+                                saltBuckets: Int,
                                 exchange: Boolean = true): Unit = {
     val withDay =
       df.withColumn("day", expr(s"ts div ${bucketNs}L")) // exact integer div:
@@ -248,7 +260,7 @@ object Ingest {
       .sortWithinPartitions(col("metric"), col("day"), col("sname"), col("ts"))
       .write
       .partitionBy("metric", "day")
-      .option("compression", codec)
+      .option("compression", DefaultCodec)
       // v2 data pages: DELTA_BINARY_PACKED for the sorted ts column —
       // both faster to encode and far smaller than v1's
       // dictionary-attempt-then-plain on high-cardinality longs
@@ -267,49 +279,57 @@ object Ingest {
     writeBucketNs(df.sparkSession, path, bucketNs)
   }
 
-  /** Read the layout back as a TsStore (partition pruning on
-    * metric/day happens automatically from query predicates). Pass
-    * `seriesPath` (from [[writeSeries]]) to serve metadata queries from
-    * the maintained dimension instead of the fact table. */
-  def readLayout(spark: SparkSession, path: String,
-                 seriesPath: Option[String] = None,
-                 bucketNs: Long = 0L): TsStore = {
-    // bucketNs <= 0 (the default) = read the layout's own persisted width
-    // (falling back to DayNs for layouts predating the sidecar); an
-    // explicit positive value overrides
-    val width =
-      if (bucketNs > 0) bucketNs
-      else readBucketNs(spark, path).getOrElse(DayNs)
+  /** A layout directory as the flat frame its writers produced. Anything
+    * else — a plain parquet directory, a layout in another schema — fails
+    * here, naming the path, instead of deep inside a query plan. */
+  private def readFlat(spark: SparkSession, path: String): DataFrame = {
     val raw = spark.read.parquet(path)
-    val eventCol =
-      if (raw.columns.contains("event")) col("event")
-      else lit(null).cast("string").as("event")
-    // Tags are reconstructed from the canonical sname. Queries that never
-    // touch `tags` (flattened-tag filters, aggregates) prune the
-    // projection away entirely.
-    val tagsCol =
-      if (raw.columns.contains("tags")) col("tags")
-      else TsStore.tagsOf(col("sname")).as("tags")
-    // flattened tag_<k> columns ride along: the planner routes `where`
-    // predicates to them (parquet pushdown) instead of the reconstructed
-    // map; projections that don't filter on tags prune them away
-    val tagCols = raw.columns.filter(_.startsWith("tag_")).toSeq.map(col)
-    // the stored canonical sname rides along: consumers that need the
-    // series identity (stats' distinct count) read the column instead of
-    // rebuilding it from the reconstructed tags map per row. Layouts
-    // written by the STREAMING sink (ParsedSample schema, pre-compaction)
-    // have no sname column — derive it from the tags map, mirroring the
-    // tagsCol fallback in the other direction.
-    val snameCol =
-      if (raw.columns.contains("sname")) col("sname")
-      else TsStore.snameOf(col("metric"), TsStore.tagStr(tagsCol)).as("sname")
-    val facts = raw.select(Seq(col("metric"), tagsCol, col("ts"),
-      col("value"), eventCol, col(TsStore.DayCol), snameCol) ++ tagCols: _*)
-    new TsStore(facts, seriesPath.map(spark.read.parquet), width)
+    require(raw.columns.contains("sname"),
+      s"$path is not a graft layout: no sname column " +
+      s"(columns: ${raw.columns.mkString(", ")})")
+    raw
   }
 
+  /** The TsStore projection of a flat frame, shared by the layout
+    * ([[readLayout]]) and the spooled runs (`RunLog.toStore`). Tags are
+    * reconstructed from the canonical sname; queries that never touch
+    * `tags` (flattened-tag filters, aggregates) prune the projection away
+    * entirely. The stored sname rides along for consumers that need the
+    * series identity (stats' distinct count), and so do the flattened
+    * `tag_<k>` columns: the planner routes `where` predicates to them
+    * (parquet pushdown) instead of the reconstructed map. `day` is kept
+    * where the frame has it (the layout's partition column). */
+  private[io] def storeFrame(flat: DataFrame): DataFrame = {
+    val cols = flat.columns
+    val eventCol =
+      if (cols.contains("event")) col("event")
+      else lit(null).cast("string").as("event")
+    flat.select(Seq(col("metric"), TsStore.tagsOf(col("sname")).as("tags"),
+      col("ts"), col("value"), eventCol) ++
+      cols.filter(_ == TsStore.DayCol).map(col) ++
+      Seq(col("sname")) ++
+      cols.filter(_.startsWith("tag_")).map(col): _*)
+  }
+
+  /** The flattened tag keys of a flat frame's `tag_<k>` columns. */
+  private[io] def tagKeysOf(columns: Seq[String]): Seq[String] =
+    columns.filter(_.startsWith("tag_")).map(_.stripPrefix("tag_"))
+
+  /** Read the layout back as a TsStore (partition pruning on
+    * metric/day happens automatically from query predicates), bucketed
+    * with the width its writer persisted ([[DayNs]] for layouts predating
+    * the sidecar). Pass `seriesPath` (from [[writeSeries]]) to serve
+    * metadata queries from the maintained dimension instead of the fact
+    * table. */
+  def readLayout(spark: SparkSession, path: String,
+                 seriesPath: Option[String] = None): TsStore =
+    new TsStore(storeFrame(readFlat(spark, path)),
+      seriesPath.map(spark.read.parquet),
+      readBucketNs(spark, path).getOrElse(DayNs))
+
   /** Compact an existing layout in place-shape: re-reads the flat files
-    * and rewrites them salted + sorted. The streaming sink
+    * and rewrites them salted + sorted, keeping the layout's persisted
+    * bucket width and its `tag_<k>` columns. The streaming sink
     * (`StreamIngest.writeLayoutStream`) appends one small file per
     * micro-batch per partition with no cross-file clustering — over time
     * a day directory accumulates hundreds of files and per-series scans
@@ -319,24 +339,9 @@ object Ingest {
     * output goes to `outPath`; swap directories (or point readers at the
     * new path) after it commits, like any immutable-layout compactor. */
   def compactLayout(spark: SparkSession, inPath: String, outPath: String,
-                    flattenTags: Seq[String] = Nil,
-                    bucketNs: Long = 0L,
-                    saltBuckets: Int = 32,
-                    codec: String = DefaultCodec): Unit = {
-    // default = preserve the input layout's persisted width
-    val width =
-      if (bucketNs > 0) bucketNs
-      else readBucketNs(spark, inPath).getOrElse(DayNs)
-    val raw = spark.read.parquet(inPath).drop(TsStore.DayCol)
-    // batch layouts are already flat (sname carries the tag set); the
-    // streaming sink stores the tags MAP instead — compaction upgrades it
-    // to the flat schema, deriving sname and the flattened tag_<k>
-    // pushdown columns on the way
-    val flat =
-      if (raw.columns.contains("sname")) raw
-      else flattenTagMap(raw, flattenTags)
-    writePrepared(flat, outPath, width, saltBuckets, codec)
-  }
+                    saltBuckets: Int = 32): Unit =
+    writePrepared(readFlat(spark, inPath).drop(TsStore.DayCol), outPath,
+      readBucketNs(spark, inPath).getOrElse(DayNs), saltBuckets)
 
   /** Every `metric=…` / `day=…` partition directory of the layout:
     * (day id, path, bytes), via the Hadoop FS API so HDFS/S3 layouts

@@ -21,13 +21,16 @@ import graft.plan.TsStore
   *    (series dictionary frames interleaved with delta-encoded samples)
   *    and atomically published, the same validated-prefix contract as the
   *    wire spool.
-  *  - [[readRuns]] decodes runs back to the flat layout frame (the exact
-  *    [[Ingest.respFilesFlat]] schema), emitting parser-side UnsafeRows.
-  *  - [[compactRuns]] re-clusters runs into the partitioned/sorted query
-  *    layout — the tree-maintenance analogue, run asynchronously on
-  *    whatever cadence the deployment wants (every N minutes / bytes).
-  *  - [[toStore]] serves queries over not-yet-compacted runs (union it
-  *    with the compacted layout's store for the live view).
+  *  - [[readRuns]] decodes runs back to the flat layout frame through
+  *    [[Ingest]]'s one flat schema and row writer, the ones
+  *    [[Ingest.respFilesFlat]] parses into.
+  *  - [[compactRuns]] (full rebuild) and [[foldRuns]] (incremental,
+  *    crash-safe) re-cluster runs into the partitioned/sorted query
+  *    layout through [[Ingest]]'s write tail — the tree-maintenance
+  *    analogue, run on whatever cadence the deployment wants.
+  *  - [[toStore]] serves queries over not-yet-compacted runs with the
+  *    same TsStore projection as [[Ingest.readLayout]]; [[liveStore]]
+  *    unions it with the layout's store for the live view.
   *
   * Format (all integers var-length except raw double bits):
   * `GRUN1` magic, varint tag-key count + tag keys; then frames:
@@ -90,8 +93,7 @@ object RunLog {
     * [[compactRuns]], exactly like the reference's 16.1M/s number pays
     * for the input log + in-memory tree but not for volume flushes. */
   def spoolResp(spark: SparkSession, inPath: String, outDir: String,
-                flattenTags: Seq[String] = Nil,
-                minPartitions: Int = 0): Long = {
+                flattenTags: Seq[String] = Nil): Long = {
     val tagKeys = flattenTags.toArray
     val sconf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
@@ -103,7 +105,7 @@ object RunLog {
     // into one directory still get distinct names via the nonce.
     val runNonce = java.lang.Long.toHexString(
       System.currentTimeMillis() ^ System.nanoTime())
-    val counts = Ingest.sessionFiles(spark, inPath, minPartitions)
+    val counts = Ingest.sessionFiles(spark, inPath)
       .mapPartitionsWithIndex { (pid, it) =>
         if (it.isEmpty) Iterator.single(0L)
         else {
@@ -182,15 +184,13 @@ object RunLog {
   // ---- read --------------------------------------------------------------
 
   /** Decode run files back into the flat layout frame
-    * `(metric, sname, ts, value, event, tag_<k>...)` — same schema and
-    * UnsafeRow emission as [[Ingest.respFilesFlat]], so the result feeds
+    * `(metric, sname, ts, value, event, tag_<k>...)` — the schema and row
+    * writer [[Ingest.respFilesFlat]] uses, so the result feeds
     * [[Ingest]]'s write tail or a [[TsStore]] directly. Tag keys come
     * from the file header (they were fixed at spool time). */
   def readRuns(spark: SparkSession, path: String,
-               flattenTags: Seq[String] = Nil,
-               minPartitions: Int = 0): DataFrame =
-    readRunFiles(spark, listServableRuns(spark, path), flattenTags,
-      minPartitions)
+               flattenTags: Seq[String] = Nil): DataFrame =
+    readRunFiles(spark, listServableRuns(spark, path), flattenTags)
 
   /** Every run a READER should see: the published spool plus any runs
     * staged under `.folding/` by an in-flight (or crashed) fold — those
@@ -225,28 +225,19 @@ object RunLog {
       .map(_.getPath.toString).sorted
   }
 
-  /** Decode an explicit run-file snapshot (see [[readRuns]]). */
+  /** Decode an explicit run-file snapshot (see [[readRuns]]), one task
+    * per file up to the cluster parallelism. */
   def readRunFiles(spark: SparkSession, runFiles: Seq[String],
-                   flattenTags: Seq[String] = Nil,
-                   minPartitions: Int = 0): DataFrame = {
+                   flattenTags: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
-    import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
     val tagKeys = flattenTags.toArray
     val nTags = tagKeys.length
-    val schema = StructType(
-      Seq(StructField("metric", StringType), StructField("sname", StringType),
-        StructField("ts", LongType), StructField("value", DoubleType),
-        StructField("event", StringType)) ++
-      tagKeys.map(t => StructField(s"tag_$t", StringType)))
-    val mp = if (minPartitions > 0) minPartitions
-             else spark.sparkContext.defaultParallelism
     val sconf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val files = runFiles
     val rdd = spark.sparkContext
-      .parallelize(files, math.max(1, math.min(mp, math.max(files.size, 1))))
+      .parallelize(runFiles, math.max(1,
+        math.min(spark.sparkContext.defaultParallelism, runFiles.size)))
       .flatMap[InternalRow] { p =>
         val hp = new org.apache.hadoop.fs.Path(p)
         val fs = hp.getFileSystem(sconf.value)
@@ -265,7 +256,7 @@ object RunLog {
           s"read with ${tagKeys.mkString(",")}")
         // sid -> (interned strings, lastTs)
         val dict = new java.util.HashMap[Long, (Array[UTF8String], Array[Long])]()
-        val w = new UnsafeRowWriter(5 + nTags)
+        val w = new Ingest.FlatRowWriter(nTags)
         new Iterator[InternalRow] {
           private var nextRow: InternalRow = _
           private var done = false
@@ -293,18 +284,10 @@ object RunLog {
                   require(st != null, s"run $p: sample before series $sid")
                   val ts = st._2(0) + unzigzag(readVarLong(in))
                   st._2(0) = ts
-                  w.reset(); w.zeroOutNullBytes()
-                  w.write(0, st._1(0)); w.write(1, st._1(1)); w.write(2, ts)
-                  w.write(3, java.lang.Double.longBitsToDouble(in.readLong()))
-                  if (tag == 0x02) w.setNullAt(4)
-                  else w.write(4, UTF8String.fromString(readStr(in)))
-                  var i = 0
-                  while (i < nTags) {
-                    if (st._1(2 + i) == null) w.setNullAt(5 + i)
-                    else w.write(5 + i, st._1(2 + i))
-                    i += 1
-                  }
-                  nextRow = w.getRow.copy()
+                  val v = java.lang.Double.longBitsToDouble(in.readLong())
+                  nextRow = w.row(st._1, ts, v,
+                    if (tag == 0x02) null
+                    else UTF8String.fromString(readStr(in)))
                 case other =>
                   in.close()
                   throw new IllegalStateException(s"run $p: bad frame $other")
@@ -326,7 +309,7 @@ object RunLog {
           }
         }
       }
-    org.apache.spark.sql.graftio.InternalRows.toDF(spark, rdd, schema)
+    Ingest.flatFrame(spark, rdd, tagKeys)
   }
 
   /** Compact spooled runs into the partitioned/sorted query layout — the
@@ -335,8 +318,7 @@ object RunLog {
   def compactRuns(spark: SparkSession, runsPath: String, layoutPath: String,
                   flattenTags: Seq[String] = Nil,
                   bucketNs: Long = Ingest.DayNs,
-                  saltBuckets: Int = 32,
-                  codec: String = Ingest.DefaultCodec): Unit = {
+                  saltBuckets: Int = 32): Unit = {
     val snapshot = listRuns(spark, runsPath)
     // this is a REBUILD (overwrite): compacting an empty spool would
     // replace the target layout with nothing — refuse instead
@@ -344,7 +326,7 @@ object RunLog {
       s"no run files under $runsPath — refusing to overwrite $layoutPath " +
       "with an empty layout (use foldRuns for incremental maintenance)")
     Ingest.writePrepared(readRunFiles(spark, snapshot, flattenTags),
-      layoutPath, bucketNs, saltBuckets, codec)
+      layoutPath, bucketNs, saltBuckets)
   }
 
   /** Incremental compaction with retirement — the recurring maintenance
@@ -376,12 +358,11 @@ object RunLog {
   def foldRuns(spark: SparkSession, runsPath: String, layoutPath: String,
                flattenTags: Seq[String] = Nil,
                bucketNs: Long = Ingest.DayNs,
-               saltBuckets: Int = 32,
-               codec: String = Ingest.DefaultCodec): Seq[String] = {
+               saltBuckets: Int = 32): Seq[String] = {
     // finish any interrupted fold FIRST: its staged runs land before the
     // new snapshot, preserving fold ordering
     recoverFolds(spark, runsPath, layoutPath, flattenTags, bucketNs,
-      saltBuckets, codec)
+      saltBuckets)
     val snapshot = listRuns(spark, runsPath)
     if (snapshot.nonEmpty) {
       val fs = new org.apache.hadoop.fs.Path(runsPath)
@@ -404,8 +385,8 @@ object RunLog {
         val layoutTags =
           try {
             val schema = footer.getFileMetaData.getSchema
-            (0 until schema.getFieldCount).map(schema.getFieldName)
-              .filter(_.startsWith("tag_")).map(_.stripPrefix("tag_"))
+            Ingest.tagKeysOf(
+              (0 until schema.getFieldCount).map(schema.getFieldName))
           } finally footer.close()
         require(layoutTags.sorted == flattenTags.sorted,
           s"layout $layoutPath has flattened tags [${layoutTags.mkString(",")}]"
@@ -435,7 +416,7 @@ object RunLog {
           throw new java.io.IOException(s"failed to stage run file $f")
       }
       runFold(spark, staging, layoutPath, flattenTags, bucketNs,
-        saltBuckets, codec)
+        saltBuckets)
     }
     snapshot
   }
@@ -451,15 +432,14 @@ object RunLog {
                    layoutPath: String,
                    flattenTags: Seq[String] = Nil,
                    bucketNs: Long = Ingest.DayNs,
-                   saltBuckets: Int = 32,
-                   codec: String = Ingest.DefaultCodec): Seq[String] = {
+                   saltBuckets: Int = 32): Seq[String] = {
     val base = new org.apache.hadoop.fs.Path(s"$runsPath/.folding")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) Seq.empty
     else fs.listStatus(base).toSeq.filter(_.isDirectory)
       .sortBy(_.getPath.getName).map { d =>
         runFold(spark, d.getPath, layoutPath, flattenTags, bucketNs,
-          saltBuckets, codec)
+          saltBuckets)
         d.getPath.getName
       }
   }
@@ -484,8 +464,7 @@ object RunLog {
   private def runFold(spark: SparkSession,
                       staging: org.apache.hadoop.fs.Path,
                       layoutPath: String, flattenTags: Seq[String],
-                      bucketNs: Long, saltBuckets: Int,
-                      codec: String): Unit = {
+                      bucketNs: Long, saltBuckets: Int): Unit = {
     import org.apache.hadoop.fs.Path
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val foldId = staging.getName
@@ -509,7 +488,7 @@ object RunLog {
       }
       // regenerate the fold output (overwrite mode — re-runnable)
       Ingest.writePrepared(readRunFiles(spark, staged, flattenTags),
-        outDir.toString, bucketNs, saltBuckets, codec)
+        outDir.toString, bucketNs, saltBuckets)
       // plan the landing and persist it BEFORE moving anything
       val moves = layoutDataFiles(fs, outDir).map { f =>
         val day = f.getPath.getParent
@@ -551,9 +530,8 @@ object RunLog {
   def liveStore(spark: SparkSession, layoutPath: String,
                 runsPath: String): TsStore = {
     val base = Ingest.readLayout(spark, layoutPath)
-    val tagKeys = base.samples.columns.filter(_.startsWith("tag_"))
-      .map(_.stripPrefix("tag_")).toSeq
-    val runs = toStore(spark, runsPath, tagKeys).samples
+    val runs = toStore(spark, runsPath,
+      Ingest.tagKeysOf(base.samples.columns.toSeq)).samples
       .withColumn(TsStore.DayCol, expr(s"ts div ${base.bucketNs}L"))
     new TsStore(base.samples.unionByName(runs), None, base.bucketNs)
   }
@@ -563,11 +541,6 @@ object RunLog {
     * spool publishes, before any compaction). Union with the compacted
     * layout's store for the full view ([[liveStore]]). */
   def toStore(spark: SparkSession, runsPath: String,
-              flattenTags: Seq[String] = Nil): TsStore = {
-    val raw = readRuns(spark, runsPath, flattenTags)
-    val tagsCol = TsStore.tagsOf(col("sname")).as("tags")
-    val tagCols = raw.columns.filter(_.startsWith("tag_")).toSeq.map(col)
-    new TsStore(raw.select(Seq(col("metric"), tagsCol, col("ts"),
-      col("value"), col("event"), col("sname")) ++ tagCols: _*))
-  }
+              flattenTags: Seq[String] = Nil): TsStore =
+    new TsStore(Ingest.storeFrame(readRuns(spark, runsPath, flattenTags)))
 }

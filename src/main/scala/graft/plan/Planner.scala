@@ -121,6 +121,13 @@ object Planner {
       map_filter(tags, (k, _) => !k.isin(ks: _*))
   }
 
+  /** The keying step of every data query: re-key the tag map for
+    * group-by/pivot-by-tag, then derive `tagstr`, the series key the
+    * output `sname` and every grouping use. */
+  private def seriesKeyed(df: DataFrame, g: Option[GroupByTag]): DataFrame =
+    df.withColumn(Tags, rekeyTags(col(Tags), g))
+      .withColumn("tagstr", tagStr(col(Tags)))
+
   /** Bucket anchor timestamp: `begin + k*step` forward, `begin - k*step`
     * backward — anchored at the query's own `begin`, NOT wall clock, which
     * is why this is integer `div` arithmetic and not `window()`
@@ -179,8 +186,7 @@ object Planner {
         var df = baseScan(store, q, Seq(m))
         for (fc <- q.filter; vf <- fc.byKey.get(m))
           df = df.filter(vfPred(col(Value), vf))
-        df = df.withColumn(Tags, rekeyTags(col(Tags), q.groupBy))
-          .withColumn("tagstr", tagStr(col(Tags)))
+        df = seriesKeyed(df, q.groupBy)
         Frame(df.select(snameExpr.as(Sname), col(Ts), col(Value)),
           Seq(Value), bw)
 
@@ -189,8 +195,7 @@ object Planner {
       case QueryKind.SelectEvents(m, regex) =>
         var df = baseScan(store, q, Seq(m))
         for (re <- regex) df = df.filter(col(Event).rlike(re))
-        df = df.withColumn(Tags, rekeyTags(col(Tags), q.groupBy))
-          .withColumn("tagstr", tagStr(col(Tags)))
+        df = seriesKeyed(df, q.groupBy)
         Frame(df.select(snameExpr.as(Sname), col(Ts), col(Event)),
           Seq(Event), bw)
 
@@ -203,9 +208,7 @@ object Planner {
         val metrics = pairs.map(_._1).distinct
         val funcs   = pairs.map(_._2).distinct
         funcs.foreach(f => if (!KnownAggFuncs(f)) fail(s"unknown func '$f'"))
-        val base = baseScan(store, q, metrics)
-          .withColumn(Tags, rekeyTags(col(Tags), q.groupBy))
-          .withColumn("tagstr", tagStr(col(Tags)))
+        val base = seriesKeyed(baseScan(store, q, metrics), q.groupBy)
         val aggCols = funcs.flatMap(f =>
           Seq(aggFunc(f).as(s"__$f"), aggOutputTs(f).as(s"__ts_$f")))
         val grouped = base.groupBy(col(Metric), col("tagstr"))
@@ -233,9 +236,7 @@ object Planner {
         if (funcs.isEmpty) fail("at least one func required")
         funcs.foreach(f => if (!KnownAggFuncs(f)) fail(s"unknown func '$f'"))
         val r = q.range.getOrElse(fail("group-aggregate requires range"))
-        val base = baseScan(store, q, metrics)
-          .withColumn(Tags, rekeyTags(col(Tags), q.groupBy))
-          .withColumn("tagstr", tagStr(col(Tags)))
+        val base = seriesKeyed(baseScan(store, q, metrics), q.groupBy)
         val aggCols = funcs.map(f => aggFunc(f).as(f))
         var df = base
           .groupBy(col(Metric), col("tagstr"), bucketCol(r, step).as(Ts))
@@ -281,8 +282,7 @@ object Planner {
           }.reduce(_ || _)
           base = base.filter(cond)
         }
-        val keyed = base.withColumn(Tags, rekeyTags(col(Tags), q.groupBy))
-          .withColumn("tagstr", tagStr(col(Tags)))
+        val keyed = seriesKeyed(base, q.groupBy)
         // Conditional aggregation instead of .pivot: ONE shuffle on
         // (tagstr, ts) with map-side partial agg, not pivot's two.
         // Duplicate samples at the same (series, ts) collapse via max —
@@ -311,9 +311,7 @@ object Planner {
       case QueryKind.GroupAggregateJoin(metrics, step, func) =>
         if (!KnownAggFuncs(func)) fail(s"unknown func '$func'")
         val r = q.range.getOrElse(fail("group-aggregate-join requires range"))
-        val base = baseScan(store, q, metrics)
-          .withColumn(Tags, rekeyTags(col(Tags), q.groupBy))
-          .withColumn("tagstr", tagStr(col(Tags)))
+        val base = seriesKeyed(baseScan(store, q, metrics), q.groupBy)
         // Output series named `m1|m2|... tags` — the JOIN naming, WITHOUT
         // per-column `:func` suffixes (reference: init_matcher_in_join_query
         // queryparser.cpp:1792-1812, shared by join and group-aggregate-join;

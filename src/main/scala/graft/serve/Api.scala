@@ -69,20 +69,24 @@ object Api {
     }
   }
 
-  /** One request path for both entry points: parse, existence probe,
-    * plan. A new validation step added here reaches the library AND the
-    * HTTP shapes. */
-  private def planRequest(store: TsStore, json: String): (JValue, Frame) = {
+  /** One request path for both entry points: parse and validate the
+    * whole request (the `output` clause included), then the existence
+    * probe, then plan. A malformed request is rejected before any Spark
+    * job runs, whether or not its series exist. A new validation step
+    * added here reaches the library AND the HTTP shapes. */
+  private def planRequest(store: TsStore, json: String)
+      : (Option[(String, Boolean)], Frame) = {
     val root = JsonMethods.parse(json)
     val q = QueryJson.fromJValue(root)
+    val output = outputSpec(root)
     requireSeries(store, q)
-    (root, Planner.plan(q, store))
+    (output, Planner.plan(q, store))
   }
 
   /** `/api/query` with optional output formatting. */
   def query(store: TsStore, json: String): QueryResult = {
-    val (root, frame) = planRequest(store, json)
-    outputSpec(root) match {
+    val (output, frame) = planRequest(store, json)
+    output match {
       case None             => Rows(frame.df)
       case Some((fmt, iso)) => Lines(format(frame, fmt, iso))
     }
@@ -92,25 +96,27 @@ object Api {
     * reference's default output format is RESP
     * (query_results_pooler.cpp:367-380). */
   def queryLines(store: TsStore, json: String): Dataset[String] = {
-    val (root, frame) = planRequest(store, json)
-    val (fmt, iso) = outputSpec(root).getOrElse(("resp", true))
+    val (output, frame) = planRequest(store, json)
+    val (fmt, iso) = output.getOrElse(("resp", true))
     format(frame, fmt, iso)
   }
 
+  /** `fmt` is one of [[OutputFormats]] ([[outputSpec]] checked it). */
   private def format(frame: Frame, fmt: String, iso: Boolean): Dataset[String] =
-    fmt match {
-      case "csv"  => OutputFormat.csv(frame, iso)
-      case "resp" => OutputFormat.resp(frame, iso)
-      case other  =>
-        throw QueryJson.QueryParseException(s"bad output.format '$other'")
-    }
+    if (fmt == "csv") OutputFormat.csv(frame, iso)
+    else OutputFormat.resp(frame, iso)
 
+  private val OutputFormats = Set("csv", "resp")
+
+  /** The validated `output` clause: (format, iso timestamps). */
   private def outputSpec(root: JValue): Option[(String, Boolean)] =
     (root \ "output") match {
       case JNothing => None
       case o =>
         val fmt = (o \ "format") match {
-          case JString(f)   => f
+          case JString(f) if OutputFormats(f) => f
+          case JString(other) =>
+            throw QueryJson.QueryParseException(s"bad output.format '$other'")
           case JNothing     => "csv"
           case _            => throw QueryJson.QueryParseException("bad output.format")
         }

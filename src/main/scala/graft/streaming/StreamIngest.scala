@@ -119,19 +119,27 @@ object StreamIngest {
       }
     }
 
-  /** Append sink in the engine's layout: parquet partitioned by
-    * (metric, day). `checkpoint` is the WAL: exactly-once per micro-batch
-    * across restarts. */
+  /** Append sink in the engine's layout: the same flat schema every batch
+    * writer produces (`graft.io.Ingest`'s layout contract), parquet
+    * partitioned by (metric, day). Samples carrying the `tags` map go
+    * through `Ingest.flattenTagMap`: the canonical `sname` is derived,
+    * the `flattenTags` keys are lifted into `tag_<k>` columns and the map
+    * is dropped, so `Ingest.readLayout` and `Ingest.compactLayout` read
+    * the sink's output with no schema branch. Files are appended per
+    * micro-batch, unsorted across files; `compactLayout` restores the
+    * salted, `(sname, ts)`-sorted layout. `checkpoint` is the WAL:
+    * exactly-once per micro-batch across restarts. */
   def writeLayoutStream(samples: DataFrame, path: String,
                         checkpoint: String,
+                        flattenTags: Seq[String] = Nil,
                         bucketNs: Long = graft.io.Ingest.DayNs): DataStreamWriter[Row] = {
-    // bucketNs MUST match the layout this stream appends to (and what
-    // readLayout is called with): a mismatched divisor writes day values
-    // the planner's directory pruning filters out — silent row loss.
-    // Persist it up front (append sink — the directory is never wiped)
-    // so readLayout's default picks it up without caller coordination.
+    // bucketNs MUST match the layout this stream appends to: a mismatched
+    // divisor writes day values the planner's directory pruning filters
+    // out — silent row loss. Persist it up front (append sink — the
+    // directory is never wiped) so readLayout picks it up without caller
+    // coordination.
     graft.io.Ingest.writeBucketNs(samples.sparkSession, path, bucketNs)
-    samples
+    graft.io.Ingest.flattenTagMap(samples, flattenTags)
       .withColumn("day", expr(s"ts div ${bucketNs}L"))
       .writeStream
       .format("parquet")

@@ -42,6 +42,14 @@ class ApiSpec extends SparkFunSuite {
       """{"select":"cpu","range":{"from":0,"to":1},"output":{"timestamp":"maybe"}}"""))
   }
 
+  test("a bad output clause on an unknown metric is rejected before any Spark job") {
+    val jobs = org.apache.spark.sql.graftio.ListenerBus.jobsOf(spark.sparkContext) {
+      intercept[IllegalArgumentException](Api.query(st,
+        """{"select":"nosuch","range":{"from":0,"to":1},"output":{"format":"xml"}}"""))
+    }
+    assert(jobs == 0)
+  }
+
   test("suggest/search/stats/function-names route through") {
     assert(Api.suggest(st, """{"select":"metric-names"}""")
       .collect().map(_.getString(0)).toSeq == Seq("cpu", "mem"))

@@ -109,9 +109,10 @@ class IngestSpec extends SparkFunSuite {
       LineProtocol.parseOpenTsdb("get cpu.real 123 1 h=a"))
   }
 
-  // the shuffle-free ingest default (sorted-run write) and the salted
-  // exchange write are the same layout to every reader: identical rows,
-  // per-file (sname, ts) sorted runs, same partition directories
+  // the shuffle-free ingest write (ingestResp's sorted runs) and the
+  // salted exchange write (the compaction of spooled runs) are the same
+  // layout to every reader: identical rows, per-file (sname, ts) sorted
+  // runs, same partition directories
   test("sorted-run write is read-identical to the salted exchange write") {
     val dir = Files.createTempDirectory("graft-sortedrun").toFile
     val respFile = new java.io.File(dir, "session1.resp")
@@ -122,10 +123,12 @@ class IngestSpec extends SparkFunSuite {
     Files.write(respFile.toPath, lines.mkString("\n").getBytes)
     val runs = new java.io.File(dir, "runs").getAbsolutePath
     val salted = new java.io.File(dir, "salted").getAbsolutePath
+    val spool = new java.io.File(dir, "spool").getAbsolutePath
     Ingest.ingestResp(spark, respFile.getAbsolutePath, runs,
       flattenTags = Seq("host"))
-    Ingest.ingestResp(spark, respFile.getAbsolutePath, salted,
-      flattenTags = Seq("host"), exchange = true)
+    graft.io.RunLog.spoolResp(spark, respFile.getAbsolutePath, spool,
+      Seq("host"))
+    graft.io.RunLog.compactRuns(spark, spool, salted, Seq("host"))
     def snap(p: String) = Ingest.readLayout(spark, p).samples
       .select("metric", "ts", "value")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
@@ -299,13 +302,9 @@ class IngestSpec extends SparkFunSuite {
       lit(null).cast("string").as("event"))
       .toDF("metric", "tags", "ts", "value", "event")
     Ingest.writeLayout(samples, layout, bucketNs = hour)
-    val st = Ingest.readLayout(sp, layout, bucketNs = hour)
-    val df = graft.plan.Planner.plan(graft.ast.QueryJson.parse(
-      s"""{"select":"temp","range":{"from":0,"to":${48 * hour}}}"""), st).df
-    assert(df.count() == 48)
-    // the width is persisted inside the layout: the DEFAULT read (no
-    // bucketNs argument) must pick it up — a caller can no longer
-    // silently lose rows by forgetting to repeat the writer's width
+    // the width is persisted inside the layout and the read picks it up
+    // — a caller cannot silently lose rows by repeating the writer's
+    // width wrongly
     assert(Ingest.readBucketNs(sp, layout).contains(hour))
     val auto = Ingest.readLayout(sp, layout)
     assert(auto.bucketNs == hour)
@@ -314,26 +313,20 @@ class IngestSpec extends SparkFunSuite {
     assert(df2.count() == 48)
   }
 
-  test("readLayout tolerates the streaming sink's pre-compaction schema") {
+  test("readLayout rejects a parquet directory with no sname column") {
     import org.apache.spark.sql.functions._
-    // the streaming sink writes ParsedSample rows + day: tags MAP, no
-    // sname — reading such a layout before first compaction must derive
-    // sname instead of failing on the missing column
-    val layout = Files.createTempDirectory("graft-streamschema").toString
-    val samples = spark.range(10).select(
+    // a plain sample table (tags MAP, no sname) is not a layout: the read
+    // fails up front, naming the path
+    val layout = Files.createTempDirectory("graft-nosname").toString
+    spark.range(10).select(
       lit("cpu").as("metric"),
-      map(lit("host"), concat(lit("h"), (col("id") % 2).cast("string")))
-        .as("tags"),
+      map(lit("host"), lit("h0")).as("tags"),
       (col("id") * 1000000000L).as("ts"),
       col("id").cast("double").as("value"),
-      lit(null).cast("string").as("event"),
       expr(s"id * 1000000000 div ${Ingest.DayNs}L").as("day"))
-    samples.write.mode("overwrite").partitionBy("metric", "day").parquet(layout)
-    val st = Ingest.readLayout(spark, layout)
-    val got = st.samples.select("sname", "value").collect()
-    assert(got.length == 10)
-    assert(got.map(_.getString(0)).toSet ==
-      Set("cpu host=h0", "cpu host=h1"))
+      .write.mode("overwrite").partitionBy("metric", "day").parquet(layout)
+    val e = intercept[IllegalArgumentException](Ingest.readLayout(spark, layout))
+    assert(e.getMessage.contains(layout) && e.getMessage.contains("no sname"))
   }
 
   // functests/test_high_cardinality.py spirit: the series dimension

@@ -106,6 +106,32 @@ class PipeSpec extends SparkFunSuite {
     assert(df2.count() == 0)
   }
 
+  private def joinAB = store(Seq(
+    ("a", Map("h" -> "X"), 100L, 3.0),
+    ("b", Map("h" -> "X"), 100L, 4.0)))
+
+  private def planEval(expr: String) = Planner.plan(QueryJson.parse(
+    s"""{"join":["a","b"],"range":{"from":0,"to":1000},
+       |"apply":[{"name":"eval","expr":"$expr"}]}""".stripMargin), joinAB)
+
+  test("eval: an unknown variable is rejected") {
+    intercept[IllegalArgumentException](planEval("a + nosuch"))
+  }
+
+  test("eval: a malformed expression is rejected") {
+    intercept[IllegalArgumentException](planEval("a + * b"))
+  }
+
+  test("sax: alphabet_size 99 is rejected") {
+    intercept[IllegalArgumentException](run(
+      """{"name":"sax","alphabet_size":99,"window_width":4}""", single(8)))
+  }
+
+  test("frequent-items: error 0 is rejected") {
+    intercept[IllegalArgumentException](run(
+      """{"name":"frequent-items","error":0.0,"portion":0.1}""", single(8)))
+  }
+
   test("top: N series by time-weighted sum, descending") {
     val st = store(Seq(
       ("m", Map("h" -> "A"), 0L, 10.0),

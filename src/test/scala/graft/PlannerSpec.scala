@@ -56,6 +56,18 @@ class PlannerSpec extends SparkFunSuite {
     assert(rows3(df).map(_._3) == Seq(0.0, 2.0, 3.0, 5.0))
   }
 
+  test("an empty range returns 0 rows") {
+    assert(run(s"""{"select":"test","range":{"from":$T0,"to":$T0}}""").count() == 0)
+  }
+
+  test("aggregate: an unknown function ('median') is rejected") {
+    intercept[IllegalArgumentException](run("""{"aggregate":{"test":"median"}}"""))
+  }
+
+  test("entry: the driver-contract select returns rows on sf0.001") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
+
   test("aggregate: all 11 functions have reference semantics") {
     // single series: host fixed
     val st = store(Seq(

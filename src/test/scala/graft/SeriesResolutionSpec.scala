@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.graftio.ListenerBus
 
@@ -134,26 +131,7 @@ class SeriesResolutionSpec extends SparkFunSuite {
     }
   }
 
-  /** Spark jobs `f` starts, counted in its own job group after the
-    * listener bus has delivered every event. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"series-probe-${java.util.UUID.randomUUID}"
-    val started = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "series probe")
-      try f finally sc.clearJobGroup()
-      ListenerBus.drain(sc)
-      started.get
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf(f: => Unit): Int = ListenerBus.jobsOf(spark.sparkContext)(f)
 
   test("a resolving probe runs one Spark job; a miss at most ceil(log4 partitions)+1") {
     val st = Ingest.readLayout(spark, layout)

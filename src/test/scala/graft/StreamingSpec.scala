@@ -156,8 +156,8 @@ class StreamingSpec extends SparkFunSuite {
           s":${1000000000L * i}", s":$i")).mkString("\n").getBytes)
     // several micro-batches -> several small files per partition dir
     val q = StreamIngest.writeLayoutStream(
-      StreamIngest.respFileStream(spark, in.getAbsolutePath), out, ckpt)
-      .start()
+      StreamIngest.respFileStream(spark, in.getAbsolutePath), out, ckpt,
+      flattenTags = Seq("host")).start()
     try {
       for (b <- 0 until 4) {
         session(s"s$b.resp", b * 10 until (b + 1) * 10)
@@ -172,8 +172,7 @@ class StreamingSpec extends SparkFunSuite {
     }
     val before = parquetFiles(out)
     assert(before >= 4, s"expected one file per micro-batch, saw $before")
-    graft.io.Ingest.compactLayout(spark, out, compacted, flattenTags = Seq("host"),
-      saltBuckets = 1)
+    graft.io.Ingest.compactLayout(spark, out, compacted, saltBuckets = 1)
     assert(parquetFiles(compacted) < before)
     // identical sample set through the normal read path, flat schema
     val st = graft.io.Ingest.readLayout(spark, compacted)
@@ -181,6 +180,51 @@ class StreamingSpec extends SparkFunSuite {
     assert(st.samples.selectExpr("sum(value)").head.getDouble(0) ==
       (0 until 40).sum.toDouble)
     assert(spark.read.parquet(compacted).columns.contains("tag_host"))
+  }
+
+  test("the streaming sink writes the batch layout schema, read-identical") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-stream-schema").toFile
+    val tsdbIn = new java.io.File(dir, "tsdb"); tsdbIn.mkdirs()
+    val respIn = new java.io.File(dir, "resp"); respIn.mkdirs()
+    Files.write(new java.io.File(tsdbIn, "b1.txt").toPath,
+      (0 until 6).map(i => s"put cpu ${1000 + i} $i.0 host=h${i % 2} dc=d${i % 3}")
+        .mkString("\n").getBytes)
+    Files.write(new java.io.File(respIn, "s1.resp").toPath,
+      (0 until 6).flatMap(i => Seq(s"+mem host=h${i % 2}",
+        s":${1000000000L * i}", s"+$i.5")).mkString("\n").getBytes)
+    val tags = Seq("host")
+    def viaStream(name: String, parsed: org.apache.spark.sql.DataFrame): String = {
+      val out = new java.io.File(dir, s"$name-stream").getAbsolutePath
+      val q = StreamIngest.writeLayoutStream(parsed, out,
+        new java.io.File(dir, s"$name-ckpt").getAbsolutePath, tags).start()
+      try q.processAllAvailable() finally q.stop()
+      out
+    }
+    def viaBatch(name: String, parsed: org.apache.spark.sql.DataFrame): String = {
+      val out = new java.io.File(dir, s"$name-batch").getAbsolutePath
+      graft.io.Ingest.writeLayout(parsed, out, tags)
+      out
+    }
+    def rows(path: String) = graft.io.Ingest.readLayout(spark, path).samples
+      .collect().map(_.toString).sorted.toSeq
+    for ((name, stream, batch) <- Seq(
+        ("tsdb",
+          StreamIngest.parseOpenTsdbStream(
+            spark.readStream.textFile(tsdbIn.getAbsolutePath)),
+          graft.io.Ingest.openTsdbFiles(spark, tsdbIn.getAbsolutePath)),
+        ("resp",
+          StreamIngest.respFileStream(spark, respIn.getAbsolutePath),
+          graft.io.Ingest.respFiles(spark, respIn.getAbsolutePath)))) {
+      val s = viaStream(name, stream)
+      val b = viaBatch(name, batch)
+      assert(spark.read.parquet(s).columns.toSet ==
+        spark.read.parquet(b).columns.toSet, name)
+      assert(spark.read.parquet(s).columns.toSet ==
+        Set("metric", "sname", "ts", "value", "event", "tag_host", "day"), name)
+      assert(rows(s) == rows(b), name)
+      assert(rows(s).size == 6, name)
+    }
   }
 
   test("malformed RESP session truncates at the error, keeps prior samples") {
