@@ -116,7 +116,9 @@ object ScaleCheck {
         col("event_type"), col("value"), col("props"))
     }
 
+    // sample columns only: the layout's sname/tag_<k> would stay unreplicated
     val samples0 = TestData.events(spark, sfDir).samples
+      .select(col("metric"), col("tags"), col("ts"), col("value"))
     val store = new TsStore(replicated(samples0) { (b, r) =>
       b.withColumn("tags", map(
         lit("user"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ast.QueryJson
 import graft.llm.{Bpe, CorpusIo, Dedup, Embed, Multimodal, Sample, Text}
 import graft.model.AkuTime
-import graft.plan.{EventOps, Meta, Planner, TsAnalytics, TsStore}
+import graft.plan.{EventOps, Meta, Planner, TsAnalytics}
 import graft.serve.OutputFormat
 import graft.sources.TestData
 
@@ -21,18 +21,6 @@ import graft.sources.TestData
   */
 object SparkEntry {
 
-  /** Per-process scratch path for gates that MATERIALIZE a mutable layout
-    * (ivf/rollup/retention/meta gates). Keyed by dataset dir AND pid:
-    * concurrent processes over the same sf — driver verify beside a bench,
-    * or the bench plan audit re-invoking a gate fn whose timing pass ran in
-    * another process — must never race on one directory (the retention
-    * gates `require()` on the layout's pre-eviction state). Within a
-    * process, gate invocations are sequential and each rewrites its layout
-    * from scratch, so same-path reuse stays deterministic. */
-  private val procToken = ProcessHandle.current().pid().toString
-  private def scratch(prefix: String, d: String): String =
-    s"/tmp/${prefix}_p${procToken}_${d.replaceAll("[^0-9a-zA-Z]", "_")}"
-
   // ---- shared time constants (single source of truth for JSON + SQL) ----
   private val T0iso = "20240105T000000"; private val T0 = AkuTime.parseTs(T0iso)
   private val T1iso = "20240120T000000"; private val T1 = AkuTime.parseTs(T1iso)
@@ -41,7 +29,7 @@ object SparkEntry {
   private val Day = 86400L * 1000000000L
   private val H6  = 6 * 3600L * 1000000000L
 
-  // SQL fragments mirroring the TestData.events adapter
+  // SQL fragments mirroring the TestData.events build over the raw table
   private val kSql = "(json_extract_string(props,'$.k')::INT % 10)"
   private def snameSql(metricExpr: String): String =
     s"$metricExpr || ' k=' || $kSql || ' user=' || user_id"
@@ -54,17 +42,6 @@ object SparkEntry {
   /** Run a JSON query through the engine against the events store. */
   private def run(json: String)(spark: SparkSession, sfDir: String): DataFrame =
     Planner.plan(QueryJson.parse(json), TestData.events(spark, sfDir)).df
-
-  // metadata queries plan against the store WITH its persisted series
-  // dimension (the deployment shape — O(series), no fact scan); the
-  // ad-hoc fallback store would make the bench time a scan no real
-  // deployment pays
-  private def runDim(json: String)(spark: SparkSession, sfDir: String): DataFrame =
-    Planner.plan(QueryJson.parse(json),
-      TestData.eventsWithDim(spark, sfDir)).df
-
-  private def runFrame(json: String)(spark: SparkSession, sfDir: String) =
-    Planner.plan(QueryJson.parse(json), TestData.events(spark, sfDir))
 
   private def runEv(json: String)(spark: SparkSession, sfDir: String): DataFrame =
     Planner.plan(QueryJson.parse(json), TestData.eventStore(spark, sfDir)).df
@@ -853,19 +830,19 @@ object SparkEntry {
 
     // -- Q7 meta:names: series listing -----------------------------------
     "ts_meta_names" -> Gated(
-      (s, d) => runDim("""{"select":"meta:names"}""")(s, d).orderBy(col("sname")),
+      (s, d) => run("""{"select":"meta:names"}""")(s, d).orderBy(col("sname")),
       Some(s"""SELECT DISTINCT ${snameSql("event_type")} AS sname
               |FROM events ORDER BY 1""".stripMargin)),
 
     // -- Q7 meta:names with where + metric pattern forms -----------------
     "ts_meta_names_where" -> Gated(
-      (s, d) => runDim("""{"select":"meta:names","where":{"user":["7","8"]}}""")(s, d)
+      (s, d) => run("""{"select":"meta:names","where":{"user":["7","8"]}}""")(s, d)
         .orderBy(col("sname")),
       Some(s"""SELECT DISTINCT ${snameSql("event_type")} AS sname
               |FROM events WHERE user_id IN (7, 8) ORDER BY 1""".stripMargin)),
 
     "ts_meta_names_metric" -> Gated(
-      (s, d) => runDim("""{"select":"meta:names:purchase"}""")(s, d)
+      (s, d) => run("""{"select":"meta:names:purchase"}""")(s, d)
         .orderBy(col("sname")),
       Some(s"""SELECT DISTINCT ${snameSql("event_type")} AS sname
               |FROM events WHERE event_type = 'purchase' ORDER BY 1""".stripMargin)),
@@ -1372,13 +1349,13 @@ object SparkEntry {
 
     // -- /api/suggest: metric-names / tag-names / tag-values -------------
     "suggest_metric_names" -> Gated(
-      (s, d) => Meta.suggest(TestData.eventsWithDim(s, d),
+      (s, d) => Meta.suggest(TestData.events(s, d),
         """{"select":"metric-names","starts-with":"p"}"""),
       Some("""SELECT DISTINCT event_type AS name FROM events
              |WHERE event_type LIKE 'p%' ORDER BY 1""".stripMargin)),
 
     "suggest_tag_names" -> Gated(
-      (s, d) => Meta.suggest(TestData.eventsWithDim(s, d),
+      (s, d) => Meta.suggest(TestData.events(s, d),
         """{"select":"tag-names","metric":"click"}"""),
       Some("""SELECT 'k' AS name WHERE EXISTS (SELECT 1 FROM events WHERE event_type='click')
              |UNION ALL
@@ -1386,7 +1363,7 @@ object SparkEntry {
              |ORDER BY 1""".stripMargin)),
 
     "suggest_tag_values" -> Gated(
-      (s, d) => Meta.suggest(TestData.eventsWithDim(s, d),
+      (s, d) => Meta.suggest(TestData.events(s, d),
         """{"select":"tag-values","metric":"click","tag":"user","starts-with":"10"}"""),
       Some("""SELECT DISTINCT user_id::VARCHAR AS name FROM events
              |WHERE event_type = 'click' AND user_id::VARCHAR LIKE '10%'
@@ -1394,7 +1371,7 @@ object SparkEntry {
 
     // -- /api/search: series by metric + where ---------------------------
     "search_series" -> Gated(
-      (s, d) => Meta.searchJson(TestData.eventsWithDim(s, d),
+      (s, d) => Meta.searchJson(TestData.events(s, d),
         """{"select":"view","where":{"user":["1","2","3","4","5"]}}"""),
       Some(s"""SELECT DISTINCT ${snameSql("'view'")} AS sname FROM events
               |WHERE event_type = 'view' AND user_id IN (1,2,3,4,5)
@@ -1404,7 +1381,7 @@ object SparkEntry {
     // reference PlainSeriesMatcher::regex_match (seriesparser.h:149-201):
     // the pattern runs over the flat series-name table
     "search_series_regex" -> Gated(
-      (s, d) => Meta.searchJson(TestData.eventsWithDim(s, d),
+      (s, d) => Meta.searchJson(TestData.events(s, d),
         """{"regex":"^view k=[0-3] user=1[0-9]$"}"""),
       Some(s"""SELECT DISTINCT sname FROM
               |  (SELECT ${snameSql("event_type")} AS sname FROM events)
@@ -1413,9 +1390,10 @@ object SparkEntry {
 
     // -- output: reference CSV row format (ISO ts + %.17g doubles) -------
     "output_csv" -> Gated(
-      (s, d) => OutputFormat.csv(runFrame(
+      (s, d) => OutputFormat.csv(Planner.plan(QueryJson.parse(
         s"""{"select":"purchase","range":{"from":"$T0iso","to":"$T1iso"},
-           |"where":{"user":["3","7"]},"order-by":"time"}""".stripMargin)(s, d))
+           |"where":{"user":["3","7"]},"order-by":"time"}""".stripMargin),
+        TestData.events(s, d)))
         .toDF("line").orderBy(col("line")),
       Some(s"""SELECT ${snameSql("event_type")} || ',' ||
               |  strftime(ts, '%Y%m%dT%H%M%S') || '.' ||
@@ -1848,7 +1826,7 @@ object SparkEntry {
     "doc_substring_incremental" -> Gated(
       (s, d) => {
         val synth = spanSynthDf(s, d)
-        val tmp = scratch("graft_spanidx", d)
+        val tmp = TestData.scratch("graft_spanidx", d)
         Dedup.writeSpanIndex(synth.filter(col("doc_id") % 4 =!= 0), tmp,
           k = 6)
         Dedup.trimAgainstIndex(synth.filter(col("doc_id") % 4 === 0), tmp)
@@ -2029,7 +2007,7 @@ object SparkEntry {
     // over the table — a lost/truncated shard write cannot pass.
     "doc_export_shards" -> Gated(
       (s, d) => {
-        val tmp = scratch("graft_shards", d)
+        val tmp = TestData.scratch("graft_shards", d)
         CorpusIo.writeShards(TestData.table(s, d, "documents")
           .select(col("doc_id"), col("text"), col("source")), tmp,
           nShards = 8)
@@ -2047,7 +2025,7 @@ object SparkEntry {
     // clean lines with text/source intact.
     "doc_jsonl_ingest" -> Gated(
       (s, d) => {
-        val tmp = scratch("graft_jsonl", d)
+        val tmp = TestData.scratch("graft_jsonl", d)
         val js = to_json(struct(col("doc_id"), col("text"), col("source")))
         TestData.table(s, d, "documents")
           .select(when(col("doc_id") % 17 === 0,
@@ -2173,7 +2151,7 @@ object SparkEntry {
     "doc_neardup_incremental" -> Gated(
       (s, d) => {
         val docs = TestData.table(s, d, "documents")
-        val tmp = scratch("graft_lshidx", d)
+        val tmp = TestData.scratch("graft_lshidx", d)
         Dedup.writeLshIndex(docs.filter(col("doc_id") % 4 =!= 0), tmp,
           n = 3, bands = 64, rowsPerBand = 2)
         Dedup.neardupAgainstIndex(docs.filter(col("doc_id") % 4 === 0), tmp,
@@ -2194,7 +2172,7 @@ object SparkEntry {
     "doc_neardup_incremental_star" -> Gated(
       (s, d) => {
         val docs = TestData.table(s, d, "documents")
-        val tmp = scratch("graft_lshidx_star", d)
+        val tmp = TestData.scratch("graft_lshidx_star", d)
         Dedup.writeLshIndex(docs.filter(col("doc_id") % 4 =!= 0), tmp,
           n = 3, bands = 64, rowsPerBand = 2)
         Dedup.neardupAgainstIndexStar(docs.filter(col("doc_id") % 4 === 0),
@@ -3326,7 +3304,7 @@ object SparkEntry {
     "ann_topk_ivf" -> Gated(
       (s, d) => {
         val emb = TestData.table(s, d, "embeddings")
-        val tmp = scratch("graft_ivf", d)
+        val tmp = TestData.scratch("graft_ivf", d)
         Embed.writeIvf(emb, tmp, nCentroids = 16)
         val q = emb.filter(col("vec_id") === 7)
           .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble)
@@ -3349,7 +3327,7 @@ object SparkEntry {
     "ann_topk_ivf_pruned" -> Gated(
       (s, d) => {
         val emb = TestData.table(s, d, "embeddings")
-        val tmp = scratch("graft_ivfp", d)
+        val tmp = TestData.scratch("graft_ivfp", d)
         Embed.writeIvf(emb, tmp, nCentroids = 4,
           centroids = Some(ivfCentroids(s, d)), rounded = true)
         val q = emb.filter(col("vec_id") === 7)
@@ -3370,7 +3348,7 @@ object SparkEntry {
     "embed_ivf_update" -> Gated(
       (s, d) => {
         val emb = TestData.table(s, d, "embeddings")
-        val tmp = scratch("graft_ivfu", d)
+        val tmp = TestData.scratch("graft_ivfu", d)
         Embed.writeIvf(emb.filter(col("vec_id") % 2 === 0), tmp,
           nCentroids = 16)
         Embed.ivfUpdate(emb.filter(col("vec_id") % 2 =!= 0), tmp)
@@ -3406,7 +3384,7 @@ object SparkEntry {
     "embed_topk_batch_ivf" -> Gated(
       (s, d) => {
         val emb = TestData.table(s, d, "embeddings")
-        val tmp = scratch("graft_bivf", d)
+        val tmp = TestData.scratch("graft_bivf", d)
         Embed.writeIvf(emb, tmp, nCentroids = 16)
         Embed.topKBatchIvf(
           emb.filter(col("vec_id") % 101 === 0)
@@ -3485,7 +3463,7 @@ object SparkEntry {
             init = Some(books0))
           .map(_.map(_.map(x =>
             BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
-        val tmp = scratch("graft_ivfpq", d)
+        val tmp = TestData.scratch("graft_ivfpq", d)
         Embed.writeIvfPq(emb, tmp, nCentroids = 4, m = 8, k = 4,
           centroids = Some(init), books = Some(books))
         val q = emb.filter(col("vec_id") === 7)
@@ -3666,12 +3644,13 @@ object SparkEntry {
     // queries the original table directly.
     "layout_roundtrip" -> Gated(
       (s, d) => {
-        val tmp = scratch("graft_layout_rt", d)
+        val tmp = TestData.scratch("graft_layout_rt", d)
         graft.io.Ingest.writeLayout(
           TestData.events(s, d).samples
             .filter(col("metric") === "view") // the queried slice is what
             // the gate checks; writing all metrics only multiplies IO
-            .withColumn("event", lit(null).cast("string")),
+            .select(col("metric"), col("tags"), col("ts"), col("value"),
+              lit(null).cast("string").as("event")),
           tmp, flattenTags = Seq("user"))
         val st = graft.io.Ingest.readLayout(s, tmp)
         Planner.plan(QueryJson.parse(
@@ -3691,11 +3670,12 @@ object SparkEntry {
     // eviction; cutoff on a day boundary makes suffix == ts >= cutoff
     "ts_retention" -> Gated(
       (s, d) => {
-        val tmp = scratch("graft_layout_ret", d)
+        val tmp = TestData.scratch("graft_layout_ret", d)
         graft.io.Ingest.writeLayout(
           TestData.events(s, d).samples
             .filter(col("metric") === "click")
-            .withColumn("event", lit(null).cast("string")),
+            .select(col("metric"), col("tags"), col("ts"), col("value"),
+              lit(null).cast("string").as("event")),
           tmp, flattenTags = Seq("user"))
         graft.io.Ingest.enforceRetentionBefore(
           s, tmp, AkuTime.parseTs("20240110T000000"))
@@ -3720,11 +3700,12 @@ object SparkEntry {
     // contiguous recent suffix, day-whole eviction)
     "ts_retention_bytes" -> Gated(
       (s, d) => {
-        val tmp = scratch("graft_layout_retb", d)
+        val tmp = TestData.scratch("graft_layout_retb", d)
         graft.io.Ingest.writeLayout(
           TestData.events(s, d).samples
             .filter(col("metric") === "click")
-            .withColumn("event", lit(null).cast("string")),
+            .select(col("metric"), col("tags"), col("ts"), col("value"),
+              lit(null).cast("string").as("event")),
           tmp, flattenTags = Seq("user"))
         val byDay = graft.io.Ingest.layoutDayBytes(s, tmp)
         require(byDay.size >= 3, s"need >=3 days, got ${byDay.size}")
@@ -3753,11 +3734,12 @@ object SparkEntry {
     // (IngestSpec asserts the plan reads only the dimension parquet).
     "layout_meta_names" -> Gated(
       (s, d) => {
-        val base = scratch("graft_layout_meta", d)
+        val base = TestData.scratch("graft_layout_meta", d)
         graft.io.Ingest.writeLayout(
           TestData.events(s, d).samples
             .filter(col("metric") === "purchase")
-            .withColumn("event", lit(null).cast("string")),
+            .select(col("metric"), col("tags"), col("ts"), col("value"),
+              lit(null).cast("string").as("event")),
           base, flattenTags = Seq("user"))
         graft.io.Ingest.writeSeriesFromLayout(s, base, s"$base-series")
         val st = graft.io.Ingest.readLayout(s, base, Some(s"$base-series"))
@@ -3967,11 +3949,8 @@ object SparkEntry {
     // small per-series frame second — the window never sees raw samples
     "ts_rank_series" -> Gated(
       (s, d) => {
-        val ev = TestData.events(s, d).samples
-        val withS = ev.select(col("metric"),
-          TsStore.snameOf(col("metric"),
-            TsStore.tagStr(col("tags"))).as("sname"),
-          col("value"))
+        val withS = TestData.events(s, d).samples
+          .select(col("metric"), col("sname"), col("value"))
         TsAnalytics.topKPerGroup(withS, "metric", "sname", col("value"), 3)
           .select(col("metric"), col("sname"),
             round(col("value_sum"), 4).as("value_sum"),
@@ -4220,11 +4199,8 @@ object SparkEntry {
     // -- robust outliers: median absolute deviation per series -----------
     "ts_outlier_mad" -> Gated(
       (s, d) => {
-        val ev = TestData.events(s, d).samples
-        val withS = ev.select(col("metric"),
-          TsStore.snameOf(col("metric"),
-            TsStore.tagStr(col("tags"))).as("sname"),
-          col("ts"), col("value"))
+        val withS = TestData.events(s, d).samples
+          .select(col("metric"), col("sname"), col("ts"), col("value"))
         TsAnalytics.madOutliers(withS, Seq("metric", "sname"),
             "ts", "value", k = 3.0)
           .orderBy(col("metric"), col("sname"), col("ts"), col("value"))
@@ -4792,11 +4768,8 @@ object SparkEntry {
     // -- series-cardinality growth report (index-melt detector) ----------
     "ts_cardinality_report" -> Gated(
       (s, d) => {
-        val ev = TestData.events(s, d).samples
-        val withS = ev.select(col("metric"),
-          TsStore.snameOf(col("metric"),
-            TsStore.tagStr(col("tags"))).as("sname"),
-          col("ts"))
+        val withS = TestData.events(s, d).samples
+          .select(col("metric"), col("sname"), col("ts"))
         TsAnalytics.cardinalityReport(withS, Seq("metric"), "sname",
             "ts", bucketNs = Day)
           .orderBy(col("metric"), col("bucket"))
@@ -4917,7 +4890,7 @@ object SparkEntry {
     // output row (count/sum/min/max/first/last all merge associatively)
     "ts_rollup_serve" -> Gated(
       (s, d) => {
-        val tmp = scratch("graft_rollup", d)
+        val tmp = TestData.scratch("graft_rollup", d)
         graft.io.Rollup.write(TestData.events(s, d).samples, tmp,
           Seq(H6, Day))
         graft.io.Rollup.serve(s, tmp, 2 * Day)
@@ -4947,7 +4920,7 @@ object SparkEntry {
     // same oracle as ts_rollup_serve — direct aggregation over ALL rows)
     "ts_rollup_update" -> Gated(
       (s, d) => {
-        val tmp = scratch("graft_ruup", d)
+        val tmp = TestData.scratch("graft_ruup", d)
         val ev = TestData.events(s, d).samples
         val mid = AkuTime.parseTs("20240116T000000")
         graft.io.Rollup.write(ev.filter(col("ts") < mid), tmp, Seq(Day))
@@ -4970,6 +4943,7 @@ object SparkEntry {
         val src = s"$tmpDir/src"; val ckpt = s"$tmpDir/ckpt"
         val store = s"$tmpDir/store"
         val ev = TestData.events(s, d).samples
+          .select(col("metric"), col("tags"), col("ts"), col("value"))
         val mid = AkuTime.parseTs("20240116T000000")
         ev.filter(col("ts") < mid).write.mode("append").parquet(src)
         val q = graft.streaming.StreamIngest.continuousRollup(
@@ -5121,11 +5095,8 @@ object SparkEntry {
     // -- per-series overview panel (count/span/gaps/range/percentiles) ---
     "ts_series_overview" -> Gated(
       (s, d) => {
-        val ev = TestData.events(s, d).samples
-        val withS = ev.select(col("metric"),
-          TsStore.snameOf(col("metric"),
-            TsStore.tagStr(col("tags"))).as("sname"),
-          col("ts"), col("value"))
+        val withS = TestData.events(s, d).samples
+          .select(col("metric"), col("sname"), col("ts"), col("value"))
         TsAnalytics.seriesOverview(withS, Seq("metric", "sname"),
             "ts", "value")
           .orderBy(col("metric"), col("sname"))
@@ -5732,7 +5703,7 @@ object SparkEntry {
     "embed_e2e_serving" -> Gated(
       (s, d) => {
         val emb = TestData.table(s, d, "embeddings")
-        val tmp = scratch("graft_e2e_emb", d)
+        val tmp = TestData.scratch("graft_e2e_emb", d)
         val profile = graft.llm.EmbedProfile.serving.copy(kmeansIters = 1)
         val init = emb.filter(col("vec_id") < 4).orderBy(col("vec_id"))
           .select(Embed.normalized(col("embedding")))
@@ -5958,8 +5929,8 @@ object SparkEntry {
     "doc_e2e_pipeline" -> Gated(
       (s, d) => {
         val raw = TestData.table(s, d, "documents")
-        val tmpJ = scratch("graft_e2e_jsonl", d)
-        val tmpS = scratch("graft_e2e_shards", d)
+        val tmpJ = TestData.scratch("graft_e2e_jsonl", d)
+        val tmpS = TestData.scratch("graft_e2e_shards", d)
         val js = to_json(struct(col("doc_id"), col("text"), col("source")))
         raw.select(when(col("doc_id") % 17 === 0,
             concat(lit("{corrupt "), js)).otherwise(js).as("value"))

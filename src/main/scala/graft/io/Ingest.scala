@@ -318,9 +318,9 @@ object Ingest {
   /** Read the layout back as a TsStore (partition pruning on
     * metric/day happens automatically from query predicates), bucketed
     * with the width its writer persisted ([[DayNs]] for layouts predating
-    * the sidecar). Pass `seriesPath` (from [[writeSeries]]) to serve
-    * metadata queries from the maintained dimension instead of the fact
-    * table. */
+    * the sidecar). Pass `seriesPath` (from [[writeSeriesFromLayout]]) to
+    * serve metadata queries from the maintained dimension instead of the
+    * fact table. */
   def readLayout(spark: SparkSession, path: String,
                  seriesPath: Option[String] = None): TsStore =
     new TsStore(storeFrame(readFlat(spark, path)),
@@ -442,20 +442,12 @@ object Ingest {
 
   /** The series dimension table `(metric, tags, tagstr)`, persisted
     * alongside the facts so suggest/search/meta queries are O(series) not
-    * O(samples) (reference SeriesMatcher, seriesparser.h:74-140).
+    * O(samples) (reference SeriesMatcher, seriesparser.h:74-140), derived
+    * from an already-written layout: reads only the (metric, sname)
+    * columns — a column-pruned scan, far cheaper than re-parsing the wire
+    * input — and reconstructs the tag map from the canonical sname.
     * Distributed: dropDuplicates shuffles on the key and each reducer
     * writes its slice — no single-task bottleneck at 10^8 series. */
-  def writeSeries(samples: DataFrame, path: String): Unit =
-    samples
-      .select(col("metric"), col("tags"),
-        TsStore.tagStr(col("tags")).as("tagstr"))
-      .dropDuplicates("metric", "tagstr")
-      .write.mode("overwrite").parquet(path)
-
-  /** Derive + persist the series dimension from an already-written layout:
-    * reads only the (metric, sname) columns — a column-pruned scan, far
-    * cheaper than re-parsing the wire input — and reconstructs the tag
-    * map from the canonical sname. */
   def writeSeriesFromLayout(spark: SparkSession, layoutPath: String,
                             seriesPath: String): Unit = {
     val tagstr = when(instr(col("sname"), " ") > 0,

@@ -14,9 +14,10 @@ import graft.ast.{QueryJson, Where}
   * storage2.cpp:1501-1530; behaviors in functests/test_search_api.py).
   *
   * At 100 TB the series dimension must be a maintained table (the
-  * reference's SeriesMatcher is exactly this); `TsStore.series` derives it
-  * from samples for the test adapter, and `Layout.writeSeries` persists it
-  * alongside the fact table so these queries stay O(series), not O(samples).
+  * reference's SeriesMatcher is exactly this): `Ingest.writeSeriesFromLayout`
+  * persists it alongside the fact table so these queries stay O(series),
+  * not O(samples). `TsStore.series` derives it from samples only for
+  * ad-hoc frames with no dimension attached.
   */
 object Meta {
 

@@ -608,11 +608,14 @@ object TsAnalytics {
       .agg(avg(col("value")).as("__mu"),
         stddev_samp(col("value")).as("__sd"))
     // no forced broadcast: the profile is period x |series| rows, and
-    // series cardinality is unbounded — let AQE size the join
+    // series cardinality is unbounded — let AQE size the join. The sd
+    // guard sits in the one both-sides predicate: a profile-only filter
+    // adds a dynamic-pruning subquery over a layout's `metric` partitions
+    // that never prunes (the profile is the base's own aggregate)
     base.join(profile, on :+ "phase")
-      .filter(col("__sd").isNotNull && col("__sd") > 0 &&
+      .filter(when(col("__sd") > 0,
         round(abs(col("value") - col("__mu")), 6) >
-          round(lit(nSigma) * col("__sd"), 6))
+          round(lit(nSigma) * col("__sd"), 6)).otherwise(false))
       .select((on.map(col) ++ Seq(col("ts"), col("value"), col("phase"),
         round(col("__mu"), 6).as("expected"),
         round(col("__sd"), 6).as("sd"))): _*)

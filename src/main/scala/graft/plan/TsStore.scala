@@ -24,17 +24,14 @@ final class TsStore(val samples: DataFrame,
     * the reference's inverted series index
     * (reference: libakumuli/index/seriesparser.h:74-140). Small next to
     * the fact table; broadcast-joinable. When a maintained dimension is
-    * attached (Ingest.writeSeries), metadata queries are O(series); the
-    * derive-from-samples fallback is for ad-hoc frames only — at 100 TB
-    * it would be a full scan to answer an autocomplete. */
+    * attached (Ingest.writeSeriesFromLayout), metadata queries are
+    * O(series); the derive-from-samples fallback is for ad-hoc frames
+    * only — at 100 TB it would be a full scan to answer an autocomplete. */
   def series: DataFrame = seriesDim.getOrElse(
     samples
       .select(col(Metric), col(Tags), tagStr(col(Tags)).as("tagstr"))
       .dropDuplicates(Metric, "tagstr")) // map cols can't key a set-op;
                                          // canonical tagstr is the key
-
-  def withSeriesDim(dim: DataFrame): TsStore =
-    new TsStore(samples, Some(dim), bucketNs)
 }
 
 object TsStore {

@@ -164,8 +164,8 @@ class IngestSpec extends SparkFunSuite {
       flattenTags = Seq("host"))
     Ingest.writeSeriesFromLayout(spark, layout, seriesP)
     val st = Ingest.readLayout(spark, layout, Some(seriesP))
-    // full ingest flow: flat parse derived the same dimension writeSeries
-    // would have (6 distinct series, canonical tag order)
+    // full ingest flow: the flat parse derived the dimension of 6 distinct
+    // series, canonical tag order
     val meta = Planner.plan(QueryJson.parse(
       """{"select":"meta:names","where":{"dc":["d0"]}}"""), st).df
     assert(meta.collect().map(_.getString(0)).toSeq ==
