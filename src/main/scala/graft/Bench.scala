@@ -524,8 +524,7 @@ object Bench {
     val lastSpool = new java.io.File(spoolBase, s"rep$lastSpoolRep").getPath
     val compactSec = stableMin(4) { _ =>
       val t0 = System.nanoTime()
-      graft.io.RunLog.compactRuns(spark, lastSpool, benchPath,
-        flattenTags = Seq("host"))
+      graft.io.RunLog.compactRuns(spark, lastSpool, benchPath)
       val dt = (System.nanoTime() - t0) / 1e9
       Console.err.println(f"COMPACTREP $dt%.2f s")
       dt
@@ -677,8 +676,6 @@ object Bench {
           .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
         val auditJson = planAudit
           .map { case (k, _, _, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-        val floorPJson = floorP.toSeq.sortBy(_._1)
-          .map { case (k, v) => s""""$k":${v.toInt}""" }.mkString("{", ",", "}")
         // persist the merged ledger for the next run (repo cwd; committed)
         if (floorPersist) writeFloor(sfDir, floorQ, floorR, floorP, prov)
         s"""{"metric":"total","value":$total,"unit":"sec",""" +

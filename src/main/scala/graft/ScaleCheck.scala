@@ -423,8 +423,7 @@ object ScaleCheck {
       // replica-invariant (certified by doc_dedup_pipeline_star);
       // the mix leg's membership is id-hash-based, so the FINAL count
       // is deterministic per factor but not factor-invariant by design.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sc_e2e").toString
+      val tmp = TestData.freshScratch("graft_sc_e2e")
       // each stage is localCheckpoint-materialized at its boundary: a
       // production pipeline lands every stage once (usually as parquet),
       // while the un-cut lineage would re-execute the whole prefix per
@@ -510,8 +509,7 @@ object ScaleCheck {
     timed("doc_neardup_incremental") {
       // index 3/4 of the scaled corpus once, probe the last quarter
       // against it — the per-batch cost of the growing-corpus loop
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sc_lsh").toString
+      val tmp = TestData.freshScratch("graft_sc_lsh")
       Dedup.writeLshIndex(docs.filter(col("doc_id") % 4 =!= 0), tmp,
         n = 3, bands = 64, rowsPerBand = 2)
       Dedup.neardupAgainstIndex(docs.filter(col("doc_id") % 4 === 0), tmp,
@@ -524,8 +522,7 @@ object ScaleCheck {
       // 1000 a replica family yields ~187k pairs and ~12M raw band
       // candidates PER FAMILY, so the star probe is the shape that
       // graduates to 1000x.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sc_lshstar").toString
+      val tmp = TestData.freshScratch("graft_sc_lshstar")
       Dedup.writeLshIndex(docs.filter(col("doc_id") % 4 =!= 0), tmp,
         n = 3, bands = 64, rowsPerBand = 2)
       Dedup.neardupAgainstIndexStar(docs.filter(col("doc_id") % 4 === 0),
@@ -533,8 +530,7 @@ object ScaleCheck {
         .select(col("id")).distinct().count()
     }
     timed("embed_ivf_update") {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sc_ivfu").toString
+      val tmp = TestData.freshScratch("graft_sc_ivfu")
       Embed.writeIvf(emb.filter(col("vec_id") % 2 === 0), tmp,
         nCentroids = ivfCells)
       Embed.ivfUpdate(emb.filter(col("vec_id") % 2 =!= 0), tmp)
@@ -551,8 +547,7 @@ object ScaleCheck {
       // the count of docs the probe actually SHORTENED (stderr note):
       // batch size alone is linear by construction and would certify
       // nothing about the span probe itself.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sc_spanidx").toString
+      val tmp = TestData.freshScratch("graft_sc_spanidx")
       val batch = docs.filter(col("doc_id") % 4 === 0)
       Dedup.writeSpanIndex(docs.filter(col("doc_id") % 4 =!= 0), tmp, k = 8)
       val trimmed = Dedup.trimAgainstIndex(batch, tmp)
@@ -578,8 +573,7 @@ object ScaleCheck {
     timed("doc_export_shards") {
       // final-mile export: hash-shard + within-shard shuffle order +
       // manifest readback over the scaled corpus
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sc_shards").toString
+      val tmp = TestData.freshScratch("graft_sc_shards")
       CorpusIo.writeShards(docs.select(col("doc_id"), col("text"),
         col("source")), tmp, nShards = 32, shuffled = true)
       CorpusIo.shardManifest(spark, tmp).count()
@@ -587,8 +581,7 @@ object ScaleCheck {
     timed("embed_topk_batch_ivf") {
       // batch serving shape: one probe pass over the layout serves the
       // whole query batch (every 50th vector queries, nProbe 8 of 64)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sc_bivf").toString
+      val tmp = TestData.freshScratch("graft_sc_bivf")
       // same factor gate as the k-means consumers: past factor 100 the
       // layout build's flat assignment is the O(n·k) term, so the build
       // routes through the persisted two-level index; at factor <= 100
@@ -628,8 +621,7 @@ object ScaleCheck {
     // (the only gated heavy absent from earlier ScaleChecks; it is the
     // per-batch cost of "the 1m/1h/1d tables are always current")
     timed("ts_rollup_stream") {
-      val tmpDir = java.nio.file.Files
-        .createTempDirectory("graft_sc_rustream").toString
+      val tmpDir = TestData.freshScratch("graft_sc_rustream")
       val src = s"$tmpDir/src"; val ckpt = s"$tmpDir/ckpt"
       val ruStore = s"$tmpDir/store"
       val sm = store.samples
@@ -651,8 +643,7 @@ object ScaleCheck {
     // cannot — dedup state must absorb a full-corpus replay, anomaly
     // state must fan out across factor-x the series cardinality)
     timed("doc_dedup_stream") {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sc_sdedup").toString
+      val tmp = TestData.freshScratch("graft_sc_sdedup")
       val src = s"$tmp/src"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val d2 = docs.select(col("doc_id"), col("text"))
       def batchAt(ts: String) = d2.withColumn("event_time",
@@ -692,8 +683,7 @@ object ScaleCheck {
       n
     }
     timed("ts_anomaly_stream") {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sc_sanom").toString
+      val tmp = TestData.freshScratch("graft_sc_sanom")
       val src = s"$tmp/src"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val sm = store.samples.filter(col("value").isNotNull)
       val mid = graft.model.AkuTime.parseTs("20240116T000000")
@@ -727,8 +717,7 @@ object ScaleCheck {
       // per-series ts-ordered fold — exact at every factor, no
       // cross-run constants (the unordered op's 1000x run drifted
       // 0.97% on micro-batch boundary placement)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sc_sanord").toString
+      val tmp = TestData.freshScratch("graft_sc_sanord")
       val src = s"$tmp/src"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val sm = store.samples.filter(col("value").isNotNull)
         .select(col("metric"), col("ts"), col("value"), col("tags"))
@@ -848,8 +837,7 @@ object ScaleCheck {
       // kernel — the posture a 100 TB deployment runs, exercised here
       // from factor 100 up (ivfCells = 640 at factor 100).
       val profile = graft.llm.EmbedProfile.serving.copy(kmeansIters = 2)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sc_e2e_emb").toString
+      val tmp = TestData.freshScratch("graft_sc_e2e_emb")
       val cents = profile.trainCentroids(emb, k = ivfCells)
       profile.writeLayout(emb.filter(col("vec_id") % 2 === 0), tmp,
         nCentroids = ivfCells, centroids = Some(cents))

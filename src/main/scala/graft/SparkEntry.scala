@@ -2054,8 +2054,7 @@ object SparkEntry {
       (s, d) => {
         val docs = TestData.table(s, d, "documents")
           .select(col("doc_id"), col("text"))
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_sdedup").toString
+        val tmp = TestData.freshScratch("graft_sdedup")
         val src = s"$tmp/src"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
         def batchAt(ts: String) = docs.withColumn("event_time",
           lit(java.sql.Timestamp.valueOf(ts)))
@@ -3741,8 +3740,9 @@ object SparkEntry {
             .select(col("metric"), col("tags"), col("ts"), col("value"),
               lit(null).cast("string").as("event")),
           base, flattenTags = Seq("user"))
-        graft.io.Ingest.writeSeriesFromLayout(s, base, s"$base-series")
-        val st = graft.io.Ingest.readLayout(s, base, Some(s"$base-series"))
+        val series = TestData.scratch("graft_layout_meta_series", d)
+        graft.io.Ingest.writeSeriesFromLayout(s, base, series)
+        val st = graft.io.Ingest.readLayout(s, base, Some(series))
         Planner.plan(QueryJson.parse(
           s"""{"select":"meta:names","where":{"user":["4","5","6"]}}"""), st).df
       },
@@ -4617,8 +4617,7 @@ object SparkEntry {
             map_from_arrays(array().cast("array<string>"),
               array().cast("array<string>")))
         val mid = AkuTime.parseTs("20240116T000000")
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_sanom").toString
+        val tmp = TestData.freshScratch("graft_sanom")
         val src = s"$tmp/src"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
         collapsed.filter(col("ts") < mid).write.mode("append").parquet(src)
         // state partitions derive from the source scale (parquet
@@ -4699,8 +4698,7 @@ object SparkEntry {
           lit(0.0).as("value"),
           map_from_arrays(array().cast("array<string>"),
             array().cast("array<string>")).as("tags"))
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_sanom_ord").toString
+        val tmp = TestData.freshScratch("graft_sanom_ord")
         val src = s"$tmp/src"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
         // batch 1 = LATE half first: the maximally out-of-order arrival
         collapsed.filter(col("ts") >= mid).write.mode("append").parquet(src)
@@ -4938,8 +4936,7 @@ object SparkEntry {
     // update gate (the fold algebra is exact across the batch boundary).
     "ts_rollup_stream" -> Gated(
       (s, d) => {
-        val tmpDir = java.nio.file.Files
-          .createTempDirectory("graft_rustream").toString
+        val tmpDir = TestData.freshScratch("graft_rustream")
         val src = s"$tmpDir/src"; val ckpt = s"$tmpDir/ckpt"
         val store = s"$tmpDir/store"
         val ev = TestData.events(s, d).samples

@@ -33,14 +33,6 @@ object EvalExpr {
     new P(input, n => vars.getOrElse(n, fail(s"Unknown variable [$n]")))
       .parseAll()
 
-  /** Variable names referenced by `input` (for unknown-variable checking
-    * without compiling). */
-  def usedVars(input: String): Set[String] = {
-    val p = new P(input, _ => lit(0.0))
-    p.parseAll()
-    p.seen.toSet
-  }
-
   private val fn1: Map[String, Column => Column] = Map(
     "abs" -> abs, "sqrt" -> sqrt, "exp" -> exp,
     "ln" -> log, "log" -> log, "log10" -> log10, "log2" -> log2,
@@ -57,7 +49,6 @@ object EvalExpr {
 
   private final class P(s: String, lookup: String => Column) {
     private var i = 0
-    val seen = scala.collection.mutable.Set[String]()
 
     def parseAll(): Column = {
       val c = expr()
@@ -141,10 +132,7 @@ object EvalExpr {
                 case None    => fail(s"unknown function '$name'")
               }
             }
-          } else {
-            seen += name
-            lookup(name)
-          }
+          } else lookup(name)
         case c => fail(s"Expression parsing error at: $i token: $c")
       }
     }

@@ -138,7 +138,10 @@ object Ingest {
       when(col("event").isNull, col("value")).as("value"),
       col("event")))
 
-  val DayNs: Long = 86400L * 1000000000L
+  val DayNs: Long = TsStore.DayNs
+
+  /** Series-hash salts per (metric, day) bucket ([[writePrepared]]). */
+  private[io] val SaltBuckets = 32
 
   /** Layout compression: LZ4 (raw frame) — measured both faster to
     * encode AND smaller than snappy on the sorted-run layout (the
@@ -151,9 +154,9 @@ object Ingest {
   def writeLayout(samples: DataFrame, path: String,
                   flattenTags: Seq[String] = Nil,
                   bucketNs: Long = DayNs,
-                  saltBuckets: Int = 32): Unit =
+                  saltBuckets: Int = SaltBuckets): Unit =
     writePrepared(flattenTagMap(samples, flattenTags), path, bucketNs,
-      saltBuckets)
+      Some(saltBuckets))
 
   /** The flat layout schema of a frame carrying the `tags` map: the
     * listed tag keys lifted into `tag_<k>` columns, the canonical `sname`
@@ -174,17 +177,15 @@ object Ingest {
         TsStore.snameOf(col("metric"), TsStore.tagStr(col("tags"))))
       .drop("tags")
 
-  /** Parse RESP session files and write the layout in one pipeline — the
-    * full wire-to-storage ingest path (the analogue of the reference's
-    * TCP server -> NB+tree write path). Uses the flat parse
+  /** Parse RESP session files and write a fresh [[DayNs]] layout in one
+    * pipeline — the full wire-to-storage ingest path (the analogue of the
+    * reference's TCP server -> NB+tree write path). Uses the flat parse
     * ([[respFilesFlat]]): sname derived in the parser, no map column ever
-    * materialized. */
+    * materialized, and no salt: each task writes its own sorted runs. */
   def ingestResp(spark: SparkSession, inPath: String, outPath: String,
-                 flattenTags: Seq[String] = Nil,
-                 bucketNs: Long = DayNs,
-                 saltBuckets: Int = 32): Unit =
+                 flattenTags: Seq[String] = Nil): Unit =
     writePrepared(respFilesFlat(spark, inPath, flattenTags), outPath,
-      bucketNs, saltBuckets, exchange = false)
+      DayNs, None)
 
   /** Sidecar recording the layout's bucket width. Underscore-prefixed so
     * parquet directory listings skip it. The planner prunes `day=`
@@ -204,8 +205,8 @@ object Ingest {
     finally out.close()
   }
 
-  /** The persisted bucket width, or None for layouts predating the
-    * sidecar (then [[DayNs]] applies, the only width that existed). */
+  /** The persisted bucket width, or None for a fresh path or a layout
+    * predating the sidecar (then [[DayNs]], the only width that existed). */
   def readBucketNs(spark: SparkSession, path: String): Option[Long] = {
     val p = new org.apache.hadoop.fs.Path(bucketNsFile(path))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -224,7 +225,7 @@ object Ingest {
     *
     * Two modes, both ending in per-file `(sname, ts)` sorted runs:
     *
-    *  - `exchange = true` (writeLayout, compactLayout and RunLog's
+    *  - `saltBuckets = Some(n)` (writeLayout, compactLayout and RunLog's
     *    compaction and fold): hash
     *    partitioning on (metric, day) + a series salt: write parallelism
     *    is NOT capped at the distinct (metric, day) count — a hot
@@ -233,7 +234,7 @@ object Ingest {
     *    sorted series runs into its partition dirs. One file per
     *    (metric, day, salt): the fully-clustered layout.
     *
-    *  - `exchange = false` ([[ingestResp]], the wire-ingest path): NO
+    *  - `saltBuckets = None` ([[ingestResp]], the wire-ingest path): NO
     *    shuffle — each parse task sorts ITS slice and writes one sorted
     *    run per (metric, day) it touched. Parse -> sort -> parquet fuse
     *    into a single stage; the 8M-sample exchange (serialize + spill + read
@@ -246,17 +247,13 @@ object Ingest {
     *    partitions, bounded at scale by routing/compaction cadence, not
     *    by the writer. */
   private[io] def writePrepared(df: DataFrame, path: String, bucketNs: Long,
-                                saltBuckets: Int,
-                                exchange: Boolean = true): Unit = {
+                                saltBuckets: Option[Int]): Unit = {
     val withDay =
       df.withColumn("day", expr(s"ts div ${bucketNs}L")) // exact integer div:
       // double division would round ts (> 2^53) near bucket boundaries
-    val placed =
-      if (exchange)
-        withDay.repartition(col("metric"), col("day"),
-          pmod(xxhash64(col("sname")), lit(saltBuckets)))
-      else withDay
-    placed
+    saltBuckets
+      .fold(withDay)(n => withDay.repartition(col("metric"), col("day"),
+        pmod(xxhash64(col("sname")), lit(n))))
       .sortWithinPartitions(col("metric"), col("day"), col("sname"), col("ts"))
       .write
       .partitionBy("metric", "day")
@@ -339,9 +336,49 @@ object Ingest {
     * output goes to `outPath`; swap directories (or point readers at the
     * new path) after it commits, like any immutable-layout compactor. */
   def compactLayout(spark: SparkSession, inPath: String, outPath: String,
-                    saltBuckets: Int = 32): Unit =
+                    saltBuckets: Int = SaltBuckets): Unit =
     writePrepared(readFlat(spark, inPath).drop(TsStore.DayCol), outPath,
-      readBucketNs(spark, inPath).getOrElse(DayNs), saltBuckets)
+      readBucketNs(spark, inPath).getOrElse(DayNs), Some(saltBuckets))
+
+  /** The `metric=…/day=…` partition directories under `root`, listed
+    * lazily: a caller that needs one lists only the first directories. */
+  private def dayDirs(fs: org.apache.hadoop.fs.FileSystem,
+                      root: org.apache.hadoop.fs.Path)
+      : Iterator[org.apache.hadoop.fs.FileStatus] = {
+    def dirs(p: org.apache.hadoop.fs.Path, prefix: String) =
+      fs.listStatus(p).iterator
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+    dirs(root, "metric=").flatMap(m => dirs(m.getPath, "day="))
+  }
+
+  /** The data files under `root`'s partition directories, listed lazily. */
+  private[io] def layoutDataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                                  root: org.apache.hadoop.fs.Path)
+      : Iterator[org.apache.hadoop.fs.FileStatus] =
+    dayDirs(fs, root).flatMap(d => fs.listStatus(d.getPath).iterator)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+
+  /** Fails unless `keys` (what `whose` names) are the flattened tag keys
+    * of the layout at `path`, if it has data. The layout's keys come from
+    * its first data file's footer (a few listings, no Spark job): every
+    * writer keeps one key set per layout. */
+  private[graft] def requireTagKeys(spark: SparkSession, path: String,
+                                    keys: Seq[String], whose: String): Unit = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = root.getFileSystem(conf)
+    if (fs.exists(root)) layoutDataFiles(fs, root).nextOption().foreach { f =>
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+      val schema = try footer.getFileMetaData.getSchema finally footer.close()
+      val layoutKeys =
+        tagKeysOf((0 until schema.getFieldCount).map(schema.getFieldName))
+      require(layoutKeys.sorted == keys.sorted, s"layout $path has " +
+        s"flattened tags ${layoutKeys.mkString("[", ",", "]")}, $whose " +
+        keys.mkString("[", ",", "]"))
+    }
+  }
 
   /** Every `metric=…` / `day=…` partition directory of the layout:
     * (day id, path, bytes), via the Hadoop FS API so HDFS/S3 layouts
@@ -352,10 +389,7 @@ object Ingest {
          Seq[(Long, org.apache.hadoop.fs.Path, Long)]) = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dirs = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("metric="))
-      .flatMap(m => fs.listStatus(m.getPath).toSeq)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("day="))
+    val dirs = dayDirs(fs, root).toSeq
       .map { s =>
         val day = s.getPath.getName.stripPrefix("day=").toLong
         (day, s.getPath, fs.getContentSummary(s.getPath).getLength)

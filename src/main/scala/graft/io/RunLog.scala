@@ -32,6 +32,9 @@ import graft.plan.TsStore
   *    same TsStore projection as [[Ingest.readLayout]]; [[liveStore]]
   *    unions it with the layout's store for the live view.
   *
+  * Runs carry their tag keys (header) and a layout its width (sidecar):
+  * reads, folds and recovery take the shape from the files.
+  *
   * Format (all integers var-length except raw double bits):
   * `GRUN1` magic, varint tag-key count + tag keys; then frames:
   * 0x01 series: varint sid, metric, sname, per-key nullable tag values;
@@ -183,14 +186,13 @@ object RunLog {
 
   // ---- read --------------------------------------------------------------
 
-  /** Decode run files back into the flat layout frame
+  /** Decode the servable runs back into the flat layout frame
     * `(metric, sname, ts, value, event, tag_<k>...)` — the schema and row
     * writer [[Ingest.respFilesFlat]] uses, so the result feeds
     * [[Ingest]]'s write tail or a [[TsStore]] directly. Tag keys come
-    * from the file header (they were fixed at spool time). */
-  def readRuns(spark: SparkSession, path: String,
-               flattenTags: Seq[String] = Nil): DataFrame =
-    readRunFiles(spark, listServableRuns(spark, path), flattenTags)
+    * from the run headers ([[readRunFiles]]). */
+  def readRuns(spark: SparkSession, path: String): DataFrame =
+    readRunFiles(spark, listServableRuns(spark, path))
 
   /** Every run a READER should see: the published spool plus any runs
     * staged under `.folding/` by an in-flight (or crashed) fold — those
@@ -225,13 +227,29 @@ object RunLog {
       .map(_.getPath.toString).sorted
   }
 
+  /** A run's header: the magic, then the tag keys it was spooled with. */
+  private def readHeader(in: DataInputStream, p: String): Seq[String] = {
+    val magic = new Array[Byte](Magic.length)
+    in.readFully(magic)
+    require(java.util.Arrays.equals(magic, Magic), s"bad run magic: $p")
+    Seq.fill(readVarLong(in).toInt)(readStr(in))
+  }
+
+  /** The tag keys of the run file `p` (one small open). */
+  private def runTagKeys(spark: SparkSession, p: String): Seq[String] = {
+    val hp = new org.apache.hadoop.fs.Path(p)
+    val in = new DataInputStream(new BufferedInputStream(
+      hp.getFileSystem(spark.sparkContext.hadoopConfiguration).open(hp)))
+    try readHeader(in, p) finally in.close()
+  }
+
   /** Decode an explicit run-file snapshot (see [[readRuns]]), one task
-    * per file up to the cluster parallelism. */
-  def readRunFiles(spark: SparkSession, runFiles: Seq[String],
-                   flattenTags: Seq[String] = Nil): DataFrame = {
+    * per file up to the cluster parallelism, with the first file's tag
+    * keys: a file spooled with others fails, naming it. */
+  def readRunFiles(spark: SparkSession, runFiles: Seq[String]): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
-    val tagKeys = flattenTags.toArray
+    val tagKeys = runFiles.headOption.fold(Seq.empty[String])(runTagKeys(spark, _))
     val nTags = tagKeys.length
     val sconf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
@@ -247,13 +265,10 @@ object RunLog {
         // with the task, not only at EOF (double-close is a no-op)
         val tc = org.apache.spark.TaskContext.get()
         if (tc != null) tc.addTaskCompletionListener[Unit](_ => in.close())
-        val magic = new Array[Byte](Magic.length)
-        in.readFully(magic)
-        require(java.util.Arrays.equals(magic, Magic), s"bad run magic: $p")
-        val fileTagKeys = Array.fill(readVarLong(in).toInt)(readStr(in))
-        require(fileTagKeys.sameElements(tagKeys),
-          s"run $p spooled with tag keys ${fileTagKeys.mkString(",")}, " +
-          s"read with ${tagKeys.mkString(",")}")
+        val fileTagKeys = readHeader(in, p)
+        require(fileTagKeys == tagKeys,
+          s"run $p spooled with tag keys [${fileTagKeys.mkString(",")}], " +
+          s"its snapshot with [${tagKeys.mkString(",")}]")
         // sid -> (interned strings, lastTs)
         val dict = new java.util.HashMap[Long, (Array[UTF8String], Array[Long])]()
         val w = new Ingest.FlatRowWriter(nTags)
@@ -312,21 +327,19 @@ object RunLog {
     Ingest.flatFrame(spark, rdd, tagKeys)
   }
 
-  /** Compact spooled runs into the partitioned/sorted query layout — the
-    * tree-maintenance half of the WAL-then-tree shape. Same output as
+  /** Rebuild spooled runs into a fresh [[Ingest.DayNs]] query layout —
+    * the tree-maintenance half of the WAL-then-tree shape. Same output as
     * [[Ingest.ingestResp]] over the original wire input. */
-  def compactRuns(spark: SparkSession, runsPath: String, layoutPath: String,
-                  flattenTags: Seq[String] = Nil,
-                  bucketNs: Long = Ingest.DayNs,
-                  saltBuckets: Int = 32): Unit = {
+  def compactRuns(spark: SparkSession, runsPath: String,
+                  layoutPath: String): Unit = {
     val snapshot = listRuns(spark, runsPath)
     // this is a REBUILD (overwrite): compacting an empty spool would
     // replace the target layout with nothing — refuse instead
     require(snapshot.nonEmpty,
       s"no run files under $runsPath — refusing to overwrite $layoutPath " +
       "with an empty layout (use foldRuns for incremental maintenance)")
-    Ingest.writePrepared(readRunFiles(spark, snapshot, flattenTags),
-      layoutPath, bucketNs, saltBuckets)
+    Ingest.writePrepared(readRunFiles(spark, snapshot), layoutPath,
+      Ingest.DayNs, Some(Ingest.SaltBuckets))
   }
 
   /** Incremental compaction with retirement — the recurring maintenance
@@ -353,55 +366,31 @@ object RunLog {
     * across steps 4-6 can see folded samples twice (the reference has
     * the same window when the input log recycles into the tree).
     *
+    * Tag keys come from the run headers and the width from the layout
+    * ([[Ingest.DayNs]] for a fresh one). `flattenTags` must equal the
+    * runs' keys, and those the layout's; both are checked before
+    * anything is staged.
+    *
     * Runs published while the fold is writing are untouched and served
     * live until the next cycle. Returns the retired files. */
   def foldRuns(spark: SparkSession, runsPath: String, layoutPath: String,
-               flattenTags: Seq[String] = Nil,
-               bucketNs: Long = Ingest.DayNs,
-               saltBuckets: Int = 32): Seq[String] = {
+               flattenTags: Seq[String] = Nil): Seq[String] = {
     // finish any interrupted fold FIRST: its staged runs land before the
     // new snapshot, preserving fold ordering
-    recoverFolds(spark, runsPath, layoutPath, flattenTags, bucketNs,
-      saltBuckets)
+    recoverFolds(spark, runsPath, layoutPath)
     val snapshot = listRuns(spark, runsPath)
     if (snapshot.nonEmpty) {
       val fs = new org.apache.hadoop.fs.Path(runsPath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // tag-key agreement with the existing layout: appended files with
-      // different tag_ columns would read as all-NULL tags for every
-      // folded row (no mergeSchema on the read side) — fail fast, the
-      // readRuns run-header rule applied one level up. Every layout file
-      // carries the same columns (this check keeps it so), so the first
-      // data file's footer answers: a few listings, no Spark job, no
-      // walk of the whole layout.
-      val lp = new org.apache.hadoop.fs.Path(layoutPath)
-      val layoutFile =
-        if (fs.exists(lp)) layoutDataFiles(fs, lp).nextOption() else None
-      val layoutHasData = layoutFile.isDefined
-      layoutFile.foreach { f =>
-        val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-            f, spark.sparkContext.hadoopConfiguration))
-        val layoutTags =
-          try {
-            val schema = footer.getFileMetaData.getSchema
-            Ingest.tagKeysOf(
-              (0 until schema.getFieldCount).map(schema.getFieldName))
-          } finally footer.close()
-        require(layoutTags.sorted == flattenTags.sorted,
-          s"layout $layoutPath has flattened tags [${layoutTags.mkString(",")}]"
-          + s", fold called with [${flattenTags.mkString(",")}]")
-      }
-      // bucket-width agreement, checked BEFORE anything is staged or
-      // written: a mismatched fold would scatter rows into day
-      // directories the reader's pruning never visits
-      Ingest.readBucketNs(spark, layoutPath) match {
-        case Some(w) => require(w == bucketNs,
-          s"layout $layoutPath has bucketNs $w, fold requested $bucketNs")
-        case None => if (layoutHasData) require(bucketNs == Ingest.DayNs,
-          s"layout $layoutPath predates the bucket sidecar (implicit " +
-          s"DayNs); fold requested $bucketNs")
-      }
+      // tag-key agreement: appended files with different tag_ columns
+      // would read as all-NULL tags for every folded row (no mergeSchema
+      // on the read side)
+      val keys = runTagKeys(spark, snapshot.head)
+      require(keys.sorted == flattenTags.sorted,
+        s"runs under $runsPath spooled with tag keys [${keys.mkString(",")}]" +
+        s", fold called with [${flattenTags.mkString(",")}]")
+      Ingest.requireTagKeys(spark, layoutPath, keys,
+        s"runs under $runsPath spooled with")
       // sortable id: recovery processes crashed folds oldest-first
       val foldId = f"${System.currentTimeMillis()}%013d-" +
         java.lang.Long.toHexString(System.nanoTime())
@@ -415,8 +404,7 @@ object RunLog {
             fs.exists(p))
           throw new java.io.IOException(s"failed to stage run file $f")
       }
-      runFold(spark, staging, layoutPath, flattenTags, bucketNs,
-        saltBuckets)
+      runFold(spark, staging, layoutPath)
     }
     snapshot
   }
@@ -425,46 +413,26 @@ object RunLog {
     * oldest first: committed folds (done-marker present) are retired,
     * uncommitted ones are rolled back by their inflight manifest and
     * redone. [[foldRuns]] calls this automatically; call it directly on
-    * service start to drain crash debris before the first query. Must be
-    * invoked with the same layout parameters as the original folds.
-    * Returns the recovered fold ids. */
+    * service start to drain crash debris before the first query. Like
+    * the fold, the redo takes its shape from the staged runs and the
+    * layout. Returns the recovered fold ids. */
   def recoverFolds(spark: SparkSession, runsPath: String,
-                   layoutPath: String,
-                   flattenTags: Seq[String] = Nil,
-                   bucketNs: Long = Ingest.DayNs,
-                   saltBuckets: Int = 32): Seq[String] = {
+                   layoutPath: String): Seq[String] = {
     val base = new org.apache.hadoop.fs.Path(s"$runsPath/.folding")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) Seq.empty
     else fs.listStatus(base).toSeq.filter(_.isDirectory)
       .sortBy(_.getPath.getName).map { d =>
-        runFold(spark, d.getPath, layoutPath, flattenTags, bucketNs,
-          saltBuckets)
+        runFold(spark, d.getPath, layoutPath)
         d.getPath.getName
       }
-  }
-
-  /** The data files of the `metric=/day=` tree under `root`, listed
-    * lazily: a caller that needs one file lists only the first
-    * directories. */
-  private def layoutDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                              root: org.apache.hadoop.fs.Path)
-      : Iterator[org.apache.hadoop.fs.FileStatus] = {
-    def dirs(p: org.apache.hadoop.fs.Path, prefix: String) =
-      fs.listStatus(p).iterator
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-    dirs(root, "metric=").flatMap(m => dirs(m.getPath, "day="))
-      .flatMap(d => fs.listStatus(d.getPath).iterator)
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith("."))
   }
 
   /** Steps 2-6 of the fold protocol over one staged snapshot; safe to
     * re-run after a crash at ANY point (see [[foldRuns]]). */
   private def runFold(spark: SparkSession,
                       staging: org.apache.hadoop.fs.Path,
-                      layoutPath: String, flattenTags: Seq[String],
-                      bucketNs: Long, saltBuckets: Int): Unit = {
+                      layoutPath: String): Unit = {
     import org.apache.hadoop.fs.Path
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val foldId = staging.getName
@@ -487,10 +455,11 @@ object RunLog {
         fs.delete(manifest, false)
       }
       // regenerate the fold output (overwrite mode — re-runnable)
-      Ingest.writePrepared(readRunFiles(spark, staged, flattenTags),
-        outDir.toString, bucketNs, saltBuckets)
+      val width = Ingest.readBucketNs(spark, layoutPath)
+      Ingest.writePrepared(readRunFiles(spark, staged), outDir.toString,
+        width.getOrElse(Ingest.DayNs), Some(Ingest.SaltBuckets))
       // plan the landing and persist it BEFORE moving anything
-      val moves = layoutDataFiles(fs, outDir).map { f =>
+      val moves = Ingest.layoutDataFiles(fs, outDir).map { f =>
         val day = f.getPath.getParent
         (f.getPath, new Path(s"$layoutPath/${day.getParent.getName}/" +
           s"${day.getName}/fold-$foldId-${f.getPath.getName}"))
@@ -507,8 +476,7 @@ object RunLog {
             s"failed to land fold file $src -> $dst")
       }
       // first fold into a fresh layout: stamp the width sidecar
-      if (Ingest.readBucketNs(spark, layoutPath).isEmpty)
-        Ingest.writeBucketNs(spark, layoutPath, bucketNs)
+      if (width.isEmpty) Ingest.writeBucketNs(spark, layoutPath, Ingest.DayNs)
       fs.create(marker, true).close() // the commit point
       fs.delete(manifest, false)
     }
@@ -523,24 +491,32 @@ object RunLog {
     * runs — the serving shape of the reference's tree + input-log pair
     * (reads see spooled data immediately; compaction later folds it into
     * the clustered layout with no visible change). The runs side derives
-    * its `day` column with the LAYOUT's persisted bucket width and its
-    * flattened tag columns from the layout's schema, so both legs plan
-    * identically; the series dimension is derived from the union (a
-    * maintained dimension would not know about spooled-only series). */
+    * its `day` column with the LAYOUT's persisted bucket width and must
+    * carry the layout's tag keys, so both legs plan identically; the
+    * series dimension is derived from the union (a maintained dimension
+    * would not know about spooled-only series). */
   def liveStore(spark: SparkSession, layoutPath: String,
                 runsPath: String): TsStore = {
     val base = Ingest.readLayout(spark, layoutPath)
-    val runs = toStore(spark, runsPath,
-      Ingest.tagKeysOf(base.samples.columns.toSeq)).samples
-      .withColumn(TsStore.DayCol, expr(s"ts div ${base.bucketNs}L"))
-    new TsStore(base.samples.unionByName(runs), None, base.bucketNs)
+    val runFiles = listServableRuns(spark, runsPath)
+    if (runFiles.isEmpty) base
+    else {
+      val runs = readRunFiles(spark, runFiles)
+      val runKeys = Ingest.tagKeysOf(runs.columns.toSeq).sorted
+      val layoutKeys = Ingest.tagKeysOf(base.samples.columns.toSeq).sorted
+      require(runKeys == layoutKeys, s"runs under $runsPath have tag keys" +
+        s" [${runKeys.mkString(",")}], layout $layoutPath has " +
+        layoutKeys.mkString("[", ",", "]"))
+      new TsStore(base.samples.unionByName(Ingest.storeFrame(runs)
+        .withColumn(TsStore.DayCol, expr(s"ts div ${base.bucketNs}L"))),
+        None, base.bucketNs)
+    }
   }
 
   /** Query view over not-yet-compacted runs: the live-serving analogue of
     * the reference's in-memory tree (data is queryable the moment the
     * spool publishes, before any compaction). Union with the compacted
     * layout's store for the full view ([[liveStore]]). */
-  def toStore(spark: SparkSession, runsPath: String,
-              flattenTags: Seq[String] = Nil): TsStore =
-    new TsStore(Ingest.storeFrame(readRuns(spark, runsPath, flattenTags)))
+  def toStore(spark: SparkSession, runsPath: String): TsStore =
+    new TsStore(Ingest.storeFrame(readRuns(spark, runsPath)))
 }

@@ -640,17 +640,10 @@ object Dedup {
 
   // --- MinHash + LSH -------------------------------------------------------
 
-  /** `numHashes` MinHash signature of the shingle set — standard MinHash
-    * (Broder '97), computed per row with no shuffle. Each shingle string
-    * is hashed ONCE; the family is derived by seeded long-hashing (see
-    * [[minhashFromHashes]]), so the per-shingle cost is one string hash
-    * plus numHashes integer hashes. */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    minhashFromHashes(transform(shingles, s => xxhash64(s)), numHashes)
-
-  /** Signature from pre-hashed shingles. Callers should materialize the
-    * base-hash array in its own projection so the string hashing runs
-    * once, not once per family member. The family is a splitmix64
+  /** `numHashes` MinHash signature (Broder '97) from pre-hashed
+    * shingles, computed per row with no shuffle. Callers should
+    * materialize the base-hash array in its own projection so the string
+    * hashing runs once, not once per family member. The family is a splitmix64
     * finalizer per permutation index, fused into ONE codegen pass over
     * the hash array ([[org.apache.spark.sql.graftio.VecMath.MinHashMins]]
     * — the higher-order formulation evaluated interpreted with numHashes
@@ -1435,12 +1428,6 @@ object Dedup {
 
   // --- SimHash -------------------------------------------------------------
 
-  /** 64-bit SimHash of the token multiset (Charikar '02): each feature
-    * votes its hash bits ±1, the sketch is the sign vector. Computed as a
-    * per-row aggregate over the token array — no shuffle. */
-  def simhash64(text: Column): Column =
-    simhashFromHashes(transform(Text.tokens(lower(text)), t => xxhash64(t)))
-
   /** Oracle-replicable 60-bit feature hash: the first 15 hex chars of the
     * md5 digest as a long. xxhash64 (the default feature hash) has no
     * DuckDB twin; md5 does, so gates run the full SimHash pipeline under
@@ -1450,10 +1437,12 @@ object Dedup {
   val md5Hash60: Column => Column =
     c => conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** SimHash from pre-hashed features — the 64 bit-votes fused into one
-    * codegen pass ([[org.apache.spark.sql.graftio.VecMath.SimHashVote]];
-    * the per-bit Column-aggregate formulation ran 64 interpreted passes
-    * over the hash array per document). Callers should materialize the
+  /** 64-bit SimHash (Charikar '02) from pre-hashed features: each feature
+    * votes its hash bits ±1, the sketch is the sign vector. The 64
+    * bit-votes are fused into one codegen pass
+    * ([[org.apache.spark.sql.graftio.VecMath.SimHashVote]]; the per-bit
+    * Column-aggregate formulation ran 64 interpreted passes over the
+    * hash array per document). Callers should materialize the
     * hash array in its own projection (one string hash per token). */
   def simhashFromHashes(hashes: Column): Column =
     graft.functions.VecMath.simhashVote(hashes)

@@ -112,11 +112,6 @@ object Text {
   def fingerprint(text: Column): Column =
     md5(lower(regexp_replace(trim(text), "\\s+", " ")))
 
-  /** 64-bit rolling content hash (xxhash64 of the normalized text) — the
-    * cheap join key for shard-local dedup at scale. */
-  def fingerprint64(text: Column): Column =
-    xxhash64(lower(regexp_replace(trim(text), "\\s+", " ")))
-
   /** Winnowing fingerprint set (Schleimer/Wilkerson/Aiken '03, the MOSS
     * algorithm): hash every k-token gram, then keep the MINIMUM hash of
     * each sliding window of `w` consecutive gram hashes. Guarantees any

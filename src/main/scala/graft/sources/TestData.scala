@@ -18,13 +18,27 @@ object TestData {
 
   private val procToken = ProcessHandle.current().pid().toString
 
+  private val atExit = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  sys.addShutdownHook(atExit.forEach(p =>
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(p))))
+
+  /** `path`, deleted with everything under it when the JVM exits. */
+  private[graft] def deleteAtExit(path: String): String =
+    { atExit.add(path); path }
+
+  /** A new temporary directory on every call (streaming checkpoints must
+    * start fresh), deleted at exit. */
+  private[graft] def freshScratch(prefix: String): String =
+    deleteAtExit(java.nio.file.Files.createTempDirectory(prefix).toString)
+
   /** Per-process scratch path, keyed by dataset dir AND pid: concurrent
     * processes over the same sf (a verify beside a bench, the plan audit
     * re-invoking a gate fn) must never race on one directory (the
     * retention gates `require()` on their layout's pre-eviction state).
-    * Within a process each gate rewrites its path from scratch. */
+    * Within a process each gate rewrites its path, deleted at exit. */
   private[graft] def scratch(prefix: String, sfDir: String): String =
-    s"/tmp/${prefix}_p${procToken}_${sfDir.replaceAll("[^0-9a-zA-Z]", "_")}"
+    deleteAtExit(
+      s"/tmp/${prefix}_p${procToken}_${sfDir.replaceAll("[^0-9a-zA-Z]", "_")}")
 
   /** Reads `events.parquet` and normalizes `ts` to the engine's native
     * timestamp unit: ns-since-epoch LongType (reference:
@@ -65,8 +79,6 @@ object TestData {
     val b = spark.newSession()
     b.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     b.conf.set("spark.sql.session.timeZone", "UTC")
-    sys.addShutdownHook(
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir)))
     readEvents(b, sfDir).write.mode("overwrite").parquet(s"$dir/events")
     val ev = b.read.parquet(s"$dir/events")
     val span = ev.agg(coalesce(max(col("ts")) - min(col("ts")), lit(0L)))
@@ -90,16 +102,25 @@ object TestData {
 
   private val built = scala.collection.mutable.Set[String]()
   private val opened =
-    scala.collection.mutable.Map[(SparkSession, String), (DataFrame, TsStore)]()
+    scala.collection.mutable.Map[(SparkSession, String), AnyRef]()
+
+  /** What `open` makes of `path`, once per session: a later call runs no
+    * Spark job (not even a parquet schema read). */
+  private def memo[T <: AnyRef](spark: SparkSession, path: String)(
+      open: => T): T = synchronized {
+    opened.getOrElseUpdate((spark, path), open).asInstanceOf[T]
+  }
 
   /** (normalized table, series store) of `sfDir`: built once per process
     * (concurrent first callers wait for the one build) and opened once
-    * per session, so a later call runs no Spark job. */
-  private def open(spark: SparkSession, sfDir: String) = synchronized {
+    * per session. */
+  private def open(spark: SparkSession, sfDir: String) = {
     val dir = scratch("graft_testdata", sfDir)
-    if (!built(sfDir)) { build(spark, sfDir, dir); built += sfDir }
-    opened.getOrElseUpdate((spark, sfDir), (spark.read.parquet(s"$dir/events"),
-      Ingest.readLayout(spark, s"$dir/layout", Some(s"$dir/series"))))
+    memo(spark, dir) {
+      if (!built(sfDir)) { build(spark, sfDir, dir); built += sfDir }
+      (spark.read.parquet(s"$dir/events"),
+        Ingest.readLayout(spark, s"$dir/layout", Some(s"$dir/series")))
+    }
   }
 
   /** Metric-series store over `events.parquet`, with its series dimension
@@ -123,6 +144,9 @@ object TestData {
   def eventsRaw(spark: SparkSession, sfDir: String): DataFrame =
     open(spark, sfDir)._1
 
-  def table(spark: SparkSession, sfDir: String, name: String) =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The corpus table `name` (`documents`, `embeddings`, …), opened once
+    * per session. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    memo(spark, s"$sfDir/$name.parquet")(
+      spark.read.parquet(s"$sfDir/$name.parquet"))
 }

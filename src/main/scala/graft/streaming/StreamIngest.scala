@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 
-import graft.io.LineProtocol
+import graft.io.{Ingest, LineProtocol}
 import graft.plan.TsStore
 
 /** Structured Streaming ingestion + continuous aggregation — the Spark
@@ -128,18 +128,19 @@ object StreamIngest {
     * the sink's output with no schema branch. Files are appended per
     * micro-batch, unsorted across files; `compactLayout` restores the
     * salted, `(sname, ts)`-sorted layout. `checkpoint` is the WAL:
-    * exactly-once per micro-batch across restarts. */
+    * exactly-once per micro-batch across restarts. An existing layout
+    * keeps its bucket width (a fresh path gets `Ingest.DayNs`) and must
+    * carry the `flattenTags` keys. */
   def writeLayoutStream(samples: DataFrame, path: String,
                         checkpoint: String,
-                        flattenTags: Seq[String] = Nil,
-                        bucketNs: Long = graft.io.Ingest.DayNs): DataStreamWriter[Row] = {
-    // bucketNs MUST match the layout this stream appends to: a mismatched
-    // divisor writes day values the planner's directory pruning filters
-    // out — silent row loss. Persist it up front (append sink — the
-    // directory is never wiped) so readLayout picks it up without caller
-    // coordination.
-    graft.io.Ingest.writeBucketNs(samples.sparkSession, path, bucketNs)
-    graft.io.Ingest.flattenTagMap(samples, flattenTags)
+                        flattenTags: Seq[String] = Nil): DataStreamWriter[Row] = {
+    val spark = samples.sparkSession
+    Ingest.requireTagKeys(spark, path, flattenTags, "stream called with")
+    val bucketNs = Ingest.readBucketNs(spark, path).getOrElse {
+      Ingest.writeBucketNs(spark, path, Ingest.DayNs)
+      Ingest.DayNs
+    }
+    Ingest.flattenTagMap(samples, flattenTags)
       .withColumn("day", expr(s"ts div ${bucketNs}L"))
       .writeStream
       .format("parquet")

@@ -82,7 +82,7 @@ class FoldRecoverySpec extends SparkFunSuite {
       .foreach(f => Files.move(f.toPath,
         new java.io.File(staging, f.getName).toPath))
     val foldout = s"$layout/.foldout/$foldId"
-    RunLog.compactRuns(spark, staging.getAbsolutePath, foldout, Seq("host"))
+    RunLog.compactRuns(spark, staging.getAbsolutePath, foldout)
     val outFiles = Files.walk(java.nio.file.Paths.get(foldout)).iterator()
     val targets = scala.collection.mutable.ArrayBuffer[(java.io.File, java.io.File)]()
     outFiles.forEachRemaining { p =>
@@ -105,7 +105,7 @@ class FoldRecoverySpec extends SparkFunSuite {
     Files.move(targets.head._1.toPath, targets.head._2.toPath)
     // recovery: rolls the partial landing back by the manifest, redoes
     // the fold, retires — the view is A union B, each sample ONCE
-    RunLog.recoverFolds(spark, runs, layout, Seq("host"))
+    RunLog.recoverFolds(spark, runs, layout)
     val want = ((0 until 20) ++ (0 until 25)).map(_.toDouble).sorted
     assert(liveValues(layout, runs) == want)
     assert(new java.io.File(s"$runs/.folding").listFiles.isEmpty)
@@ -136,9 +136,40 @@ class FoldRecoverySpec extends SparkFunSuite {
     new java.io.File(s"$layout/_folds").mkdirs()
     Files.createFile(new java.io.File(s"$layout/_folds/$foldId").toPath)
     // recovery must NOT append the staged snapshot a second time
-    RunLog.recoverFolds(spark, runs, layout, Seq("host"))
+    RunLog.recoverFolds(spark, runs, layout)
     assert(liveValues(layout, runs) == (0 until 20).map(_.toDouble))
     assert(new java.io.File(s"$runs/.folding").listFiles.isEmpty)
+  }
+
+  test("recovery into an hourly layout lands rows where hour pruning finds them") {
+    val dir = Files.createTempDirectory("graft-rec-hourly").toFile
+    val runs = new java.io.File(dir, "runs").getAbsolutePath
+    val layout = new java.io.File(dir, "layout").getAbsolutePath
+    val hour = 3600L * 1000000000L
+    // the layout's creator chose hourly buckets; nothing else restates it
+    Ingest.writeLayout(spark.range(4).select(lit("m0").as("metric"),
+        map(lit("host"), lit("h0")).as("tags"), (col("id") * hour).as("ts"),
+        col("id").cast("double").as("value"),
+        lit(null).cast("string").as("event")),
+      layout, flattenTags = Seq("host"), bucketNs = hour, saltBuckets = 1)
+    // kill right after step 1 of a fold: the runs are staged, nothing else
+    spool(dir, "b", runs, respLines(100 until 110, t0 = 5 * hour))
+    val staging = new java.io.File(s"$runs/.folding/0000000000004-f00d")
+    staging.mkdirs()
+    new java.io.File(runs).listFiles.filter(_.getName.endsWith(".grun"))
+      .foreach(f => Files.move(f.toPath,
+        new java.io.File(staging, f.getName).toPath))
+    RunLog.recoverFolds(spark, runs, layout)
+    assert(RunLog.listServableRuns(spark, runs).isEmpty)
+    assert(Ingest.readBucketNs(spark, layout).contains(hour))
+    def ranged(from: Long, to: Long) = graft.plan.Planner.plan(
+      graft.ast.QueryJson.parse(
+        s"""{"select":"m0","range":{"from":$from,"to":$to}}"""),
+      RunLog.liveStore(spark, layout, runs)).df
+      .collect().map(_.getDouble(2)).sorted.toSeq
+    assert(ranged(5 * hour, 6 * hour) == (100 until 110).map(_.toDouble))
+    assert(ranged(0, 6 * hour) ==
+      ((0 until 4) ++ (100 until 110)).map(_.toDouble))
   }
 
   test("wire-to-query kill: TCP ingest severed mid-session, store recovers") {

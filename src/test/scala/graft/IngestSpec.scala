@@ -128,7 +128,7 @@ class IngestSpec extends SparkFunSuite {
       flattenTags = Seq("host"))
     graft.io.RunLog.spoolResp(spark, respFile.getAbsolutePath, spool,
       Seq("host"))
-    graft.io.RunLog.compactRuns(spark, spool, salted, Seq("host"))
+    graft.io.RunLog.compactRuns(spark, spool, salted)
     def snap(p: String) = Ingest.readLayout(spark, p).samples
       .select("metric", "ts", "value")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))

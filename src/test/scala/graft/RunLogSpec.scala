@@ -46,12 +46,12 @@ class RunLogSpec extends SparkFunSuite {
     }
     val direct = Ingest.respFilesFlat(spark, dir.getAbsolutePath, Seq("host"))
       .collect().map(key).toSet
-    val viaRuns = RunLog.readRuns(spark, runs, Seq("host"))
+    val viaRuns = RunLog.readRuns(spark, runs)
       .collect().map(key).toSet
     assert(viaRuns == direct)
     assert(viaRuns.size == 152)
     // events carried bodies; samples carried values
-    val ev = RunLog.readRuns(spark, runs, Seq("host"))
+    val ev = RunLog.readRuns(spark, runs)
       .filter(col("event").isNotNull).collect()
     assert(ev.map(_.getAs[String]("event")).sorted.toSeq ==
       Seq("rollout one", "rollout two"))
@@ -64,7 +64,7 @@ class RunLogSpec extends SparkFunSuite {
     val viaRunsLayout = new java.io.File(dir, "lay-runs").getAbsolutePath
     val directLayout = new java.io.File(dir, "lay-direct").getAbsolutePath
     RunLog.spoolResp(spark, dir.getAbsolutePath, runs, Seq("host"))
-    RunLog.compactRuns(spark, runs, viaRunsLayout, Seq("host"))
+    RunLog.compactRuns(spark, runs, viaRunsLayout)
     Ingest.ingestResp(spark, dir.getAbsolutePath, directLayout,
       flattenTags = Seq("host"))
     def key(r: org.apache.spark.sql.Row): Seq[Any] = r.toSeq.map {
@@ -83,7 +83,7 @@ class RunLogSpec extends SparkFunSuite {
     renderSessions(dir)
     val runs = new java.io.File(dir, "runs").getAbsolutePath
     RunLog.spoolResp(spark, dir.getAbsolutePath, runs, Seq("host"))
-    val st = RunLog.toStore(spark, runs, Seq("host"))
+    val st = RunLog.toStore(spark, runs)
     val df = graft.plan.Planner.plan(graft.ast.QueryJson.parse(
       s"""{"select":"m0","range":{"from":0,"to":${3 * Ingest.DayNs}},
          |"where":{"host":"h1"}}""".stripMargin), st).df
@@ -168,18 +168,42 @@ class RunLogSpec extends SparkFunSuite {
     // compactRuns (full rebuild) refuses an empty spool: a typo'd or
     // drained runs dir must never overwrite a layout with nothing
     intercept[IllegalArgumentException] {
-      RunLog.compactRuns(spark, runs, layout, Seq("host"))
+      RunLog.compactRuns(spark, runs, layout)
     }
     assert(liveValues() == (all :+ 9.0).sorted)
-    // a mismatched bucket width is rejected BEFORE anything is written
-    // or retired: the spool survives intact
     spool("b3", Seq("+m0 host=h0", ":1", ":7"))
-    intercept[IllegalArgumentException] {
-      RunLog.foldRuns(spark, runs, layout, Seq("host"), bucketNs = 1000L)
-    }
     assert(RunLog.listRuns(spark, runs).nonEmpty)
     assert(RunLog.foldRuns(spark, runs, layout, Seq("host")).size == 1)
     assert(liveValues() == (all ++ Seq(7.0, 9.0)).sorted)
+  }
+
+  test("foldRuns into an hourly layout needs no width: it uses the layout's") {
+    val dir = Files.createTempDirectory("graft-runlog-hourly").toFile
+    val hour = 3600L * 1000000000L
+    val runs = new java.io.File(dir, "runs").getAbsolutePath
+    val layout = new java.io.File(dir, "layout").getAbsolutePath
+    Ingest.writeLayout(spark.range(4).select(lit("m0").as("metric"),
+        map(lit("host"), lit("h0")).as("tags"), (col("id") * hour).as("ts"),
+        col("id").cast("double").as("value"),
+        lit(null).cast("string").as("event")),
+      layout, flattenTags = Seq("host"), bucketNs = hour, saltBuckets = 1)
+    val d = new java.io.File(dir, "b"); d.mkdirs()
+    Files.write(new java.io.File(d, "s.resp").toPath,
+      (0 until 10).flatMap(i => Seq("+m0 host=h1",
+        s":${5 * hour + i * 1000000000L}", s":${100 + i}"))
+        .mkString("\n").getBytes)
+    RunLog.spoolResp(spark, d.getAbsolutePath, runs, Seq("host"))
+    assert(RunLog.foldRuns(spark, runs, layout, Seq("host")).nonEmpty)
+    assert(Ingest.readBucketNs(spark, layout).contains(hour))
+    // hour pruning: a ranged query over the folded hour sees exactly it
+    def ranged(from: Long, to: Long) = graft.plan.Planner.plan(
+      graft.ast.QueryJson.parse(
+        s"""{"select":"m0","range":{"from":$from,"to":$to}}"""),
+      RunLog.liveStore(spark, layout, runs)).df
+      .collect().map(_.getDouble(2)).sorted.toSeq
+    assert(ranged(5 * hour, 6 * hour) == (100 until 110).map(_.toDouble))
+    assert(ranged(0, 6 * hour) ==
+      ((0 until 4) ++ (100 until 110)).map(_.toDouble))
   }
 
   test("foldRuns: a tag-key mismatch with the layout fails before staging") {
@@ -203,13 +227,32 @@ class RunLogSpec extends SparkFunSuite {
       RunLog.foldRuns(spark, runs, layout, Seq("host"))
     }
     assert(e.getMessage.contains(s"layout $layout has flattened tags [") &&
-      e.getMessage.contains(", fold called with [host]"), e.getMessage)
+      e.getMessage.contains(s"runs under $runs spooled with [host]"),
+      e.getMessage)
     assert(Seq("host", "region").forall(t =>
       e.getMessage.contains(t)), e.getMessage)
     // nothing was staged: the runs stay where they were, servable
     assert(RunLog.listRuns(spark, runs) == pending && pending.nonEmpty)
     val folding = new java.io.File(runs, ".folding")
     assert(!folding.exists() || folding.list().isEmpty)
+    // called with the layout's keys, as a fixed maintenance loop does:
+    // the runs' own header rejects it, still before staging
+    val e2 = intercept[IllegalArgumentException] {
+      RunLog.foldRuns(spark, runs, layout, Seq("host", "region"))
+    }
+    assert(e2.getMessage.contains("spooled with tag keys [host]"),
+      e2.getMessage)
+    assert(RunLog.listRuns(spark, runs) == pending)
+    assert(!folding.exists() || folding.list().isEmpty)
+    // a fresh layout has no footer to compare: the header check alone
+    // rejects the wrong keys, and no layout appears
+    val fresh = new java.io.File(dir, "fresh")
+    intercept[IllegalArgumentException] {
+      RunLog.foldRuns(spark, runs, fresh.getAbsolutePath, Seq("dc"))
+    }
+    assert(RunLog.listRuns(spark, runs) == pending)
+    assert(!folding.exists() || folding.list().isEmpty)
+    assert(!fresh.exists())
   }
 
   test("run names are deterministic per partition (retry-idempotent)") {
@@ -232,7 +275,7 @@ class RunLogSpec extends SparkFunSuite {
       Seq("host"))
     val all = runs.listFiles().map(_.getName).filter(_.endsWith(".grun"))
     assert(all.map(_.split("-")(1)).toSet.size == 2)
-    assert(RunLog.readRuns(spark, runs.getAbsolutePath, Seq("host"))
+    assert(RunLog.readRuns(spark, runs.getAbsolutePath)
       .count() == 304) // both spools: 2 x 152
   }
 
@@ -269,7 +312,7 @@ class RunLogSpec extends SparkFunSuite {
     Files.write(f.toPath, bytes.take(bytes.length - 3))
     new java.io.File(runs, s".${f.getName}.crc").delete()
     val e = intercept[org.apache.spark.SparkException] {
-      RunLog.readRuns(spark, runs.getAbsolutePath, Seq("host")).count()
+      RunLog.readRuns(spark, runs.getAbsolutePath).count()
     }
     val msg = e.getMessage +
       Option(e.getCause).map(_.getMessage).getOrElse("")
@@ -280,11 +323,16 @@ class RunLogSpec extends SparkFunSuite {
     val dir = Files.createTempDirectory("graft-runlog4").toFile
     renderSessions(dir)
     val runs = new java.io.File(dir, "runs").getAbsolutePath
+    // one snapshot, two key sets: the read takes the first file's keys
+    // and the other file's task fails, naming it
     RunLog.spoolResp(spark, dir.getAbsolutePath, runs, Seq("host"))
+    RunLog.spoolResp(spark, dir.getAbsolutePath, runs, Seq("dc"))
+    val files = RunLog.listRuns(spark, runs)
     val e = intercept[org.apache.spark.SparkException] {
-      RunLog.readRuns(spark, runs, Seq("dc")).collect()
+      RunLog.readRuns(spark, runs).collect()
     }
-    assert(e.getMessage.contains("spooled with tag keys") ||
-      Option(e.getCause).exists(_.getMessage.contains("spooled with tag keys")))
+    val msg = e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse("")
+    assert(msg.contains("spooled with tag keys"), msg)
+    assert(files.exists(f => msg.contains(new java.io.File(f).getName)), msg)
   }
 }

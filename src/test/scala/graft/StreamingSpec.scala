@@ -182,6 +182,43 @@ class StreamingSpec extends SparkFunSuite {
     assert(spark.read.parquet(compacted).columns.contains("tag_host"))
   }
 
+  test("the streaming sink appends to an hourly layout in the layout's width") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-stream-hourly").toFile
+    val in = new java.io.File(dir, "in"); in.mkdirs()
+    val layout = new java.io.File(dir, "layout").getAbsolutePath
+    val hour = 3600L * 1000000000L
+    graft.io.Ingest.writeLayout(spark.range(4).select(lit("cpu").as("metric"),
+        map(lit("host"), lit("h0")).as("tags"), (col("id") * hour).as("ts"),
+        col("id").cast("double").as("value"),
+        lit(null).cast("string").as("event")),
+      layout, flattenTags = Seq("host"), bucketNs = hour, saltBuckets = 1)
+    Files.write(new java.io.File(in, "s.resp").toPath,
+      (0 until 10).flatMap(i => Seq("+cpu host=h1",
+        s":${5 * hour + i * 1000000000L}", s":${100 + i}"))
+        .mkString("\n").getBytes)
+    def stream(tags: Seq[String]) = StreamIngest.writeLayoutStream(
+      StreamIngest.respFileStream(spark, in.getAbsolutePath), layout,
+      new java.io.File(dir, "ckpt").getAbsolutePath, tags)
+    // other tag keys than the layout's files carry: refused up front
+    val e = intercept[IllegalArgumentException](stream(Seq("dc")))
+    assert(e.getMessage.contains("[host]") && e.getMessage.contains("[dc]"),
+      e.getMessage)
+    val q = stream(Seq("host")).start()
+    try q.processAllAvailable() finally q.stop()
+    assert(graft.io.Ingest.readBucketNs(spark, layout).contains(hour))
+    // hour pruning finds the streamed rows: they landed in hour ids
+    val got = graft.plan.Planner.plan(graft.ast.QueryJson.parse(
+        s"""{"select":"cpu","range":{"from":${5 * hour},"to":${6 * hour}}}"""),
+      graft.io.Ingest.readLayout(spark, layout)).df
+      .collect().map(_.getDouble(2)).sorted.toSeq
+    assert(got == (100 until 110).map(_.toDouble))
+    assert(new java.io.File(layout, "metric=cpu/day=5").isDirectory)
+    // the batch rows' files are still in place (the sink only appends)
+    assert((0 until 4).forall(h => new java.io.File(layout,
+      s"metric=cpu/day=$h").list().exists(_.endsWith(".parquet"))))
+  }
+
   test("the streaming sink writes the batch layout schema, read-identical") {
     import java.nio.file.Files
     val dir = Files.createTempDirectory("graft-stream-schema").toFile

@@ -14,7 +14,8 @@ import graft.sources.TestData
   * It must answer exactly what the JSON tag-map adapter it replaced
   * answered (kept inline below as the reference), push `where` on a tag
   * into the scan, leave the caller's session conf alone, and build once
-  * per corpus however many threads ask. */
+  * per corpus however many threads ask. The other corpus tables open
+  * once per session too. */
 class TestDataSpec extends SparkFunSuite {
   private val Sf = "/root/testdata/sf0.001"
   private val TzKey = "spark.sql.session.timeZone"
@@ -123,5 +124,15 @@ class TestDataSpec extends SparkFunSuite {
       TestData.events(spark, two); TestData.eventsRaw(spark, two)
       TestData.eventStore(spark, two)
     } == 0)
+  }
+
+  test("a corpus table opens once per session: a second call runs no job") {
+    val first = TestData.table(spark, Sf, "documents")
+    var again: DataFrame = null
+    assert(ListenerBus.jobsOf(spark.sparkContext) {
+      again = TestData.table(spark, Sf, "documents")
+    } == 0)
+    assert(again eq first)
+    assert(again.count() == spark.read.parquet(s"$Sf/documents.parquet").count())
   }
 }
