@@ -2062,26 +2062,25 @@ object SparkEntry {
         // state partitions derive from the source scale (metadata-only
         // count): the dedup state is one fingerprint per doc, and each
         // micro-batch otherwise commits 32 near-empty state stores
-        graft.streaming.StreamIngest.withStatePartitions(s,
-            s.read.parquet(src).count()) {
-          val deduped = graft.streaming.StreamIngest.streamingDedupDocs(
-            s.readStream.schema(batchAt("2024-01-01 00:00:00").schema)
-              .parquet(src),
-            "event_time", "1 hour")
-          val q = deduped.select(col("fingerprint")).writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch {
-              (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-               _: Long) => b.write.mode("append").parquet(out); ()
-            }
-            .start()
-          try {
-            q.processAllAvailable()
-            // full replay, 10 min later — within the 1h watermark horizon
-            batchAt("2024-01-01 00:10:00").write.mode("append").parquet(src)
-            q.processAllAvailable()
-          } finally q.stop()
-        }
+        val ss = graft.streaming.StreamIngest.withStatePartitions(s,
+          s.read.parquet(src).count())
+        val deduped = graft.streaming.StreamIngest.streamingDedupDocs(
+          ss.readStream.schema(batchAt("2024-01-01 00:00:00").schema)
+            .parquet(src),
+          "event_time", "1 hour")
+        val q = deduped.select(col("fingerprint")).writeStream
+          .option("checkpointLocation", ckpt)
+          .foreachBatch {
+            (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+             _: Long) => b.write.mode("append").parquet(out); ()
+          }
+          .start()
+        try {
+          q.processAllAvailable()
+          // full replay, 10 min later — within the 1h watermark horizon
+          batchAt("2024-01-01 00:10:00").write.mode("append").parquet(src)
+          q.processAllAvailable()
+        } finally q.stop()
         s.read.parquet(out).orderBy(col("fingerprint"))
       },
       Some("""SELECT DISTINCT
@@ -4624,26 +4623,25 @@ object SparkEntry {
         // metadata count — no scan), not the session constant: every
         // micro-batch commits every state partition, and the state here
         // is a handful of series (see withStatePartitions)
-        graft.streaming.StreamIngest.withStatePartitions(s,
-            s.read.parquet(src).count()) {
-          val alerts = graft.streaming.StreamIngest.streamingAnomaly(
-            s.readStream.schema(collapsed.schema).parquet(src),
-            decay = 0.3, k = 2.5, warmup = 10)
-            .toDF("sname", "ts", "value", "ewma", "sigma")
-          val q = alerts.writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch {
-              (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-               _: Long) => b.write.mode("append").parquet(out); ()
-            }
-            .start()
-          try {
-            q.processAllAvailable()
-            collapsed.filter(col("ts") >= mid)
-              .write.mode("append").parquet(src)
-            q.processAllAvailable()
-          } finally q.stop()
-        }
+        val ss = graft.streaming.StreamIngest.withStatePartitions(s,
+          s.read.parquet(src).count())
+        val alerts = graft.streaming.StreamIngest.streamingAnomaly(
+          ss.readStream.schema(collapsed.schema).parquet(src),
+          decay = 0.3, k = 2.5, warmup = 10)
+          .toDF("sname", "ts", "value", "ewma", "sigma")
+        val q = alerts.writeStream
+          .option("checkpointLocation", ckpt)
+          .foreachBatch {
+            (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+             _: Long) => b.write.mode("append").parquet(out); ()
+          }
+          .start()
+        try {
+          q.processAllAvailable()
+          collapsed.filter(col("ts") >= mid)
+            .write.mode("append").parquet(src)
+          q.processAllAvailable()
+        } finally q.stop()
         s.read.parquet(out)
           .select(col("sname"), col("ts"), col("value"),
             round(col("ewma"), 6).as("ewma"),
@@ -4705,33 +4703,32 @@ object SparkEntry {
         // state partitions derive from the source scale (metadata-only
         // count); the watermark buffer here is per-series state and the
         // 5 micro-batches otherwise each commit 32 near-empty stores
-        graft.streaming.StreamIngest.withStatePartitions(s,
-            s.read.parquet(src).count()) {
-          val alerts = graft.streaming.StreamIngest.streamingAnomalyOrdered(
-            s.readStream.schema(collapsed.schema).parquet(src),
-            decay = 0.3, k = 2.5, warmup = 10, watermarkDelay = "60 days")
-            .toDF("sname", "ts", "value", "ewma", "sigma")
-          val q = alerts.writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch {
-              (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-               _: Long) => b.write.mode("append").parquet(out); ()
-            }
-            .start()
-          try {
-            q.processAllAvailable()
-            collapsed.filter(col("ts") < mid)
-              .write.mode("append").parquet(src)
-            q.processAllAvailable()
-            // two sentinel batches: the first advances the watermark past
-            // every real row, the second fires the event-time timeouts
-            // that flush the buffered series
-            sentinel(maxTs + 90 * day).write.mode("append").parquet(src)
-            q.processAllAvailable()
-            sentinel(maxTs + 120 * day).write.mode("append").parquet(src)
-            q.processAllAvailable()
-          } finally q.stop()
-        }
+        val ss = graft.streaming.StreamIngest.withStatePartitions(s,
+          s.read.parquet(src).count())
+        val alerts = graft.streaming.StreamIngest.streamingAnomalyOrdered(
+          ss.readStream.schema(collapsed.schema).parquet(src),
+          decay = 0.3, k = 2.5, warmup = 10, watermarkDelay = "60 days")
+          .toDF("sname", "ts", "value", "ewma", "sigma")
+        val q = alerts.writeStream
+          .option("checkpointLocation", ckpt)
+          .foreachBatch {
+            (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+             _: Long) => b.write.mode("append").parquet(out); ()
+          }
+          .start()
+        try {
+          q.processAllAvailable()
+          collapsed.filter(col("ts") < mid)
+            .write.mode("append").parquet(src)
+          q.processAllAvailable()
+          // two sentinel batches: the first advances the watermark past
+          // every real row, the second fires the event-time timeouts
+          // that flush the buffered series
+          sentinel(maxTs + 90 * day).write.mode("append").parquet(src)
+          q.processAllAvailable()
+          sentinel(maxTs + 120 * day).write.mode("append").parquet(src)
+          q.processAllAvailable()
+        } finally q.stop()
         s.read.parquet(out)
           .filter(col("sname") =!= "__wm")
           .select(col("sname"), col("ts"), col("value"),

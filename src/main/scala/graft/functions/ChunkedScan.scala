@@ -3,10 +3,11 @@ package graft.functions
 import scala.collection.mutable
 import scala.reflect.ClassTag
 
-import org.apache.spark.{Partitioner, TaskContext}
+import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.plan.{Frame, TsStore}
 
@@ -28,9 +29,9 @@ import graft.plan.{Frame, TsStore}
   *     from its entry states. NOTHING is collected to the driver — at
   *     tens of millions of series the compose is an ordinary small
   *     shuffle, not O(nSeries) driver memory. Equality with the
-  *     single-task path holds by construction — the row-level machine
-  *     is identical, only its start state is precomputed — and is
-  *     proven in ChunkedScanSpec.
+  *     single-task path holds by construction — the row machine and the
+  *     row loop ([[Pipe.scanRows]]) are the same code, only the start
+  *     state is precomputed — and is proven in ChunkedScanSpec.
   *
   * The partitioning MUST be identical in both passes, so the sorted
   * frame is localCheckpointed (range boundaries are sampled and would
@@ -44,32 +45,40 @@ object ChunkedScan {
     * private case classes. */
   trait ScanKernel extends Serializable {
     def init: AnyRef
-    /** Exact machine step: (output, next state). */
-    def step(s: AnyRef, x: Double): (Double, AnyRef)
-    /** Output + state for a null-valued row (default: pass the null
-      * through, state untouched — Pipe.stateful's convention). */
-    def onNull(s: AnyRef): (Any, AnyRef) = (null, s)
+    /** The exact row machine, seeded from state `s`: [[init]] on the
+      * single-pass path, a chunk's entry state in the chunked pass 2. */
+    def machine(s: AnyRef): ColState
     def emptySummary: AnyRef
     def absorb(u: AnyRef, x: Double): AnyRef
     /** Advance a state across a whole summarized chunk. */
     def advance(s: AnyRef, u: AnyRef): AnyRef
   }
 
-  /** Catalyst size estimate from which "auto" routing takes the chunked
-    * path: gate- and bench-sized frames keep the cheaper single-pass
-    * path, 100 TB scans get the chunked one. */
+  /** Catalyst size estimate from which the chunked path is taken:
+    * gate- and bench-sized frames keep the cheaper single-pass path,
+    * 100 TB scans get the chunked one. */
   private val ChunkedThresholdBytes: Long = 2L << 30
 
-  /** Routing: "on" / "off" / "auto" (auto = Catalyst size estimate at
-    * least [[ChunkedThresholdBytes]]). */
+  /** A routing override for the calling thread: `chunked` forces a path
+    * (None = the size rule), `chunks` pins the range partition count
+    * (0 = Spark's own range partitioning). Specs use it to run both paths
+    * on test-sized frames and to make entry states cross partition
+    * boundaries; no engine code sets one. */
+  private[graft] final case class Route(chunked: Option[Boolean] = None,
+                                        chunks: Int = 0)
+  private val route = ThreadLocal.withInitial[Route](() => Route())
+
+  private[graft] def routed[T](r: Route)(body: => T): T = {
+    val prev = route.get
+    route.set(r)
+    try body finally route.set(prev)
+  }
+
+  /** Routing: the chunked path iff the Catalyst size estimate is at least
+    * [[ChunkedThresholdBytes]]. */
   def eligible(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("graft.scan.chunked", "auto") match {
-      case "on"  => true
-      case "off" => false
-      case _ =>
-        df.queryExecution.optimizedPlan.stats.sizeInBytes >=
-          ChunkedThresholdBytes
-    }
+    route.get.chunked.getOrElse(
+      df.queryExecution.optimizedPlan.stats.sizeInBytes >= ChunkedThresholdBytes)
 
   /** Deliver entry rows to their chunk's partition: key IS the partition
     * id. Tiny payload (only boundary-spanning keys emit a row). */
@@ -78,48 +87,15 @@ object ChunkedScan {
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
-  /** Entry states for a frozen chunked frame, pre-partitioned so that
-    * partition `pid` of [[byPid]] holds exactly the (key -> entry state)
-    * rows for partition `pid` of the frame. Absent key = the key starts
-    * in that partition (seed with `init`). */
-  final case class EntryStates[S](byPid: RDD[(Int, (String, S))]) {
-    /** Run `f` over each partition of `rows` with that partition's
-      * entry-state map — the pass-2 shape every ChunkedScan consumer
-      * uses (zip-join by partition index; no driver map, no broadcast). */
-    def mapRowsWithEntry[T: ClassTag](rows: RDD[Row])(
-        f: (Int, collection.Map[String, S], Iterator[Row]) => Iterator[T])
-        : RDD[T] =
-      rows.zipPartitions(byPid) { (rit, eit) =>
-        val pid = TaskContext.getPartitionId()
-        f(pid, eit.map(_._2).toMap, rit)
-      }
-  }
-
-  /** Freeze a (series, ts) range partitioning of `df`, summarize each
-    * (partition, series) run with `empty`/`absorbRow`, compose entry
-    * states distributively with `init`/`advance`, and return the frozen
-    * frame + its per-partition entry states. */
-  def seriesEntry[U: ClassTag, S: ClassTag](df: DataFrame, backward: Boolean,
-      empty: () => U, absorbRow: (U, Row) => U,
-      init: () => S, advance: (S, U) => S):
-      (DataFrame, EntryStates[S]) = {
-    import TsStore.{Sname, Ts}
-    val tsOrd = if (backward) col(Ts).desc else col(Ts).asc
-    keyedEntry(df, Sname, Seq(tsOrd), empty, absorbRow, init, advance)
-  }
-
   /** Range-partition `df` on (key, order), sort within partitions, and
     * summarize each (partition, key) run in one narrow pass. Shared
-    * pass-1 of [[keyedEntry]]/[[keyedFold]]. */
+    * pass-1 of [[keyedScan]]/[[keyedFold]]. */
   private def chunkSummaries[U: ClassTag](df: DataFrame, keyCol: String,
       order: Seq[Column], freeze: Boolean,
       empty: () => U, absorbRow: (U, Row) => U)
       : (DataFrame, RDD[(Int, String, U)]) = {
-    // graft.scan.chunkedPartitions > 0 pins the chunk count (an explicit
-    // numPartitions also opts out of AQE coalescing); 0 = let Spark/AQE
-    // size the range shuffle to the data
-    val nParts = df.sparkSession.conf
-      .get("graft.scan.chunkedPartitions", "0").toInt
+    // Spark/AQE size the range shuffle to the data unless a Route pins it
+    val nParts = route.get.chunks
     val exprs = col(keyCol) +: order
     val ranged =
       if (nParts > 0) df.repartitionByRange(nParts, exprs: _*)
@@ -146,40 +122,42 @@ object ChunkedScan {
     (sorted, summaries)
   }
 
-  /** The general form of [[seriesEntry]]: range-partition `df` on a
-    * string key column + in-key order, summarize each (partition, key)
-    * run, compose entry states DISTRIBUTIVELY: summaries shuffle by key
+  /** Range-partition `df` on a string key column + in-key order (a
+    * series scan: (sname, ts)), summarize each (partition, key) run, and
+    * compose entry states DISTRIBUTIVELY: summaries shuffle by key
     * (nKeys + nPartitions tiny rows), fold in partition order with
     * `advance`, and the resulting entry rows are delivered back to their
-    * chunk's partition for the zip-join pass 2. Used by the event-ops
-    * hot-key escape hatch (EventOps.asOf / sessionize) as well as the
-    * per-series pipeline kernels. */
-  def keyedEntry[U: ClassTag, S: ClassTag](df: DataFrame, keyCol: String,
+    * chunk's partition. Pass 2 then runs `pass2` over each partition of
+    * the frozen frame (a zip-join by partition index; no driver map, no
+    * broadcast), given each key's entry state — `init()` for a key that
+    * starts in that partition — and its rows form a `outSchema` frame.
+    * Used by the event-ops hot-key escape hatch (EventOps.asOf /
+    * sessionize), Sax and [[transform]]. */
+  def keyedScan[U: ClassTag, S: ClassTag](df: DataFrame, keyCol: String,
       order: Seq[Column],
       empty: () => U, absorbRow: (U, Row) => U,
-      init: () => S, advance: (S, U) => S):
-      (DataFrame, EntryStates[S]) = {
+      init: () => S, advance: (S, U) => S, outSchema: StructType)(
+      pass2: (String => S, Iterator[Row]) => Iterator[Row]): DataFrame = {
     val (sorted, summaries) =
       chunkSummaries(df, keyCol, order, freeze = true, empty, absorbRow)
-    val nChunks = sorted.rdd.getNumPartitions
     val entries = summaries
       .map { case (pid, k, u) => (k, (pid, u)) }
       .groupByKey()
       .flatMap { case (k, chunks) =>
+        // chunk i enters with the first i chunks folded in; chunk 0 at init
         val ordered = chunks.toArray.sortBy(_._1)
-        var st = init()
-        val out = mutable.ArrayBuffer.empty[(Int, (String, S))]
-        ordered.zipWithIndex.foreach { case ((pid, u), i) =>
-          if (i > 0) out += ((pid, (k, st)))
-          st = advance(st, u)
-        }
-        out.iterator
+        ordered.iterator.zip(ordered.iterator.map(_._2).scanLeft(init())(advance))
+          .drop(1).map { case ((pid, _), st) => (pid, (k, st)) }
       }
-      .partitionBy(new PidPartitioner(nChunks))
-    (sorted, EntryStates(entries))
+      .partitionBy(new PidPartitioner(sorted.rdd.getNumPartitions))
+    df.sparkSession.createDataFrame(
+      sorted.rdd.zipPartitions(entries) { (rows, es) =>
+        val entry = es.map(_._2).toMap
+        pass2(entry.getOrElse(_, init()), rows)
+      }, outSchema)
   }
 
-  /** Single-pass variant of [[keyedEntry]] for folds that only need each
+  /** Single-pass variant of [[keyedScan]] for folds that only need each
     * key's FINAL state (e.g. the last (level, trend) of a forecast
     * recursion): range-partition on (key, order), summarize each
     * (partition, key) run in one narrow pass, then compose per key in an
@@ -198,70 +176,54 @@ object ChunkedScan {
       .map { case (pid, k, u) => (k, (pid, u)) }
       .groupByKey()
       .map { case (key, chunks) =>
-        key -> chunks.toArray.sortBy(_._1).foldLeft(init()) {
-          case (s, (_, u)) => advance(s, u)
-        }
+        key -> chunks.toArray.sortBy(_._1).map(_._2).foldLeft(init())(advance)
       }
   }
 
   /** Chunked equivalent of Pipe.stateful: rewrite every value column in
-    * place through its kernel, preserving the schema. */
-  def transform(frame: Frame, mkKernels: () => Array[ScanKernel]): Frame = {
-    import TsStore.Sname
+    * place through its kernel, preserving the schema. Pass 2 runs
+    * [[Pipe.scanRows]] with each series' machines seeded from its entry
+    * states. */
+  def transform(frame: Frame, kernels: Array[ScanKernel]): Frame = {
+    import TsStore.{Sname, Ts}
     val df = frame.df
     val schema = df.schema
     val nameIdx = schema.fieldIndex(Sname)
     val vIdxs = frame.valueCols.map(schema.fieldIndex).toArray
-    val kernels0 = mkKernels()
-    val (sorted, entries) = seriesEntry[Array[AnyRef], Array[AnyRef]](
-      df, frame.backward,
-      empty = () => kernels0.map(_.emptySummary),
+    val tsOrd = if (frame.backward) col(Ts).desc else col(Ts).asc
+    val out = keyedScan[Array[AnyRef], Array[AnyRef]](
+      df, Sname, Seq(tsOrd),
+      empty = () => kernels.map(_.emptySummary),
       absorbRow = (u, row) => {
         var j = 0
         while (j < vIdxs.length) {
           if (!row.isNullAt(vIdxs(j)))
-            u(j) = kernels0(j).absorb(u(j), row.getDouble(vIdxs(j)))
+            u(j) = kernels(j).absorb(u(j), row.getDouble(vIdxs(j)))
           j += 1
         }
         u
       },
-      init = () => kernels0.map(_.init),
+      init = () => kernels.map(_.init),
       advance = (s, u) =>
-        Array.tabulate(s.length)(j => kernels0(j).advance(s(j), u(j))))
-    val out = entries.mapRowsWithEntry(sorted.rdd) { (_, entry, it) =>
-      val kernels = mkKernels()
-      var cur: String = null
-      var states: Array[AnyRef] = null
-      it.map { row =>
-        val s = row.getString(nameIdx)
-        if (states == null || s != cur) {
-          cur = s
-          states = entry.get(s)
-            .map(_.clone()).getOrElse(kernels.map(_.init))
-        }
-        val arr = Array.tabulate[Any](row.length)(i => row.get(i))
-        var j = 0
-        while (j < vIdxs.length) {
-          val vi = vIdxs(j)
-          if (!row.isNullAt(vi)) {
-            val (o, ns) = kernels(j).step(states(j), row.getDouble(vi))
-            arr(vi) = o; states(j) = ns
-          } else {
-            val (o, ns) = kernels(j).onNull(states(j))
-            arr(vi) = o; states(j) = ns
-          }
-          j += 1
-        }
-        Row.fromSeq(arr.toIndexedSeq)
-      }
+        Array.tabulate(s.length)(j => kernels(j).advance(s(j), u(j))),
+      schema) { (entry, it) =>
+      Pipe.scanRows(it, nameIdx, vIdxs, { s =>
+        val seed = entry(s)
+        Array.tabulate[ColState](kernels.length)(j => kernels(j).machine(seed(j)))
+      })
     }
     // the repartition invalidates any upstream output-order claim
-    frame.copy(df = df.sparkSession.createDataFrame(out, schema),
-      ordered = false)
+    frame.copy(df = out, ordered = false)
   }
 }
 
-/** EWMA with the reference's 11-sample warmup, as a chunked kernel.
+/** EWMA forecast, the faithful port of the reference state machine
+  * (reference: sliding_window.cpp:15-110; EWMA_WARMUP = 10) and the only
+  * EWMA in the engine: Pipe's single-pass and chunked `ewma`/`ewma-error`
+  * and `StreamIngest.streamingEwma` all run [[machine]]. Output is the
+  * forecast BEFORE absorbing the current sample (`delta`: the sample
+  * minus it); during warmup the forecast is the sample itself.
+  *
   * Summary: the chunk's first <= 11 values verbatim (they may land in
   * any warmup phase, so they are replayed exactly) + the affine map of
   * the remaining rows (y -> tailA*y + tailB; by row 12 of a chunk the
@@ -272,17 +234,23 @@ final class EwmaKernel(decay: Double, delta: Boolean)
   private case class S(warmup: Int, value: Double)
   private case class U(count: Long, head: Vector[Double],
                        tailA: Double, tailB: Double)
+  private final class Machine(private var warmup: Int,
+                              private var value: Double) extends ColState {
+    def step(x: Double): Double = {
+      val forecast = if (warmup <= 10) x else value
+      if (warmup < 10) { value += x; warmup += 1 }
+      else if (warmup == 10) {
+        warmup = 11
+        value = x * decay + (value + x) / 11.0 * (1.0 - decay)
+      } else value = x * decay + value * (1.0 - decay)
+      if (delta) x - forecast else forecast
+    }
+    def state: S = S(warmup, value)
+  }
   def init: AnyRef = S(0, 0.0)
-  def step(s0: AnyRef, x: Double): (Double, AnyRef) = {
+  def machine(s0: AnyRef): ColState = {
     val s = s0.asInstanceOf[S]
-    val forecast = if (s.warmup <= 10) x else s.value
-    val next =
-      if (s.warmup < 10) S(s.warmup + 1, s.value + x)
-      else if (s.warmup == 10) {
-        val v = (s.value + x) / 11.0
-        S(11, x * decay + v * (1.0 - decay))
-      } else S(11, x * decay + s.value * (1.0 - decay))
-    (if (delta) x - forecast else forecast, next)
+    new Machine(s.warmup, s.value)
   }
   def emptySummary: AnyRef = U(0L, Vector.empty, 1.0, 0.0)
   def absorb(u0: AnyRef, x: Double): AnyRef = {
@@ -293,8 +261,10 @@ final class EwmaKernel(decay: Double, delta: Boolean)
   }
   def advance(s0: AnyRef, u0: AnyRef): AnyRef = {
     val u = u0.asInstanceOf[U]
-    var st = s0.asInstanceOf[S]
-    u.head.foreach { x => st = step(st, x)._2.asInstanceOf[S] }
+    val s = s0.asInstanceOf[S]
+    val m = new Machine(s.warmup, s.value)
+    u.head.foreach(m.step)
+    val st = m.state
     if (u.count > u.head.size) // tail exists => warmup is complete
       S(st.warmup, u.tailA * st.value + u.tailB)
     else st
@@ -303,14 +273,14 @@ final class EwmaKernel(decay: Double, delta: Boolean)
 
 /** Running sum as a chunked kernel, replicating the Catalyst window
   * `when(isNotNull, sum over (unboundedPreceding..current))` semantics
-  * Pipe uses for `accumulate`/`cusum`: null rows output null (the
-  * default onNull) and add nothing. State and summary are both plain
-  * sums; composition is addition. */
+  * Pipe uses for `accumulate`/`cusum`: null rows output null and add
+  * nothing. State and summary are both plain sums; composition is
+  * addition. */
 final class CusumKernel extends ChunkedScan.ScanKernel {
   def init: AnyRef = java.lang.Double.valueOf(0.0)
-  def step(s0: AnyRef, x: Double): (Double, AnyRef) = {
-    val ns = s0.asInstanceOf[java.lang.Double].doubleValue + x
-    (ns, java.lang.Double.valueOf(ns))
+  def machine(s0: AnyRef): ColState = new ColState {
+    private var sum = s0.asInstanceOf[java.lang.Double].doubleValue
+    def step(x: Double): Double = { sum += x; sum }
   }
   def emptySummary: AnyRef = java.lang.Double.valueOf(0.0)
   def absorb(u0: AnyRef, x: Double): AnyRef =

@@ -88,7 +88,7 @@ object Pipe {
     // to the chunked two-pass scan so one series never pins one task.
     case "accumulate" | "cusum" if ChunkedScan.eligible(frame.df) =>
       ChunkedScan.transform(frame,
-        () => Array.fill(frame.valueCols.size)(new CusumKernel))
+        Array.fill(frame.valueCols.size)(new CusumKernel))
     case "accumulate" | "cusum" =>
       val w = scanWindow(frame).rowsBetween(Window.unboundedPreceding, 0)
       mapValues2(frame)(vc =>
@@ -123,21 +123,17 @@ object Pipe {
       val w = scanWindow(frame).rowsBetween(Window.unboundedPreceding, 0)
       mapValues2(frame)(vc => avg(col(vc)).over(w))
 
-    // EWMA forecast with 10-sample warmup, faithful to the reference state
-    // machine (reference: sliding_window.cpp:15-110, param "decay").
-    // Giant frames route to the chunked two-pass scan (EwmaKernel's
-    // head-replay + affine-tail summaries).
-    case "ewma" | "ewma-error" if ChunkedScan.eligible(frame.df) =>
-      val decay = doubleParam(step, "decay")
-      val delta = step.name == "ewma-error"
-      ChunkedScan.transform(frame,
-        () => Array.fill(frame.valueCols.size)(new EwmaKernel(decay, delta)))
-    case "ewma" =>
-      val decay = doubleParam(step, "decay")
-      stateful(frame)(() => new EwmaState(decay, delta = false))
-    case "ewma-error" =>
-      val decay = doubleParam(step, "decay")
-      stateful(frame)(() => new EwmaState(decay, delta = true))
+    // EWMA forecast with 10-sample warmup (reference:
+    // sliding_window.cpp:15-110, param "decay"): EwmaKernel's machine,
+    // single-pass, or through the chunked two-pass scan for frames past
+    // the ChunkedScan.eligible threshold (head-replay + affine-tail
+    // summaries).
+    case "ewma" | "ewma-error" =>
+      val k = new EwmaKernel(doubleParam(step, "decay"),
+        delta = step.name == "ewma-error")
+      if (ChunkedScan.eligible(frame.df))
+        ChunkedScan.transform(frame, Array.fill(frame.valueCols.size)(k))
+      else stateful(frame)(() => k.machine(k.init))
 
     // Fold the tuple into a scalar (reference: math.cpp — note `diff` is
     // unit-minus-each, i.e. -(x1+x2+...), and `divide` is 1/(x1*x2*...),
@@ -324,28 +320,39 @@ object Pipe {
       .sortWithinPartitions(col(Sname), tsOrd)
     val nameIdx = schema.fieldIndex(Sname)
     val vIdxs = frame.valueCols.map(schema.fieldIndex).toArray
-    val out = sorted.mapPartitions { it =>
-      var cur: String = null
-      var states: Array[ColState] = null
-      it.map { row =>
-        val s = row.getString(nameIdx)
-        if (s != cur || states == null) {
-          cur = s
-          states = Array.fill(vIdxs.length)(mk())
-        }
-        val arr = Array.tabulate(row.length)(i => row.get(i))
-        var j = 0
-        while (j < vIdxs.length) {
-          val vi = vIdxs(j)
-          if (!row.isNullAt(vi))
-            arr(vi) = states(j).step(row.getDouble(vi))
-          j += 1
-        }
-        Row.fromSeq(arr.toIndexedSeq)
-      }
-    }(Encoders.row(schema))
+    val out = sorted.mapPartitions(
+      scanRows(_, nameIdx, vIdxs, _ => Array.fill(vIdxs.length)(mk()))
+    )(Encoders.row(schema))
     // the repartition invalidates any upstream output-order claim
     frame.copy(df = out, ordered = false)
+  }
+
+  /** The row loop of every sequential per-series machine, over rows sorted
+    * by (series, scan order) — [[stateful]]'s single pass and
+    * ChunkedScan.transform's pass 2. On a series change it takes
+    * `fresh(series)`'s machines (one per value column); each row is
+    * copied with every non-null value cell replaced by its machine's
+    * step. Null cells pass through and leave the machine untouched. */
+  private[functions] def scanRows(it: Iterator[Row], nameIdx: Int,
+      vIdxs: Array[Int], fresh: String => Array[ColState]): Iterator[Row] = {
+    var cur: String = null
+    var states: Array[ColState] = null
+    it.map { row =>
+      val s = row.getString(nameIdx)
+      if (states == null || s != cur) {
+        cur = s
+        states = fresh(s)
+      }
+      val arr = Array.tabulate[Any](row.length)(row.get)
+      var j = 0
+      while (j < vIdxs.length) {
+        val vi = vIdxs(j)
+        if (!row.isNullAt(vi))
+          arr(vi) = states(j).step(row.getDouble(vi))
+        j += 1
+      }
+      Row.fromSeq(arr.toIndexedSeq)
+    }
   }
 
   private def intParam(step: Apply, key: String): Int =
@@ -367,25 +374,4 @@ object Pipe {
 trait ColState extends Serializable {
   /** Consume one sample, return the transformed value. */
   def step(x: Double): Double
-}
-
-/** Faithful port of the reference EWMA state machine
-  * (reference: sliding_window.cpp:15-110; EWMA_WARMUP = 10). Output is the
-  * forecast BEFORE absorbing the current sample; during warmup the forecast
-  * defaults to the current value itself. */
-final class EwmaState(decay: Double, delta: Boolean) extends ColState {
-  private var warmup = 0
-  private var value = 0.0
-  def step(x: Double): Double = {
-    val forecast = if (warmup <= 10) x else value
-    // add
-    if (warmup < 10) { value += x; warmup += 1 }
-    else if (warmup == 10) {
-      warmup += 1
-      value += x
-      value = value / 11.0
-      value = x * decay + value * (1.0 - decay)
-    } else value = x * decay + value * (1.0 - decay)
-    if (delta) x - forecast else forecast
-  }
 }

@@ -132,8 +132,8 @@ object Sax {
       StructField("sax", StringType)))
     val cuts = cutpoints(alphabet)
 
-    def encodePartition(entry: (Int, String) => (Long, Vector[Double]))(
-        pid: Int, it: Iterator[Row]): Iterator[Row] = {
+    def encodePartition(entry: String => (Long, Vector[Double]))(
+        it: Iterator[Row]): Iterator[Row] = {
       var cur: String = null
       var buf: Array[Double] = null
       var fill = 0
@@ -143,7 +143,7 @@ object Sax {
         if (s != cur) {
           cur = s
           buf = new Array[Double](width)
-          val (cnt, vals) = entry(pid, s)
+          val (cnt, vals) = entry(s)
           fill = vals.size // = min(cnt, width)
           vals.copyToArray(buf)
           // the word of the entry window was already emitted upstream;
@@ -176,26 +176,21 @@ object Sax {
         // last <= width values); entering state replays as a pre-filled
         // window + the word it spells (for cross-chunk numerosity
         // reduction).
-        val (sorted, entries) = ChunkedScan.seriesEntry[
+        ChunkedScan.keyedScan[
             (Long, Vector[Double]), (Long, Vector[Double])](
-          df, frame.backward,
+          df, Sname, Seq(tsOrd),
           empty = () => (0L, Vector.empty),
           absorbRow = (u, row) =>
             if (row.isNullAt(vIdx)) u
             else (u._1 + 1, (u._2 :+ row.getDouble(vIdx)).takeRight(width)),
           init = () => (0L, Vector.empty),
           advance = (s, u) =>
-            (s._1 + u._1, (s._2 ++ u._2).takeRight(width)))
-        val rdd = entries.mapRowsWithEntry(sorted.rdd) { (pid, entry, it) =>
-          encodePartition((_, s) =>
-            entry.getOrElse(s, (0L, Vector.empty)))(pid, it)
-        }
-        df.sparkSession.createDataFrame(rdd, outSchema)
+            (s._1 + u._1, (s._2 ++ u._2).takeRight(width)),
+          outSchema)((entry, it) => encodePartition(entry)(it))
       } else df.repartition(col(Sname))
         .sortWithinPartitions(col(Sname), tsOrd)
-        .mapPartitions(it =>
-          encodePartition((_, _) => (0L, Vector.empty))(-1, it)
-        )(Encoders.row(outSchema))
+        .mapPartitions(encodePartition(_ => (0L, Vector.empty)))(
+          Encoders.row(outSchema))
     frame.copy(df = out, valueCols = Seq("sax"))
   }
 }

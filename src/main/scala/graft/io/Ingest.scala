@@ -92,12 +92,14 @@ object Ingest {
   }
 
   /** [[FlatRowWriter]] output as a DataFrame of the flat schema (via
-    * [[org.apache.spark.sql.graftio.InternalRows]]). */
+    * [[org.apache.spark.sql.graftio.InternalRows]]), sized
+    * `sizeInBytes` for Catalyst when the caller knows its input bytes. */
   private[io] def flatFrame(spark: SparkSession,
                             rows: org.apache.spark.rdd.RDD[InternalRow],
-                            tagKeys: Seq[String]): DataFrame =
+                            tagKeys: Seq[String],
+                            sizeInBytes: Option[BigInt] = None): DataFrame =
     org.apache.spark.sql.graftio.InternalRows.toDF(spark, rows,
-      flatSchema(tagKeys))
+      flatSchema(tagKeys), sizeInBytes)
 
   /** RESP sessions parsed straight to the flat layout schema — the ingest
     * fast path. The parser emits rows through [[FlatRowWriter]]. */
@@ -173,8 +175,7 @@ object Ingest {
       .foldLeft(df) { (d, k) =>
         d.withColumn(s"tag_$k", try_element_at(col("tags"), lit(k)))
       }
-      .withColumn("sname",
-        TsStore.snameOf(col("metric"), TsStore.tagStr(col("tags"))))
+      .withColumn("sname", TsStore.canonicalSname)
       .drop("tags")
 
   /** Parse RESP session files and write a fresh [[DayNs]] layout in one
@@ -352,7 +353,7 @@ object Ingest {
   }
 
   /** The data files under `root`'s partition directories, listed lazily. */
-  private[io] def layoutDataFiles(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def layoutDataFiles(fs: org.apache.hadoop.fs.FileSystem,
                                   root: org.apache.hadoop.fs.Path)
       : Iterator[org.apache.hadoop.fs.FileStatus] =
     dayDirs(fs, root).flatMap(d => fs.listStatus(d.getPath).iterator)

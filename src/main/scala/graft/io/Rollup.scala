@@ -130,8 +130,7 @@ object Rollup {
     val base = samples
       .filter(col("value").isNotNull)
       .select(col("metric"),
-        TsStore.snameOf(col("metric"), TsStore.tagStr(col("tags")))
-          .as("sname"),
+        TsStore.canonicalSname.as("sname"),
         col("ts").cast("long").as("ts"),
         col("value").cast("double").as("value"))
     base

@@ -245,11 +245,17 @@ object RunLog {
 
   /** Decode an explicit run-file snapshot (see [[readRuns]]), one task
     * per file up to the cluster parallelism, with the first file's tag
-    * keys: a file spooled with others fails, naming it. */
+    * keys: a file spooled with others fails, naming it. The frame's
+    * Catalyst size estimate is the files' bytes on disk. */
   def readRunFiles(spark: SparkSession, runFiles: Seq[String]): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
     val tagKeys = runFiles.headOption.fold(Seq.empty[String])(runTagKeys(spark, _))
+    val bytes = runFiles.iterator.map { p =>
+      val hp = new org.apache.hadoop.fs.Path(p)
+      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(hp).getLen
+    }.sum
     val nTags = tagKeys.length
     val sconf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
@@ -324,7 +330,7 @@ object RunLog {
           }
         }
       }
-    Ingest.flatFrame(spark, rdd, tagKeys)
+    Ingest.flatFrame(spark, rdd, tagKeys, Some(BigInt(bytes)))
   }
 
   /** Rebuild spooled runs into a fresh [[Ingest.DayNs]] query layout —
@@ -415,11 +421,19 @@ object RunLog {
     * redone. [[foldRuns]] calls this automatically; call it directly on
     * service start to drain crash debris before the first query. Like
     * the fold, the redo takes its shape from the staged runs and the
-    * layout. Returns the recovered fold ids. */
+    * layout. Both refuse a layout a stream sink writes (it holds
+    * `_spark_metadata`). Returns the recovered fold ids. */
   def recoverFolds(spark: SparkSession, runsPath: String,
                    layoutPath: String): Seq[String] = {
     val base = new org.apache.hadoop.fs.Path(s"$runsPath/.folding")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a stream sink's log is the only listing readers of its path use:
+    // files a fold lands there would never be read
+    val sinkLog = new org.apache.hadoop.fs.Path(layoutPath,
+      org.apache.spark.sql.execution.streaming.sinks.FileStreamSink.metadataDir)
+    require(!sinkLog.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(sinkLog), s"layout $layoutPath is a stream sink's " +
+      s"output ($sinkLog): folded files would be hidden from every read")
     if (!fs.exists(base)) Seq.empty
     else fs.listStatus(base).toSeq.filter(_.isDirectory)
       .sortBy(_.getPath.getName).map { d =>

@@ -16,11 +16,11 @@ import graft.functions.ChunkedScan
   * Scale notes (the whole point of each shape):
   *  - `asOf` is union + keyed carry — ONE shuffle on the join key, no
   *    range explosion. A naive `l.ts >= r.ts` theta join is O(n·m) per
-  *    key and unrunnable at 100 TB. Hot keys: frames past the
-  *    ChunkedScan.eligible threshold route through the chunked two-pass
-  *    carry ((key, ts) RANGE partitioning + entry-state handoff), so one
-  *    giant key's history spreads across tasks instead of pinning one
-  *    window partition.
+  *    key and unrunnable at 100 TB. Hot keys: frames whose Catalyst size
+  *    estimate reaches ChunkedScan's threshold (2 GiB) take the chunked
+  *    two-pass carry ((key, ts) RANGE partitioning + entry-state
+  *    handoff), so one giant key's history spreads across tasks instead
+  *    of pinning one window partition.
   *  - `rangeJoin` bucketizes time by the window width so each left row
   *    meets only the buckets its window can touch — an equi-join with a
   *    residual band filter, never a cross product.
@@ -122,15 +122,14 @@ object EventOps {
     val vIdx = schema.fieldIndex(vOut)
     val tIdx = schema.fieldIndex(tsOut)
     val kIdx = schema.fieldIndex("__k")
-    val (sorted, entries) = ChunkedScan.keyedEntry[Carry, Carry](
+    ChunkedScan.keyedScan[Carry, Carry](
       keyed, "__k", Seq(col(tsCol).asc, col("__side").asc),
       empty = () => null,
       absorbRow = (u, row) =>
         if (row.getInt(sideIdx) == 0) Carry(row.getLong(tIdx), row.get(vIdx))
         else u,
       init = () => null,
-      advance = (s, u) => if (u != null) u else s)
-    val rdd = entries.mapRowsWithEntry(sorted.rdd) { (_, entry, it) =>
+      advance = (s, u) => if (u != null) u else s, schema) { (entry, it) =>
       var cur: String = null
       var carry: Carry = null
       var open = false
@@ -138,7 +137,7 @@ object EventOps {
         val k = row.getString(kIdx)
         if (!open || k != cur) {
           cur = k; open = true
-          carry = entry.getOrElse(k, null)
+          carry = entry(k)
         }
         if (row.getInt(sideIdx) == 0) {
           carry = Carry(row.getLong(tIdx), row.get(vIdx))
@@ -149,8 +148,7 @@ object EventOps {
           Iterator.single(Row.fromSeq(arr.toIndexedSeq))
         }
       }
-    }
-    keyed.sparkSession.createDataFrame(rdd, schema).drop("__k")
+    }.drop("__k")
   }
 
   /** Bounded range join: all (left, right) pairs on the same key with
@@ -256,8 +254,9 @@ object EventOps {
   /** Gap-based sessionization: a new session starts at a row whose gap to
     * the key's previous row exceeds `gapNs`. Adds `session_id`
     * (`<key vals joined with '/'>#<index>`) — one keyed window, one
-    * shuffle; frames past the ChunkedScan.eligible threshold take the
-    * chunked two-pass scan so a hot key spans many tasks. */
+    * shuffle; frames whose Catalyst size estimate reaches ChunkedScan's
+    * threshold take the chunked two-pass scan so a hot key spans many
+    * tasks. */
   def sessionize(df: DataFrame, on: Seq[String], tsCol: String,
                  gapNs: Long): DataFrame = {
     require(on.nonEmpty, "sessionize requires at least one key column")
@@ -302,7 +301,7 @@ object EventOps {
     val kdIdx = schema.fieldIndex("__kdisp")
     val tIdx  = schema.fieldIndex("__t")
     val sIdx  = schema.fieldIndex("session_id")
-    val (sorted, entries) = ChunkedScan.keyedEntry[SessU, SessS](
+    ChunkedScan.keyedScan[SessU, SessS](
       keyed, "__k", Seq(col("__t").asc),
       empty = () => null,
       absorbRow = (u, row) => {
@@ -316,8 +315,7 @@ object EventOps {
         val firstNew =
           if (!s.hasPrev || u.firstTs - s.lastTs > gapNs) 1L else 0L
         SessS(hasPrev = true, u.lastTs, s.idx + firstNew + u.internalNew)
-      })
-    val rdd = entries.mapRowsWithEntry(sorted.rdd) { (_, entry, it) =>
+      }, schema) { (entry, it) =>
       var cur: String = null
       var open = false
       var st: SessS = null
@@ -325,7 +323,7 @@ object EventOps {
         val k = row.getString(kIdx)
         if (!open || k != cur) {
           cur = k; open = true
-          st = entry.getOrElse(k, SessS(hasPrev = false, 0L, 0L))
+          st = entry(k)
         }
         val t = row.getLong(tIdx)
         val isNew = !st.hasPrev || t - st.lastTs > gapNs
@@ -334,9 +332,7 @@ object EventOps {
         arr(sIdx) = row.getString(kdIdx) + "#" + st.idx
         Row.fromSeq(arr.toIndexedSeq)
       }
-    }
-    keyed.sparkSession.createDataFrame(rdd, schema)
-      .drop("__k", "__kdisp", "__t")
+    }.drop("__k", "__kdisp", "__t")
   }
 
   /** Gap-based session aggregation via Spark's NATIVE `session_window`

@@ -123,7 +123,7 @@ object Meta {
     // would dominate the pass on a large fact table.
     val snameCol =
       if (store.samples.columns.contains(TsStore.Sname)) col(TsStore.Sname)
-      else TsStore.snameOf(col(TsStore.Metric), TsStore.tagStr(col(TsStore.Tags)))
+      else TsStore.canonicalSname
     store.samples.agg(
       count(lit(1)).as("n_samples"),
       approx_count_distinct(snameCol).as("n_series_approx"),

@@ -64,6 +64,10 @@ object TsStore {
     when(length(tagstr) > lit(0), concat(metric, lit(" "), tagstr))
       .otherwise(metric)
 
+  /** The canonical `sname` of a frame carrying [[Metric]] and the [[Tags]]
+    * map: [[snameOf]] over [[tagStr]]. */
+  def canonicalSname: Column = snameOf(col(Metric), tagStr(col(Tags)))
+
   /** Tags map of a canonical series name — the exact inverse of
     * [[snameOf]] over [[tagStr]]: the space-separated `k=v` pairs after
     * the metric, each split at its first '=' (str_to_map splits a pair

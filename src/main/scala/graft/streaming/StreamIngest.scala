@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.functions.{ColState, EwmaKernel}
 import graft.io.{Ingest, LineProtocol}
 import graft.plan.TsStore
 
@@ -57,14 +58,19 @@ object StreamIngest {
     * partitioner uses) and is clamped to session parallelism, so a
     * 100 TB stream with millions of series sizes back up to the full
     * engine width: this is a scale formula, not a local[32] tweak.
-    * The session's value is restored after the stream stops; only the
-    * streaming query started inside `body` sees the derived count. */
-  def withStatePartitions[T](s: SparkSession, srcRows: Long)(body: => T): T = {
-    val old = s.conf.get("spark.sql.shuffle.partitions")
+    * Returns a child of `s` (`newSession()`, sharing its SparkContext)
+    * that carries `s`'s modifiable SQL settings plus the derived count:
+    * build the stream from the child. `s` itself is never changed, so a
+    * query another thread plans on it meanwhile keeps its own count. */
+  def withStatePartitions(s: SparkSession, srcRows: Long): SparkSession = {
     val p = math.max(1L, math.min(srcRows / 500000L + 1,
-      s.sparkContext.defaultParallelism.toLong)).toInt
-    s.conf.set("spark.sql.shuffle.partitions", p.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", old)
+      s.sparkContext.defaultParallelism.toLong))
+    val child = s.newSession()
+    s.conf.getAll.foreach { case (k, v) =>
+      if (s.conf.isModifiable(k)) child.conf.set(k, v)
+    }
+    child.conf.set("spark.sql.shuffle.partitions", p.toString)
+    child
   }
 
   /** Parse a stream of OpenTSDB `put` lines (socket/file/Kafka source) into
@@ -130,12 +136,15 @@ object StreamIngest {
     * salted, `(sname, ts)`-sorted layout. `checkpoint` is the WAL:
     * exactly-once per micro-batch across restarts. An existing layout
     * keeps its bucket width (a fresh path gets `Ingest.DayNs`) and must
-    * carry the `flattenTags` keys. */
+    * carry the `flattenTags` keys. The sink's `_spark_metadata` log is
+    * the only listing readers of the path use, so a path holding data
+    * files the log does not list (a batch-written layout) is refused. */
   def writeLayoutStream(samples: DataFrame, path: String,
                         checkpoint: String,
                         flattenTags: Seq[String] = Nil): DataStreamWriter[Row] = {
     val spark = samples.sparkSession
     Ingest.requireTagKeys(spark, path, flattenTags, "stream called with")
+    requireSinkListsAll(spark, path)
     val bucketNs = Ingest.readBucketNs(spark, path).getOrElse {
       Ingest.writeBucketNs(spark, path, Ingest.DayNs)
       Ingest.DayNs
@@ -148,6 +157,25 @@ object StreamIngest {
       .option("checkpointLocation", checkpoint)
       .partitionBy("metric", "day")
       .outputMode(OutputMode.Append)
+  }
+
+  /** Fails, naming the file, when the layout at `path` holds a data file
+    * that its sink log does not list (every file, if it has no log). */
+  private def requireSinkListsAll(spark: SparkSession, path: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, FileStreamSinkLog}
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val log = new Path(root, FileStreamSink.metadataDir)
+    val listed = if (!fs.exists(log)) Set.empty[Path] else
+      new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark, log.toString)
+        .allFiles().map(f => fs.makeQualified(new Path(new java.net.URI(f.path))))
+        .toSet
+    if (fs.exists(root)) Ingest.layoutDataFiles(fs, root)
+      .find(f => !listed(fs.makeQualified(f.getPath))).foreach { f =>
+        throw new IllegalArgumentException(s"layout $path holds ${f.getPath}" +
+          ", which no stream sink log lists: a stream would hide it from reads")
+      }
   }
 
   /** Continuous rollup maintenance: every micro-batch folds into a
@@ -211,8 +239,7 @@ object StreamIngest {
         (col("ts") - pmod(col("ts") - lit(anchorNs), lit(stepNs))).cast("long"))
       .withColumn("bucket_event",
         timestamp_micros(expr(s"(bucket_ts + ${stepNs}L) div 1000")))
-      .withColumn("sname",
-        TsStore.snameOf(col("metric"), TsStore.tagStr(col("tags"))))
+      .withColumn("sname", TsStore.canonicalSname)
       .withWatermark("bucket_event", s"$latenessSec seconds")
       .groupBy(col("sname"), col("bucket_ts"), col("bucket_event"))
       .agg(
@@ -239,8 +266,7 @@ object StreamIngest {
         (col("ts") - pmod(col("ts") - lit(anchorNs), lit(stepNs))).cast("long"))
       .withColumn("bucket_event",
         timestamp_micros(expr(s"(bucket_ts + ${stepNs}L) div 1000")))
-      .withColumn("sname",
-        TsStore.snameOf(col("metric"), TsStore.tagStr(col("tags"))))
+      .withColumn("sname", TsStore.canonicalSname)
       .filter(col("value").isNotNull)
       .withWatermark("bucket_event", s"$latenessSec seconds")
       .groupBy(col("sname"), col("bucket_ts"), col("bucket_event"))
@@ -263,44 +289,58 @@ object StreamIngest {
     * memory to restore event-time order (Spark hands the group unordered)
     * — O(samples per series per batch) per task, NOT O(stream). With
     * second-level batches that is a handful of points; a series hot
-    * enough to break this needs a watermarked window design instead. */
+    * enough to break this needs a watermarked window design instead.
+    *
+    * Each series' state is its [[graft.functions.EwmaKernel]] machine
+    * (kryo-encoded), the same machine the batch node runs. Checkpoints
+    * whose state is an older class (a separate streaming EWMA before
+    * this machine) do not restore into it. */
   def streamingEwma(samples: DataFrame, decay: Double,
                     idleTimeout: Option[String] = None): Dataset[(String, Long, Double)] = {
     import samples.sparkSession.implicits._
-    implicit val stateEnc: org.apache.spark.sql.Encoder[graft.functions.EwmaState] =
-      org.apache.spark.sql.Encoders.kryo[graft.functions.EwmaState]
-    val keyed = samples
-      .withColumn("sname",
-        TsStore.snameOf(col("metric"), TsStore.tagStr(col("tags"))))
-      .select(col("sname").as[String], col("ts").as[Long],
-        col("value").as[Double])
-      .as[(String, Long, Double)]
-      .groupByKey(_._1)
-    // idleTimeout bounds state CARDINALITY under series churn: a series
-    // silent for the duration drops its state (and restarts its EWMA
-    // warmup if it ever returns). Without it, cumulative distinct series
-    // grow the state store forever — fine for stable fleets, not for
-    // per-pod/per-request series names.
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    keyed.flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
+    implicit val stateEnc: Encoder[ColState] = Encoders.kryo[ColState]
+    val kernel = new EwmaKernel(decay, delta = false)
+    perSeries(samples, idleTimeout, kernel.machine(kernel.init)) {
+      (key, rows, m) => (m, rows.map { case (ts, v) => (key, ts, m.step(v)) }.toVector)
+    }
+  }
+
+  /** (sname, ts, value) rows grouped by their canonical series name. */
+  private def bySeries(samples: DataFrame)
+      : KeyValueGroupedDataset[String, (String, Long, Double)] = {
+    import samples.sparkSession.implicits._
+    samples.select(TsStore.canonicalSname, col("ts"), col("value"))
+      .as[(String, Long, Double)].groupByKey(_._1)
+  }
+
+  /** One state per series across micro-batches ([[streamingEwma]],
+    * [[streamingAnomaly]]): `run` takes a series' batch rows in ts order
+    * (Spark hands the group unordered) and its state, and returns the
+    * next state and the output rows, computed before the state is stored.
+    * `idleTimeout` bounds state CARDINALITY under series churn: a series
+    * silent for the duration drops its state (and restarts its warmup if
+    * it ever returns). Without it, cumulative distinct series grow the
+    * state store forever — fine for stable fleets, not for
+    * per-pod/per-request series names. */
+  private def perSeries[S: Encoder, T: Encoder](samples: DataFrame,
+      idleTimeout: Option[String], init: => S)(
+      run: (String, Iterator[(Long, Double)], S) => (S, Seq[T])): Dataset[T] =
+    bySeries(samples).flatMapGroupsWithState(OutputMode.Append,
+        if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
+        else GroupStateTimeout.NoTimeout) {
       (key: String, rows: Iterator[(String, Long, Double)],
-       state: GroupState[graft.functions.EwmaState]) =>
+       state: GroupState[S]) =>
         if (state.hasTimedOut) {
           state.remove()
           Iterator.empty
         } else {
-          val st = state.getOption.getOrElse(
-            new graft.functions.EwmaState(decay, delta = false))
-          val out = rows.toArray.sortBy(_._2).map { case (_, ts, v) =>
-            (key, ts, st.step(v))
-          }
-          state.update(st)
+          val (next, out) = run(key, rows.toArray.sortBy(_._2).iterator
+            .map(r => (r._2, r._3)), state.getOption.getOrElse(init))
+          state.update(next)
           idleTimeout.foreach(state.setTimeoutDuration)
           out.iterator
         }
     }
-  }
 
   /** Streaming MinHash-LSH near-dup candidates: the streaming twin of
     * [[graft.llm.Dedup.minhashLsh]]'s banding stage. Each arriving doc's
@@ -364,14 +404,6 @@ object StreamIngest {
       }
   }
 
-  /** Streaming exact dedup of a document feed: content-fingerprint
-    * `dropDuplicatesWithinWatermark` — a doc whose normalized text was
-    * already seen within the watermark horizon is dropped; state expires
-    * with the watermark, so memory is bounded by the horizon, not the
-    * stream. The streaming twin of [[graft.llm.Dedup.exact]]: an
-    * arriving-corpus pipeline dedups before paying storage, the batch
-    * pass dedups what is already stored. `eventTimeCol` must be a
-    * timestamp column. */
   /** Carried state for [[streamingAnomaly]]: samples seen, EW mean, EW
     * variance. A case class (not kryo-opaque mutation) so replays from
     * a checkpoint restore the exact doubles. */
@@ -410,30 +442,10 @@ object StreamIngest {
                        warmup: Int, idleTimeout: Option[String] = None)
       : Dataset[(String, Long, Double, Double, Double)] = {
     import samples.sparkSession.implicits._
-    val keyed = samples
-      .withColumn("sname",
-        TsStore.snameOf(col("metric"), TsStore.tagStr(col("tags"))))
-      .select(col("sname").as[String], col("ts").as[Long],
-        col("value").as[Double])
-      .as[(String, Long, Double)]
-      .groupByKey(_._1)
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    keyed.flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-      (key: String, rows: Iterator[(String, Long, Double)],
-       state: GroupState[AnomalyState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          var st = state.getOption.getOrElse(AnomalyState(0L, 0.0, 0.0))
-          val out = Vector.newBuilder[(String, Long, Double, Double, Double)]
-          st = ewFold(key, rows.toArray.sortBy(_._2)
-            .iterator.map(r => (r._2, r._3)), st, decay, k, warmup, out)
-          state.update(st)
-          idleTimeout.foreach(state.setTimeoutDuration)
-          out.result().iterator
-        }
+    perSeries(samples, idleTimeout, AnomalyState(0L, 0.0, 0.0)) {
+      (key, rows, st) =>
+        val out = Vector.newBuilder[(String, Long, Double, Double, Double)]
+        (ewFold(key, rows, st, decay, k, warmup, out), out.result())
     }
   }
 
@@ -549,8 +561,7 @@ object StreamIngest {
       : Dataset[(String, Long, Double, Double, Double)] = {
     import samples.sparkSession.implicits._
     val keyed = samples
-      .withColumn("sname",
-        TsStore.snameOf(col("metric"), TsStore.tagStr(col("tags"))))
+      .withColumn("sname", TsStore.canonicalSname)
       // `div`, not `/`: double division of ~1.7e18 ns loses precision
       // past 2^53 before the divide even runs
       .withColumn("__et", timestamp_micros(expr("ts div 1000")))
@@ -637,13 +648,7 @@ object StreamIngest {
                         warmup: Int)
       : Dataset[(String, Long, Double, Double, Double)] = {
     import samples.sparkSession.implicits._
-    samples
-      .withColumn("sname",
-        TsStore.snameOf(col("metric"), TsStore.tagStr(col("tags"))))
-      .select(col("sname").as[String], col("ts").as[Long],
-        col("value").as[Double])
-      .as[(String, Long, Double)]
-      .groupByKey(_._1)
+    bySeries(samples)
       .flatMapGroups { (key, rows) =>
         val out = Vector.newBuilder[(String, Long, Double, Double, Double)]
         ewFold(key, rows.map(r => (r._2, r._3)).toArray
@@ -656,6 +661,14 @@ object StreamIngest {
   private def rnd6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
+  /** Streaming exact dedup of a document feed: content-fingerprint
+    * `dropDuplicatesWithinWatermark` — a doc whose normalized text was
+    * already seen within the watermark horizon is dropped; state expires
+    * with the watermark, so memory is bounded by the horizon, not the
+    * stream. The streaming twin of [[graft.llm.Dedup.exact]]: an
+    * arriving-corpus pipeline dedups before paying storage, the batch
+    * pass dedups what is already stored. `eventTimeCol` must be a
+    * timestamp column. */
   def streamingDedupDocs(docs: DataFrame, eventTimeCol: String,
                          watermark: String,
                          textCol: String = "text"): DataFrame =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.ast.QueryJson
+import graft.functions.ChunkedScan
 import graft.plan.{Planner, TsStore}
 
 /** The chunked two-pass scan (ChunkedScan + EwmaKernel/CusumKernel/Sax
@@ -21,19 +22,21 @@ class ChunkedScanSpec extends SparkFunSuite {
           Row(m, Map("h" -> "X"), ts, v)
         }, 4), sampleSchema))
 
-  private def runQ(apply: String, st: TsStore, chunked: Boolean) = {
-    spark.conf.set("graft.scan.chunked", if (chunked) "on" else "off")
-    // pin 4 chunks so entry-state handoff genuinely crosses boundaries
-    // (AQE would coalesce a test-sized shuffle to one partition)
-    spark.conf.set("graft.scan.chunkedPartitions", "4")
-    try Planner.plan(QueryJson.parse(
-      s"""{"select":"m","range":{"from":0,"to":4000000000000000000},
-         |"apply":[$apply]}""".stripMargin), st).df
-      .orderBy(col("sname"), col("ts"))
-      .collect().toSeq
-      .map(r => (r.getString(0), r.getLong(1), r.get(2)))
-    finally spark.conf.set("graft.scan.chunked", "off")
-  }
+  /** Run `body` on the chunked or the single-pass path; 4 pinned chunks
+    * so entry-state handoff genuinely crosses boundaries (AQE would
+    * coalesce a test-sized shuffle to one partition). */
+  private def onPath[T](chunked: Boolean)(body: => T): T =
+    ChunkedScan.routed(ChunkedScan.Route(Some(chunked), chunks = 4))(body)
+
+  private def runQ(apply: String, st: TsStore, chunked: Boolean) =
+    onPath(chunked) {
+      Planner.plan(QueryJson.parse(
+        s"""{"select":"m","range":{"from":0,"to":4000000000000000000},
+           |"apply":[$apply]}""".stripMargin), st).df
+        .orderBy(col("sname"), col("ts"))
+        .collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1), r.get(2)))
+    }
 
   private def assertSame(a: Seq[(String, Long, Any)],
                          b: Seq[(String, Long, Any)]): Unit = {
@@ -65,7 +68,7 @@ class ChunkedScanSpec extends SparkFunSuite {
   test("a single series splits across >1 range partition (the handoff exists)") {
     val df = mixed.samples.filter(col("metric") === "m")
       .withColumn("sname", col("metric"))
-    // explicit numPartitions (what graft.scan.chunkedPartitions pins, and
+    // explicit numPartitions (what a Route's `chunks` pins, and
     // what AQE converges to once the data is big enough to matter)
     val parts = df.repartitionByRange(4, col("sname"), col("ts").asc)
       .rdd.mapPartitionsWithIndex((i, it) =>
@@ -137,19 +140,13 @@ class ChunkedScanSpec extends SparkFunSuite {
   }
 
   test("backward scan: chunked == sequential") {
-    spark.conf.set("graft.scan.chunked", "on")
-    spark.conf.set("graft.scan.chunkedPartitions", "4")
-    val chunkedOut = try Planner.plan(QueryJson.parse(
-      """{"select":"m","range":{"from":4000000000000000000,"to":0},
-        |"apply":[{"name":"ewma","decay":0.2}]}""".stripMargin), mixed).df
-      .orderBy(col("sname"), col("ts")).collect().toSeq
-      .map(r => (r.getString(0), r.getLong(1), r.get(2)))
-    finally spark.conf.set("graft.scan.chunked", "off")
-    val serialOut = Planner.plan(QueryJson.parse(
-      """{"select":"m","range":{"from":4000000000000000000,"to":0},
-        |"apply":[{"name":"ewma","decay":0.2}]}""".stripMargin), mixed).df
-      .orderBy(col("sname"), col("ts")).collect().toSeq
-      .map(r => (r.getString(0), r.getLong(1), r.get(2)))
-    assertSame(chunkedOut, serialOut)
+    def run(chunked: Boolean) = onPath(chunked) {
+      Planner.plan(QueryJson.parse(
+        """{"select":"m","range":{"from":4000000000000000000,"to":0},
+          |"apply":[{"name":"ewma","decay":0.2}]}""".stripMargin), mixed).df
+        .orderBy(col("sname"), col("ts")).collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1), r.get(2)))
+    }
+    assertSame(run(chunked = true), run(chunked = false))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.ChunkedScan
 import graft.plan.EventOps
 import graft.llm.Sample
 
@@ -19,12 +20,8 @@ class EventOpsSpec extends SparkFunSuite {
   /** Run the body under the window path AND the chunked hot-key path
     * (4 pinned range partitions so entry handoff crosses boundaries). */
   private def bothPaths(body: => Unit): Unit = {
-    for (chunked <- Seq(false, true)) {
-      spark.conf.set("graft.scan.chunked", if (chunked) "on" else "off")
-      spark.conf.set("graft.scan.chunkedPartitions", "4")
-      try body
-      finally spark.conf.set("graft.scan.chunked", "off")
-    }
+    for (chunked <- Seq(false, true))
+      ChunkedScan.routed(ChunkedScan.Route(Some(chunked), chunks = 4))(body)
   }
 
   /** Naive as-of: most recent right ts <= left ts per key; value = max of

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ast.QueryJson
+import graft.functions.ChunkedScan
 import graft.plan.Planner
 
 /** Apply-pipeline node semantics (reference: the query_processing nodes;
@@ -69,6 +70,59 @@ class PipeSpec extends SparkFunSuite {
       f
     }
     assert(got == want)
+  }
+
+  test("ewma/ewma-error rows equal the reference recurrence bit for bit") {
+    // hand-written reference (sliding_window.cpp:15-110, warmup 10): the
+    // forecast before the add; a missing cell passes through untouched
+    def reference(xs: Seq[Option[Double]], decay: Double,
+                  delta: Boolean): Seq[Option[Double]] = {
+      var warmup = 0; var value = 0.0
+      xs.map(_.map { x =>
+        val f = if (warmup <= 10) x else value
+        if (warmup < 10) { value += x; warmup += 1 }
+        else if (warmup == 10) {
+          warmup += 1; value += x; value /= 11.0
+          value = x * decay + value * (1.0 - decay)
+        } else value = x * decay + value * (1.0 - decay)
+        if (delta) x - f else f
+      })
+    }
+    // 30 samples with missing cells (some inside the warmup) and a
+    // series of 7, shorter than the warmup
+    val data: Map[String, Seq[Option[Double]]] = Map(
+      "A" -> (0 until 30).map(i =>
+        if (i % 7 == 3) None else Some(math.sin(i * 0.37) * 50 + i % 7 / 3.0)),
+      "B" -> (0 until 7).map(i => if (i == 4) None else Some(i * 1.1 - 2.0)))
+    val st = new graft.plan.TsStore(spark.createDataFrame(
+      spark.sparkContext.parallelize(data.toSeq.flatMap { case (h, xs) =>
+        xs.zipWithIndex.map { case (x, i) =>
+          org.apache.spark.sql.Row("m", Map("h" -> h), 100L + i * 1000000000L,
+            x.map(Double.box).orNull)
+        }
+      }, 2), sampleSchema))
+    for (backward <- Seq(false, true); name <- Seq("ewma", "ewma-error")) {
+      val range = if (backward) """{"from":1000000000000000,"to":0}"""
+                  else """{"from":0,"to":1000000000000000}"""
+      val got = ChunkedScan.routed(ChunkedScan.Route(chunked = Some(false))) {
+        Planner.plan(QueryJson.parse(s"""{"select":"m","range":$range,
+            |"apply":[{"name":"$name","decay":0.3}]}""".stripMargin), st)
+          .df.collect().toSeq
+      }.groupBy(_.getString(0)).map { case (sn, rows) =>
+        sn -> rows.sortBy(_.getLong(1)).map(r =>
+          if (r.isNullAt(2)) None else Some(r.getDouble(2)))
+      }
+      data.foreach { case (h, xs) =>
+        val scan = if (backward) xs.reverse else xs
+        val want = reference(scan, 0.3, delta = name == "ewma-error")
+        val g = got(s"m h=$h")
+        // bit equality, not a tolerance: the engine runs this recurrence
+        def bits(v: Seq[Option[Double]]) =
+          v.map(_.map(java.lang.Double.doubleToLongBits))
+        assert(bits(if (backward) g.reverse else g) == bits(want),
+          s"$name backward=$backward series $h")
+      }
+    }
   }
 
   test("math folds: sum/diff/multiply/divide over join tuples") {

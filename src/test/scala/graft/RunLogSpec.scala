@@ -123,6 +123,35 @@ class RunLogSpec extends SparkFunSuite {
       .toSeq == Seq("m0"))
   }
 
+  test("a liveStore with unfolded runs keeps the single-pass scan routing") {
+    val dir = Files.createTempDirectory("graft-runlog-size").toFile
+    def session(name: String, t0: Long): String = {
+      val d = new java.io.File(dir, name); d.mkdirs()
+      Files.write(new java.io.File(d, "s.resp").toPath,
+        (0 until 200).flatMap(i => Seq(s"+m0 host=h${i % 2}",
+          s":${t0 + i * 1000000000L}", s":$i")).mkString("\n").getBytes)
+      d.getAbsolutePath
+    }
+    val layout = new java.io.File(dir, "layout").getAbsolutePath
+    Ingest.ingestResp(spark, session("batch", 0L), layout, Seq("host"))
+    val runs = new java.io.File(dir, "runs").getAbsolutePath
+    RunLog.spoolResp(spark, session("live", Ingest.DayNs), runs, Seq("host"))
+    val base = Ingest.readLayout(spark, layout)
+    val live = RunLog.liveStore(spark, layout, runs)
+    // the runs leg is sized by its files, not spark.sql.defaultSizeInBytes
+    val est = live.samples.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(est < BigInt(1L << 20), s"live store estimated at $est B")
+    assert(!graft.functions.ChunkedScan.eligible(live.samples))
+    def ewmaJobs(st: graft.plan.TsStore): Int =
+      org.apache.spark.sql.graftio.ListenerBus.jobsOf(spark.sparkContext) {
+        graft.plan.Planner.plan(graft.ast.QueryJson.parse(
+          s"""{"select":"m0","range":{"from":0,"to":${3 * Ingest.DayNs}},
+             |"apply":[{"name":"ewma","decay":0.5}]}""".stripMargin), st)
+          .df.collect()
+      }
+    assert(ewmaJobs(live) == ewmaJobs(base))
+  }
+
   test("foldRuns: appends one snapshot, retires it, view stays exactly-once") {
     val dir = Files.createTempDirectory("graft-runlog-fold").toFile
     val day = Ingest.DayNs

@@ -182,29 +182,42 @@ class StreamingSpec extends SparkFunSuite {
     assert(spark.read.parquet(compacted).columns.contains("tag_host"))
   }
 
-  test("the streaming sink appends to an hourly layout in the layout's width") {
+  test("the streaming sink refuses a batch layout, keeps an empty one's width") {
     import java.nio.file.Files
     val dir = Files.createTempDirectory("graft-stream-hourly").toFile
     val in = new java.io.File(dir, "in"); in.mkdirs()
-    val layout = new java.io.File(dir, "layout").getAbsolutePath
+    val batch = new java.io.File(dir, "batch").getAbsolutePath
     val hour = 3600L * 1000000000L
-    graft.io.Ingest.writeLayout(spark.range(4).select(lit("cpu").as("metric"),
-        map(lit("host"), lit("h0")).as("tags"), (col("id") * hour).as("ts"),
-        col("id").cast("double").as("value"),
-        lit(null).cast("string").as("event")),
-      layout, flattenTags = Seq("host"), bucketNs = hour, saltBuckets = 1)
+    def rows(n: Int) = spark.range(n).select(lit("cpu").as("metric"),
+      map(lit("host"), lit("h0")).as("tags"), (col("id") * hour).as("ts"),
+      col("id").cast("double").as("value"),
+      lit(null).cast("string").as("event"))
+    graft.io.Ingest.writeLayout(rows(4), batch, flattenTags = Seq("host"),
+      bucketNs = hour, saltBuckets = 1)
     Files.write(new java.io.File(in, "s.resp").toPath,
       (0 until 10).flatMap(i => Seq("+cpu host=h1",
         s":${5 * hour + i * 1000000000L}", s":${100 + i}"))
         .mkString("\n").getBytes)
-    def stream(tags: Seq[String]) = StreamIngest.writeLayoutStream(
-      StreamIngest.respFileStream(spark, in.getAbsolutePath), layout,
-      new java.io.File(dir, "ckpt").getAbsolutePath, tags)
+    def stream(layout: String, tags: Seq[String]) =
+      StreamIngest.writeLayoutStream(
+        StreamIngest.respFileStream(spark, in.getAbsolutePath), layout,
+        new java.io.File(dir, "ckpt").getAbsolutePath, tags)
     // other tag keys than the layout's files carry: refused up front
-    val e = intercept[IllegalArgumentException](stream(Seq("dc")))
+    val e = intercept[IllegalArgumentException](stream(batch, Seq("dc")))
     assert(e.getMessage.contains("[host]") && e.getMessage.contains("[dc]"),
       e.getMessage)
-    val q = stream(Seq("host")).start()
+    // the sink's log would become the layout's listing and hide the
+    // batch rows: refused before starting, naming the path
+    val e2 = intercept[IllegalArgumentException](stream(batch, Seq("host")))
+    assert(e2.getMessage.contains(s"layout $batch holds"), e2.getMessage)
+    assert(!new java.io.File(batch, "_spark_metadata").exists())
+    assert(graft.io.Ingest.readLayout(spark, batch).samples.count() == 4)
+    // an empty hourly layout holds only its width sidecar: the stream
+    // appends in that width
+    val layout = new java.io.File(dir, "layout").getAbsolutePath
+    graft.io.Ingest.writeLayout(rows(0), layout, flattenTags = Seq("host"),
+      bucketNs = hour, saltBuckets = 1)
+    val q = stream(layout, Seq("host")).start()
     try q.processAllAvailable() finally q.stop()
     assert(graft.io.Ingest.readBucketNs(spark, layout).contains(hour))
     // hour pruning finds the streamed rows: they landed in hour ids
@@ -214,9 +227,62 @@ class StreamingSpec extends SparkFunSuite {
       .collect().map(_.getDouble(2)).sorted.toSeq
     assert(got == (100 until 110).map(_.toDouble))
     assert(new java.io.File(layout, "metric=cpu/day=5").isDirectory)
-    // the batch rows' files are still in place (the sink only appends)
-    assert((0 until 4).forall(h => new java.io.File(layout,
-      s"metric=cpu/day=$h").list().exists(_.endsWith(".parquet"))))
+    // a restart of the same stream is not refused: its log lists its files
+    val q2 = stream(layout, Seq("host")).start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(graft.io.Ingest.readLayout(spark, layout).samples.count() == 10)
+  }
+
+  test("a fold into a stream sink's layout is refused before staging") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-stream-fold").toFile
+    val in = new java.io.File(dir, "in"); in.mkdirs()
+    Files.write(new java.io.File(in, "s.resp").toPath,
+      (0 until 5).flatMap(i => Seq("+cpu host=h1",
+        s":${i * 1000000000L}", s":$i")).mkString("\n").getBytes)
+    val layout = new java.io.File(dir, "layout").getAbsolutePath
+    val q = StreamIngest.writeLayoutStream(
+      StreamIngest.respFileStream(spark, in.getAbsolutePath), layout,
+      new java.io.File(dir, "ckpt").getAbsolutePath, Seq("host")).start()
+    try q.processAllAvailable() finally q.stop()
+    val runs = new java.io.File(dir, "runs").getAbsolutePath
+    graft.io.RunLog.spoolResp(spark, in.getAbsolutePath, runs, Seq("host"))
+    val pending = graft.io.RunLog.listRuns(spark, runs)
+    val e = intercept[IllegalArgumentException](
+      graft.io.RunLog.foldRuns(spark, runs, layout, Seq("host")))
+    assert(e.getMessage.contains(s"layout $layout is a stream sink"),
+      e.getMessage)
+    intercept[IllegalArgumentException](
+      graft.io.RunLog.recoverFolds(spark, runs, layout))
+    // nothing staged, nothing landed: runs servable, the sink's view whole
+    assert(graft.io.RunLog.listRuns(spark, runs) == pending && pending.nonEmpty)
+    assert(!new java.io.File(runs, ".folding").exists())
+    assert(graft.io.Ingest.readLayout(spark, layout).samples.count() == 5)
+  }
+
+  test("a stream on withStatePartitions' session leaves the caller's conf") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val child = StreamIngest.withStatePartitions(spark, srcRows = 10L)
+    assert(child.conf.get(key) == "1" && before != "1")
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-stream-parts").toFile
+    val in = new java.io.File(dir, "in"); in.mkdirs()
+    Files.write(new java.io.File(in, "s.resp").toPath,
+      (0 until 5).flatMap(i => Seq("+cpu host=h1",
+        s":${i * 1000000000L}", s":$i")).mkString("\n").getBytes)
+    val q = StreamIngest.streamingEwma(
+        StreamIngest.respFileStream(child, in.getAbsolutePath), decay = 0.5)
+      .writeStream.format("memory").queryName("state_parts_ewma")
+      .option("checkpointLocation",
+        new java.io.File(dir, "ckpt").getAbsolutePath)
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      assert(spark.conf.get(key) == before)
+      assert(child.table("state_parts_ewma").count() == 5)
+    } finally q.stop()
+    assert(spark.conf.get(key) == before)
   }
 
   test("the streaming sink writes the batch layout schema, read-identical") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.ChunkedScan
 import graft.llm.Dedup
 import graft.plan.TsAnalytics
 
@@ -277,9 +278,8 @@ class TsAnalyticsSpec extends SparkFunSuite {
       val (l, b, lastTs) = naive(rows.map(r => (r._2, r._3)))
       (1 to 4).map(i => (k, lastTs + i * 10L, l + i * b))
     }.toSet
-    for (parts <- Seq("0", "3")) { // AQE-sized vs forced 3-chunk split
-      sp.conf.set("graft.scan.chunkedPartitions", parts)
-      try {
+    for (parts <- Seq(0, 3)) { // AQE-sized vs forced 3-chunk split
+      ChunkedScan.routed(ChunkedScan.Route(chunks = parts)) {
         val got = TsAnalytics.holtForecast(df, Seq("k"), "ts", "v",
             alpha, beta, horizon = 4, stepNs = 10L)
           .collect()
@@ -289,7 +289,7 @@ class TsAnalyticsSpec extends SparkFunSuite {
           val w = want.find(x => x._1 == k && x._2 == t).get._3
           assert(math.abs(f - w) < 1e-9, s"($k, $t): $f vs $w [parts=$parts]")
         }
-      } finally sp.conf.unset("graft.scan.chunkedPartitions")
+      }
     }
     // flat forecast for the single-sample series
     val solo = TsAnalytics.holtForecast(df.filter(col("k") === "solo"),
@@ -330,9 +330,8 @@ class TsAnalyticsSpec extends SparkFunSuite {
         (1 to 6).map(h =>
           (k, lastTs + h * 10L, z(0) + h * z(1) + z(2 + ((h - 1) % m))))
     }.toSet
-    for (parts <- Seq("0", "4")) { // AQE-sized vs forced 4-chunk split
-      sp.conf.set("graft.scan.chunkedPartitions", parts)
-      try {
+    for (parts <- Seq(0, 4)) { // AQE-sized vs forced 4-chunk split
+      ChunkedScan.routed(ChunkedScan.Route(chunks = parts)) {
         val got = TsAnalytics.holtWintersForecast(df, Seq("k"), "ts", "v",
             a, b, g, period = m, horizon = 6, stepNs = 10L)
           .collect()
@@ -342,7 +341,7 @@ class TsAnalyticsSpec extends SparkFunSuite {
           val w = want.find(x => x._1 == k && x._2 == t).get._3
           assert(math.abs(f - w) < 1e-6, s"($k, $t): $f vs $w [parts=$parts]")
         }
-      } finally sp.conf.unset("graft.scan.chunkedPartitions")
+      }
     }
   }
 
