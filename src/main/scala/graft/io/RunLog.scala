@@ -2,6 +2,7 @@ package graft.io
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -200,32 +201,35 @@ object RunLog {
     * gap while a fold's Spark job runs. The fold itself snapshots
     * [[listRuns]] (top level only): staged files belong to their own
     * fold, never to a new one. */
-  def listServableRuns(spark: SparkSession, path: String): Seq[String] = {
+  def listServableRuns(spark: SparkSession, path: String): Seq[FileStatus] = {
     val base = new org.apache.hadoop.fs.Path(s"$path/.folding")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staged =
       if (!fs.exists(base)) Seq.empty
       else fs.listStatus(base).toSeq.filter(_.isDirectory)
-        .flatMap(d => fs.listStatus(d.getPath).toSeq)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".grun"))
-        .map(_.getPath.toString)
-    (listRuns(spark, path) ++ staged).sorted
+        .flatMap(d => runFilesIn(fs, d.getPath))
+    (listRuns(spark, path) ++ staged).sortBy(_.getPath.toString)
   }
 
   /** Snapshot of the published run files under `path`, sorted. The
     * snapshot is the unit of the fold protocol: [[foldRuns]] compacts
     * and retires exactly one snapshot, so runs published concurrently
     * are untouched and picked up by the next cycle. */
-  def listRuns(spark: SparkSession, path: String): Seq[String] = {
+  def listRuns(spark: SparkSession, path: String): Seq[FileStatus] = {
     val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a MISSING spool directory throws (a typo'd path must not read as
     // "zero runs" — compactRuns would overwrite a layout with nothing);
     // an existing-but-empty one is a legitimate drained spool
-    fs.listStatus(hp).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".grun"))
-      .map(_.getPath.toString).sorted
+    runFilesIn(hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp)
   }
+
+  /** The run files directly under `dir`, sorted by path; their statuses
+    * carry the lengths [[readRunFiles]] sizes its frame by. */
+  private def runFilesIn(fs: org.apache.hadoop.fs.FileSystem,
+                         dir: org.apache.hadoop.fs.Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".grun"))
+      .sortBy(_.getPath.toString)
 
   /** A run's header: the magic, then the tag keys it was spooled with. */
   private def readHeader(in: DataInputStream, p: String): Seq[String] = {
@@ -246,16 +250,13 @@ object RunLog {
   /** Decode an explicit run-file snapshot (see [[readRuns]]), one task
     * per file up to the cluster parallelism, with the first file's tag
     * keys: a file spooled with others fails, naming it. The frame's
-    * Catalyst size estimate is the files' bytes on disk. */
-  def readRunFiles(spark: SparkSession, runFiles: Seq[String]): DataFrame = {
+    * Catalyst size estimate is the files' bytes on disk, as listed. */
+  def readRunFiles(spark: SparkSession, runs: Seq[FileStatus]): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
+    val runFiles = runs.map(_.getPath.toString)
     val tagKeys = runFiles.headOption.fold(Seq.empty[String])(runTagKeys(spark, _))
-    val bytes = runFiles.iterator.map { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(hp).getLen
-    }.sum
+    val bytes = runs.iterator.map(_.getLen).sum
     val nTags = tagKeys.length
     val sconf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
@@ -391,7 +392,7 @@ object RunLog {
       // tag-key agreement: appended files with different tag_ columns
       // would read as all-NULL tags for every folded row (no mergeSchema
       // on the read side)
-      val keys = runTagKeys(spark, snapshot.head)
+      val keys = runTagKeys(spark, snapshot.head.getPath.toString)
       require(keys.sorted == flattenTags.sorted,
         s"runs under $runsPath spooled with tag keys [${keys.mkString(",")}]" +
         s", fold called with [${flattenTags.mkString(",")}]")
@@ -403,16 +404,15 @@ object RunLog {
       val staging =
         new org.apache.hadoop.fs.Path(s"$runsPath/.folding/$foldId")
       fs.mkdirs(staging)
-      snapshot.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
+      snapshot.map(_.getPath).foreach { p =>
         if (!fs.rename(p,
             new org.apache.hadoop.fs.Path(staging, p.getName)) &&
             fs.exists(p))
-          throw new java.io.IOException(s"failed to stage run file $f")
+          throw new java.io.IOException(s"failed to stage run file $p")
       }
       runFold(spark, staging, layoutPath)
     }
-    snapshot
+    snapshot.map(_.getPath.toString)
   }
 
   /** Resume every fold a crashed process left under `runs/.folding/`,
@@ -453,9 +453,7 @@ object RunLog {
     val marker = new Path(s"$layoutPath/_folds/$foldId")
     val manifest = new Path(s"$layoutPath/_folds/$foldId.inflight")
     val outDir = new Path(s"$layoutPath/.foldout/$foldId")
-    val staged = fs.listStatus(staging).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".grun"))
-      .map(_.getPath.toString).sorted
+    val staged = runFilesIn(fs, staging)
     if (!fs.exists(marker) && staged.nonEmpty) {
       // roll back a previous attempt's partial landing — exactly the
       // files its manifest promised, no layout-wide scan

@@ -61,17 +61,24 @@ object StreamIngest {
     * Returns a child of `s` (`newSession()`, sharing its SparkContext)
     * that carries `s`'s modifiable SQL settings plus the derived count:
     * build the stream from the child. `s` itself is never changed, so a
-    * query another thread plans on it meanwhile keeps its own count. */
+    * query another thread plans on it meanwhile keeps its own count.
+    * One child per (`s`, count) is kept for the process: a session whose
+    * streams ran holds a SparkContext bus listener, so a child per call
+    * would pile them up; the count, at most the parallelism, bounds them. */
   def withStatePartitions(s: SparkSession, srcRows: Long): SparkSession = {
+    val key = "spark.sql.shuffle.partitions"
     val p = math.max(1L, math.min(srcRows / 500000L + 1,
       s.sparkContext.defaultParallelism.toLong))
-    val child = s.newSession()
+    val child = synchronized(stateSessions.getOrElseUpdate((s, p), s.newSession()))
+    child.conf.set(key, p.toString)
     s.conf.getAll.foreach { case (k, v) =>
-      if (s.conf.isModifiable(k)) child.conf.set(k, v)
+      if (k != key && s.conf.isModifiable(k)) child.conf.set(k, v)
     }
-    child.conf.set("spark.sql.shuffle.partitions", p.toString)
     child
   }
+
+  private val stateSessions =
+    scala.collection.mutable.Map[(SparkSession, Long), SparkSession]()
 
   /** Parse a stream of OpenTSDB `put` lines (socket/file/Kafka source) into
     * sample rows. Stateless per line -> fully parallel. */
@@ -138,13 +145,13 @@ object StreamIngest {
     * keeps its bucket width (a fresh path gets `Ingest.DayNs`) and must
     * carry the `flattenTags` keys. The sink's `_spark_metadata` log is
     * the only listing readers of the path use, so a path holding data
-    * files the log does not list (a batch-written layout) is refused. */
+    * files and no log (a batch-written layout) is refused. */
   def writeLayoutStream(samples: DataFrame, path: String,
                         checkpoint: String,
                         flattenTags: Seq[String] = Nil): DataStreamWriter[Row] = {
     val spark = samples.sparkSession
     Ingest.requireTagKeys(spark, path, flattenTags, "stream called with")
-    requireSinkListsAll(spark, path)
+    requireNoBatchFiles(spark, path)
     val bucketNs = Ingest.readBucketNs(spark, path).getOrElse {
       Ingest.writeBucketNs(spark, path, Ingest.DayNs)
       Ingest.DayNs
@@ -159,22 +166,21 @@ object StreamIngest {
       .outputMode(OutputMode.Append)
   }
 
-  /** Fails, naming the file, when the layout at `path` holds a data file
-    * that its sink log does not list (every file, if it has no log). */
-  private def requireSinkListsAll(spark: SparkSession, path: String): Unit = {
+  /** Fails, naming a file, when the layout at `path` holds data files
+    * but no sink log: a batch-written layout, whose files the stream's
+    * log would hide. Files under an existing log that it does not list
+    * (a crashed batch's part files) are left alone, as Spark's readers
+    * leave them, so a sink restarts after a crash. */
+  private def requireNoBatchFiles(spark: SparkSession, path: String): Unit = {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, FileStreamSinkLog}
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val log = new Path(root, FileStreamSink.metadataDir)
-    val listed = if (!fs.exists(log)) Set.empty[Path] else
-      new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark, log.toString)
-        .allFiles().map(f => fs.makeQualified(new Path(new java.net.URI(f.path))))
-        .toSet
-    if (fs.exists(root)) Ingest.layoutDataFiles(fs, root)
-      .find(f => !listed(fs.makeQualified(f.getPath))).foreach { f =>
+    val log = new Path(root,
+      org.apache.spark.sql.execution.streaming.sinks.FileStreamSink.metadataDir)
+    if (fs.exists(root) && !fs.exists(log))
+      Ingest.layoutDataFiles(fs, root).nextOption().foreach { f =>
         throw new IllegalArgumentException(s"layout $path holds ${f.getPath}" +
-          ", which no stream sink log lists: a stream would hide it from reads")
+          " and no stream sink log: a stream would hide its files from reads")
       }
   }
 

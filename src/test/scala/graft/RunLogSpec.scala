@@ -182,7 +182,7 @@ class RunLogSpec extends SparkFunSuite {
     val all = (0 until 40).map(_.toDouble) ++ (100 until 125).map(_.toDouble)
     assert(liveValues() == all)
     // cycle 2 folds EXACTLY the b2 snapshot; view unchanged, spool empty
-    val b2Files = RunLog.listRuns(spark, runs)
+    val b2Files = RunLog.listRuns(spark, runs).map(_.getPath.toString)
     val retired2 = RunLog.foldRuns(spark, runs, layout, Seq("host"))
     assert(retired2 == b2Files && b2Files.nonEmpty)
     assert(RunLog.listRuns(spark, runs).isEmpty)
@@ -362,6 +362,6 @@ class RunLogSpec extends SparkFunSuite {
     }
     val msg = e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse("")
     assert(msg.contains("spooled with tag keys"), msg)
-    assert(files.exists(f => msg.contains(new java.io.File(f).getName)), msg)
+    assert(files.exists(f => msg.contains(f.getPath.getName)), msg)
   }
 }

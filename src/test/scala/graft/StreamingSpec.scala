@@ -231,6 +231,17 @@ class StreamingSpec extends SparkFunSuite {
     val q2 = stream(layout, Seq("host")).start()
     try q2.processAllAvailable() finally q2.stop()
     assert(graft.io.Ingest.readLayout(spark, layout).samples.count() == 10)
+    // a batch that crashed before its log commit leaves a part file the
+    // log does not list: the sink still restarts and reads skip the file
+    val dayDir = new java.io.File(layout, "metric=cpu/day=5")
+    val part = dayDir.listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath,
+      new java.io.File(dayDir, "part-99999-stray.c000.snappy.parquet").toPath)
+    val q3 = stream(layout, Seq("host")).start()
+    try q3.processAllAvailable() finally q3.stop()
+    assert(graft.io.Ingest.readLayout(spark, layout).samples
+      .collect().map(_.getAs[Double]("value")).sorted.toSeq ==
+      (100 until 110).map(_.toDouble))
   }
 
   test("a fold into a stream sink's layout is refused before staging") {
@@ -265,6 +276,8 @@ class StreamingSpec extends SparkFunSuite {
     val before = spark.conf.get(key)
     val child = StreamIngest.withStatePartitions(spark, srcRows = 10L)
     assert(child.conf.get(key) == "1" && before != "1")
+    // one child per (session, count): repeated streams reuse it
+    assert(StreamIngest.withStatePartitions(spark, srcRows = 20L) eq child)
     import java.nio.file.Files
     val dir = Files.createTempDirectory("graft-stream-parts").toFile
     val in = new java.io.File(dir, "in"); in.mkdirs()
