@@ -347,10 +347,13 @@ object Bench {
     s"$source@$host@${java.time.LocalDate.now}"
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+  /** The one local-mode session posture of every main (Bench,
+    * BenchSubset, Verify, ScaleCheck, PlanAudit), so the gates are
+    * verified, audited and timed under the same settings: `cpus` task
+    * slots and shuffle partitions, UTC. Callers layer their own settings
+    * on the builder before `getOrCreate`. */
+  def session(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -363,13 +366,17 @@ object Bench {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "65536")
       .config("spark.ui.enabled", "false")
-      // local-FS bench IO: v2 commit (no sequential final renames) and no
+      // local-FS IO: v2 commit (no sequential final renames) and no
       // client-side CRC shadow files — a cluster deployment gets both
       // from its real DFS/object-store committer instead
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.hadoop.fs.file.impl",
         "org.apache.hadoop.fs.RawLocalFileSystem")
-      .getOrCreate()
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = session(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val skipQueries = sys.env.get("SPARK_GRAFT_BENCH_ONLY").contains("ingest")

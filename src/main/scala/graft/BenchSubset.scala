@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Focused re-timer for a subset of gates: the full [[Bench]] runs all
@@ -41,18 +40,7 @@ object BenchSubset {
     require(!reseed || reps >= 3, "--reseed needs >= 3 reps to converge")
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown gate(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        "2")
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // same engine warmup as Bench: codegen/shuffle init must not land on

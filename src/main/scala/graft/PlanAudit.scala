@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the executed plan of named gates (all gates if none
   * named) with exchange/broadcast counts — the `.explain` audit loop the
   * build process runs after each operator lands. Usage:
@@ -56,10 +54,7 @@ object PlanAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Bench.session("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { q =>
       println(s"===== $q =====")

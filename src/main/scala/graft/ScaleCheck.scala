@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ast.QueryJson
@@ -32,12 +32,8 @@ object ScaleCheck {
     val factor = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val only   = args.drop(2).toSet
     val known  = scala.collection.mutable.LinkedHashSet[String]()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val builder0 = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .appName("graft-scalecheck")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
     // Above factor 100 the explode-based replica construction (below)
     // carries the BASE frame's size estimate — 1000x too small — so
     // static planning would broadcast multi-GB join sides (observed: a
@@ -53,19 +49,7 @@ object ScaleCheck {
           .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
             "10485760")
       else builder0
-    val spark = builder
-      // typed-imperative aggregates (udaf Aggregators: LastTwoAgg,
-      // SpaceSaver) run in ObjectHashAggregateExec, which falls back to
-      // SORT-based aggregation after 128 distinct keys by default —
-      // re-introducing exactly the sort the last-two-samples plan
-      // removed. Buffers here are tiny (tens of bytes), so a 64k-key
-      // hash map is ~MBs per task: keep the hash regime.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      .getOrCreate()
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- scaled inputs -------------------------------------------------

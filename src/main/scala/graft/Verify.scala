@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,20 +13,7 @@ object Verify {
     val only = args.drop(2).toSet
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown gate name(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed-imperative aggregates (udaf Aggregators: LastTwoAgg,
-      // SpaceSaver) run in ObjectHashAggregateExec, which falls back to
-      // SORT-based aggregation after 128 distinct keys by default —
-      // re-introducing exactly the sort the last-two-samples plan
-      // removed. Buffers here are tiny (tens of bytes), so a 64k-key
-      // hash map is ~MBs per task: keep the hash regime.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .config("spark.ui.enabled", "false")
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

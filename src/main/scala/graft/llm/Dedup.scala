@@ -280,7 +280,7 @@ object Dedup {
     // + shingle + hash pipeline re-executed per consumer (4 corpus
     // tokenize passes; the r13 A/B that kept recompute-per-consumer
     // only priced storing the EXPLODED per-shingle rows — one row per
-    // doc through the block store is the minhashBandCandidates trade,
+    // doc through the block store is the minhashSets trade,
     // already measured cheap there).
     val sh = docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism * 2)
@@ -688,79 +688,152 @@ object Dedup {
     val (sh, candidates) = minhashBandCandidates(docs, n, bands,
       rowsPerBand, textCol, idCol, maxBucket, maxDocChars)
     // shingle arrays join back only for the (few) candidate pairs
-    val sets = sh.select(col("id"), col("sh"), size(col("sh")).as("nsh"))
-    candidates
-      .join(sets.select(col("id").as("a"), col("sh").as("sha"),
-        col("nsh").as("na")), "a")
-      .join(sets.select(col("id").as("b"), col("sh").as("shb"),
-        col("nsh").as("nb")), "b")
-      .withColumn("inter",
-        size(array_intersect(col("sha"), col("shb"))).cast("double"))
-      .withColumn("jaccard",
-        round(col("inter") / (col("na") + col("nb") - col("inter")), 6))
+    jaccardPairs(candidates, "a", "b", sh, sh)
       .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
   }
 
-  /** The banding front half of [[minhashLsh]]: the per-doc hashed
-    * shingle+signature frame `sh` (id, sh, sig; lineage-cut) and the
-    * DEDUPLICATED candidate pair list from the banded self-join, BEFORE
-    * exact verification. Factored out (r14) so consumers that do not
-    * score pairs — [[lshTuningReport]]'s threshold-0 candidate set,
-    * whose verification filter could never drop a row — skip the two
-    * shingle-set joins and the per-pair intersection entirely. */
+  /** The banding front half of [[minhashLsh]]: the per-doc signed
+    * shingle frame `sh` ([[minhashSets]]) and the DEDUPLICATED
+    * candidate pair list from the bucket self-join ([[bucketPairs]]),
+    * BEFORE exact verification — so [[lshTuningReport]]'s candidate
+    * set, which no verification filter could ever shrink, skips the
+    * scored-pair join entirely. */
   private[llm] def minhashBandCandidates(docs: DataFrame, n: Int,
       bands: Int, rowsPerBand: Int, textCol: String, idCol: String,
       maxBucket: Int, maxDocChars: Int): (DataFrame, DataFrame) = {
-    val numHashes = bands * rowsPerBand
-    // string-hash each shingle exactly once; everything downstream
-    // (signature, bands, verification intersection) works on the 64-bit
-    // hashes — identical results barring ~2^-64 collisions
-    val sh = docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism * 2)
-      .select(col(idCol).as("id"),
-        hashedShingles(capText(col(textCol), maxDocChars), n).as("sh"))
+    val sh = minhashSets(docs, n, bands * rowsPerBand, textCol, idCol,
+      maxDocChars)
+    // banded rows carry ONLY (id, band, bandhash) — exploding the shingle
+    // arrays across all bands would multiply shuffle volume by `bands`
+    (sh, bucketPairs(minhashBands(sh, bands, rowsPerBand), maxBucket)
+      .dropDuplicates("a", "b"))
+  }
+
+  // --- the banded near-dup engine ------------------------------------------
+  //
+  // Every LSH near-dup product — text MinHash (clique, star, stored
+  // index, stream), embedding hyperplane tables and SimHash/perceptual
+  // Hamming bands — is one algorithm: items become (id, band, bandhash)
+  // rows ([[bandRows]]), rows sharing a bucket become candidate pairs (a
+  // clique [[bucketPairs]], a star [[starEdges]] or a probe of a stored
+  // band table), and each candidate is verified with an exact score
+  // ([[scoredPairs]]). The stages below are written once and shared.
+
+  /** `(id, sh)` hashed word-`n`-gram shingle sets of the docs with at
+    * least one shingle: the one shingle step of every text LSH path. */
+  private[graft] def shingleSets(docs: DataFrame, id: Column, text: Column,
+                                 n: Int): DataFrame =
+    docs.select(id.as("id"), hashedShingles(text, n).as("sh"))
       .filter(size(col("sh")) > 0)
-      .select(col("id"), col("sh"),
-        minhashFromHashes(col("sh"), numHashes).as("sig"))
-      // LAZY lineage cut: `sh` feeds the band explode AND both
+
+  /** `sets` plus its `numHashes` MinHash signature `sig`. */
+  private[graft] def withSig(sets: DataFrame, numHashes: Int): DataFrame =
+    sets.withColumn("sig", minhashFromHashes(col("sh"), numHashes))
+
+  /** The corpus-side signed shingle frame `(id, sh, sig)` of
+    * [[minhashLsh]] and [[minhashLshStar]]. String-hash each shingle
+    * exactly once; everything downstream (signature, bands, verification
+    * intersection) works on the 64-bit hashes — identical results barring
+    * ~2^-64 collisions. */
+  private def minhashSets(docs: DataFrame, n: Int, numHashes: Int,
+                          textCol: String, idCol: String,
+                          maxDocChars: Int): DataFrame =
+    withSig(shingleSets(
+      docs.repartition(docs.sparkSession.sparkContext.defaultParallelism * 2),
+      col(idCol), capText(col(textCol), maxDocChars), n), numHashes)
+      // LAZY lineage cut: the frame feeds the band explode AND both
       // verification sides, so without the cut the 128-permutation
       // signature pass is re-analyzed AND re-executed per consumer
       // (A/B at the factor-10 corpus: 14.7 s vs 18.1 s for
       // doc_minhash_lsh, 17.6 s vs 24.2 s for the star pipeline).
       // One row per DOC rides the block store — cheap next to two
-      // extra minhash passes. eager=false: no job at dataframe-
-      // construction time (the plan audit builds every gate without
-      // running a corpus pass).
+      // extra minhash passes. eager=false: no materializing job at
+      // dataframe-construction time (under AQE the repartition's
+      // shuffle stage still runs when the frame is built).
       .localCheckpoint(false)
-    val bandArr = array((0 until bands).map(b =>
-      xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))): _*)
-    // banded rows carry ONLY (id, band, bandhash) — exploding the shingle
-    // arrays across all bands would multiply shuffle volume by `bands`
-    val banded = sh.select(col("id"), posexplode(bandArr))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bandhash")
-    // heavy-bucket valve: drop over-cap buckets before the quadratic
-    // self-join; the over-cap key set is boilerplate-scale — broadcast.
-    // Int.MaxValue is a true disable sentinel: no bucket could ever
-    // exceed it, so skip the bucket-count aggregation + anti-join and
-    // keep the original two-exchange plan
+
+  /** The one band step: `(id, carry…, band, bandhash)`, one row per
+    * element of the `keys` array (`band` = its position). */
+  private[llm] def bandRows(items: DataFrame, keys: Column,
+                            carry: String*): DataFrame =
+    items.select((col("id") +: carry.map(col)) :+
+      posexplode(keys).as(Seq("band", "bandhash")): _*)
+
+  /** The one MinHash band hash: band b hashes signature slots
+    * [b·rowsPerBand, (b+1)·rowsPerBand). */
+  private def bandHashArr(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map(b =>
+      xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand))): _*)
+
+  /** MinHash band rows `(id, band, bandhash)` of a [[withSig]] frame. */
+  private[graft] def minhashBands(signed: DataFrame, bands: Int,
+                                  rowsPerBand: Int): DataFrame =
+    bandRows(signed, bandHashArr(col("sig"), bands, rowsPerBand))
+
+  /** The (band, bandhash) buckets of `banded` holding more than `cap`
+    * rows, with their `n_members`. */
+  private def overCap(banded: DataFrame, cap: Int): DataFrame =
+    banded.groupBy(col("band"), col("bandhash"))
+      .agg(count(lit(1)).as("n_members"))
+      .filter(col("n_members") > cap)
+
+  /** The clique candidate stage: every `(a, b)`, a < b, of rows sharing
+    * a (band, bandhash) bucket — one row per shared bucket, so callers
+    * deduplicate. `maxBucket` is the heavy-bucket valve: over-cap
+    * buckets drop before the quadratic self-join (the over-cap key set
+    * is boilerplate-scale — broadcast anti-join). Int.MaxValue is a true
+    * disable sentinel: no bucket could ever exceed it, so the bucket
+    * count and anti-join are skipped and the two-exchange plan stays. */
+  private[llm] def bucketPairs(banded: DataFrame, maxBucket: Int): DataFrame = {
     val kept =
       if (maxBucket == Int.MaxValue) banded
-      else {
-        val heavy = banded.groupBy(col("band"), col("bandhash")).count()
-          .filter(col("count") > maxBucket)
-          .select(col("band"), col("bandhash"))
-        banded.join(broadcast(heavy), Seq("band", "bandhash"), "left_anti")
-      }
-    val candidates = kept.alias("l")
+      else banded.join(broadcast(overCap(banded, maxBucket)
+        .select(col("band"), col("bandhash"))), Seq("band", "bandhash"),
+        "left_anti")
+    kept.alias("l")
       .join(kept.alias("r"),
         col("l.band") === col("r.band") &&
           col("l.bandhash") === col("r.bandhash") &&
           col("l.id") < col("r.id"))
       .select(col("l.id").as("a"), col("r.id").as("b"))
-      .dropDuplicates("a", "b")
-    (sh, candidates)
+  }
+
+  /** The verification join of every banded path: each candidate edge
+    * takes `left`'s payload on its `a` column and `right`'s on its `b`
+    * column — `(id, payload…)` frames whose payload columns arrive
+    * suffixed `_a` / `_b` — and `scores` (name → expression, applied in
+    * order; the last one is the score) derive the score. Output:
+    * (a, b, score), UN-thresholded. */
+  private[llm] def scoredPairs(edges: DataFrame, a: String, b: String,
+                               left: DataFrame, right: DataFrame,
+                               scores: (String, Column)*): DataFrame = {
+    def side(p: DataFrame, id: String, sfx: String) =
+      p.select(col("id").as(id) +: p.columns.filter(_ != "id")
+        .map(c => col(c).as(c + sfx)): _*)
+    scores.foldLeft(edges.join(side(left, a, "_a"), a)
+        .join(side(right, b, "_b"), b)) {
+      case (df, (name, e)) => df.withColumn(name, e)
+    }.select(col(a), col(b), col(scores.last._1))
+  }
+
+  /** [[scoredPairs]] with exact shingle Jaccard (rounded 6) over the
+    * `sh` sets of two `(id, sh, …)` frames. */
+  private def jaccardPairs(edges: DataFrame, a: String, b: String,
+                           left: DataFrame, right: DataFrame): DataFrame = {
+    def sets(p: DataFrame) =
+      p.select(col("id"), col("sh"), size(col("sh")).as("nsh"))
+    scoredPairs(edges, a, b, sets(left), sets(right),
+      "inter" -> size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"),
+      "jaccard" -> round(col("inter") /
+        (col("nsh_a") + col("nsh_b") - col("inter")), 6))
+  }
+
+  /** `(n, bands, rowsPerBand)` of a [[writeLshIndex]] layout. */
+  private def lshMeta(spark: org.apache.spark.sql.SparkSession,
+                      path: String): (Int, Int, Int) = {
+    val Array(n, bands, rowsPerBand) = Embed.readTextFile(spark,
+      lshMetaFile(path)).split(",").map(_.toInt)
+    (n, bands, rowsPerBand)
   }
 
   /** Runtime observability for the `maxBucket` valve: the (band,
@@ -783,18 +856,9 @@ object Dedup {
                         idCol: String = "doc_id",
                         maxBucket: Int = 1000,
                         maxDocChars: Int = Int.MaxValue): DataFrame =
-    docs
-      .select(col(idCol).as("id"),
-        hashedShingles(capText(col(textCol), maxDocChars), n).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("id"), posexplode(bandHashArr(
-        minhashFromHashes(col("sh"), bands * rowsPerBand),
-        bands, rowsPerBand)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bandhash")
-      .groupBy(col("band"), col("bandhash"))
-      .agg(count(lit(1)).as("n_members"))
-      .filter(col("n_members") > maxBucket)
+    overCap(minhashBands(withSig(shingleSets(docs, col(idCol),
+      capText(col(textCol), maxDocChars), n), bands * rowsPerBand),
+      bands, rowsPerBand), maxBucket)
 
   /** MinHash-LSH near-dup edges in STAR form — the connected-components
     * feeder for densely-duplicated corpora. [[minhashLsh]] emits every
@@ -854,7 +918,6 @@ object Dedup {
     starEdgesScored(docs, n, bands, rowsPerBand, textCol, idCol, hubSalt,
       maxDocChars)
       .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
 
   /** Under-merge diagnostic for [[minhashLshStar]]: the hub edges that
     * failed exact verification (jaccard < `threshold`), i.e. bucket
@@ -874,7 +937,6 @@ object Dedup {
     starEdgesScored(docs, n, bands, rowsPerBand, textCol, idCol, hubSalt,
       maxDocChars)
       .filter(col("jaccard") < threshold)
-      .select(col("a"), col("b"), col("jaccard"))
 
   /** Star edges over a bucketed frame — the shared Θ(d)-per-bucket
     * candidate stage behind [[minhashLshStar]] (text bands) and
@@ -921,42 +983,15 @@ object Dedup {
                               rowsPerBand: Int, textCol: String,
                               idCol: String, hubSalt: Int,
                               maxDocChars: Int = Int.MaxValue): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    // same lazy lineage cut as minhashLsh's `sh`: the band explode and
-    // both verification sides otherwise re-analyze AND re-execute the
-    // shingle+minhash pass per consumer
-    val sh = docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism * 2)
-      .select(col(idCol).as("id"),
-        hashedShingles(capText(col(textCol), maxDocChars), n).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("id"), col("sh"),
-        minhashFromHashes(col("sh"), numHashes).as("sig"))
-      .localCheckpoint(false)
-    val banded = sh.select(col("id"),
-        posexplode(bandHashArr(col("sig"), bands, rowsPerBand)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bandhash")
-    val edges = starEdges(banded, Seq("band", "bandhash"), hubSalt)
-    val sets = sh.select(col("id"), col("sh"), size(col("sh")).as("nsh"))
-    edges
-      .join(sets.select(col("id").as("a"), col("sh").as("sha"),
-        col("nsh").as("na")), "a")
-      .join(sets.select(col("id").as("b"), col("sh").as("shb"),
-        col("nsh").as("nb")), "b")
-      .withColumn("inter",
-        size(array_intersect(col("sha"), col("shb"))).cast("double"))
-      .withColumn("jaccard",
-        round(col("inter") / (col("na") + col("nb") - col("inter")), 6))
+    val sh = minhashSets(docs, n, bands * rowsPerBand, textCol, idCol,
+      maxDocChars)
+    jaccardPairs(starEdges(minhashBands(sh, bands, rowsPerBand),
+      Seq("band", "bandhash"), hubSalt), "a", "b", sh, sh)
   }
 
   // --- persisted LSH index + incremental near-dup --------------------------
 
   private def lshMetaFile(path: String) = s"$path/_lsh_meta.txt"
-
-  private def bandHashArr(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map(b =>
-      xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand))): _*)
 
   /** Persist the corpus's LSH state as a reusable on-disk index:
     * `path/sets` = (id, sh, nsh) hashed shingle sets, `path/bands` =
@@ -972,17 +1007,11 @@ object Dedup {
                     textCol: String = "text",
                     idCol: String = "doc_id"): Unit = {
     val spark = docs.sparkSession
-    docs
-      .select(col(idCol).as("id"), hashedShingles(col(textCol), n).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("id"), col("sh"), size(col("sh")).as("nsh"))
+    shingleSets(docs, col(idCol), col(textCol), n)
+      .withColumn("nsh", size(col("sh")))
       .write.mode("overwrite").parquet(s"$path/sets")
-    spark.read.parquet(s"$path/sets")
-      .select(col("id"),
-        minhashFromHashes(col("sh"), bands * rowsPerBand).as("sig"))
-      .select(col("id"), posexplode(bandHashArr(col("sig"), bands, rowsPerBand)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bandhash")
+    minhashBands(withSig(spark.read.parquet(s"$path/sets"),
+      bands * rowsPerBand), bands, rowsPerBand)
       .write.mode("overwrite").parquet(s"$path/bands")
     Embed.writeTextFile(spark, lshMetaFile(path), s"$n,$bands,$rowsPerBand")
   }
@@ -1003,18 +1032,11 @@ object Dedup {
                      idCol: String = "doc_id",
                      batchId: Option[String] = None): Unit = {
     val spark = newDocs.sparkSession
-    val Array(n, bands, rowsPerBand) =
-      Embed.readTextFile(spark, lshMetaFile(path)).split(",").map(_.toInt)
-    val sets = newDocs
-      .select(col(idCol).as("id"), hashedShingles(col(textCol), n).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("id"), col("sh"), size(col("sh")).as("nsh"))
-    val banded = sets
-      .select(col("id"),
-        minhashFromHashes(col("sh"), bands * rowsPerBand).as("sig"))
-      .select(col("id"), posexplode(bandHashArr(col("sig"), bands, rowsPerBand)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bandhash")
+    val (n, bands, rowsPerBand) = lshMeta(spark, path)
+    val sets = shingleSets(newDocs, col(idCol), col(textCol), n)
+      .withColumn("nsh", size(col("sh")))
+    val banded = minhashBands(withSig(sets, bands * rowsPerBand), bands,
+      rowsPerBand)
     batchId match {
       case None =>
         sets.write.mode("append").parquet(s"$path/sets")
@@ -1056,23 +1078,16 @@ object Dedup {
                               textCol: String = "text",
                               idCol: String = "doc_id"): DataFrame = {
     val spark = newDocs.sparkSession
-    val Array(n, bands, rowsPerBand) =
-      Embed.readTextFile(spark, lshMetaFile(path)).split(",").map(_.toInt)
+    val (n, bands, rowsPerBand) = lshMeta(spark, path)
     // LAZY lineage cut (r15): `newSh` feeds the band table and the
     // verification sets — uncut, the batch tokenize + shingle + minhash
     // pass ran once per consumer.
-    val newSh = newDocs
-      .repartition(spark.sparkContext.defaultParallelism * 2)
-      .select(col(idCol).as("id"), hashedShingles(col(textCol), n).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val newSh = shingleSets(
+      newDocs.repartition(spark.sparkContext.defaultParallelism * 2),
+      col(idCol), col(textCol), n)
       .localCheckpoint(false)
-    val newBanded = newSh
-      .select(col("id"),
-        minhashFromHashes(col("sh"), bands * rowsPerBand).as("sig"))
-      .select(col("id"),
-        posexplode(bandHashArr(col("sig"), bands, rowsPerBand)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bandhash")
+    val newBanded = minhashBands(withSig(newSh, bands * rowsPerBand), bands,
+      rowsPerBand)
     // one hub per stored bucket: a bucket-count-sized aggregate of the
     // persisted band table — history is never re-shingled
     val hubs = spark.read.parquet(s"$path/bands")
@@ -1082,20 +1097,9 @@ object Dedup {
       .filter(col("id") =!= col("hub"))
       .select(col("id"), col("hub"))
       .dropDuplicates("id", "hub")
-    val newSets = newSh.select(col("id"), col("sh"),
-      size(col("sh")).as("nsh"))
-    val hubSets = spark.read.parquet(s"$path/sets")
-    edges
-      .join(newSets.select(col("id"), col("sh").as("sha"),
-        col("nsh").as("na")), "id")
-      .join(hubSets.select(col("id").as("hub"), col("sh").as("shb"),
-        col("nsh").as("nb")), "hub")
-      .withColumn("inter",
-        size(array_intersect(col("sha"), col("shb"))).cast("double"))
-      .withColumn("jaccard",
-        round(col("inter") / (col("na") + col("nb") - col("inter")), 6))
+    jaccardPairs(edges, "id", "hub", newSh,
+      spark.read.parquet(s"$path/sets"))
       .filter(col("jaccard") >= threshold)
-      .select(col("id"), col("hub"), col("jaccard"))
   }
 
   /** Incremental near-dup: pairs of a NEW batch against a
@@ -1112,25 +1116,17 @@ object Dedup {
                           textCol: String = "text",
                           idCol: String = "doc_id"): DataFrame = {
     val spark = newDocs.sparkSession
-    val Array(n, bands, rowsPerBand) =
-      Embed.readTextFile(spark, lshMetaFile(path)).split(",").map(_.toInt)
-    // LAZY lineage cut (r15, the minhashBandCandidates trade): `newSh`
-    // feeds the band table (consumed by BOTH candidate joins) and the
-    // verification sets (joined on both pair sides), so uncut the batch
-    // tokenize + shingle + 128-permutation minhash re-executed up to 5x.
-    val newSh = newDocs
-      .repartition(spark.sparkContext.defaultParallelism * 2)
-      .select(col(idCol).as("id"), hashedShingles(col(textCol), n).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val (n, bands, rowsPerBand) = lshMeta(spark, path)
+    // LAZY lineage cut (r15, the minhashSets trade): `newSh` feeds the
+    // band table (consumed by BOTH candidate joins) and the verification
+    // sets (joined on both pair sides), so uncut the batch tokenize +
+    // shingle + 128-permutation minhash re-executed up to 5x.
+    val newSh = shingleSets(
+      newDocs.repartition(spark.sparkContext.defaultParallelism * 2),
+      col(idCol), col(textCol), n)
       .localCheckpoint(false)
-    val newSets = newSh
-      .select(col("id"), col("sh"), size(col("sh")).as("nsh"))
-    val newBanded = newSh
-      .select(col("id"),
-        minhashFromHashes(col("sh"), bands * rowsPerBand).as("sig"))
-      .select(col("id"), posexplode(bandHashArr(col("sig"), bands, rowsPerBand)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bandhash")
+    val newBanded = minhashBands(withSig(newSh, bands * rowsPerBand), bands,
+      rowsPerBand)
       .localCheckpoint(false)
     val storedBanded = spark.read.parquet(s"$path/bands")
     // corpus-vs-new (either id order — normalize to a < b) …
@@ -1142,25 +1138,12 @@ object Dedup {
       .select(least(col("l.id"), col("r.id")).as("a"),
         greatest(col("l.id"), col("r.id")).as("b"))
     // … plus new-vs-new within the batch
-    val nn = newBanded.alias("l")
-      .join(newBanded.alias("r"),
-        col("l.band") === col("r.band") &&
-          col("l.bandhash") === col("r.bandhash") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("a"), col("r.id").as("b"))
-    val candidates = cx.unionByName(nn).dropDuplicates("a", "b")
-    val allSets = spark.read.parquet(s"$path/sets").unionByName(newSets)
-    candidates
-      .join(allSets.select(col("id").as("a"), col("sh").as("sha"),
-        col("nsh").as("na")), "a")
-      .join(allSets.select(col("id").as("b"), col("sh").as("shb"),
-        col("nsh").as("nb")), "b")
-      .withColumn("inter",
-        size(array_intersect(col("sha"), col("shb"))).cast("double"))
-      .withColumn("jaccard",
-        round(col("inter") / (col("na") + col("nb") - col("inter")), 6))
+    val candidates = cx.unionByName(bucketPairs(newBanded, Int.MaxValue))
+      .dropDuplicates("a", "b")
+    val allSets = spark.read.parquet(s"$path/sets")
+      .select(col("id"), col("sh")).unionByName(newSh)
+    jaccardPairs(candidates, "a", "b", allSets, allSets)
       .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
   }
 
   /** LSH banding tuning report — "measure, don't guess" for the
@@ -1171,7 +1154,7 @@ object Dedup {
     * verifications the banding cost. More bands → recall up, candidate
     * (verification) volume up; this report is how you pick.
     *
-    * Driver state: four counts. Output (one row): `n_true`,
+    * Driver state: none — one aggregate row. Output (one row): `n_true`,
     * `n_candidates`, `n_hits`, `recall` (rounded 6; null when no true
     * pairs exist). `n_candidates` depends on the banding hash function
     * and is reported for tuning, not oracle-checked.
@@ -1195,25 +1178,24 @@ object Dedup {
     // here as lost recall (which is the honest reading: those pairs
     // really are dropped in production). Pass Int.MaxValue to measure
     // the uncapped banding itself.
-    val spark = docs.sparkSession
     val sampled =
       if (maxDocs <= 0) docs
       else docs.orderBy(md5(col(idCol).cast("string")), col(idCol))
         .limit(maxDocs) // TakeOrderedAndProject: top-k, no global sort
     val truth = ngramJaccard(sampled, n, threshold, textCol, idCol)
-      .select(col("a"), col("b")).localCheckpoint()
+      .select(col("a"), col("b"), lit(true).as("__t"))
     // the candidate set IS the pre-verification banding product, taken
-    // directly and UNSCORED (r14) — the old threshold-0 minhashLsh call
-    // paid two shingle-set joins + an exact intersection per candidate
-    // pair for a jaccard >= 0 filter that can never drop a row
+    // directly and UNSCORED — a jaccard >= 0 filter could never drop a
+    // row. Both pair lists are distinct, so one full-outer join on the
+    // pair and one aggregate count all three (one action, run lazily
+    // when the report is read).
     val cands = minhashBandCandidates(sampled, n, bands, rowsPerBand,
       textCol, idCol, maxBucket, Int.MaxValue)._2
-      .localCheckpoint()
-    val nTrue = truth.count()
-    val nCand = cands.count()
-    val nHits = cands.join(truth, Seq("a", "b"), "left_semi").count()
-    import spark.implicits._
-    Seq((nTrue, nCand, nHits)).toDF("n_true", "n_candidates", "n_hits")
+      .withColumn("__c", lit(true))
+    truth.join(cands, Seq("a", "b"), "full_outer")
+      .agg(count(col("__t")).as("n_true"),
+        count(col("__c")).as("n_candidates"),
+        count(when(col("__t") && col("__c"), lit(1))).as("n_hits"))
       .withColumn("recall", when(col("n_true") > 0,
         round(col("n_hits").cast("double") / col("n_true"), 6)))
   }
@@ -1485,11 +1467,13 @@ object Dedup {
       else shiftrightunsigned(col("h"), b * width)
         .bitwiseAND(lit((1L << width) - 1))
     }: _*)
-    val banded = sh.select(col("id"), col("h"), posexplode(bandKeys))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
+    // `h` rides the band rows into the bucket join: verification is one
+    // XOR per candidate, no payload join back
+    val banded = bandRows(sh, bandKeys, "h")
     val candidates = banded.alias("l")
       .join(banded.alias("r"),
-        col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
+        col("l.band") === col("r.band") &&
+          col("l.bandhash") === col("r.bandhash") &&
           col("l.id") < col("r.id"))
       .select(col("l.id").as("a"), col("r.id").as("b"),
         col("l.h").as("ha"), col("r.h").as("hb"))

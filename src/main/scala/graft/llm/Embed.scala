@@ -981,18 +981,7 @@ object Embed {
                     vecCol: String = "embedding", idCol: String = "vec_id",
                     maxCell: Long = 100000L,
                     hier: Option[CentroidIndex] = None): DataFrame = {
-    require(hier.forall(_.fine == centroids),
-      "hier index was built over a different centroid set")
-    // materialized once: the plan below consumes `assigned` three times
-    // (heavy-cell count + both join sides) — without the checkpoint the
-    // k-cosine assignment would re-score the whole corpus three times
-    val assigned = corpus
-      .filter(dot(col(vecCol), col(vecCol)) > 0.0)
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism * 2)
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("cell", hier.map(centroidIdHierRounded(col("v"), _))
-        .getOrElse(centroidIdRounded(col("v"), centroids)))
-      .localCheckpoint()
+    val assigned = assignCells(corpus, centroids, vecCol, idCol, hier)
     val heavy = assigned.groupBy(col("cell")).count()
       .filter(col("count") > maxCell).select(col("cell"))
     val kept = assigned.join(broadcast(heavy), Seq("cell"), "left_anti")
@@ -1003,6 +992,25 @@ object Embed {
       .filter(col("score") >= threshold)
       .select(col("l.id").as("a"), col("r.id").as("b"),
         col("l.cell").as("cell"), col("score"))
+  }
+
+  /** SemDeDup's cell assignment: `(id, v, cell)` for every non-zero
+    * vector, `cell` its nearest centroid on the 6-decimal-rounded cosine
+    * (through `hier` when given). Materialized once: both SemDeDup forms
+    * consume it more than once, and uncut the k-cosine assignment would
+    * re-score the whole corpus per consumer. */
+  private def assignCells(corpus: DataFrame, centroids: Seq[Seq[Double]],
+                          vecCol: String, idCol: String,
+                          hier: Option[CentroidIndex]): DataFrame = {
+    require(hier.forall(_.fine == centroids),
+      "hier index was built over a different centroid set")
+    corpus
+      .filter(dot(col(vecCol), col(vecCol)) > 0.0)
+      .repartition(corpus.sparkSession.sparkContext.defaultParallelism * 2)
+      .select(col(idCol).as("id"), col(vecCol).as("v"))
+      .withColumn("cell", hier.map(centroidIdHierRounded(col("v"), _))
+        .getOrElse(centroidIdRounded(col("v"), centroids)))
+      .localCheckpoint()
   }
 
   /** SemDeDup survivors: the corpus minus every non-minimal member of a
@@ -1040,15 +1048,7 @@ object Embed {
                         vecCol: String = "embedding",
                         idCol: String = "vec_id",
                         hier: Option[CentroidIndex] = None): DataFrame = {
-    require(hier.forall(_.fine == centroids),
-      "hier index was built over a different centroid set")
-    val assigned = corpus
-      .filter(dot(col(vecCol), col(vecCol)) > 0.0)
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism * 2)
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("cell", hier.map(centroidIdHierRounded(col("v"), _))
-        .getOrElse(centroidIdRounded(col("v"), centroids)))
-      .localCheckpoint()
+    val assigned = assignCells(corpus, centroids, vecCol, idCol, hier)
     // one hub row per cell (min id; ids are unique so the struct min
     // never compares vectors) — cell-count-sized, broadcast into the
     // member pass
@@ -1158,36 +1158,47 @@ object Embed {
     * the sparse-regime claim — |candidates| << n²/2 at high thresholds —
     * is directly measurable (LlmSpec asserts it); exact duplicates share
     * every bucket key, so their recall is deterministic, not
-    * probabilistic. Banded rows carry ONLY (id, table, key): dragging
-    * the vectors into the bucket self-join would multiply the shuffle by
-    * the candidate count times 2·dim doubles (measured 35x slower). */
+    * probabilistic. The text path's bucket self-join
+    * ([[Dedup.bucketPairs]]) over [[tableRows]]: banded rows carry ONLY
+    * (id, band = table, bandhash = key) — dragging the vectors into the
+    * bucket self-join would multiply the shuffle by the candidate count
+    * times 2·dim doubles (measured 35x slower). */
   def lshCandidatePairs(corpus: DataFrame,
                         nPlanes: Int = 10, tables: Int = 12,
                         vecCol: String = "embedding",
-                        idCol: String = "vec_id"): DataFrame = {
-    val dim = dimOf(corpus, vecCol)
-    // all table keys in ONE fused kernel (r14): the per-table
-    // hyperplaneKey Column chain baked tables x nPlanes x dim literal
-    // leaves into the plan PER JOIN SIDE (~350 KB physical plan at the
-    // sparse gate's 8x16x64) and re-evaluated every dot interpreted;
-    // HyperplaneKeys carries the plane matrix as one reference object
-    val keyArr = graft.functions.VecMath.hyperplaneKeys(col(vecCol),
-      (0 until tables).map(t => randomPlanes(nPlanes, dim, 42L + t)))
+                        idCol: String = "vec_id"): DataFrame =
     // NOTE (r14): a "first shared table" filter (banded rows carrying
     // the full key array, pairs emitted once at their first colliding
     // table, no dropDuplicates) was tried and REJECTED: the join output
     // then hauls two tables-long arrays per CANDIDATE row — ~25x the
     // bytes of the (a, b) dedup shuffle it saves — and both LSH gates
     // measured slower.
-    val banded = corpus
-      .select(col(idCol).as("id"), posexplode(keyArr))
-      .withColumnRenamed("pos", "table").withColumnRenamed("col", "key")
-    banded.alias("l")
-      .join(banded.alias("r"),
-        col("l.table") === col("r.table") && col("l.key") === col("r.key") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("a"), col("r.id").as("b"))
-      .dropDuplicates("a", "b")
+    Dedup.bucketPairs(tableRows(corpus, nPlanes, tables, vecCol, idCol),
+      Int.MaxValue).dropDuplicates("a", "b")
+
+  /** Hyperplane-table band rows `(id, band = table, bandhash = key)` —
+    * the embedding side's input to the shared banded near-dup stages
+    * ([[Dedup.bandRows]]). All table keys come from ONE fused kernel
+    * (r14): the per-table hyperplaneKey Column chain baked
+    * tables x nPlanes x dim literal leaves into the plan PER JOIN SIDE
+    * (~350 KB physical plan at the sparse gate's 8x16x64) and
+    * re-evaluated every dot interpreted; HyperplaneKeys carries the
+    * plane matrix as one reference object. */
+  private def tableRows(corpus: DataFrame, nPlanes: Int, tables: Int,
+                        vecCol: String, idCol: String): DataFrame = {
+    val dim = dimOf(corpus, vecCol)
+    Dedup.bandRows(corpus.select(col(idCol).as("id"), col(vecCol)),
+      graft.functions.VecMath.hyperplaneKeys(col(vecCol),
+        (0 until tables).map(t => randomPlanes(nPlanes, dim, 42L + t))))
+  }
+
+  /** [[Dedup.scoredPairs]] with the rounded cosine of the two ids'
+    * vectors as `score`. */
+  private def cosinePairs(edges: DataFrame, corpus: DataFrame,
+                          vecCol: String, idCol: String): DataFrame = {
+    val vecs = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
+    Dedup.scoredPairs(edges, "a", "b", vecs, vecs,
+      "score" -> round(cosine(col("v_a"), col("v_b")), 6))
   }
 
   /** Hard-negative mining for contrastive training: for each query
@@ -1800,14 +1811,9 @@ object Embed {
   def nearDupLsh(corpus: DataFrame, threshold: Double,
                  nPlanes: Int = 10, tables: Int = 12,
                  vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val candidates = lshCandidatePairs(corpus, nPlanes, tables, vecCol, idCol)
-    val vecs = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-    candidates
-      .join(vecs.select(col("id").as("a"), col("v").as("va")), "a")
-      .join(vecs.select(col("id").as("b"), col("v").as("vb")), "b")
-      .withColumn("score", round(cosine(col("va"), col("vb")), 6))
+    cosinePairs(lshCandidatePairs(corpus, nPlanes, tables, vecCol, idCol),
+      corpus, vecCol, idCol)
       .filter(col("score") >= threshold)
-      .select(col("a"), col("b"), col("score"))
   }
 
   /** Hyperplane-LSH near-dup edges in STAR form — the embedding-side
@@ -1839,21 +1845,9 @@ object Embed {
                      nPlanes: Int = 10, tables: Int = 12,
                      vecCol: String = "embedding",
                      idCol: String = "vec_id",
-                     hubSalt: Int = 0): DataFrame = {
-    val dim = dimOf(corpus, vecCol)
-    // one fused kernel for all table keys — see [[lshCandidatePairs]]
-    val keyArr = graft.functions.VecMath.hyperplaneKeys(col(vecCol),
-      (0 until tables).map(t => randomPlanes(nPlanes, dim, 42L + t)))
-    val banded = corpus
-      .select(col(idCol).as("id"), posexplode(keyArr))
-      .withColumnRenamed("pos", "table").withColumnRenamed("col", "key")
-    val edges = Dedup.starEdges(banded, Seq("table", "key"), hubSalt)
-    val vecs = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-    edges
-      .join(vecs.select(col("id").as("a"), col("v").as("va")), "a")
-      .join(vecs.select(col("id").as("b"), col("v").as("vb")), "b")
-      .withColumn("score", round(cosine(col("va"), col("vb")), 6))
+                     hubSalt: Int = 0): DataFrame =
+    cosinePairs(Dedup.starEdges(
+      tableRows(corpus, nPlanes, tables, vecCol, idCol),
+      Seq("band", "bandhash"), hubSalt), corpus, vecCol, idCol)
       .filter(col("score") >= threshold)
-      .select(col("a"), col("b"), col("score"))
-  }
 }

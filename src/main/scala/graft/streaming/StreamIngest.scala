@@ -349,8 +349,9 @@ object StreamIngest {
     }
 
   /** Streaming MinHash-LSH near-dup candidates: the streaming twin of
-    * [[graft.llm.Dedup.minhashLsh]]'s banding stage. Each arriving doc's
-    * signature splits into `bands` band hashes; one stateful operator
+    * [[graft.llm.Dedup.minhashLshStar]]'s candidate stage, on the batch
+    * path's own shingle and band steps. Each arriving doc's signature
+    * splits into `bands` band hashes; one stateful operator
     * keyed by (band, bandhash) remembers the FIRST doc that ever owned
     * the bucket and emits a candidate `(owner, dup, band)` row for every
     * LATER doc that lands in it. Exact duplicates share every bucket, so
@@ -373,18 +374,12 @@ object StreamIngest {
       idCol: String = "doc_id"): Dataset[(Long, Long, Int)] = {
     import docs.sparkSession.implicits._
     import graft.llm.Dedup
-    val numHashes = bands * rowsPerBand
-    val sh = docs
-      .select(col(idCol).cast("long").as("id"),
-        Dedup.hashedShingles(col(textCol), n).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("id"),
-        Dedup.minhashFromHashes(col("sh"), numHashes).as("sig"))
-    val bandArr = array((0 until bands).map(b =>
-      xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))): _*)
-    val banded = sh.select(col("id"), posexplode(bandArr))
-      .select(concat_ws(":", col("pos"), col("col")).as("bucket"),
-        col("pos").cast("int").as("band"), col("id"))
+    // the batch path's own shingle and band steps
+    val banded = Dedup.minhashBands(Dedup.withSig(Dedup.shingleSets(docs,
+        col(idCol).cast("long"), col(textCol), n), bands * rowsPerBand),
+        bands, rowsPerBand)
+      .select(concat_ws(":", col("band"), col("bandhash")).as("bucket"),
+        col("band").cast("int").as("band"), col("id"))
       .as[(String, Int, Long)]
     val timeoutConf = if (idleTimeout.isDefined)
       GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout

@@ -1,9 +1,9 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.TestData
 import graft.llm.{Embed, Text}
 
 /** Round-8 additions: batch ANN retrieval (one corpus pass serves a
@@ -37,7 +37,7 @@ class BatchRetrievalSpec extends SparkFunSuite {
   test("topKBatchIvf exhaustive probe equals brute batch; partial probe " +
       "reads only probed cells") {
     val corpus = vecs(40)
-    val tmp = Files.createTempDirectory("graft-bivf").toString
+    val tmp = TestData.freshScratch("graft-bivf")
     Embed.writeIvf(corpus, tmp, nCentroids = 4)
     val stored = sp.read.parquet(tmp)
     val cents = Embed.readIvfCentroids(sp, tmp)

@@ -2,10 +2,10 @@ package graft
 
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.TestData
 import graft.io.{Ingest, RunLog, WireIngest}
 
 /** Sustained concurrent writer/maintenance/reader soak — the
@@ -27,7 +27,7 @@ class ConcurrencySoakSpec extends SparkFunSuite {
 
   test("writer + fold maintenance + reader soak: continuous prefixes, " +
       "exact final view (test_concurrency.py)") {
-    val root = Files.createTempDirectory("graft-soak").toFile
+    val root = new java.io.File(TestData.freshScratch("graft-soak"))
     val spool = new java.io.File(root, "spool"); spool.mkdirs()
     val runs = new java.io.File(root, "runs").getAbsolutePath
     val layout = new java.io.File(root, "layout").getAbsolutePath

@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.sources.TestData
 import graft.llm.CorpusIo
 
 /** Round-8 additions: sharded training export + manifest, JSONL
@@ -20,12 +20,12 @@ class CorpusIoSpec extends SparkFunSuite {
 
   test("writeShards: deterministic membership, complete, pruned reads") {
     val d = docs(200)
-    val tmp = Files.createTempDirectory("graft-shards").toString
+    val tmp = TestData.freshScratch("graft-shards")
     CorpusIo.writeShards(d, tmp, nShards = 8)
     val back = sp.read.parquet(tmp)
     assert(back.count() == 200)
     // re-export to a second path: identical membership (resumability)
-    val tmp2 = Files.createTempDirectory("graft-shards2").toString
+    val tmp2 = TestData.freshScratch("graft-shards2")
     CorpusIo.writeShards(d, tmp2, nShards = 8)
     val m1 = back.select($"doc_id", $"shard".cast("int")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -44,7 +44,7 @@ class CorpusIoSpec extends SparkFunSuite {
   test("writeShards shuffled: within-shard order is the salted hash " +
       "order, deterministic across exports") {
     val d = docs(300)
-    val tmp = Files.createTempDirectory("graft-shuf").toString
+    val tmp = TestData.freshScratch("graft-shuf")
     CorpusIo.writeShards(d, tmp, nShards = 2, shuffled = true)
     def fileOrder(p: String): Seq[Long] = {
       val dir = new java.io.File(p).listFiles()
@@ -58,14 +58,14 @@ class CorpusIoSpec extends SparkFunSuite {
     val order = fileOrder(tmp)
     assert(order.length > 50)
     assert(order != order.sorted, "shuffle left ids in natural order")
-    val tmp2 = Files.createTempDirectory("graft-shuf2").toString
+    val tmp2 = TestData.freshScratch("graft-shuf2")
     CorpusIo.writeShards(d, tmp2, nShards = 2, shuffled = true)
     assert(fileOrder(tmp2) == order) // deterministic replay
   }
 
   test("shardManifest: counts, char mass, id ranges match the data") {
     val d = docs(100)
-    val tmp = Files.createTempDirectory("graft-shards3").toString
+    val tmp = TestData.freshScratch("graft-shards3")
     CorpusIo.writeShards(d, tmp, nShards = 4)
     val man = CorpusIo.shardManifest(sp, tmp).collect()
     assert(man.map(_.getLong(1)).sum == 100)
@@ -82,7 +82,7 @@ class CorpusIoSpec extends SparkFunSuite {
   }
 
   test("readJsonl: clean rows parsed, corrupt lines quarantined") {
-    val tmp = Files.createTempDirectory("graft-jsonl").toString
+    val tmp = TestData.freshScratch("graft-jsonl")
     val lines = Seq(
       """{"doc_id": 1, "text": "hello world", "source": "a"}""",
       """{"doc_id": 2, "text": "tab\tand \"quote\" and\nnewline", "source": "b"}""",
@@ -106,7 +106,7 @@ class CorpusIoSpec extends SparkFunSuite {
   test("readJsonl: to_json round-trip of real text is lossless") {
     val d = docs(50).withColumn("text",
       concat($"text", lit(" with \"quotes\" and\nnewlines\tand tabs")))
-    val tmp = Files.createTempDirectory("graft-jsonl2").toString
+    val tmp = TestData.freshScratch("graft-jsonl2")
     d.select(to_json(struct($"doc_id", $"text", $"source")).as("value"))
       .write.mode("overwrite").text(tmp)
     val schema = StructType.fromDDL("doc_id BIGINT, text STRING, source STRING")

@@ -81,8 +81,7 @@ class EmbedProfileSpec extends SparkFunSuite {
   test("writeLayout persists the profile's routing knobs and append " +
       "replays them from the sidecar (never from the caller)") {
     val sp = spark
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_embprof").toString
+    val tmp = TestData.freshScratch("graft_embprof")
     val full = EmbedProfile.serving.copy(hierAbove = 0,
       nCoarse = 2, coarseProbes = 2)
     full.writeLayout(emb.filter(col("vec_id") % 2 === 0), tmp,
@@ -114,8 +113,7 @@ class EmbedProfileSpec extends SparkFunSuite {
     // exactness escape hatch (coarseProbes == nCoarse == 5) genuinely
     // DIFFERS from the default, so an unforwarded knob is visible both
     // in the sidecar and (potentially) in boundary-vector cells.
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_embprof_route").toString
+    val tmp = TestData.freshScratch("graft_embprof_route")
     val cents = emb.filter(col("vec_id") < 25).orderBy(col("vec_id"))
       .select(Embed.normalized(col("embedding")))
       .collect().toSeq.map(_.getSeq[Double](0).toSeq)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.TestData
 import graft.io.{Ingest, RunLog, WireIngest}
 import graft.model.AkuTime
 
@@ -38,7 +39,7 @@ class FoldRecoverySpec extends SparkFunSuite {
   }
 
   test("kill after staging: staged runs stay servable, next fold lands them once") {
-    val dir = Files.createTempDirectory("graft-rec-stage").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-rec-stage"))
     val runs = new java.io.File(dir, "runs").getAbsolutePath
     val layout = new java.io.File(dir, "layout").getAbsolutePath
     // data A committed normally (also bootstraps the layout)
@@ -65,7 +66,7 @@ class FoldRecoverySpec extends SparkFunSuite {
   }
 
   test("kill mid-landing: manifest rollback, regenerate, exactly-once") {
-    val dir = Files.createTempDirectory("graft-rec-land").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-rec-land"))
     val runs = new java.io.File(dir, "runs").getAbsolutePath
     val layout = new java.io.File(dir, "layout").getAbsolutePath
     // cycle 1 committed normally: data A lives in the layout
@@ -113,7 +114,7 @@ class FoldRecoverySpec extends SparkFunSuite {
   }
 
   test("kill after commit: marker makes recovery retire without re-appending") {
-    val dir = Files.createTempDirectory("graft-rec-commit").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-rec-commit"))
     val runs = new java.io.File(dir, "runs").getAbsolutePath
     val layout = new java.io.File(dir, "layout").getAbsolutePath
     spool(dir, "a", runs, respLines(0 until 20))
@@ -142,7 +143,7 @@ class FoldRecoverySpec extends SparkFunSuite {
   }
 
   test("recovery into an hourly layout lands rows where hour pruning finds them") {
-    val dir = Files.createTempDirectory("graft-rec-hourly").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-rec-hourly"))
     val runs = new java.io.File(dir, "runs").getAbsolutePath
     val layout = new java.io.File(dir, "layout").getAbsolutePath
     val hour = 3600L * 1000000000L
@@ -173,7 +174,7 @@ class FoldRecoverySpec extends SparkFunSuite {
   }
 
   test("wire-to-query kill: TCP ingest severed mid-session, store recovers") {
-    val dir = Files.createTempDirectory("graft-rec-wire").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-rec-wire"))
     val spoolDir = new java.io.File(dir, "spool")
     val runs = new java.io.File(dir, "runs").getAbsolutePath
     new java.io.File(runs).mkdirs()

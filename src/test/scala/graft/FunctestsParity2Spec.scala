@@ -4,6 +4,7 @@ import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import graft.sources.TestData
 import graft.model.AkuTime
 import graft.plan.TsStore
 import graft.serve.ApiHttp
@@ -27,7 +28,7 @@ class FunctestsParity2Spec extends SparkFunSuite {
     HttpTest.http(port, path, body = body)
 
   private def serve(name: String, wire: String): Int = {
-    val tmp = Files.createTempDirectory(s"graft_parity_$name").toFile
+    val tmp = new java.io.File(TestData.freshScratch(s"graft_parity_$name"))
     val wireDir = new java.io.File(tmp, "wire"); wireDir.mkdirs()
     Files.write(new java.io.File(wireDir, "session_0.resp").toPath,
       wire.getBytes(UTF_8))

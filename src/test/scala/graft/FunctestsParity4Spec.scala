@@ -4,6 +4,7 @@ import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import graft.sources.TestData
 import graft.model.AkuTime
 import graft.plan.TsStore
 import graft.serve.ApiHttp
@@ -53,7 +54,7 @@ class FunctestsParity4Spec extends SparkFunSuite {
       while (m < 3) { sb.append(':').append(i).append("\r\n"); m += 1 }
       i += 1
     }
-    val tmp = Files.createTempDirectory("graft_parity_gaj").toFile
+    val tmp = new java.io.File(TestData.freshScratch("graft_parity_gaj"))
     val wireDir = new java.io.File(tmp, "wire"); wireDir.mkdirs()
     Files.write(new java.io.File(wireDir, "session_0.resp").toPath,
       sb.toString.getBytes(UTF_8))

@@ -2,8 +2,8 @@ package graft
 
 import java.net.{HttpURLConnection, Socket, URI}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 
+import graft.sources.TestData
 import graft.io.{Ingest, WireIngest}
 import graft.model.AkuTime
 import graft.serve.ApiHttp
@@ -29,7 +29,7 @@ class FunctestsParity5Spec extends SparkFunSuite {
     HttpTest.http(port, body = body)
 
   test("reader sees gap-free prefixes while a TCP writer streams (continuous queries)") {
-    val spool = Files.createTempDirectory("graft-continuous").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-continuous"))
     val srv = new WireIngest(spool)
     srv.start()
     // live server: every query re-parses the sessions published so far

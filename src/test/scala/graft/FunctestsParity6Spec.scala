@@ -2,8 +2,8 @@ package graft
 
 import java.net.{HttpURLConnection, Socket, URI}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 
+import graft.sources.TestData
 import graft.io.{Ingest, WireIngest}
 import graft.model.AkuTime
 import graft.serve.ApiHttp
@@ -66,7 +66,7 @@ class FunctestsParity6Spec extends SparkFunSuite {
   }
 
   test("data survives stop/start; reads and writes resume (test_restart)") {
-    val spool = Files.createTempDirectory("graft-restart").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-restart"))
     val n = 10000
     // --- first server lifetime: write, read all
     val srv1 = new WireIngest(spool)
@@ -93,7 +93,7 @@ class FunctestsParity6Spec extends SparkFunSuite {
   }
 
   test("crash mid-session keeps the validated prefix, drops the torn tail (test_kill)") {
-    val spool = Files.createTempDirectory("graft-kill").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-kill"))
     val n = 1000
     val k = 7 // complete entries in flight when the server dies
     val srv1 = new WireIngest(spool)

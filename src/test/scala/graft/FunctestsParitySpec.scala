@@ -4,6 +4,7 @@ import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import graft.sources.TestData
 import graft.model.AkuTime
 import graft.plan.TsStore
 import graft.serve.ApiHttp
@@ -69,7 +70,7 @@ class FunctestsParitySpec extends SparkFunSuite {
 
   // wire -> layout -> dimension -> store -> HTTP server, once per suite
   private lazy val port: Int = {
-    val tmp = Files.createTempDirectory("graft_parity").toFile
+    val tmp = new java.io.File(TestData.freshScratch("graft_parity"))
     val wireDir = new java.io.File(tmp, "wire"); wireDir.mkdirs()
     Files.write(new java.io.File(wireDir, "session_0.resp").toPath,
       respText.getBytes(UTF_8))

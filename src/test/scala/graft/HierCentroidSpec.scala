@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.TestData
 import graft.functions.VecMath
 import graft.llm.Embed
 
@@ -179,8 +180,7 @@ class HierCentroidSpec extends AnyFunSuite {
       df.filter(col("vec_id") >= 300))
     // hier layout: build from A, append B — B's stored cells must equal
     // what the layout's own (rebuilt-from-meta) routing assigns them
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-hier-ivf").toString
+    val tmp = TestData.freshScratch("graft-hier-ivf")
     Embed.writeIvf(a, tmp, nCentroids = 16, rounded = true,
       hierAssign = true)
     Embed.ivfUpdate(b, tmp)
@@ -199,10 +199,8 @@ class HierCentroidSpec extends AnyFunSuite {
       want.exceptAll(stored).count() == 0,
       "append assigned differently than the layout's persisted routing")
     // a full-probe hier layout is cell-for-cell identical to flat
-    val tmpH = java.nio.file.Files
-      .createTempDirectory("graft-hier-full").toString
-    val tmpF = java.nio.file.Files
-      .createTempDirectory("graft-flat").toString
+    val tmpH = TestData.freshScratch("graft-hier-full")
+    val tmpF = TestData.freshScratch("graft-flat")
     val pinned = Embed.sampleCentroids(df, 9)
     val fullIdx = Embed.buildCentroidIndex(pinned)
     Embed.writeIvf(df, tmpF, centroids = Some(pinned), rounded = true)
@@ -217,10 +215,8 @@ class HierCentroidSpec extends AnyFunSuite {
       .select(col("vec_id"), col("ivf_cell").cast("int").as("c"))
     assert(h.exceptAll(f).count() == 0 && f.exceptAll(h).count() == 0)
     // and the IVF-PQ layout's coarse cell takes the same route
-    val tmpPH = java.nio.file.Files
-      .createTempDirectory("graft-hier-pq").toString
-    val tmpPF = java.nio.file.Files
-      .createTempDirectory("graft-flat-pq").toString
+    val tmpPH = TestData.freshScratch("graft-hier-pq")
+    val tmpPF = TestData.freshScratch("graft-flat-pq")
     Embed.writeIvfPq(df, tmpPF, m = 2, k = 4, iters = 1,
       centroids = Some(pinned))
     Embed.writeIvfPq(df, tmpPH, m = 2, k = 4, iters = 1,

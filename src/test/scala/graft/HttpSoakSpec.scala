@@ -2,9 +2,9 @@ package graft
 
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
+import graft.sources.TestData
 import graft.io.RunLog
 import graft.serve.ApiHttp
 
@@ -29,7 +29,7 @@ class HttpSoakSpec extends SparkFunSuite {
 
   test("8 parallel /api/query clients over live ingest + fold cycles: " +
       "zero 5xx, clean prefixes, exact final view") {
-    val root = Files.createTempDirectory("graft-http-soak").toFile
+    val root = new java.io.File(TestData.freshScratch("graft-http-soak"))
     val spool = new java.io.File(root, "spool"); spool.mkdirs()
     val runs = new java.io.File(root, "runs").getAbsolutePath
     val layout = new java.io.File(root, "layout").getAbsolutePath

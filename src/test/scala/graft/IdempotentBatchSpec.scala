@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.TestData
 import graft.llm.{Dedup, Embed}
 
 /** Round-11: retry-idempotence for the append-index writers. A bare
@@ -22,7 +23,7 @@ class IdempotentBatchSpec extends SparkFunSuite {
   }.toDF("vec_id", "embedding")
 
   test("ivfUpdate(batchId): a replayed batch lands exactly once") {
-    val tmp = Files.createTempDirectory("graft-idem-ivf").toString
+    val tmp = TestData.freshScratch("graft-idem-ivf")
     Embed.writeIvf(vecs(0, 20), tmp, nCentroids = 4)
     Embed.ivfUpdate(vecs(20, 30), tmp, batchId = Some("b1"))
     val n1 = sp.read.parquet(tmp).count()
@@ -41,7 +42,7 @@ class IdempotentBatchSpec extends SparkFunSuite {
   }
 
   test("ivfUpdate(batchId): a replay repairs a partial previous landing") {
-    val tmp = Files.createTempDirectory("graft-idem-part").toString
+    val tmp = TestData.freshScratch("graft-idem-part")
     Embed.writeIvf(vecs(0, 20), tmp, nCentroids = 4)
     Embed.ivfUpdate(vecs(20, 30), tmp, batchId = Some("bx"))
     val expect = sp.read.parquet(tmp).orderBy($"vec_id")
@@ -65,7 +66,7 @@ class IdempotentBatchSpec extends SparkFunSuite {
     val corpus = Seq((1L, base),
       (2L, "one two three four five six seven eight nine"))
       .toDF("doc_id", "text")
-    val tmp = Files.createTempDirectory("graft-idem-lsh").toString
+    val tmp = TestData.freshScratch("graft-idem-lsh")
     Dedup.writeLshIndex(corpus, tmp, n = 3, bands = 16, rowsPerBand = 2)
     val batch = Seq((10L, base + " mu"), (11L, base + " mu nu"))
       .toDF("doc_id", "text")
@@ -87,7 +88,7 @@ class IdempotentBatchSpec extends SparkFunSuite {
   test("appendSpanIndex(batchId): replayed batch does not bloat the index") {
     def words(n: Int, off: Int) =
       (0 until n).map(i => s"w${i + off}").mkString(" ")
-    val tmp = Files.createTempDirectory("graft-idem-span").toString
+    val tmp = TestData.freshScratch("graft-idem-span")
     Dedup.writeSpanIndex(Seq((1L, words(30, 0))).toDF("doc_id", "text"),
       tmp, k = 5)
     val batch = Seq((2L, words(30, 100))).toDF("doc_id", "text")
@@ -108,7 +109,7 @@ class IdempotentBatchSpec extends SparkFunSuite {
     // "batch-b1-") and silently drop b1-retry's rows on a b1 replay
     def words(n: Int, off: Int) =
       (0 until n).map(i => s"w${i + off}").mkString(" ")
-    val tmp = Files.createTempDirectory("graft-idem-hyphen").toString
+    val tmp = TestData.freshScratch("graft-idem-hyphen")
     Dedup.writeSpanIndex(Seq((1L, words(30, 0))).toDF("doc_id", "text"),
       tmp, k = 5)
     Dedup.appendSpanIndex(Seq((2L, words(30, 100))).toDF("doc_id", "text"),

@@ -1,9 +1,9 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.TestData
 import graft.llm.{Dedup, Embed, Text}
 
 /** Round-8 additions: incremental index maintenance (IVF append, LSH
@@ -19,7 +19,7 @@ class IncrementalIndexSpec extends SparkFunSuite {
       (i.toLong, Array.tabulate(4)(d => (if (i % 2 == 0) 1.0f else -1.0f) *
         (d + 1) + i * 0.01f))
     }.toDF("vec_id", "embedding")
-    val tmp = Files.createTempDirectory("graft-ivfu").toString
+    val tmp = TestData.freshScratch("graft-ivfu")
     Embed.writeIvf(vecs.filter($"vec_id" < 20), tmp, nCentroids = 4)
     val before = new java.io.File(tmp).listFiles()
       .filter(_.getName.startsWith("ivf_cell="))
@@ -56,7 +56,7 @@ class IncrementalIndexSpec extends SparkFunSuite {
     // exactly this vector
     val boundary = Seq((10L, Array(Math.nextUp(1.0f), 1.0f, 0.0f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val rounded = Files.createTempDirectory("graft-ivfr").toString
+    val rounded = TestData.freshScratch("graft-ivfr")
     Embed.writeIvf(base, rounded, nCentroids = 2, centroids = cents,
       rounded = true)
     Embed.ivfUpdate(boundary, rounded)
@@ -66,7 +66,7 @@ class IncrementalIndexSpec extends SparkFunSuite {
     // a raw layout assigns the same append raw; deleting the meta
     // sidecar emulates a layout written before it existed — appends to
     // old layouts keep the old (raw) behavior
-    val raw = Files.createTempDirectory("graft-ivfw").toString
+    val raw = TestData.freshScratch("graft-ivfw")
     Embed.writeIvf(base, raw, nCentroids = 2, centroids = cents)
     assert(new java.io.File(raw, "_ivf_meta.txt").delete())
     Embed.ivfUpdate(boundary, raw)
@@ -82,7 +82,7 @@ class IncrementalIndexSpec extends SparkFunSuite {
       (2L, base + " lambda"), // near-dup of 1 — but both indexed: no pair
       (3L, "one two three four five six seven eight nine ten"))
       .toDF("doc_id", "text")
-    val tmp = Files.createTempDirectory("graft-lsh").toString
+    val tmp = TestData.freshScratch("graft-lsh")
     Dedup.writeLshIndex(corpus, tmp, n = 3, bands = 32, rowsPerBand = 2)
     val batch = Seq(
       (10L, base + " mu"),    // near-dup of 1 and 2 (corpus-vs-new)
@@ -112,7 +112,7 @@ class IncrementalIndexSpec extends SparkFunSuite {
     val corpus = ((1L to 40L).map(i => (i, base)) :+
       (100L, "one two three four five six seven eight nine ten"))
       .toDF("doc_id", "text")
-    val tmp = Files.createTempDirectory("graft-lshstar").toString
+    val tmp = TestData.freshScratch("graft-lshstar")
     Dedup.writeLshIndex(corpus, tmp, n = 3, bands = 32, rowsPerBand = 2)
     val batch = Seq(
       (200L, base),  // exact member of the stored family

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.sources.TestData
 import graft.ast.QueryJson
 import graft.io.{Ingest, LineProtocol}
 import graft.plan.Planner
@@ -114,7 +115,7 @@ class IngestSpec extends SparkFunSuite {
   // layout to every reader: identical rows, per-file (sname, ts) sorted
   // runs, same partition directories
   test("sorted-run write is read-identical to the salted exchange write") {
-    val dir = Files.createTempDirectory("graft-sortedrun").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-sortedrun"))
     val respFile = new java.io.File(dir, "session1.resp")
     val day = Ingest.DayNs
     val lines = (0 until 200).flatMap { i =>
@@ -152,7 +153,7 @@ class IngestSpec extends SparkFunSuite {
   }
 
   test("meta queries with a maintained dimension never scan the facts") {
-    val dir = Files.createTempDirectory("graft-seriesdim").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-seriesdim"))
     val respFile = new java.io.File(dir, "session1.resp")
     val lines = (0 until 30).flatMap { i =>
       Seq(s"+cpu host=h${i % 3} dc=d${i % 2}", s":${1000000000L * i}", s":$i")
@@ -194,7 +195,7 @@ class IngestSpec extends SparkFunSuite {
   // recent suffix and queries keep pruning the surviving directories
   test("retention drops oldest days whole; reads return the recent suffix") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-retention").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-retention"))
     val layout = new java.io.File(dir, "layout").getAbsolutePath
     val day = Ingest.DayNs
     val samples = spark.range(300).select(
@@ -229,7 +230,7 @@ class IngestSpec extends SparkFunSuite {
   // like the reference's WAL + active volume
   test("size retention counts spool bytes against the cap, never deletes them") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-retention-b").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-retention-b"))
     val layout = new java.io.File(dir, "layout").getAbsolutePath
     val spool = new java.io.File(dir, "spool")
     spool.mkdirs()
@@ -261,7 +262,7 @@ class IngestSpec extends SparkFunSuite {
 
   test("time retention drops whole buckets before the cutoff only") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-retention-t").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-retention-t"))
     val layout = new java.io.File(dir, "layout").getAbsolutePath
     val day = Ingest.DayNs
     val samples = spark.range(300).select(
@@ -289,8 +290,7 @@ class IngestSpec extends SparkFunSuite {
     import org.apache.spark.sql.functions._
     val sp = spark
     import sp.implicits._
-    val layout = java.nio.file.Files
-      .createTempDirectory("graft_hourly").toString
+    val layout = TestData.freshScratch("graft_hourly")
     val hour = 3600L * 1000000000L
     // 48 hourly points spanning 2 days — hourly buckets make `day` hold
     // hour indices; a day-divisor prune would drop nearly everything
@@ -317,7 +317,7 @@ class IngestSpec extends SparkFunSuite {
     import org.apache.spark.sql.functions._
     // a plain sample table (tags MAP, no sname) is not a layout: the read
     // fails up front, naming the path
-    val layout = Files.createTempDirectory("graft-nosname").toString
+    val layout = TestData.freshScratch("graft-nosname")
     spark.range(10).select(
       lit("cpu").as("metric"),
       map(lit("host"), lit("h0")).as("tags"),
@@ -334,7 +334,7 @@ class IngestSpec extends SparkFunSuite {
   // scan that would make autocomplete a table scan at 10^8 series
   test("series dimension serves meta queries at 100k-series cardinality") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-highcard").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-highcard"))
     val layout = new java.io.File(dir, "layout").getAbsolutePath
     val seriesP = new java.io.File(dir, "series").getAbsolutePath
     val nSeries = 100000
@@ -358,7 +358,7 @@ class IngestSpec extends SparkFunSuite {
   }
 
   test("day-range queries prune layout partition directories") {
-    val dir = Files.createTempDirectory("graft-prune").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-prune"))
     val respFile = new java.io.File(dir, "s.resp")
     // 3 days x 4 points; day = ts div DayNs
     val day = 86400L * 1000000000L
@@ -389,7 +389,7 @@ class IngestSpec extends SparkFunSuite {
   }
 
   test("where filters on flattened tags reach the parquet scan as pushed filters") {
-    val dir = Files.createTempDirectory("graft-pushdown").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-pushdown"))
     val respFile = new java.io.File(dir, "s.resp")
     val lines = (0 until 20).flatMap { i =>
       Seq(s"+cpu host=h${i % 4}", s":${1000000000L * i}", s":$i")
@@ -422,7 +422,7 @@ class IngestSpec extends SparkFunSuite {
   }
 
   test("round-trip: RESP text -> layout write -> read -> query") {
-    val dir = Files.createTempDirectory("graft-ingest").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-ingest"))
     val respFile = new java.io.File(dir, "session1.resp")
     val lines = (0 until 20).flatMap { i =>
       Seq(s"+cpu host=h${i % 2}", s":${1000000000L * i}", s":$i")
@@ -448,7 +448,7 @@ class IngestSpec extends SparkFunSuite {
     // layout, must answer the same queries with byte-identical reference
     // CSV. 10s step, values = point index, tags cycling — the canonical
     // functest generator shape (akumulid_test_tools.py:58-125).
-    val dir = Files.createTempDirectory("graft-roundtrip").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-roundtrip"))
     val nSeries = 10; val perSeries = 120
     val t0 = 1418000000000000000L; val stepNs = 10L * 1000000000L
     val samples = for {

@@ -7,6 +7,7 @@ import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.TestData
 import graft.io.{Ingest, RunLog, WireIngest}
 
 /** The forked ingest daemon the kill test SIGKILLs: a bare WireIngest
@@ -60,7 +61,7 @@ class KillRecoverySpec extends SparkFunSuite {
 
   test("SIGKILL mid-stream: acked sessions recover bit-exact, torn " +
       "session invisible, post-restart writes union in (test_kill.py)") {
-    val dir = Files.createTempDirectory("graft-kill").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-kill"))
     val spool1 = new File(dir, "spool1"); spool1.mkdirs()
     val runs = new File(dir, "runs").getAbsolutePath
     val layout = new File(dir, "layout").getAbsolutePath

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.TestData
 import graft.llm.{Dedup, Embed, Multimodal, Text}
 
 /** LLM-pipeline operators: text analysis, dedup family, similarity
@@ -289,7 +290,7 @@ class LlmSpec extends SparkFunSuite {
     val cents = Seq(Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 0.0, 1.0, 0.0),
       Seq(0.0, 1.0, 0.0, 0.0), Seq(0.0, 0.0, 0.0, 1.0))
     val books = Embed.pqTrain(corpus, m = 2, k = 2, iters = 2)
-    val path = java.nio.file.Files.createTempDirectory("ivfpq").toString
+    val path = TestData.freshScratch("ivfpq")
     Embed.writeIvfPq(corpus, path, nCentroids = 4, m = 2, k = 2,
       centroids = Some(cents), books = Some(books))
     val stored = spark.read.parquet(path)
@@ -1719,6 +1720,27 @@ class LlmSpec extends SparkFunSuite {
     assert(nTrue >= 1L && nHits == nTrue)     // full recall
     assert(r.getDouble(3) == 1.0)
     assert(nCand >= nTrue)                    // candidates cover truth
+  }
+
+  test("lshTuningReport counts in its one aggregate, not while it is built") {
+    val twin = "the same sentence repeated twice over"
+    val texts = (0 until 20).map(i =>
+      s"filler document $i with words ${i * 3}") ++ Seq(twin, twin)
+    def jobsOf(f: => Unit) =
+      org.apache.spark.sql.graftio.ListenerBus.jobsOf(spark.sparkContext)(f)
+    // building its two inputs runs only their lazy lineage cuts' exchange
+    // stages; the report itself must add no count, collect or eager cut
+    val inputs = jobsOf {
+      Dedup.ngramJaccard(docs(texts), 3, 0.5)
+      Dedup.minhashLsh(docs(texts), 3, 16, 2)
+    }
+    var report: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf {
+      report = Dedup.lshTuningReport(docs(texts), n = 3, bands = 16,
+        rowsPerBand = 2, threshold = 0.5)
+    } == inputs)
+    val r = report.collect()(0)
+    assert((r.getLong(0), r.getLong(2), r.getDouble(3)) == ((1L, 1L, 1.0)))
   }
 
   test("lshTuningReport maxDocs valve: deterministic sample, recall " +

@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.sources.TestData
 import graft.llm.{CorpusIo, Dedup}
 
 /** Cross-operator invariants for the round-8 incremental/export family,
@@ -30,7 +30,7 @@ class Round8InvariantsSpec extends SparkFunSuite {
   test("writeShards partitions the corpus: union = input, shard = " +
       "recomputed key, no duplicates") {
     val d = corpus(1)
-    val tmp = Files.createTempDirectory("graft-inv-shards").toString
+    val tmp = TestData.freshScratch("graft-inv-shards")
     CorpusIo.writeShards(d, tmp, nShards = 16)
     val back = sp.read.parquet(tmp)
     assert(back.count() == 400)
@@ -74,7 +74,7 @@ class Round8InvariantsSpec extends SparkFunSuite {
     val all = corpus(3)
     val old = all.filter($"doc_id" % 3 =!= 0)
     val batch = all.filter($"doc_id" % 3 === 0)
-    val tmp = Files.createTempDirectory("graft-inv-lsh").toString
+    val tmp = TestData.freshScratch("graft-inv-lsh")
     Dedup.writeLshIndex(old, tmp, n = 2, bands = 16, rowsPerBand = 2)
     val inc = Dedup.neardupAgainstIndex(batch, tmp, threshold = 0.7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -89,7 +89,7 @@ class Round8InvariantsSpec extends SparkFunSuite {
 
   test("readJsonl + quarantine partition the input lines exactly") {
     val d = corpus(4)
-    val tmp = Files.createTempDirectory("graft-inv-jsonl").toString
+    val tmp = TestData.freshScratch("graft-inv-jsonl")
     val js = to_json(struct($"doc_id", $"text"))
     d.select(when($"doc_id" % 11 === 0, concat(lit("broken "), js))
       .otherwise(js).as("value"))

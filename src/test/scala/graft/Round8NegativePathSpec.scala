@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.sources.TestData
 import graft.llm.{CorpusIo, Dedup, Sample}
 
 /** Negative paths + API contracts for the round-8 family: bad
@@ -45,7 +45,7 @@ class Round8NegativePathSpec extends SparkFunSuite {
 
   test("probing a missing index fails with a missing-file error, " +
       "never a silent empty result") {
-    val gone = Files.createTempDirectory("graft-neg").toString + "/absent"
+    val gone = TestData.freshScratch("graft-neg") + "/absent"
     val e1 = intercept[Exception] {
       Dedup.trimAgainstIndex(docs2, gone).collect()
     }
@@ -58,7 +58,7 @@ class Round8NegativePathSpec extends SparkFunSuite {
 
   test("appendLshIndex bands with the layout's PINNED parameters, " +
       "not the caller's defaults") {
-    val tmp = Files.createTempDirectory("graft-neg-lsh").toString
+    val tmp = TestData.freshScratch("graft-neg-lsh")
     // non-default parameters at write time
     Dedup.writeLshIndex(docs2, tmp, n = 2, bands = 8, rowsPerBand = 4)
     Dedup.appendLshIndex(
@@ -73,7 +73,7 @@ class Round8NegativePathSpec extends SparkFunSuite {
 
   test("writeSpanIndex pins k: a batch trimmed after an append uses " +
       "the stored k, not the default") {
-    val tmp = Files.createTempDirectory("graft-neg-span").toString
+    val tmp = TestData.freshScratch("graft-neg-span")
     // k = 3 (default is 10): with default-k windowing the 4-token
     // shared run below would produce NO windows and nothing would trim
     Dedup.writeSpanIndex(Seq((1L, "a b c d")).toDF("doc_id", "text"),

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.TestData
 import graft.io.{Ingest, RunLog}
 
 /** The run-log spool (WAL-then-tree ingest shape): spooled runs must be
@@ -33,7 +34,7 @@ class RunLogSpec extends SparkFunSuite {
   }
 
   test("spooled runs read back identical to the direct parse") {
-    val dir = Files.createTempDirectory("graft-runlog").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-runlog"))
     renderSessions(dir)
     val runs = new java.io.File(dir, "runs").getAbsolutePath
     val n = RunLog.spoolResp(spark, dir.getAbsolutePath, runs,
@@ -58,7 +59,7 @@ class RunLogSpec extends SparkFunSuite {
   }
 
   test("compacted runs produce the same layout as the direct ingest") {
-    val dir = Files.createTempDirectory("graft-runlog2").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-runlog2"))
     renderSessions(dir)
     val runs = new java.io.File(dir, "runs").getAbsolutePath
     val viaRunsLayout = new java.io.File(dir, "lay-runs").getAbsolutePath
@@ -79,7 +80,7 @@ class RunLogSpec extends SparkFunSuite {
   }
 
   test("runs are queryable before compaction (live-view store)") {
-    val dir = Files.createTempDirectory("graft-runlog3").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-runlog3"))
     renderSessions(dir)
     val runs = new java.io.File(dir, "runs").getAbsolutePath
     RunLog.spoolResp(spark, dir.getAbsolutePath, runs, Seq("host"))
@@ -91,7 +92,7 @@ class RunLogSpec extends SparkFunSuite {
   }
 
   test("liveStore serves layout + uncompacted runs as one view") {
-    val dir = Files.createTempDirectory("graft-runlog6").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-runlog6"))
     val day = Ingest.DayNs
     // batch half: ingested + compacted into the layout
     val batchDir = new java.io.File(dir, "batch"); batchDir.mkdirs()
@@ -124,7 +125,7 @@ class RunLogSpec extends SparkFunSuite {
   }
 
   test("a liveStore with unfolded runs keeps the single-pass scan routing") {
-    val dir = Files.createTempDirectory("graft-runlog-size").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-runlog-size"))
     def session(name: String, t0: Long): String = {
       val d = new java.io.File(dir, name); d.mkdirs()
       Files.write(new java.io.File(d, "s.resp").toPath,
@@ -153,7 +154,7 @@ class RunLogSpec extends SparkFunSuite {
   }
 
   test("foldRuns: appends one snapshot, retires it, view stays exactly-once") {
-    val dir = Files.createTempDirectory("graft-runlog-fold").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-runlog-fold"))
     val day = Ingest.DayNs
     def spool(name: String, lines: Seq[String]): Unit = {
       val d = new java.io.File(dir, name); d.mkdirs()
@@ -207,7 +208,7 @@ class RunLogSpec extends SparkFunSuite {
   }
 
   test("foldRuns into an hourly layout needs no width: it uses the layout's") {
-    val dir = Files.createTempDirectory("graft-runlog-hourly").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-runlog-hourly"))
     val hour = 3600L * 1000000000L
     val runs = new java.io.File(dir, "runs").getAbsolutePath
     val layout = new java.io.File(dir, "layout").getAbsolutePath
@@ -236,7 +237,7 @@ class RunLogSpec extends SparkFunSuite {
   }
 
   test("foldRuns: a tag-key mismatch with the layout fails before staging") {
-    val dir = Files.createTempDirectory("graft-runlog-tagkeys").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-runlog-tagkeys"))
     val runs = new java.io.File(dir, "runs").getAbsolutePath
     val layout = new java.io.File(dir, "layout").getAbsolutePath
     def spool(name: String, tags: Seq[String]): Unit = {
@@ -285,7 +286,7 @@ class RunLogSpec extends SparkFunSuite {
   }
 
   test("run names are deterministic per partition (retry-idempotent)") {
-    val dir = Files.createTempDirectory("graft-runlog5").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-runlog5"))
     renderSessions(dir)
     val runs = new java.io.File(dir, "runs")
     RunLog.spoolResp(spark, dir.getAbsolutePath, runs.getAbsolutePath,
@@ -328,7 +329,7 @@ class RunLogSpec extends SparkFunSuite {
   }
 
   test("a truncated run file fails loudly with the file path") {
-    val dir = Files.createTempDirectory("graft-runlog7").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-runlog7"))
     renderSessions(dir)
     val runs = new java.io.File(dir, "runs")
     RunLog.spoolResp(spark, dir.getAbsolutePath, runs.getAbsolutePath,
@@ -349,7 +350,7 @@ class RunLogSpec extends SparkFunSuite {
   }
 
   test("tag-key mismatch between spool and read fails fast") {
-    val dir = Files.createTempDirectory("graft-runlog4").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-runlog4"))
     renderSessions(dir)
     val runs = new java.io.File(dir, "runs").getAbsolutePath
     // one snapshot, two key sets: the read takes the first file's keys

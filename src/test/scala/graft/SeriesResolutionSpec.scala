@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.graftio.ListenerBus
 
+import graft.sources.TestData
 import graft.ast.{QueryJson, Where}
 import graft.io.{Ingest, RunLog}
 import graft.plan.TsStore
@@ -34,7 +35,7 @@ class SeriesResolutionSpec extends SparkFunSuite {
       i <- 0 until 5
     } yield Row(m, Map("host" -> h, "region" -> Region(h)), T0 + d * Day + i * Sec, i.toDouble)
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), sampleSchema)
-    val path = Files.createTempDirectory("graft-resolve").resolve("layout").toString
+    val path = TestData.freshScratch("graft-resolve") + "/layout"
     Ingest.writeLayout(df, path, flattenTags = Seq("host"), saltBuckets = 1)
     path
   }
@@ -112,7 +113,7 @@ class SeriesResolutionSpec extends SparkFunSuite {
   }
 
   test("a live store resolves series that exist only in unfolded runs") {
-    val dir = Files.createTempDirectory("graft-resolve-live").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-resolve-live"))
     val wire = new java.io.File(dir, "wire"); wire.mkdirs()
     Files.write(new java.io.File(wire, "s.resp").toPath,
       (0 until 10).flatMap(i => Seq(

@@ -15,9 +15,11 @@ object SparkSpec {
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "2")
     .config("spark.sql.session.timeZone", "UTC")
-    // match the deployment builders (Bench/Verify/ScaleCheck): udaf
+    // as in `Bench.session`, the one builder of every main: udaf
     // Aggregators stay in the ObjectHashAggregate hash regime instead
-    // of sort-falling-back at 128 keys
+    // of sort-falling-back at 128 keys. The specs keep their own
+    // builder because the RocksDB state-store specs need the
+    // checksummed LocalFileSystem that `Bench.session` swaps out.
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       "65536")
     .config("spark.ui.enabled", "false")

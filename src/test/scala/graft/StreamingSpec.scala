@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, lit, map}
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.sources.TestData
 import graft.streaming.StreamIngest
 
 /** Structured Streaming ingest + continuous aggregation
@@ -44,7 +45,7 @@ class StreamingSpec extends SparkFunSuite {
 
   test("checkpointed layout sink survives restart without duplicates") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-stream").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-stream"))
     val in = new java.io.File(dir, "in"); in.mkdirs()
     val out = new java.io.File(dir, "out").getAbsolutePath
     val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
@@ -70,7 +71,7 @@ class StreamingSpec extends SparkFunSuite {
 
   test("RESP session stream: dictionary scope, restart without duplicates") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-resp-stream").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-resp-stream"))
     val in = new java.io.File(dir, "in"); in.mkdirs()
     val out = new java.io.File(dir, "out").getAbsolutePath
     val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
@@ -104,7 +105,7 @@ class StreamingSpec extends SparkFunSuite {
     // the full production topology: sockets -> WireIngest spool (atomic
     // session publish) -> file-source RESP stream -> checkpointed layout
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-wire-stream").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-wire-stream"))
     val spool = new java.io.File(dir, "spool")
     val out = new java.io.File(dir, "out").getAbsolutePath
     val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
@@ -145,7 +146,7 @@ class StreamingSpec extends SparkFunSuite {
 
   test("compaction collapses micro-batch files into the sorted batch layout") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-compact").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-compact"))
     val in = new java.io.File(dir, "in"); in.mkdirs()
     val out = new java.io.File(dir, "out").getAbsolutePath
     val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
@@ -184,7 +185,7 @@ class StreamingSpec extends SparkFunSuite {
 
   test("the streaming sink refuses a batch layout, keeps an empty one's width") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-stream-hourly").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-stream-hourly"))
     val in = new java.io.File(dir, "in"); in.mkdirs()
     val batch = new java.io.File(dir, "batch").getAbsolutePath
     val hour = 3600L * 1000000000L
@@ -246,7 +247,7 @@ class StreamingSpec extends SparkFunSuite {
 
   test("a fold into a stream sink's layout is refused before staging") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-stream-fold").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-stream-fold"))
     val in = new java.io.File(dir, "in"); in.mkdirs()
     Files.write(new java.io.File(in, "s.resp").toPath,
       (0 until 5).flatMap(i => Seq("+cpu host=h1",
@@ -279,7 +280,7 @@ class StreamingSpec extends SparkFunSuite {
     // one child per (session, count): repeated streams reuse it
     assert(StreamIngest.withStatePartitions(spark, srcRows = 20L) eq child)
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-stream-parts").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-stream-parts"))
     val in = new java.io.File(dir, "in"); in.mkdirs()
     Files.write(new java.io.File(in, "s.resp").toPath,
       (0 until 5).flatMap(i => Seq("+cpu host=h1",
@@ -300,7 +301,7 @@ class StreamingSpec extends SparkFunSuite {
 
   test("the streaming sink writes the batch layout schema, read-identical") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-stream-schema").toFile
+    val dir = new java.io.File(TestData.freshScratch("graft-stream-schema"))
     val tsdbIn = new java.io.File(dir, "tsdb"); tsdbIn.mkdirs()
     val respIn = new java.io.File(dir, "resp"); respIn.mkdirs()
     Files.write(new java.io.File(tsdbIn, "b1.txt").toPath,
@@ -578,7 +579,7 @@ class StreamingSpec extends SparkFunSuite {
     val sp = spark
     implicit val sqlCtx = sp.sqlContext
     import sp.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-cr").toString
+    val root = TestData.freshScratch("graft-cr")
     val input = MemoryStream[(String, Long, Double)]
     val samples = input.toDF().toDF("metric", "ts", "value")
       .withColumn("tags", map(lit("h"), lit("a")))
@@ -638,6 +639,44 @@ class StreamingSpec extends SparkFunSuite {
       val later = sp.sql("SELECT owner, dup FROM snd WHERE dup = 12")
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(later.length == 4 && later.forall(_._1 == 1L))
+    } finally q.stop()
+  }
+
+  test("one micro-batch of streaming near-dup candidates equals the " +
+      "batch star edges over the same bands") {
+    val sp = spark
+    implicit val sqlCtx = sp.sqlContext
+    import sp.implicits._
+    // three near-dup families (one word changed per copy) plus loners:
+    // buckets with 1, 2 and 4 members across 8 bands
+    val base = Seq(
+      "the quick brown fox jumps over the lazy dog by the river bank",
+      "a stitch in time saves nine and a penny saved is a penny earned",
+      "all work and no play makes jack a dull boy on a rainy afternoon")
+    val docs = base.zipWithIndex.flatMap { case (t, f) =>
+      (0 until 4).map(c => (f * 10L + c + 1,
+        t.split(" ").updated(c * 3, s"w$c").mkString(" ")))
+    } ++ Seq((90L, "nothing here resembles any other text at all"),
+      (91L, "one"))
+    val (n, bands, rowsPerBand) = (2, 8, 2)
+    val input = MemoryStream[(Long, String)]
+    val q = StreamIngest.streamingNearDupCandidates(
+        input.toDF().toDF("doc_id", "text"), n, bands, rowsPerBand)
+      .toDF("owner", "dup", "band").writeStream
+      .format("memory").queryName("snd_batch")
+      .outputMode(OutputMode.Append)
+      .start()
+    try {
+      input.addData(docs: _*)
+      q.processAllAvailable()
+      val streamed = sp.sql("SELECT DISTINCT owner, dup FROM snd_batch")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      // threshold 0 keeps every hub edge: the star candidate set itself
+      val batch = graft.llm.Dedup.minhashLshStar(docs.toDF("doc_id", "text"),
+          n, bands, rowsPerBand, threshold = 0.0)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(streamed.nonEmpty)
+      assert(streamed == batch)
     } finally q.stop()
   }
 }

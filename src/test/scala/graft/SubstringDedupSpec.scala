@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.TestData
 import graft.llm.{Dedup, Text}
 
 /** Round-8 additions: exact substring dedup (span REMOVAL, Lee et al.
@@ -46,8 +47,7 @@ class SubstringDedupSpec extends SparkFunSuite {
     val corpus = Seq(
       (1L, "a b c d e f"),
       (2L, "q r s t u v")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-spanidx").toString
+    val tmp = TestData.freshScratch("graft-spanidx")
     Dedup.writeSpanIndex(corpus, tmp, k = 4)
     val batch = Seq(
       (10L, "x y a b c d z"),           // "a b c d" is indexed -> cut

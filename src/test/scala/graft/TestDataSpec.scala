@@ -59,7 +59,7 @@ class TestDataSpec extends SparkFunSuite {
   /** A private copy of the corpus's events table: a directory no other
     * test has built, so its first caller pays the build. */
   private def corpusCopy(): String = {
-    val dir = Files.createTempDirectory("graft-testdata")
+    val dir = java.nio.file.Paths.get(TestData.freshScratch("graft-testdata"))
     Files.copy(Paths.get(Sf, "events.parquet"), dir.resolve("events.parquet"))
     dir.toString
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.TestData
 import graft.functions.ChunkedScan
 import graft.llm.Dedup
 import graft.plan.TsAnalytics
@@ -424,7 +425,7 @@ class TsAnalyticsSpec extends SparkFunSuite {
   }
 
   test("rollup store: coarsest-divisor serve merges exactly") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ru").toString
+    val tmp = TestData.freshScratch("graft_ru")
     val df = Seq(
       ("m", 1L, 1.0), ("m", 2L, 5.0),     // 10-bucket 0
       ("m", 11L, 3.0),                    // 10-bucket 10
@@ -460,10 +461,8 @@ class TsAnalyticsSpec extends SparkFunSuite {
           array().cast("array<string>"), array().cast("array<string>")))
     val rows = Seq(("m", 1L, 4.0), ("m", 2L, 9.0), ("m", 7L, 2.0),
       ("m", 11L, 3.0), ("n", 4L, -1.0), ("n", 25L, 7.0))
-    val chained = java.nio.file.Files
-      .createTempDirectory("graft_rch").toString
-    val direct = java.nio.file.Files
-      .createTempDirectory("graft_rdi").toString
+    val chained = TestData.freshScratch("graft_rch")
+    val direct = TestData.freshScratch("graft_rdi")
     graft.io.Rollup.write(mk(rows), chained, Seq(5L, 10L))
     graft.io.Rollup.write(mk(rows), direct, Seq(10L))
     def at10(p: String) = graft.io.Rollup.serve(spark, p, 10L)
@@ -480,10 +479,10 @@ class TsAnalyticsSpec extends SparkFunSuite {
     val second = Seq(("m", 3L, 1.0),   // extends an EXISTING bucket:
                                        // min/first must flip to the new row
       ("m", 25L, 7.0))                 // and a brand-new bucket appears
-    val inc = java.nio.file.Files.createTempDirectory("graft_ri").toString
+    val inc = TestData.freshScratch("graft_ri")
     graft.io.Rollup.write(mk(first), inc, Seq(10L))
     graft.io.Rollup.update(mk(second), inc)
-    val full = java.nio.file.Files.createTempDirectory("graft_rf").toString
+    val full = TestData.freshScratch("graft_rf")
     graft.io.Rollup.write(mk(first ++ second), full, Seq(10L))
     def served(p: String) = graft.io.Rollup.serve(spark, p, 10L)
       .orderBy("bucket").collect()
@@ -502,7 +501,7 @@ class TsAnalyticsSpec extends SparkFunSuite {
       rows.toDF("metric", "ts", "value")
         .withColumn("tags", map_from_arrays(
           array().cast("array<string>"), array().cast("array<string>")))
-    val p = java.nio.file.Files.createTempDirectory("graft_rc").toString
+    val p = TestData.freshScratch("graft_rc")
     graft.io.Rollup.write(mk(Seq(("m", 1L, 4.0), ("m", 11L, 3.0))), p,
       Seq(10L))
     val pre = graft.io.Rollup.serve(spark, p, 10L).orderBy("bucket")
@@ -529,7 +528,7 @@ class TsAnalyticsSpec extends SparkFunSuite {
       rows.toDF("metric", "ts", "value")
         .withColumn("tags", map_from_arrays(
           array().cast("array<string>"), array().cast("array<string>")))
-    val p = java.nio.file.Files.createTempDirectory("graft_rb").toString
+    val p = TestData.freshScratch("graft_rb")
     // bootstrap as streaming batch 0; then batch 1 folds, and the SAME
     // batch 1 replays (foreachBatch at-least-once after a crash between
     // the fold commit and the checkpoint ack) — it must be a no-op

@@ -4,6 +4,7 @@ import java.net.{DatagramPacket, DatagramSocket, InetAddress, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import graft.sources.TestData
 import graft.io.{Ingest, WireIngest}
 
 /** Wire transports: real localhost sockets -> spool files -> the RESP
@@ -19,7 +20,7 @@ class WireIngestSpec extends SparkFunSuite {
   }
 
   test("TCP: one connection = one dictionary session, published on close") {
-    val spool = Files.createTempDirectory("graft-wire-tcp").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-wire-tcp"))
     val srv = new WireIngest(spool)
     srv.start()
     try {
@@ -38,7 +39,7 @@ class WireIngestSpec extends SparkFunSuite {
   }
 
   test("UDP: per-datagram parser scope; dictionary packets isolated") {
-    val spool = Files.createTempDirectory("graft-wire-udp").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-wire-udp"))
     val srv = new WireIngest(spool)
     srv.start()
     try {
@@ -76,7 +77,7 @@ class WireIngestSpec extends SparkFunSuite {
     new java.io.File(spool, ".tmp").list().toSeq.filter(_.endsWith(".part"))
 
   test("every spool writer publishes exactly the validated bytes, no .part left") {
-    val spool = Files.createTempDirectory("graft-wire-writers").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-wire-writers"))
     val srv = new WireIngest(spool)
     srv.start()
     try {
@@ -142,7 +143,7 @@ class WireIngestSpec extends SparkFunSuite {
   }
 
   test("TCP answers -PARSER to malformed input (test_ingestion_errors)") {
-    val spool = Files.createTempDirectory("graft-wire-err").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-wire-err"))
     val srv = new WireIngest(spool)
     srv.start()
     try {
@@ -158,7 +159,7 @@ class WireIngestSpec extends SparkFunSuite {
   }
 
   test("TCP bounds the carry: a newline-less flood answers -PARSER") {
-    val spool = Files.createTempDirectory("graft-wire-flood").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-wire-flood"))
     val srv = new WireIngest(spool)
     srv.start()
     try {
@@ -196,7 +197,7 @@ class WireIngestSpec extends SparkFunSuite {
   }
 
   test("TCP keeps samples validated before a protocol error") {
-    val spool = Files.createTempDirectory("graft-wire-trunc").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-wire-trunc"))
     val srv = new WireIngest(spool)
     srv.start()
     try {
@@ -212,7 +213,7 @@ class WireIngestSpec extends SparkFunSuite {
 
   // --- functests/test_incomplete_write.py parity ------------------------
   test("incomplete final entry at clean close is discarded silently") {
-    val spool = Files.createTempDirectory("graft-wire-incomplete").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-wire-incomplete"))
     val srv = new WireIngest(spool)
     srv.start()
     try {
@@ -242,7 +243,7 @@ class WireIngestSpec extends SparkFunSuite {
   }
 
   test("valid prefix survives an incomplete tail on the same connection") {
-    val spool = Files.createTempDirectory("graft-wire-prefix").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-wire-prefix"))
     val srv = new WireIngest(spool)
     srv.start()
     try {
@@ -263,7 +264,7 @@ class WireIngestSpec extends SparkFunSuite {
 
   // --- functests/test_wal_parallel.py parity ----------------------------
   test("parallel TCP writers: every sample from every connection lands") {
-    val spool = Files.createTempDirectory("graft-wire-par").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-wire-par"))
     val srv = new WireIngest(spool)
     srv.start()
     try {
@@ -295,7 +296,7 @@ class WireIngestSpec extends SparkFunSuite {
   }
 
   test("OpenTSDB telnet: puts spool, stats/version answer, unknown errors") {
-    val spool = Files.createTempDirectory("graft-wire-tsdb").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-wire-tsdb"))
     val srv = new WireIngest(spool, protocol = WireIngest.OpenTsdb)
     srv.start()
     try {
@@ -329,8 +330,8 @@ class WireIngestSpec extends SparkFunSuite {
   }
 
   test("TCP sessions feed the full ingest path end-to-end") {
-    val spool = Files.createTempDirectory("graft-wire-e2e").toFile
-    val out = Files.createTempDirectory("graft-wire-out").toFile
+    val spool = new java.io.File(TestData.freshScratch("graft-wire-e2e"))
+    val out = new java.io.File(TestData.freshScratch("graft-wire-out"))
     val srv = new WireIngest(spool)
     srv.start()
     try {
