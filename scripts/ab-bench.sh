@@ -12,7 +12,9 @@
 # the change's win count and the verdict of the choosing-metrics §8 rule:
 # a gain needs at least 10 pairs, wins in at least 9/10 of them and
 # medians further apart than the parent's interquartile range. Metrics
-# that are not a gain are checked against BENCHMARK.json's bound.
+# that are not a gain are checked against BENCHMARK.json's bound. For a
+# workload whose runs note their latency by kind (`query`), it also prints
+# each side's median per-kind latency, so a change shows which kinds moved.
 # Reads the benchmark only; raw result lines, each with its run's `# `
 # note lines, go to .bench_build/ab-<workload>-<time>.jsonl.
 set -euo pipefail
@@ -66,7 +68,7 @@ for seed in "$@"; do
 done
 
 python3 - "$root/BENCHMARK.json" "$out" <<'EOF'
-import json, sys
+import json, re, sys
 
 spec = json.load(open(sys.argv[1]))
 runs = [json.loads(l) for l in open(sys.argv[2])]
@@ -131,4 +133,24 @@ for m in metrics:
     print(f"{name} [{m['unit']}]: parent median {pq[1]:.4g} (q1 {pq[0]:.4g}, q3 {pq[2]:.4g}, "
           f"IQR {iqr:.4g}) | change median {cq[1]:.4g} (q1 {cq[0]:.4g}, q3 {cq[2]:.4g}) | "
           f"change wins {wins}/{len(both)} | median {delta:+.4g} ({rel:+.1%}) | {verdict}")
+
+# per-kind latency from each run's "queries: ... by kind (n, median ms):
+# <kind> <n> <ms>, ..." note: per side, the median of the runs' medians
+by_kind = {}
+for r in runs:
+    for n in r.get("notes", []):
+        m = re.search(r"by kind \(n, median ms\): (.*)$", n)
+        for cell in (m.group(1).split(", ") if m else []):
+            kind, _, ms = cell.rsplit(" ", 2)
+            by_kind.setdefault(kind, {}).setdefault(r["side"], []).append(float(ms))
+if by_kind:
+    print()
+    print("latency by kind [ms], median of the runs' per-kind medians:")
+    for kind in sorted(by_kind):
+        a, b = by_kind[kind].get("parent"), by_kind[kind].get("change")
+        if not a or not b:
+            continue
+        pm, cm = quartiles(a)[1], quartiles(b)[1]
+        print(f"  {kind}: parent {pm:.0f} | change {cm:.0f} | "
+              f"{(cm - pm) / pm if pm else 0.0:+.1%} ({len(a)} vs {len(b)} runs)")
 EOF

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.plan.{Frame, TsStore}
+import graft.plan.{Frame, Planner, TsStore}
 
 /** Distributed prefix scan for per-series sequential state machines
   * (SURVEY §7.4 risk 5, the giant-series escape hatch): a 10B-point
@@ -78,7 +78,7 @@ object ChunkedScan {
     * [[ChunkedThresholdBytes]]. */
   def eligible(df: DataFrame): Boolean =
     route.get.chunked.getOrElse(
-      df.queryExecution.optimizedPlan.stats.sizeInBytes >= ChunkedThresholdBytes)
+      Planner.sizeEstimate(df) >= ChunkedThresholdBytes)
 
   /** Deliver entry rows to their chunk's partition: key IS the partition
     * id. Tiny payload (only boundary-spanning keys emit a row). */

@@ -45,15 +45,28 @@ object Ingest {
     * count would funnel every session through few tasks regardless of
     * core count. */
   def sessionFiles(spark: SparkSession, path: String)
-      : org.apache.spark.rdd.RDD[String] =
+      : org.apache.spark.rdd.RDD[String] = sizedSessionFiles(spark, path)._1
+
+  /** [[sessionFiles]] and the session files' total bytes. */
+  private def sizedSessionFiles(spark: SparkSession, path: String)
+      : (org.apache.spark.rdd.RDD[String], Long) =
     org.apache.spark.sql.graftio.HadoopFiles.wholeFiles(spark, path,
       spark.sparkContext.defaultParallelism)
 
   /** Parse RESP session files: one file = one session (dictionary scope),
-    * parallel across files. */
-  def respFiles(spark: SparkSession, path: String): DataFrame =
-    spark.createDataset(sessionFiles(spark, path)
-      .flatMap(LineProtocol.parseRespText))(sampleEnc).toDF()
+    * parallel across files. The frame's Catalyst size estimate is the
+    * session files' bytes, as `RunLog.readRunFiles` reports its runs'. */
+  def respFiles(spark: SparkSession, path: String): DataFrame = {
+    val (files, bytes) = sizedSessionFiles(spark, path)
+    val enc = org.apache.spark.sql.catalyst.encoders
+      .ExpressionEncoder[LineProtocol.ParsedSample]()
+    val rows = files.mapPartitions { it =>
+      val toRow = enc.createSerializer()
+      it.flatMap(LineProtocol.parseRespText).map(s => toRow(s).copy())
+    }
+    org.apache.spark.sql.graftio.InternalRows.toDF(spark, rows, enc.schema,
+      Some(BigInt(bytes)))
+  }
 
   /** The flat layout row before partitioning:
     * `(metric, sname, ts, value, event, tag_<k>...)`. */

@@ -42,14 +42,15 @@ object HadoopFiles {
       .sortBy(_._1)
   }
 
-  /** One UTF-8 decoded String per file under `path`. */
+  /** One UTF-8 decoded String per file under `path`, and the listed
+    * files' total bytes. */
   def wholeFiles(spark: SparkSession, path: String,
-                 minPartitions: Int): RDD[String] = {
+                 minPartitions: Int): (RDD[String], Long) = {
     val files = list(spark, path)
     val slices = math.max(1, math.min(minPartitions, math.max(files.size, 1)))
     val sconf = new SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    spark.sparkContext.parallelize(files, slices).map { case (p, len) =>
+    val contents = spark.sparkContext.parallelize(files, slices).map { case (p, len) =>
       val hp = new org.apache.hadoop.fs.Path(p)
       val fs = hp.getFileSystem(sconf.value)
       require(len <= Int.MaxValue, s"file too large for a single read: $p")
@@ -58,5 +59,6 @@ object HadoopFiles {
       try in.readFully(0, buf) finally in.close()
       new String(buf, java.nio.charset.StandardCharsets.UTF_8)
     }
+    (contents, files.iterator.map(_._2).sum)
   }
 }

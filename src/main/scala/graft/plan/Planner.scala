@@ -397,12 +397,12 @@ object Planner {
       // ignores any explicit order-by there and emits series-major
       // (queryparser.cpp parse_aggregate_query) — sort by sname only.
       if (frame.seriesOrder || !df.columns.contains(Ts)) {
-        df = df.orderBy(col(Sname).asc)
+        df = sorted(df, q, col(Sname).asc)
       } else {
         val tsCol = if (frame.backward) col(Ts).desc else col(Ts).asc
         df = q.orderBy match {
-          case OrderBy.Time   => df.orderBy(tsCol, col(Sname).asc)
-          case OrderBy.Series => df.orderBy(col(Sname).asc, tsCol)
+          case OrderBy.Time   => sorted(df, q, tsCol, col(Sname).asc)
+          case OrderBy.Series => sorted(df, q, col(Sname).asc, tsCol)
         }
       }
     }
@@ -416,9 +416,35 @@ object Planner {
   }
 
   private def finishMeta(frame: Frame, q: Query): Frame = {
-    var df = frame.df.distinct().orderBy(col(Sname).asc)
+    var df = sorted(frame.df.distinct(), q, col(Sname).asc)
     for (o <- q.offset) df = df.offset(clampCount(o))
     for (l <- q.limit) df = df.limit(clampCount(l))
     frame.copy(df = df, ordered = true)
   }
+
+  /** The final global sort, routed by size. A pre-sort frame whose
+    * Catalyst estimate is at most one advisory partition
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`, the size AQE
+    * coalesces every result partition to anyway) is sorted in ONE
+    * partition: a single-partition child needs no range exchange, so
+    * neither the range-sampling job nor the second scan of the input
+    * that feeds the sorted shuffle runs. Larger frames keep the
+    * range-partitioned sort, whose result partitions `toLocalIterator`
+    * pulls one at a time. A `limit` plans the sort as a top-k
+    * (TakeOrderedAndProject), which samples no ranges either, so it
+    * takes neither route. */
+  private def sorted(df: DataFrame, q: Query, order: Column*): DataFrame = {
+    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      df.sparkSession.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    val onePartition = q.limit.isEmpty && sizeEstimate(df) <= advisory
+    (if (onePartition) df.repartition(1) else df).orderBy(order: _*)
+  }
+
+  /** The Catalyst size estimate of `df`'s optimized plan, the one size
+    * read behind every size-routed choice (the final sort here, the
+    * chunked scan's routing). A leaf without statistics, such as a frame
+    * over an unsized RDD, reads as `spark.sql.defaultSizeInBytes`
+    * (Long.MaxValue). */
+  def sizeEstimate(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
 }

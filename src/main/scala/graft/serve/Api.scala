@@ -42,6 +42,10 @@ object Api {
     * table (the derived `store.series` view would put a whole-corpus
     * dropDuplicates shuffle in front of every request).
     *
+    * It runs before planning, except for a single-metric kind on
+    * `/api/query`, where it runs only when the answer cannot prove the
+    * series exist ([[planRequest]]).
+    *
     * The probe projects `metric` and asks `take(1)`, which plans as
     * CollectLimitExec: `executeTake` reads one partition and stops at
     * the first row, so a resolving probe is usually ONE small job
@@ -69,36 +73,69 @@ object Api {
     }
   }
 
-  /** One request path for both entry points: parse and validate the
-    * whole request (the `output` clause included), then the existence
-    * probe, then plan. A malformed request is rejected before any Spark
-    * job runs, whether or not its series exist. A new validation step
-    * added here reaches the library AND the HTTP shapes. */
-  private def planRequest(store: TsStore, json: String)
-      : (Option[(String, Boolean)], Frame) = {
+  /** Kinds whose every output row comes from a series of the first
+    * metric, so a non-empty answer proves the series exist. */
+  private def singleMetric(kind: graft.ast.QueryKind): Boolean = {
+    import graft.ast.QueryKind._
+    kind match {
+      case Select(_) | SelectEvents(_, _) => true
+      case Aggregate(pairs)               => pairs.map(_._1).distinct.size == 1
+      case GroupAggregate(ms, _, _)       => ms.distinct.size == 1
+      case _                              => false
+    }
+  }
+
+  /** One request path for every entry point: parse and validate the
+    * whole request (the `output` clause included), then plan. A
+    * malformed request is rejected before any Spark job runs, whether
+    * or not its series exist. A new validation step added here reaches
+    * the library AND the HTTP shapes.
+    *
+    * The existence probe ([[requireSeries]]) runs before planning unless
+    * `defer` is set and the kind is single-metric. Then planning comes
+    * first, a planning failure still runs the probe (an unknown series
+    * is a 404 whatever else is wrong with the request), and the probe is
+    * returned for the caller to run when the answer turns out empty or
+    * fails before its first row. Otherwise the returned probe is a no-op. */
+  private def planRequest(store: TsStore, json: String, defer: Boolean)
+      : (Option[(String, Boolean)], Frame, () => Unit) = {
     val root = JsonMethods.parse(json)
     val q = QueryJson.fromJValue(root)
     val output = outputSpec(root)
-    requireSeries(store, q)
-    (output, Planner.plan(q, store))
+    val probe = () => requireSeries(store, q)
+    if (defer && singleMetric(q.kind)) {
+      val frame = try Planner.plan(q, store)
+        catch { case e: Exception => probe(); throw e }
+      (output, frame, probe)
+    } else {
+      probe()
+      (output, Planner.plan(q, store), () => ())
+    }
   }
 
   /** `/api/query` with optional output formatting. */
   def query(store: TsStore, json: String): QueryResult = {
-    val (output, frame) = planRequest(store, json)
+    val (output, frame, _) = planRequest(store, json, defer = false)
     output match {
       case None             => Rows(frame.df)
       case Some((fmt, iso)) => Lines(format(frame, fmt, iso))
     }
   }
 
-  /** `/api/query` as formatted wire lines — the HTTP serving shape. The
-    * reference's default output format is RESP
-    * (query_results_pooler.cpp:367-380). */
-  def queryLines(store: TsStore, json: String): Dataset[String] = {
-    val (output, frame) = planRequest(store, json)
+  /** `/api/query` as formatted wire lines — the HTTP serving shape, with
+    * the existence probe run first. The reference's default output
+    * format is RESP (query_results_pooler.cpp:367-380). */
+  def queryLines(store: TsStore, json: String): Dataset[String] =
+    serveLines(store, json, defer = false)._1
+
+  /** [[queryLines]], and the existence probe still owed (see
+    * [[planRequest]]), which `/api/query` runs when the lines turn out
+    * empty or fail before their first row. */
+  private[serve] def serveLines(store: TsStore, json: String, defer: Boolean)
+      : (Dataset[String], () => Unit) = {
+    val (output, frame, probe) = planRequest(store, json, defer)
     val (fmt, iso) = output.getOrElse(("resp", true))
-    format(frame, fmt, iso)
+    (format(frame, fmt, iso), probe)
   }
 
   /** `fmt` is one of [[OutputFormats]] ([[outputSpec]] checked it). */

@@ -18,7 +18,11 @@ import graft.plan.TsStore
   * Results stream CHUNKED through `toLocalIterator`: the serving JVM
   * holds one partition at a time — the reference's lazy-cursor contract
   * (httpserver.cpp:15-34 read_callback pulls 64 KiB at a time) — so an
-  * arbitrarily large result set never materializes driver-side.
+  * arbitrarily large result set never materializes driver-side. A small
+  * result is ONE partition: the planner sorts a frame whose Catalyst
+  * estimate is at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+  * in a single partition, the size AQE coalesces every result partition
+  * of a larger, range-sorted result to.
   *
   * JDK-built-in `com.sun.net.httpserver` — no added dependencies.
   *
@@ -55,13 +59,20 @@ final class ApiHttp(storeProvider: () => TsStore, port: Int = 0) {
     ex.close()
   }
 
-  /** Chunked text stream, one line per element (crlf-terminated). */
-  private def streamLines(ex: HttpExchange, lines: Dataset[String]): Unit = {
+  /** Chunked text stream, one line per element (crlf-terminated).
+    * `probe` is the existence probe the answer still owes
+    * ([[Api.serveLines]]): it runs when the lines are empty or fail
+    * before their first row, and its 404 wins over either. */
+  private def streamLines(ex: HttpExchange, lines: Dataset[String],
+                          probe: () => Unit): Unit = {
     // plan + first partition run BEFORE the 200 commits: analysis errors
     // and immediate execution failures become clean error responses (the
     // caller's catch). Only genuinely mid-stream failures remain.
-    val it = lines.toLocalIterator()
-    var more = it.hasNext
+    val (it, first) =
+      try { val it = lines.toLocalIterator(); (it, it.hasNext) }
+      catch { case e: Exception => probe(); throw e }
+    if (!first) probe()
+    var more = first
     ex.getResponseHeaders.add("Content-Type", "text/plain; charset=utf-8")
     ex.sendResponseHeaders(200, 0) // length 0 => chunked
     val out: OutputStream = ex.getResponseBody
@@ -106,12 +117,15 @@ final class ApiHttp(storeProvider: () => TsStore, port: Int = 0) {
     df.select(df.columns.head).map(_.getString(0))
   }
 
-  private def post(fn: String => Dataset[String]): HttpHandler =
+  private def post(fn: String => (Dataset[String], () => Unit)): HttpHandler =
     (ex: HttpExchange) =>
       try {
         if (ex.getRequestMethod != "POST")
           errorLine(ex, 404, "Invalid request")
-        else streamLines(ex, fn(readBody(ex)))
+        else {
+          val (lines, probe) = fn(readBody(ex))
+          streamLines(ex, lines, probe)
+        }
       } catch {
         // empty series resolution -> the reference's 404 `-not found`
         // (httpserver.cpp:111-114 maps AKU_ENOT_FOUND to MHD_HTTP_NOT_FOUND)
@@ -132,11 +146,12 @@ final class ApiHttp(storeProvider: () => TsStore, port: Int = 0) {
             Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
       }
 
-  server.createContext("/api/query", post(Api.queryLines(storeProvider(), _)))
+  server.createContext("/api/query",
+    post(Api.serveLines(storeProvider(), _, defer = true)))
   server.createContext("/api/search",
-    post(json => firstColumn(Api.search(storeProvider(), json))))
+    post(json => (firstColumn(Api.search(storeProvider(), json)), () => ())))
   server.createContext("/api/suggest",
-    post(json => firstColumn(Api.suggest(storeProvider(), json))))
+    post(json => (firstColumn(Api.suggest(storeProvider(), json)), () => ())))
   server.createContext("/api/stats", get { () =>
     val r = Api.stats(storeProvider()).collect()(0) // one aggregate row by contract
     val fields = r.schema.fieldNames.zipWithIndex.map { case (f, i) =>

@@ -16,8 +16,12 @@ import graft.plan.{Frame, TsStore}
   * integer.
   *
   * This is the serving edge: a per-partition string map over the final
-  * ordered frame, streamed to the client via `toLocalIterator` — no driver
-  * materialization.
+  * ordered frame, streamed to the client via `toLocalIterator`, one
+  * partition at a time — no driver materialization beyond one partition.
+  * A small result is one partition of at most the advisory size
+  * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`, by the planner's
+  * Catalyst estimate); a larger one is range-sorted into partitions AQE
+  * coalesces to that size.
   */
 object OutputFormat {
 

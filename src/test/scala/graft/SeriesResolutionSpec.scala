@@ -132,6 +132,27 @@ class SeriesResolutionSpec extends SparkFunSuite {
     }
   }
 
+  test("not-found semantics hold where /api/query defers the probe and where it keeps it") {
+    withServer(Ingest.readLayout(spark, layout)) { port =>
+      def body(json: String): (Int, String) = HttpTest.http(port, "/api/query", body = json)
+      // a join keeps the eager probe of its first metric
+      assert(query(port, s"""{"join":["nope","cpu"],$inRange,$csv}""")._1 == 404)
+      assert(query(port, s"""{"join":["cpu","mem"],"where":{"host":"h0"},$inRange,$csv}""") ==
+        ((200, Set("cpu|mem host=h0 region=eu"), 10)))
+      // a request that fails at plan time: 404 for an unknown series, as
+      // when the probe ran first, and 400 for a known one
+      val badApply = """"apply":[{"name":"no-such-node"}]"""
+      assert(query(port, s"""{"select":"nope",$badApply,$inRange,$csv}""")._1 == 404)
+      assert(body(s"""{"select":"cpu",$badApply,$inRange,$csv}""")._1 == 400)
+      // an offset past the last row: 200 and an empty body for a known
+      // series, 404 for an unknown one
+      val offset = """"offset":100"""
+      assert(body(s"""{"select":"cpu","where":{"host":"h0"},$inRange,$offset,$csv}""") ==
+        ((200, "")))
+      assert(query(port, s"""{"select":"cpu","where":{"host":"h7"},$inRange,$offset,$csv}""")._1 == 404)
+    }
+  }
+
   private def jobsOf(f: => Unit): Int = ListenerBus.jobsOf(spark.sparkContext)(f)
 
   test("a resolving probe runs one Spark job; a miss at most ceil(log4 partitions)+1") {
