@@ -1,8 +1,8 @@
 package graft
 
 /** Dev tool: print the executed plan of named gates (all gates if none
-  * named) with exchange/broadcast counts — the `.explain` audit loop the
-  * build process runs after each operator lands. Usage:
+  * named) with exchange/broadcast/group-limit counts — the `.explain`
+  * audit loop the build process runs after each operator lands. Usage:
   *   runMain graft.PlanAudit <sfDir> [gate ...]
   */
 object PlanAudit {
@@ -18,21 +18,17 @@ object PlanAudit {
   val LowCardKeys: Set[String] =
     Set("source", "lang", "language", "split", "stratum", "category")
 
-  /** Partition-key name sets of every Window in `df`'s executed plan
-    * (WindowExec and WindowGroupLimitExec; adaptive plans unwrapped).
-    * Empty inner seq = an unpartitioned (single-task) window. */
-  def windowPartitionKeys(df: org.apache.spark.sql.DataFrame)
-      : Seq[Seq[String]] = {
+  /** Every WindowExec and WindowGroupLimitExec in `df`'s executed plan
+    * (adaptive plans unwrapped). */
+  private def windows(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
-    val out = scala.collection.mutable.ArrayBuffer[Seq[String]]()
+    val out = scala.collection.mutable.ArrayBuffer[SparkPlan]()
     def walk(p: SparkPlan): Unit = {
       p match {
-        case w: WindowExec =>
-          out += w.partitionSpec.flatMap(_.references.map(_.name)).distinct
-        case w: WindowGroupLimitExec =>
-          out += w.partitionSpec.flatMap(_.references.map(_.name)).distinct
+        case w @ (_: WindowExec | _: WindowGroupLimitExec) => out += w
         case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
         case _ =>
       }
@@ -41,6 +37,25 @@ object PlanAudit {
     walk(df.queryExecution.executedPlan)
     out.toSeq
   }
+
+  /** Partition-key name sets of every Window in `df`'s executed plan
+    * (WindowExec and WindowGroupLimitExec; adaptive plans unwrapped).
+    * Empty inner seq = an unpartitioned (single-task) window. */
+  def windowPartitionKeys(df: org.apache.spark.sql.DataFrame)
+      : Seq[Seq[String]] = {
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    windows(df).collect {
+      case w: WindowExec => w.partitionSpec
+      case w: WindowGroupLimitExec => w.partitionSpec
+    }.map(_.flatMap(_.references.map(_.name)).distinct)
+  }
+
+  /** WindowGroupLimitExec nodes in `df`'s executed plan (a partial and a
+    * final one per rank-filtered window): a top-k window that loses its
+    * limit sorts every candidate of a group. */
+  def groupLimits(df: org.apache.spark.sql.DataFrame): Int =
+    windows(df).count(
+      _.isInstanceOf[org.apache.spark.sql.execution.window.WindowGroupLimitExec])
 
   /** Windows whose EVERY partition key is a known corpus-independent
     * column — the flagged shape. A window also partitioned by a scaling
@@ -68,7 +83,7 @@ object PlanAudit {
         val (pRead, pTotal) = Bench.partitionPruning(df)
         val lcw = lowCardWindows(df)
         println(s"shuffle-exchanges=$exchanges broadcasts=$bcasts" +
-          s" plan_ms=$planMs" +
+          s" group-limits=${groupLimits(df)} plan_ms=$planMs" +
           (if (pTotal > 0) s" partitions=$pRead/$pTotal" else ""))
         lcw.foreach(ks => println(
           s"LOW_CARD_WINDOW: partitioned only by [${ks.mkString(",")}]" +

@@ -26,4 +26,6 @@ object VecMath {
                            probes: Int, rounded: Boolean = true): Column =
     org.apache.spark.sql.graftio.VecMath.hierCentroidTopCells(vec, fine,
       coarse, children, coarseProbes, probes, rounded)
+  def evalCells(cells: Column): Seq[Int] =
+    org.apache.spark.sql.graftio.VecMath.evalCells(cells)
 }

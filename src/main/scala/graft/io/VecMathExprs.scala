@@ -287,7 +287,7 @@ object VecMath {
 
   /** Spark `round(x, 6)` for doubles, verbatim (HALF_UP via the decimal
     * string representation; NaN/Infinity pass through) — shared by the
-    * interpreted and codegen paths of [[CentroidTopCells]] so the
+    * interpreted and codegen paths of the centroid kernels so the
     * centroid scores can never drift from the Column-level `round` the
     * SQL oracles replay. */
   def round6(x: Double): Double =
@@ -295,38 +295,66 @@ object VecMath {
     else java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** Top-`probes` centroid cells of a vector in ONE fused pass — the
-    * k-means/IVF assignment and probe-list kernel.
-    *
-    * The Column formulation (`greatest`/`array_sort` over k
-    * `struct(round(cosine(vec, lit-array)), cid)` subtrees) re-reads the
-    * vector k times and stops scaling in k: at k=160 cells its generated
-    * code degrades to allocation-heavy evaluation and a 100x-volume
-    * k-means step ran for half an hour. This expression reads the vector
-    * once, loops centroids in primitive arrays (k·dim multiplies total),
-    * and keeps an insertion buffer of `probes` entries.
-    *
-    * Semantics are bit-identical to the Column form it replaces:
-    * per-cell score = `round(cosine(vec, c), 6)` ([[round6]] = Spark's
-    * HALF_UP round; cosine NaN on a zero norm), order = score
-    * descending with ties to the LARGER cid (the `greatest`-struct /
-    * `reverse(array_sort)` convention, NaN sorting above every real
-    * score like Spark's double ordering). Element 0 is therefore the
-    * `centroidIdRounded` assignment. NULL on a null input, a null
-    * element, or a dimension mismatch. `rounded = false` skips the
-    * per-score round — the raw-cosine `centroidId` convention (IVF list
-    * assignment); accumulation order matches the Column form, so raw
-    * scores are bit-identical too. */
-  final case class CentroidTopCells(child: Expression,
-                                    centroids: Seq[Seq[Double]], probes: Int,
-                                    rounded: Boolean = true)
+  /** Euclidean norm, accumulated in index order (the `map(x*x).sum`
+    * order of the Column formulation). */
+  private def norm(v: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < v.length) { s += v(i) * v(i); i += 1 }
+    math.sqrt(s)
+  }
+
+  /** The one scoring loop of the centroid kernels: the top `cap` of the
+    * rows `cand` (ascending ids) of the row-major matrix `mat` by cosine
+    * with `v` (norm `nv`; `norms` holds the rows' norms), each score
+    * rounded by [[round6]] unless `rounded` is false. Order is score
+    * descending with ties to the LARGER id (candidates arrive ascending
+    * and an equal score is inserted ahead of its equals — the
+    * `greatest`-struct / `reverse(array_sort)` convention), NaN above
+    * every real score (`Double.compare`, like Spark's double ordering).
+    * Returns the filled ids, best first. */
+  private def topRows(v: Array[Double], nv: Double, mat: Array[Double],
+                      norms: Array[Double], cand: Array[Int], cap: Int,
+                      rounded: Boolean): Array[Int] = {
+    val dim = v.length
+    val topS = Array.fill(cap)(Double.NegativeInfinity)
+    val topC = Array.fill(cap)(-1)
+    var filled = 0
+    var i = 0
+    while (i < cand.length) {
+      val c = cand(i)
+      var dot = 0.0
+      val off = c * dim
+      var j = 0
+      while (j < dim) { dot += v(j) * mat(off + j); j += 1 }
+      val raw = dot / (nv * norms(c))
+      val s = if (rounded) round6(raw) else raw
+      var p = 0
+      while (p < filled && java.lang.Double.compare(s, topS(p)) < 0) p += 1
+      if (p < cap) {
+        var q = math.min(filled, cap - 1)
+        while (q > p) { topS(q) = topS(q - 1); topC(q) = topC(q - 1); q -= 1 }
+        topS(p) = s; topC(p) = c
+        if (filled < cap) filled += 1
+      }
+      i += 1
+    }
+    java.util.Arrays.copyOf(topC, filled)
+  }
+
+  /** The shared body of the centroid kernels: copy the vector in once
+    * (NULL on a null input, a null element or a dimension mismatch) and
+    * hand it to [[top]]. The k x dim loop stays in compiled scala — one
+    * virtual call per row, zero closure allocation; only the copy-in is
+    * generated, so the method never approaches the 64KB codegen limit no
+    * matter how large k grows. */
+  sealed abstract class TopCellsKernel
       extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
       with ExpectsInputTypes {
-    require(centroids.nonEmpty, "no centroids")
-    require(centroids.forall(_.size == centroids.head.size),
-      "ragged centroid matrix")
-    require(probes >= 1 && probes <= centroids.size,
-      s"probes must be in [1, ${centroids.size}]")
+    protected def dim: Int
+
+    /** The top cell ids of a copied-in vector, best first. */
+    private[graftio] def top(v: Array[Double]): Array[Int]
 
     override def inputTypes: Seq[AbstractDataType] = Seq(AcceptedArray)
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -335,46 +363,9 @@ object VecMath {
     // non-nullable child, nullSafeCodeGen binds ev.isNull to the literal
     // `false` and the fragment's `isNull = true` branch is uncompilable
     override def nullable: Boolean = true
-    override def prettyName: String = "centroid_top_cells"
 
     @transient private lazy val childFloat: Boolean =
       child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    @transient private lazy val k = centroids.size
-    @transient private lazy val dim = centroids.head.size
-    @transient private lazy val flat: Array[Double] =
-      centroids.flatten.toArray
-    @transient private lazy val cnorms: Array[Double] =
-      centroids.map(c => math.sqrt(c.map(x => x * x).sum)).toArray
-
-    /** Shared kernel: scores into (topS, topC); returns the filled ids. */
-    private[graftio] def topCells(v: Array[Double]): Array[Int] = {
-      var nv = 0.0
-      var i = 0
-      while (i < dim) { nv += v(i) * v(i); i += 1 }
-      nv = math.sqrt(nv)
-      val topS = Array.fill(probes)(Double.NegativeInfinity)
-      val topC = Array.fill(probes)(-1)
-      var filled = 0
-      var c = 0
-      while (c < k) {
-        var dot = 0.0
-        val off = c * dim
-        var j = 0
-        while (j < dim) { dot += v(j) * flat(off + j); j += 1 }
-        val raw = dot / (nv * cnorms(c))
-        val s = if (rounded) round6(raw) else raw
-        var p = 0
-        while (p < filled && java.lang.Double.compare(s, topS(p)) < 0) p += 1
-        if (p < probes) {
-          var q = math.min(filled, probes - 1)
-          while (q > p) { topS(q) = topS(q - 1); topC(q) = topC(q - 1); q -= 1 }
-          topS(p) = s; topC(p) = c
-          if (filled < probes) filled += 1
-        }
-        c += 1
-      }
-      java.util.Arrays.copyOf(topC, filled)
-    }
 
     override def nullSafeEval(input: Any): Any = {
       val arr = input.asInstanceOf[ArrayData]
@@ -387,23 +378,19 @@ object VecMath {
         i += 1
       }
       org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(topCells(v))
+        .fromPrimitiveArray(top(v))
     }
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, arr => {
-        val self = ctx.addReferenceObj("centroidTopCells", this,
-          classOf[CentroidTopCells].getName)
+        val self = ctx.addReferenceObj(prettyName, this,
+          classOf[TopCellsKernel].getName)
         val v = ctx.freshName("v")
         val i = ctx.freshName("i")
         val bad = ctx.freshName("bad")
         val get =
           if (childFloat) s"(double) $arr.getFloat($i)"
           else s"$arr.getDouble($i)"
-        // the k x dim loop stays in compiled scala (topCells) — one
-        // virtual call per row, zero closure allocation; only the array
-        // copy-in is generated here, so the method never approaches the
-        // 64KB codegen limit no matter how large k grows
         s"""
            |boolean $bad = ($arr.numElements() != $dim);
            |final double[] $v = $bad ? null : new double[$dim];
@@ -417,10 +404,56 @@ object VecMath {
            |  ${ev.isNull} = true;
            |} else {
            |  ${ev.value} = org.apache.spark.sql.catalyst.expressions
-           |    .UnsafeArrayData.fromPrimitiveArray($self.topCells($v));
+           |    .UnsafeArrayData.fromPrimitiveArray($self.top($v));
            |}
          """.stripMargin
       })
+  }
+
+  /** Top-`probes` centroid cells of a vector in ONE fused pass — the
+    * k-means/IVF assignment and probe-list kernel.
+    *
+    * The Column formulation (`greatest`/`array_sort` over k
+    * `struct(round(cosine(vec, lit-array)), cid)` subtrees) re-reads the
+    * vector k times and stops scaling in k: at k=160 cells its generated
+    * code degrades to allocation-heavy evaluation and a 100x-volume
+    * k-means step ran for half an hour. This expression reads the vector
+    * once, loops centroids in primitive arrays (k·dim multiplies total),
+    * and keeps an insertion buffer of `probes` entries ([[topRows]]).
+    *
+    * Semantics are bit-identical to the Column form it replaces:
+    * per-cell score = `round(cosine(vec, c), 6)` ([[round6]] = Spark's
+    * HALF_UP round; cosine NaN on a zero norm), order = score
+    * descending with ties to the LARGER cid (the `greatest`-struct /
+    * `reverse(array_sort)` convention, NaN sorting above every real
+    * score like Spark's double ordering). Element 0 is therefore the
+    * rounded nearest-centroid assignment. NULL on a null input, a null
+    * element, or a dimension mismatch. `rounded = false` skips the
+    * per-score round — the raw-cosine assignment convention;
+    * accumulation order matches the Column form, so raw scores are
+    * bit-identical too. */
+  final case class CentroidTopCells(child: Expression,
+                                    centroids: Seq[Seq[Double]], probes: Int,
+                                    rounded: Boolean = true)
+      extends TopCellsKernel {
+    require(centroids.nonEmpty, "no centroids")
+    require(centroids.forall(_.size == centroids.head.size),
+      "ragged centroid matrix")
+    require(probes >= 1 && probes <= centroids.size,
+      s"probes must be in [1, ${centroids.size}]")
+
+    override def prettyName: String = "centroid_top_cells"
+
+    @transient protected lazy val dim: Int = centroids.head.size
+    @transient private lazy val flat: Array[Double] =
+      centroids.flatten.toArray
+    @transient private lazy val norms: Array[Double] =
+      centroids.map(c => norm(c.toArray)).toArray
+    @transient private lazy val all: Array[Int] =
+      Array.range(0, centroids.size)
+
+    private[graftio] def top(v: Array[Double]): Array[Int] =
+      topRows(v, norm(v), flat, norms, all, probes, rounded)
 
     override protected def withNewChildInternal(newChild: Expression): CentroidTopCells =
       copy(child = newChild)
@@ -430,24 +463,6 @@ object VecMath {
                        probes: Int, rounded: Boolean = true): Column =
     Columns.of(CentroidTopCells(Columns.exprOf(vec), centroids, probes,
       rounded))
-
-  /** Insert (s, c) into the descending insertion buffers shared by the
-    * centroid kernels — same ordering convention as
-    * [[CentroidTopCells.topCells]]'s inline loop: score descending,
-    * equal scores keep the LATER-inserted (larger, when iterating cids
-    * ascending) cid first, NaN sorts above every real score
-    * (`Double.compare`). Returns the new filled count. */
-  private[graftio] def insertTop(s: Double, c: Int, topS: Array[Double],
-                                 topC: Array[Int], filled: Int): Int = {
-    val cap = topS.length
-    var p = 0
-    while (p < filled && java.lang.Double.compare(s, topS(p)) < 0) p += 1
-    if (p >= cap) return filled
-    var q = math.min(filled, cap - 1)
-    while (q > p) { topS(q) = topS(q - 1); topC(q) = topC(q - 1); q -= 1 }
-    topS(p) = s; topC(p) = c
-    if (filled < cap) filled + 1 else filled
-  }
 
   /** Two-level (hierarchical) variant of [[CentroidTopCells]] — the
     * scale-safe assignment kernel for cell counts that grow with the
@@ -461,26 +476,25 @@ object VecMath {
     * groups' fine children — O((√k + coarseProbes·k/√k)·dim) per row,
     * i.e. O(√k) for balanced groups.
     *
-    * Within the probed candidate set the scoring convention is
-    * BIT-IDENTICAL to [[CentroidTopCells]]: same `round6` HALF_UP
-    * scores (or raw under `rounded = false`), candidates iterated in
-    * ascending cid order so equal scores keep the larger cid, NaN
-    * sorts above real scores. With `coarseProbes == coarse.size` the
-    * candidate set is ALL fine centroids and the result equals the flat
-    * kernel exactly (the equivalence spec's anchor); with fewer probes
-    * the assignment is approximate in the standard two-level-IVF sense —
-    * a vector whose true nearest fine centroid hides under an unprobed
-    * coarse group is assigned to the best probed one. Coarse routing
-    * uses the same score/tie convention, so the probe choice itself
-    * replays deterministically. */
+    * Both stages run [[topRows]], so within the probed candidate set the
+    * scoring convention is BIT-IDENTICAL to [[CentroidTopCells]]: same
+    * `round6` HALF_UP scores (or raw under `rounded = false`),
+    * candidates iterated in ascending cid order so equal scores keep the
+    * larger cid, NaN sorts above real scores. With `coarseProbes ==
+    * coarse.size` the candidate set is ALL fine centroids and the result
+    * equals the flat kernel exactly (the equivalence spec's anchor); with
+    * fewer probes the assignment is approximate in the standard
+    * two-level-IVF sense — a vector whose true nearest fine centroid
+    * hides under an unprobed coarse group is assigned to the best probed
+    * one. Coarse routing uses the same score/tie convention, so the
+    * probe choice itself replays deterministically. */
   final case class HierCentroidTopCells(child: Expression,
                                         fine: Seq[Seq[Double]],
                                         coarse: Seq[Seq[Double]],
                                         fineChildren: Seq[Seq[Int]],
                                         coarseProbes: Int, probes: Int,
                                         rounded: Boolean = true)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-      with ExpectsInputTypes {
+      extends TopCellsKernel {
     require(fine.nonEmpty && coarse.nonEmpty, "no centroids")
     require(fine.forall(_.size == fine.head.size) &&
       coarse.forall(_.size == fine.head.size),
@@ -495,121 +509,43 @@ object VecMath {
     require(coarseProbes >= 1 && coarseProbes <= coarse.size,
       s"coarseProbes must be in [1, ${coarse.size}]")
 
-    override def inputTypes: Seq[AbstractDataType] = Seq(AcceptedArray)
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    // same nullability note as CentroidTopCells: null for non-null
-    // inputs too (dimension mismatch, null element)
-    override def nullable: Boolean = true
     override def prettyName: String = "hier_centroid_top_cells"
 
-    @transient private lazy val childFloat: Boolean =
-      child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    @transient private lazy val dim = fine.head.size
-    @transient private lazy val kc = coarse.size
+    @transient protected lazy val dim: Int = fine.head.size
     @transient private lazy val flatF: Array[Double] = fine.flatten.toArray
     @transient private lazy val fNorms: Array[Double] =
-      fine.map(c => math.sqrt(c.map(x => x * x).sum)).toArray
+      fine.map(c => norm(c.toArray)).toArray
     @transient private lazy val flatC: Array[Double] = coarse.flatten.toArray
     @transient private lazy val cNorms: Array[Double] =
-      coarse.map(c => math.sqrt(c.map(x => x * x).sum)).toArray
+      coarse.map(c => norm(c.toArray)).toArray
+    @transient private lazy val allCoarse: Array[Int] =
+      Array.range(0, coarse.size)
     // each child list ascending: candidate iteration order must be
     // ascending GLOBAL cid for the flat kernel's tie convention
     @transient private lazy val childArr: Array[Array[Int]] =
       fineChildren.map(_.toArray.sorted).toArray
 
-    private[graftio] def topCellsHier(v: Array[Double]): Array[Int] = {
-      var nv = 0.0
-      var i = 0
-      while (i < dim) { nv += v(i) * v(i); i += 1 }
-      nv = math.sqrt(nv)
+    private[graftio] def top(v: Array[Double]): Array[Int] = {
+      val nv = norm(v)
       // stage 1: route to the coarseProbes nearest coarse groups
-      val cS = Array.fill(coarseProbes)(Double.NegativeInfinity)
-      val cC = Array.fill(coarseProbes)(-1)
-      var cf = 0
-      var c = 0
-      while (c < kc) {
-        var dot = 0.0
-        val off = c * dim
-        var j = 0
-        while (j < dim) { dot += v(j) * flatC(off + j); j += 1 }
-        val raw = dot / (nv * cNorms(c))
-        cf = insertTop(if (rounded) round6(raw) else raw, c, cS, cC, cf)
-        c += 1
-      }
+      val groups = topRows(v, nv, flatC, cNorms, allCoarse, coarseProbes,
+        rounded)
       // stage 2: gather the probed groups' fine children, ascending cid
       var nCand = 0
       var p = 0
-      while (p < cf) { nCand += childArr(cC(p)).length; p += 1 }
+      while (p < groups.length) { nCand += childArr(groups(p)).length; p += 1 }
       val cand = new Array[Int](nCand)
       var o = 0
       p = 0
-      while (p < cf) {
-        val ch = childArr(cC(p))
+      while (p < groups.length) {
+        val ch = childArr(groups(p))
         System.arraycopy(ch, 0, cand, o, ch.length)
         o += ch.length; p += 1
       }
       java.util.Arrays.sort(cand)
       // stage 3: exact argmax over the candidates, flat conventions
-      val tS = Array.fill(probes)(Double.NegativeInfinity)
-      val tC = Array.fill(probes)(-1)
-      var tf = 0
-      var ci = 0
-      while (ci < nCand) {
-        val fc = cand(ci)
-        var dot = 0.0
-        val off = fc * dim
-        var j = 0
-        while (j < dim) { dot += v(j) * flatF(off + j); j += 1 }
-        val raw = dot / (nv * fNorms(fc))
-        tf = insertTop(if (rounded) round6(raw) else raw, fc, tS, tC, tf)
-        ci += 1
-      }
-      java.util.Arrays.copyOf(tC, tf)
+      topRows(v, nv, flatF, fNorms, cand, probes, rounded)
     }
-
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      if (arr.numElements() != dim) return null
-      val v = new Array[Double](dim)
-      var i = 0
-      while (i < dim) {
-        if (arr.isNullAt(i)) return null
-        v(i) = if (childFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-        i += 1
-      }
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(topCellsHier(v))
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, arr => {
-        val self = ctx.addReferenceObj("hierCentroidTopCells", this,
-          classOf[HierCentroidTopCells].getName)
-        val v = ctx.freshName("v")
-        val i = ctx.freshName("i")
-        val bad = ctx.freshName("bad")
-        val get =
-          if (childFloat) s"(double) $arr.getFloat($i)"
-          else s"$arr.getDouble($i)"
-        // same shape as CentroidTopCells: only the copy-in is generated,
-        // the routed two-stage loop stays in compiled scala
-        s"""
-           |boolean $bad = ($arr.numElements() != $dim);
-           |final double[] $v = $bad ? null : new double[$dim];
-           |if (!$bad) {
-           |  for (int $i = 0; $i < $dim; $i++) {
-           |    if ($arr.isNullAt($i)) { $bad = true; break; }
-           |    $v[$i] = $get;
-           |  }
-           |}
-           |if ($bad) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  ${ev.value} = org.apache.spark.sql.catalyst.expressions
-           |    .UnsafeArrayData.fromPrimitiveArray($self.topCellsHier($v));
-           |}
-         """.stripMargin
-      })
 
     override protected def withNewChildInternal(
         newChild: Expression): HierCentroidTopCells =
@@ -622,6 +558,14 @@ object VecMath {
                            probes: Int, rounded: Boolean = true): Column =
     Columns.of(HierCentroidTopCells(Columns.exprOf(vec), fine, coarse,
       children, coarseProbes, probes, rounded))
+
+  /** A centroid-cells Column over literal inputs (a single query's probe
+    * list), evaluated on the driver: the kernel's own loop, no Spark job.
+    * The whole Column tree is converted, literal leaves included (the
+    * plain bridge leaves them to the analyzer). */
+  def evalCells(cells: Column): Seq[Int] =
+    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(cells.node)
+      .eval().asInstanceOf[ArrayData].toIntArray().toSeq
 
   /** ALL hyperplane-LSH table keys of a vector in one fused kernel —
     * `tables` packed sign-bit keys, each over `nPlanes` hyperplanes

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`Array[Float]`):
@@ -41,19 +42,136 @@ object Embed {
       transform(vec, x => x.cast("double") / n)
     }
 
+  /** Rows with a non-zero vector: cosine is undefined on a zero norm,
+    * and its NaN score would sort above every real one. */
+  private def nonZero(df: DataFrame, vecCol: String): DataFrame =
+    df.filter(dot(col(vecCol), col(vecCol)) > 0.0)
+
+  /** A query vector divided by its norm (the driver-side unit query). */
+  private def unit(query: Seq[Double]): Seq[Double] = {
+    val n = math.sqrt(query.map(x => x * x).sum)
+    query.map(_ / n)
+  }
+
+  // --- the nearest-neighbour engine ------------------------------------------
+  // Every exact and approximate k-NN product below is filter-then-refine
+  // (distributed similarity search): candidates (all rows, probed IVF
+  // cells, hyperplane buckets or PQ codes), a score expression (rounded
+  // cosine or ADC), then each query's top k by (score desc, id asc). The
+  // stages are written once, here.
+
+  /** The `probes` nearest centroid cells of `vec`, nearest first: one
+    * fused k x dim pass (`VecMath.CentroidTopCells`), or under `hier` the
+    * two-level routed kernel (O(√k·dim) per row, for corpus-proportional
+    * cell counts; the index must be built over exactly `centroids`).
+    * Scores are the 6-decimal-rounded cosine (raw when `rounded` is
+    * false): k-means assignments must replay across runs and against the
+    * SQL oracle, and raw float-vs-double scores can disagree in the 7th
+    * decimal at a cell boundary. Ties go to the LARGER cell id, so
+    * `element_at(cells(v, …, 1), 1)` is the assignment and the full
+    * array the probe list in the same order. A single centroid is cell 0
+    * for every row. */
+  private[llm] def cells(vec: Column, centroids: Seq[Seq[Double]],
+                         hier: Option[CentroidIndex], probes: Int,
+                         rounded: Boolean = true): Column = {
+    require(centroids.nonEmpty, "no centroids")
+    require(hier.forall(_.fine == centroids),
+      "hier index was built over a different centroid set")
+    if (centroids.size == 1) typedLit(Seq(0))
+    else hier.fold(graft.functions.VecMath.centroidTopCells(vec, centroids,
+      probes, rounded))(ix => graft.functions.VecMath.hierCentroidTopCells(
+      vec, ix.fine, ix.coarse, ix.children, ix.coarseProbes, probes,
+      rounded))
+  }
+
+  /** A single query's `nProbe` nearest cells as a predicate on
+    * `ivf_cell`: [[cells]] evaluated on the driver over the literal query
+    * (the kernel's own loop, no Spark job). On a stored layout the
+    * predicate is a partition filter, so only the probed directories are
+    * read. `rounded` must be the rounding that assigned the cells: then a
+    * vector whose centroid is sampled twice is probed in the larger
+    * duplicate cell, where its assignment put it. */
+  private def probe(query: Seq[Double], centroids: Seq[Seq[Double]],
+                    nProbe: Int, rounded: Boolean): Column = {
+    require(nProbe >= 1, "nProbe must be positive")
+    col("ivf_cell").isin(graft.functions.VecMath.evalCells(cells(
+      typedLit(query), centroids, None, math.min(nProbe, centroids.size),
+      rounded)): _*)
+  }
+
+  /** Candidates "all": every pair of a `stream` row and a broadcast `small`
+    * row that passes `pred`. Query rows carry `qid`/`__qv`, neighbour rows
+    * `nid`/`__nv`; either may be the broadcast side. Streaming the query
+    * side keeps each query's candidates in one partition, so the top-k
+    * limit cuts them to k before the shuffle. */
+  private def allPairs(stream: DataFrame, small: DataFrame,
+                       pred: Option[Column]): DataFrame =
+    pred.fold(stream.join(broadcast(small)))(stream.join(broadcast(small), _))
+
+  /** Candidates "cells": each query's probe list (`__cells`, from
+    * [[cells]]) exploded and equi-joined to the neighbours assigned to
+    * that cell (`ivf_cell`), keeping the pairs that pass `pred` — a query
+    * scores only its probed cells. */
+  private def cellPairs(nbrs: DataFrame, queries: DataFrame,
+                        pred: Option[Column]): DataFrame = {
+    val pairs = queries
+      .select(col("*"), explode(col("__cells")).as("ivf_cell"))
+      .drop("__cells")
+      .join(nbrs, "ivf_cell")
+    pred.fold(pairs)(pairs.filter)
+  }
+
+  /** Each query's `k` best candidates by (`score` desc, `id` asc) — the
+    * one top-k of every k-NN product. Keyed by `query`, it is a
+    * `row_number` window filtered to `<= k` directly, the shape Catalyst
+    * turns into a WindowGroupLimit (k rows per query survive each
+    * partition before the shuffle); the rank is kept as `rnk` (long).
+    * Without a query key (a single query) it is a TakeOrderedAndProject:
+    * a one-key window would shuffle every candidate into one task. */
+  private[llm] def topKBy(cands: DataFrame, k: Int, id: String,
+                          query: Option[String] = None,
+                          score: String = "score"): DataFrame = {
+    val order = Seq(col(score).desc, col(id).asc)
+    query.fold(cands.orderBy(order: _*).limit(k)) { q =>
+      cands.withColumn("rnk", row_number().over(
+          Window.partitionBy(col(q)).orderBy(order: _*)))
+        .filter(col("rnk") <= k)
+        .withColumn("rnk", col("rnk").cast("long"))
+    }
+  }
+
+  /** Score candidate pairs by the 6-decimal cosine of `__qv` and
+    * `__nv` and keep each `qid`'s `k` best by (score desc, `nid` asc).
+    * The vectors are projected off before the top-k: a sort still
+    * carrying both vectors per candidate moved ~20x the necessary bytes
+    * and spilled at the 100x ScaleCheck. `keep` are the product's extra
+    * columns. Output: qid, nid, keep…, score, rnk. */
+  private def nearest(pairs: DataFrame, k: Int, keep: String*): DataFrame =
+    topKBy(pairs.select((Seq(col("qid"), col("nid")) ++ keep.map(col) :+
+        round(cosine(col("__qv"), col("__nv")), 6).as("score")): _*),
+      k, "nid", Some("qid"))
+
+  /** Each row's nearest cell (`__cell`, the rounded assignment) and its
+    * rounded cosine to that cell's centroid (`__cos`), the centroid read
+    * from one literal matrix. */
+  private def nearestCell(corpus: DataFrame, centroids: Seq[Seq[Double]],
+                          vecCol: String): DataFrame =
+    nonZero(corpus, vecCol)
+      .withColumn("__cell",
+        element_at(cells(col(vecCol), centroids, None, 1), 1))
+      .withColumn("__cos", round(cosine(col(vecCol),
+        element_at(typedLit(centroids), col("__cell") + 1)), 6))
+
   /** Brute-force cosine top-k for one query vector: a single narrow map
     * over the corpus + TakeOrdered(k) — no shuffle beyond the final top-k
     * reduction. The correctness baseline, and the right plan for one-off
-    * queries even at scale (it reads each partition once). The query is
-    * pre-normalized driver-side; each corpus row pays one norm + one dot. */
+    * queries even at scale (it reads each partition once). Each corpus
+    * row pays one fused cosine against the raw query. */
   def topK(corpus: DataFrame, query: Seq[Double], k: Int,
-           vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val q = array(query.map(lit): _*)
-    corpus
-      .select(col(idCol), round(cosine(col(vecCol), q), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
+           vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
+    topKBy(corpus.select(col(idCol),
+      round(cosine(col(vecCol), array(query.map(lit): _*)), 6).as("score")),
+      k, idCol)
 
   /** Random-hyperplane (sign) LSH bucket key: `planes` gives
     * nPlanes x dim fixed coefficients (seeded deterministic), key packs
@@ -106,11 +224,9 @@ object Embed {
     val probePred = (0 until tables)
       .map(t => col(s"__k$t") === lit(qKeyRow.getLong(t)))
       .reduce(_ || _)
-    withKeys
-      .filter(probePred)
-      .select(col(idCol), round(cosine(col("__v"), qArr), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    topKBy(withKeys.filter(probePred)
+      .select(col(idCol), round(cosine(col("__v"), qArr), 6).as("score")),
+      k, idCol)
   }
 
   // --- IVF (inverted-file) ANN --------------------------------------------
@@ -123,31 +239,15 @@ object Embed {
   def sampleCentroids(corpus: DataFrame, n: Int,
                       vecCol: String = "embedding",
                       idCol: String = "vec_id"): Seq[Seq[Double]] =
-    corpus
-      // a zero-norm vector would normalize to all-NaN, and NaN cosine
-      // scores sort above every real score in greatest() — one poisoned
-      // centroid would swallow ALL assignments into its cell
-      .filter(dot(col(vecCol), col(vecCol)) > 0.0)
+    // a zero-norm vector would normalize to all-NaN, and NaN cosine
+    // scores sort above every real score in the assignment — one
+    // poisoned centroid would swallow ALL assignments into its cell
+    nonZero(corpus, vecCol)
       .select(col(vecCol), xxhash64(col(idCol)).as("__h"))
       .orderBy(col("__h")).limit(n)
       .select(normalized(col(vecCol)))
       .collect().toSeq
       .map(_.getSeq[Double](0).toSeq)
-
-  /** Nearest-centroid id for a vector column (argmax of cosine with each
-    * unit centroid — same argmax as dot-of-normalized since |v| is
-    * constant across centroids) — the IVF list assignment. */
-  def centroidId(vec: Column, centroids: Seq[Seq[Double]]): Column = {
-    require(centroids.nonEmpty, "no centroids")
-    if (centroids.size == 1) lit(0)
-    // fused kernel, RAW scores (this is the unrounded variant — see
-    // centroidIdRounded for the replay-exact one); the former
-    // greatest-of-k-struct form also java-serialized a k-wide literal
-    // tree into every task binary, which at 640 cells OOM'd task
-    // deserialization in the 100x graduation run
-    else element_at(graft.functions.VecMath.centroidTopCells(
-      vec, centroids, 1, rounded = false), 1)
-  }
 
   /** IVF top-k: assign the corpus to `nCentroids` inverted lists, probe
     * the query's `nProbe` nearest lists, rank candidates exactly.
@@ -157,37 +257,15 @@ object Embed {
   def topKIvf(corpus: DataFrame, query: Seq[Double], k: Int,
               nCentroids: Int = 16, nProbe: Int = 4,
               vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+    // cells are assigned on the RAW cosine here, so the probe is too
     val centroids = sampleCentroids(corpus, nCentroids, vecCol, idCol)
-    val qn = math.sqrt(query.map(x => x * x).sum)
-    val qUnit = query.map(_ / qn)
-    val probes = centroids.zipWithIndex
-      .map { case (c, i) => (c.zip(qUnit).map { case (a, b) => a * b }.sum, i) }
-      .sortBy(-_._1).take(nProbe).map(_._2).toSet
-    val q = array(qUnit.map(lit): _*)
-    corpus
-      .withColumn("__cell", centroidId(col(vecCol), centroids))
-      .filter(col("__cell").isin(probes.toSeq: _*))
-      .select(col(idCol), round(cosine(col(vecCol), q), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** Nearest-centroid id on the 6-decimal-ROUNDED cosine (ties break to
-    * the larger cid, the `greatest` struct order): k-means assignments
-    * must be reproducible across runs and against the SQL oracle, and
-    * raw float-vs-double scores can disagree in the 7th decimal right at
-    * a cell boundary. Rounding makes near-ties exact ties, and exact
-    * ties resolve identically on both sides. */
-  private def centroidIdRounded(vec: Column, centroids: Seq[Seq[Double]]): Column = {
-    require(centroids.nonEmpty, "no centroids")
-    if (centroids.size == 1) lit(0)
-    // one fused k x dim pass (VecMath.CentroidTopCells) — the former
-    // greatest-of-k-struct-subtrees form re-read the vector per centroid
-    // and collapsed at scale-proportional cell counts (k=160 turned a
-    // 100x k-means step into half an hour); scores, rounding, and the
-    // larger-cid tie-break are bit-identical by the expression's spec
-    else element_at(
-      graft.functions.VecMath.centroidTopCells(vec, centroids, 1), 1)
+    topKBy(corpus
+      .withColumn("ivf_cell", element_at(
+        cells(col(vecCol), centroids, None, 1, rounded = false), 1))
+      .filter(probe(query, centroids, nProbe, rounded = false))
+      .select(col(idCol),
+        round(cosine(col(vecCol), array(unit(query).map(lit): _*)), 6)
+          .as("score")), k, idCol)
   }
 
   /** Two-level routing index over a fine centroid set — the scale-safe
@@ -295,22 +373,6 @@ object Embed {
       math.min(cp, kept.size), nc, cp)
   }
 
-  /** Hierarchical [[centroidIdRounded]]: nearest fine cell via the
-    * two-level kernel — exact within the routed candidate set. */
-  private def centroidIdHierRounded(vec: Column,
-                                    idx: CentroidIndex): Column =
-    if (idx.fine.size == 1) lit(0)
-    else element_at(centroidTopCellsHier(vec, idx, 1), 1)
-
-  /** Top-`probes` fine cells via the two-level routed kernel — the
-    * hierarchical sibling of `VecMath.centroidTopCells` (same output
-    * contract: element 1 is the assignment, full array is the probe
-    * list under (score desc, cid desc)). */
-  def centroidTopCellsHier(vec: Column, idx: CentroidIndex, probes: Int,
-                           rounded: Boolean = true): Column =
-    graft.functions.VecMath.hierCentroidTopCells(vec, idx.fine,
-      idx.coarse, idx.children, idx.coarseProbes, probes, rounded)
-
   /** One distributed Lloyd step for spherical k-means: assign every
     * vector to its nearest centroid, then emit the per-(cell, dimension)
     * MEAN of the unit-normalized members. One narrow map (assignment is
@@ -323,18 +385,13 @@ object Embed {
   def kmeansStep(corpus: DataFrame, centroids: Seq[Seq[Double]],
                  vecCol: String = "embedding",
                  hier: Option[CentroidIndex] = None): DataFrame =
-    corpus
-      // same zero-norm guard as sampleCentroids: a zero vector normalizes
-      // to all-NaN, the NaN enters the cell average, and the poisoned
-      // centroid (norm NaN, not 0) would propagate through every
-      // remaining Lloyd iteration
-      .filter(dot(col(vecCol), col(vecCol)) > 0.0)
+    // same zero-norm guard as sampleCentroids: a zero vector normalizes
+    // to all-NaN, the NaN enters the cell average, and the poisoned
+    // centroid (norm NaN, not 0) would propagate through every remaining
+    // Lloyd iteration
+    nonZero(corpus, vecCol)
       .select(normalized(col(vecCol)).as("u"))
-      .select(hier.map { ix =>
-          require(ix.fine == centroids,
-            "hier index was built over a different centroid set")
-          centroidIdHierRounded(col("u"), ix)
-        }.getOrElse(centroidIdRounded(col("u"), centroids)).as("cell"),
+      .select(element_at(cells(col("u"), centroids, hier, 1), 1).as("cell"),
         posexplode(col("u")))
       .groupBy(col("cell"), col("pos").as("dim"))
       .agg(avg(col("col")).as("m"))
@@ -443,20 +500,13 @@ object Embed {
     // persisted cells were assigned by a different route than every
     // other consumer of that profile (the r13 ADVICE finding).
     val hierIdx =
-      if (hierAssign) Some(buildCentroidIndex(cents, nCoarse, coarseProbes))
-      else None
+      Option.when(hierAssign)(buildCentroidIndex(cents, nCoarse, coarseProbes))
     // rounded = true assigns on the 6-decimal-rounded cosine (the
     // kmeansStep convention) so the layout's cell membership replays
     // bit-stably in an external engine — the oracle-gated layouts use it
-    val assign = hierIdx match {
-      case Some(ix) =>
-        element_at(centroidTopCellsHier(col(vecCol), ix, 1, rounded), 1)
-      case None =>
-        if (rounded) centroidIdRounded(col(vecCol), cents)
-        else centroidId(col(vecCol), cents)
-    }
     corpus
-      .withColumn("ivf_cell", assign)
+      .withColumn("ivf_cell",
+        element_at(cells(col(vecCol), cents, hierIdx, 1, rounded), 1))
       .repartition(col("ivf_cell"))
       .write.partitionBy("ivf_cell").mode("overwrite").parquet(path)
     // persist the centroid matrix INSIDE the layout (after the overwrite,
@@ -547,20 +597,15 @@ object Embed {
                 batchId: Option[String] = None): Unit = {
     val spark = newVecs.sparkSession
     val cents = readIvfCentroids(spark, path)
-    val rounded = readIvfRounded(spark, path)
     // a hier layout replays its ROUTING, not just its centroids: the
     // index rebuilds deterministically from the persisted matrix + the
     // persisted knobs, so the append assigns exactly as the build did
-    val assign = readIvfHier(spark, path) match {
-      case Some((nc, cp)) =>
-        element_at(centroidTopCellsHier(col(vecCol),
-          buildCentroidIndex(cents, nc, cp), 1, rounded), 1)
-      case None =>
-        if (rounded) centroidIdRounded(col(vecCol), cents)
-        else centroidId(col(vecCol), cents)
+    val hier = readIvfHier(spark, path).map { case (nc, cp) =>
+      buildCentroidIndex(cents, nc, cp)
     }
     val assigned = newVecs
-      .withColumn("ivf_cell", assign)
+      .withColumn("ivf_cell", element_at(cells(col(vecCol), cents, hier, 1,
+        readIvfRounded(spark, path)), 1))
       .repartition(col("ivf_cell"))
     batchId match {
       case None =>
@@ -584,35 +629,19 @@ object Embed {
                     trained: Option[Seq[Seq[Double]]] = None): DataFrame = {
     val centroids = trained.getOrElse(
       sampleCentroids(stored, nCentroids, vecCol, idCol))
-    val qn = math.sqrt(query.map(x => x * x).sum)
-    val qUnit = query.map(_ / qn)
-    // probe ranking rounded to 6dp, ties to the LARGER cell id — the
-    // SAME direction the assignment kernel breaks ties
-    // (VecMath.centroidTopCells: score desc, cid desc), which is
-    // load-bearing, not cosmetic: when the centroid set contains
-    // duplicates (sampleCentroids over a corpus with repeated vectors —
-    // the identical-replica 1000x ScaleCheck samples 6400 centroids
-    // from 2000 distinct directions), every vector's data sits in the
-    // LARGEST cell id of its tied duplicate group. The old lower-id tie
-    // probed the other end of the group: a duplicate group wider than
-    // nProbe put ALL nProbe probes on empty duplicate cells and the
-    // probe returned 0 rows (measured — embed_ivf_update at factor
-    // 1000 returned rows=0 while factor 150, with fewer duplicates,
-    // returned 10). Rounding keeps the probe set replayable by an
-    // external engine (the oracle) computing the same scores along a
-    // different FP path.
-    val probes = centroids.zipWithIndex
-      .map { case (c, i) =>
-        (math.round(c.zip(qUnit).map { case (a, b) => a * b }.sum * 1e6)
-          / 1e6, i)
-      }
-      .sortBy { case (s, i) => (-s, -i) }.take(nProbe).map(_._2)
-    val q = array(qUnit.map(lit): _*)
-    stored
-      .filter(col("ivf_cell").isin(probes: _*))
-      .select(col(idCol), round(cosine(col(vecCol), q), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    // the probe ranks on the 6-decimal-rounded cosine, so the probe set
+    // replays in an external engine (the oracle) computing the same
+    // scores along a different FP path. Its larger-cell ties are
+    // load-bearing: when the centroid set holds duplicates
+    // (sampleCentroids over a corpus with repeated vectors — the
+    // identical-replica 1000x ScaleCheck samples 6400 centroids from
+    // 2000 distinct directions), every vector's data sits in the LARGEST
+    // cell id of its tied group; a lower-id tie put all nProbe probes on
+    // empty duplicate cells and returned 0 rows (measured at factor 1000)
+    topKBy(stored.filter(probe(query, centroids, nProbe, rounded = true))
+      .select(col(idCol),
+        round(cosine(col(vecCol), array(unit(query).map(lit): _*)), 6)
+          .as("score")), k, idCol)
   }
 
   // --- batch retrieval -------------------------------------------------------
@@ -627,20 +656,12 @@ object Embed {
     * candidate rows of three columns, never the vectors. */
   def topKBatch(queries: DataFrame, corpus: DataFrame, k: Int,
                 vecCol: String = "embedding", idCol: String = "vec_id",
-                qIdCol: String = "query_id"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col(qIdCol).as("query_id"),
-      col(vecCol).as("__qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col(idCol).asc)
-    corpus.select(col(idCol), col(vecCol).as("__cv"))
-      .join(broadcast(q))
-      .select(col("query_id"), col(idCol),
-        round(cosine(col("__cv"), col("__qv")), 6).as("score"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col("query_id"), col(idCol), col("score"))
-  }
+                qIdCol: String = "query_id"): DataFrame =
+    nearest(allPairs(
+        corpus.select(col(idCol).as("nid"), col(vecCol).as("__nv")),
+        queries.select(col(qIdCol).as("qid"), col(vecCol).as("__qv")),
+        None), k)
+      .select(col("qid").as("query_id"), col("nid").as(idCol), col("score"))
 
   /** Batch IVF retrieval against a [[writeIvf]] layout: each query is
     * assigned its `nProbe` nearest cells from the PERSISTED centroid
@@ -651,32 +672,21 @@ object Embed {
     * Per-query top-k is a window over candidates. This is the batch
     * serving shape at 100 TB; [[topKBatch]] is its verification twin.
     * Probe-cell ties on the 6-decimal rounded cosine break to the
-    * smaller cell id (deterministic, oracle-replayable). */
+    * larger cell id, as the assignment's do (deterministic,
+    * oracle-replayable). */
   def topKBatchIvf(queries: DataFrame, stored: DataFrame, k: Int,
                    centroids: Seq[Seq[Double]], nProbe: Int,
                    vecCol: String = "embedding", idCol: String = "vec_id",
                    qIdCol: String = "query_id"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(nProbe >= 1 && nProbe <= centroids.size, "bad nProbe")
-    val cellScores = array(centroids.zipWithIndex.map { case (c, i) =>
-      struct((-round(cosine(col("__qv"), array(c.map(lit): _*)), 6))
-        .as("negscore"), lit(i).as("cid"))
-    }: _*)
-    val probe = transform(slice(array_sort(cellScores), 1, nProbe),
-      s => s.getField("cid"))
-    val q = queries
-      .select(col(qIdCol).as("query_id"), col(vecCol).as("__qv"))
-      .select(col("query_id"), col("__qv"),
-        explode(probe).as("ivf_cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col(idCol).asc)
-    stored.select(col(idCol), col(vecCol).as("__cv"), col("ivf_cell"))
-      .join(broadcast(q), "ivf_cell")
-      .select(col("query_id"), col(idCol),
-        round(cosine(col("__cv"), col("__qv")), 6).as("score"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col("query_id"), col(idCol), col("score"))
+    nearest(cellPairs(
+        stored.select(col(idCol).as("nid"), col(vecCol).as("__nv"),
+          col("ivf_cell")),
+        broadcast(queries.select(col(qIdCol).as("qid"),
+          col(vecCol).as("__qv"),
+          cells(col(vecCol), centroids, None, nProbe).as("__cells"))),
+        None), k)
+      .select(col("qid").as("query_id"), col("nid").as(idCol), col("score"))
   }
 
   // --- int8 vector quantization ---------------------------------------------
@@ -716,7 +726,7 @@ object Embed {
     * inner-product score `dot(x, c) - |c|²/2` (the L2 argmin rewritten
     * without the per-row constant |x|²; ties break to the larger code,
     * the `greatest` struct order) — same reproducibility contract as
-    * [[centroidIdRounded]], mirrored exactly by the SQL oracle. */
+    * [[cells]], mirrored exactly by the SQL oracle. */
   private def codeIdRounded(sub: Column, book: Seq[Seq[Double]]): Column =
     if (book.size == 1) lit(0)
     else greatest(book.zipWithIndex.map { case (c, i) =>
@@ -737,8 +747,7 @@ object Embed {
              vecCol: String = "embedding"): DataFrame = {
     val m = books.size
     val subDim = books.head.head.size
-    corpus
-      .filter(dot(col(vecCol), col(vecCol)) > 0.0) // zero-norm guard, as kmeansStep
+    nonZero(corpus, vecCol) // zero-norm guard, as kmeansStep
       .select(normalized(col(vecCol)).as("u"))
       .select(posexplode(array((0 until m).map { s =>
         Text.bindOnce(subVec(col("u"), subDim, s)) { sv =>
@@ -795,8 +804,7 @@ object Embed {
                vecCol: String = "embedding",
                idCol: String = "vec_id"): DataFrame = {
     val subDim = books.head.head.size
-    corpus
-      .filter(dot(col(vecCol), col(vecCol)) > 0.0)
+    nonZero(corpus, vecCol)
       .select(col(idCol), normalized(col(vecCol)).as("u"))
       .select(col(idCol), array(books.indices.map { s =>
         codeIdRounded(subVec(col("u"), subDim, s), books(s))
@@ -811,14 +819,9 @@ object Embed {
     * quantization error, verified in LlmSpec against brute force. */
   def pqTopKAdc(codes: DataFrame, books: Seq[Seq[Seq[Double]]],
                 query: Seq[Double], k: Int,
-                idCol: String = "vec_id"): DataFrame = {
-    val qn = math.sqrt(query.map(x => x * x).sum)
-    codes
-      .select(col(idCol),
-        adcScore(col("codes"), books, query.map(_ / qn)).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
+                idCol: String = "vec_id"): DataFrame =
+    topKBy(codes.select(col(idCol),
+      adcScore(col("codes"), books, unit(query)).as("score")), k, idCol)
 
   /** Two-stage retrieval, the standard recall-recovery pattern: a cheap
     * ADC pass over the PQ codes builds a `k·overscan` shortlist (no
@@ -837,10 +840,9 @@ object Embed {
     // raw query: cosine() normalizes both sides itself (same contract
     // as topK — pre-dividing would only add FP noise vs the oracle)
     val q = array(query.map(lit): _*)
-    corpus.join(broadcast(short), Seq(idCol))
-      .select(col(idCol), round(cosine(col(vecCol), q), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    topKBy(corpus.join(broadcast(short), Seq(idCol))
+      .select(col(idCol), round(cosine(col(vecCol), q), 6).as("score")),
+      k, idCol)
   }
 
   /** The ADC score of a codes column: the unit query's per-(subspace,
@@ -910,13 +912,9 @@ object Embed {
     // and does not grow with nCentroids, so only the coarse term needs
     // the route. (This layout has no appender, so no meta knob: the
     // flag only shapes the one-shot build.)
-    val cellAssign =
-      if (hierAssign)
-        element_at(centroidTopCellsHier(col("u"),
-          buildCentroidIndex(cents), 1), 1)
-      else centroidIdRounded(col("u"), cents)
-    corpus
-      .filter(dot(col(vecCol), col(vecCol)) > 0.0)
+    val cellAssign = element_at(cells(col("u"), cents,
+      Option.when(hierAssign)(buildCentroidIndex(cents)), 1), 1)
+    nonZero(corpus, vecCol)
       .select(col(idCol), normalized(col(vecCol)).as("u"))
       .select(col(idCol),
         array(bks.indices.map(s =>
@@ -946,22 +944,15 @@ object Embed {
     * partition-column predicate (only `nProbe` directories are listed
     * and read), and scoring touches only the m-byte codes — no vector
     * data anywhere in the plan. Pass the layout's own persisted
-    * quantizers ([[readIvfCentroids]], [[readPqBooks]]). */
+    * quantizers ([[readIvfCentroids]], [[readPqBooks]]). The probe ranks
+    * on the rounded cosine the layout assigned its cells by. */
   def topKIvfPqStored(stored: DataFrame, query: Seq[Double], k: Int,
                       nProbe: Int, cents: Seq[Seq[Double]],
                       books: Seq[Seq[Seq[Double]]],
-                      idCol: String = "vec_id"): DataFrame = {
-    val qn = math.sqrt(query.map(x => x * x).sum)
-    val qUnit = query.map(_ / qn)
-    val probes = cents.zipWithIndex
-      .map { case (c, i) => (c.zip(qUnit).map { case (a, b) => a * b }.sum, i) }
-      .sortBy(-_._1).take(nProbe).map(_._2)
-    stored
-      .filter(col("ivf_cell").isin(probes: _*))
-      .select(col(idCol), adcScore(col("codes"), books, qUnit).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
+                      idCol: String = "vec_id"): DataFrame =
+    topKBy(stored.filter(probe(query, cents, nProbe, rounded = true))
+      .select(col(idCol),
+        adcScore(col("codes"), books, unit(query)).as("score")), k, idCol)
 
   // --- SemDeDup (semantic deduplication) ------------------------------------
 
@@ -1001,17 +992,12 @@ object Embed {
     * re-score the whole corpus per consumer. */
   private def assignCells(corpus: DataFrame, centroids: Seq[Seq[Double]],
                           vecCol: String, idCol: String,
-                          hier: Option[CentroidIndex]): DataFrame = {
-    require(hier.forall(_.fine == centroids),
-      "hier index was built over a different centroid set")
-    corpus
-      .filter(dot(col(vecCol), col(vecCol)) > 0.0)
+                          hier: Option[CentroidIndex]): DataFrame =
+    nonZero(corpus, vecCol)
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism * 2)
       .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("cell", hier.map(centroidIdHierRounded(col("v"), _))
-        .getOrElse(centroidIdRounded(col("v"), centroids)))
+      .withColumn("cell", element_at(cells(col("v"), centroids, hier, 1), 1))
       .localCheckpoint()
-  }
 
   /** SemDeDup survivors: the corpus minus every non-minimal member of a
     * within-cluster near-dup component ([[Dedup.deduplicateClustered]]
@@ -1093,19 +1079,9 @@ object Embed {
                      keepFrac: Double,
                      vecCol: String = "embedding", idCol: String = "vec_id")
       : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(keepFrac >= 0.0 && keepFrac <= 1.0, "keepFrac must be in [0,1]")
-    val scored = centroids.zipWithIndex.map { case (c, i) =>
-      struct(round(cosine(col(vecCol), array(c.map(lit): _*)), 6).as("score"),
-        lit(i).as("cid"))
-    }
-    val best =
-      if (centroids.size == 1) scored.head else greatest(scored: _*)
-    val assigned = corpus
-      .filter(dot(col(vecCol), col(vecCol)) > 0.0)
-      .withColumn("__best", best)
-      .select(col(idCol), col("__best.cid").as("cell"),
-        col("__best.score").as("proto"))
+    val assigned = nearestCell(corpus, centroids, vecCol)
+      .select(col(idCol), col("__cell").as("cell"), col("__cos").as("proto"))
     val byCell = Window.partitionBy(col("cell"))
     assigned
       .withColumn("__rank", row_number().over(
@@ -1208,7 +1184,7 @@ object Embed {
     * broadcasts (bounded: batch-size queries), the corpus streams
     * through ONE narrow map — no corpus shuffle — and the per-query
     * top-k is a window over only the scored candidates. At billions of
-    * vectors, swap the corpus scan for the IVF layout ([[ivfSearch]]
+    * vectors, swap the corpus scan for the IVF layout ([[topKBatchIvf]]
     * shape) so each query scores only its probed cells.
     *
     * Output: qid, neg_id, label (the negative's), score, rnk. */
@@ -1216,22 +1192,15 @@ object Embed {
                     vecCol: String = "embedding", idCol: String = "vec_id",
                     labelCol: String = "label"): DataFrame = {
     require(queryIds.nonEmpty && k > 0)
-    import org.apache.spark.sql.expressions.Window
-    val q = corpus.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"),
-        col(labelCol).as("qlabel"))
-    corpus
-      .join(broadcast(q), col(labelCol) =!= col("qlabel"))
-      .withColumn("score", round(cosine(col(vecCol), col("qv")), 6))
-      // vectors off before the top-k window (the knnGraph payload rule)
-      .select(col("qid"), col(idCol).as("neg_id"),
-        col(labelCol).as("label"), col("score"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("score").desc, col("neg_id").asc)))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("neg_id"), col("label"),
-        col("score"), col("rnk").cast("long").as("rnk"))
+    nearest(allPairs(
+        corpus.select(col(idCol).as("nid"), col(vecCol).as("__nv"),
+          col(labelCol).as("__nl")),
+        corpus.filter(col(idCol).isin(queryIds: _*))
+          .select(col(idCol).as("qid"), col(vecCol).as("__qv"),
+            col(labelCol).as("__ql")),
+        Some(col("__nl") =!= col("__ql"))), k, "__nl")
+      .select(col("qid"), col("nid").as("neg_id"), col("__nl").as("label"),
+        col("score"), col("rnk"))
   }
 
   /** Deterministic ±1 projection matrix from md5 parity — the
@@ -1289,31 +1258,20 @@ object Embed {
   def knnGraph(corpus: DataFrame, k: Int, vecCol: String = "embedding",
                idCol: String = "vec_id"): DataFrame = {
     require(k > 0, "k must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val nonZero = corpus.filter(dot(col(vecCol), col(vecCol)) > 0.0)
-    val nbrs = nonZero.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("__nv"))
-    nonZero.select(col(idCol).as("qid"), col(vecCol).as("__qv"))
-      // spread the n·(n−1) scoring pass across the cluster: the query
-      // side otherwise inherits the SCAN's split count (one file → one
-      // task running every cosine; r14 measured the whole gate serial
-      // on it). One narrow-row shuffle of n rows buys full parallelism
-      // for the quadratic stage — the minhashLsh/semDedupPairs house
-      // pattern.
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism * 2)
-      .join(broadcast(nbrs), col("neighbor_id") =!= col("qid"))
-      .withColumn("score", round(cosine(col("__qv"), col("__nv")), 6))
-      // project the vector payloads OFF before the top-k window: the
-      // range shuffle + sort otherwise carries both full vectors per
-      // candidate row (~20x the bytes of (qid, neighbor_id, score)) —
-      // at a 100x scale run this sort was the whole operator
-      .select(col("qid"), col("neighbor_id"), col("score"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("score").desc, col("neighbor_id").asc)))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("neighbor_id"), col("score"),
-        col("rnk").cast("long").as("rnk"))
+    val rows = nonZero(corpus, vecCol)
+    nearest(allPairs(
+        rows.select(col(idCol).as("qid"), col(vecCol).as("__qv"))
+          // spread the n·(n−1) scoring pass across the cluster: the query
+          // side otherwise inherits the SCAN's split count (one file →
+          // one task running every cosine; r14 measured the whole gate
+          // serial on it). One narrow-row shuffle of n rows buys full
+          // parallelism for the quadratic stage — the
+          // minhashLsh/semDedupPairs house pattern.
+          .repartition(corpus.sparkSession.sparkContext.defaultParallelism * 2),
+        rows.select(col(idCol).as("nid"), col(vecCol).as("__nv")),
+        Some(col("nid") =!= col("qid"))), k)
+      .select(col("qid"), col("nid").as("neighbor_id"), col("score"),
+        col("rnk"))
   }
 
   /** IVF-celled k-NN graph — the scale path of [[knnGraph]]: assign
@@ -1326,8 +1284,8 @@ object Embed {
     * unprobed cell is missed; raise `probes` to taste.
     *
     * Assignment and probe order use the 6-decimal-ROUNDED cosine with
-    * the larger-cid tie-break ([[centroidIdRounded]]'s convention), so
-    * the whole graph replays externally given the same centroids.
+    * the larger-cid tie-break ([[cells]]' convention), so the whole
+    * graph replays externally given the same centroids.
     *
     * Output: qid, neighbor_id, score (rounded 6), rnk (1..k). */
   def knnGraphCells(corpus: DataFrame, k: Int, centroids: Seq[Seq[Double]],
@@ -1336,43 +1294,21 @@ object Embed {
                     hier: Option[CentroidIndex] = None): DataFrame = {
     require(k > 0 && probes > 0 && centroids.nonEmpty)
     require(probes <= centroids.size, "probes must be <= nCells")
-    require(hier.forall(_.fine == centroids),
-      "hier index was built over a different centroid set")
-    import org.apache.spark.sql.expressions.Window
-    val nonZero = corpus.filter(dot(col(vecCol), col(vecCol)) > 0.0)
-    // ONE corpus pass computes the top-`probes` cells per vector via the
-    // fused CentroidTopCells kernel (k x dim multiplies, vector read
-    // once — or the two-level routed kernel under `hier`, √k·dim per
-    // row, for corpus-proportional cell counts); both join sides project
-    // off the checkpointed frame. Element 1 is the centroidIdRounded
-    // assignment (larger-cid ties), the full array is the probe list
-    // under the same (score desc, cid desc) order the old
-    // reverse(array_sort(struct...)) form produced.
-    val cellsExpr = hier.map(centroidTopCellsHier(col(vecCol), _, probes))
-      .getOrElse(graft.functions.VecMath.centroidTopCells(col(vecCol),
-        centroids, probes))
-    val base = nonZero.select(col(idCol).as("__id"),
-        col(vecCol).as("__vec"), cellsExpr.as("__cells"))
+    // ONE corpus pass computes the top-`probes` cells per vector; both
+    // join sides project off the checkpointed frame. Element 1 is the
+    // assignment, the full array the probe list.
+    val base = nonZero(corpus, vecCol).select(col(idCol).as("__id"),
+        col(vecCol).as("__vec"),
+        cells(col(vecCol), centroids, hier, probes).as("__cells"))
       .localCheckpoint()
-    val assigned = base.select(col("__id").as("neighbor_id"),
-      col("__vec").as("__nv"),
-      element_at(col("__cells"), 1).as("__cell"))
-    base.select(col("__id").as("qid"), col("__vec").as("__qv"),
-        explode(col("__cells")).as("__cell"))
-      .join(assigned, "__cell")
-      .filter(col("neighbor_id") =!= col("qid"))
-      .withColumn("score", round(cosine(col("__qv"), col("__nv")), 6))
-      // same payload discipline as [[knnGraph]]: the top-k window must
-      // sort (qid, neighbor_id, score) rows, never rows still carrying
-      // the two probe vectors — the 100x ScaleCheck graduation caught
-      // this sort moving ~20x the necessary bytes and spilling
-      .select(col("qid"), col("neighbor_id"), col("score"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("score").desc, col("neighbor_id").asc)))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("neighbor_id"), col("score"),
-        col("rnk").cast("long").as("rnk"))
+    nearest(cellPairs(
+        base.select(col("__id").as("nid"), col("__vec").as("__nv"),
+          element_at(col("__cells"), 1).as("ivf_cell")),
+        base.select(col("__id").as("qid"), col("__vec").as("__qv"),
+          col("__cells")),
+        Some(col("nid") =!= col("qid"))), k)
+      .select(col("qid"), col("nid").as("neighbor_id"), col("score"),
+        col("rnk"))
   }
 
   /** IVF cluster-balance report — the health check before trusting an
@@ -1389,20 +1325,14 @@ object Embed {
   def clusterBalance(corpus: DataFrame, centroids: Seq[Seq[Double]],
                      vecCol: String = "embedding",
                      hier: Option[CentroidIndex] = None): DataFrame = {
-    require(centroids.nonEmpty)
-    require(hier.forall(_.fine == centroids),
-      "hier index was built over a different centroid set")
-    val sizes = corpus
-      .filter(dot(col(vecCol), col(vecCol)) > 0.0)
-      .select(hier.map(ix =>
-          centroidIdHierRounded(normalized(col(vecCol)), ix))
-        .getOrElse(centroidIdRounded(normalized(col(vecCol)), centroids))
-        .as("cell"))
+    val sizes = nonZero(corpus, vecCol)
+      .select(element_at(cells(normalized(col(vecCol)), centroids, hier, 1),
+        1).as("cell"))
       .groupBy(col("cell")).agg(count(lit(1)).as("sz"))
     // global share per cell: the window runs over the k-row cell frame,
     // not the corpus — a single partition of k rows is the whole point
     val p = col("sz").cast("double") / sum(col("sz")).over(
-      org.apache.spark.sql.expressions.Window.partitionBy())
+      Window.partitionBy())
     sizes
       .withColumn("__plogp", p * log2(p))
       .groupBy()
@@ -1444,12 +1374,11 @@ object Embed {
     require(k > 0 && overscan >= 1 && lambda >= 0 && lambda <= 1)
     val spark = corpus.sparkSession
     val q = array(query.map(lit): _*)
-    val short = corpus.filter(dot(col(vecCol), col(vecCol)) > 0.0)
+    val short = topKBy(nonZero(corpus, vecCol)
       .select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"),
-        round(cosine(col(vecCol), q), 6).as("rel"))
-      .orderBy(col("rel").desc, col("id").asc)
-      .limit(k * overscan)
+        round(cosine(col(vecCol), q), 6).as("rel")),
+      k * overscan, "id", score = "rel")
       .collect()
     def rnd6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -1540,29 +1469,22 @@ object Embed {
                   vecCol: String = "embedding", idCol: String = "vec_id",
                   labelCol: String = "label"): DataFrame = {
     require(k > 0, "k must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val lab = labeled.filter(dot(col(vecCol), col(vecCol)) > 0.0)
-      .select(col(idCol).as("__nid"), col(vecCol).as("__nv"),
-        col(labelCol).as("__nl"))
-    val votes = queries.filter(dot(col(vecCol), col(vecCol)) > 0.0)
-      .select(col(idCol).as("qid"), col(vecCol).as("__qv"))
-      .join(broadcast(lab), col("__nid") =!= col("qid"))
-      .withColumn("__score", round(cosine(col("__qv"), col("__nv")), 6))
-      // vectors off before the top-k window (the knnGraph payload rule)
-      .select(col("qid"), col("__nid"), col("__nl"), col("__score"))
-      .withColumn("__rnk", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("__score").desc, col("__nid").asc)))
-      .filter(col("__rnk") <= k)
-      .groupBy(col("qid"), col("__nl").as("pred_label"))
-      .agg(count(lit(1)).as("n_votes"))
-    votes
-      .withColumn("__vr", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("n_votes").desc, col("pred_label").asc)))
-      .filter(col("__vr") === 1)
-      .select(col("qid"), col("pred_label"), col("n_votes"))
+    vote(nearest(allPairs(
+        nonZero(queries, vecCol)
+          .select(col(idCol).as("qid"), col(vecCol).as("__qv")),
+        nonZero(labeled, vecCol).select(col(idCol).as("nid"),
+          col(vecCol).as("__nv"), col(labelCol).as("__nl")),
+        Some(col("nid") =!= col("qid"))), k, "__nl"))
   }
+
+  /** The k-NN label vote over [[nearest]] rows carrying the neighbour
+    * label `__nl`: each query's most frequent label, more votes first,
+    * then the SMALLER label. Output: qid, pred_label, n_votes. */
+  private def vote(nbrs: DataFrame): DataFrame =
+    topKBy(nbrs.groupBy(col("qid"), col("__nl").as("pred_label"))
+        .agg(count(lit(1)).as("n_votes")),
+      1, "pred_label", Some("qid"), score = "n_votes")
+      .select(col("qid"), col("pred_label"), col("n_votes"))
 
   /** Cell-probed k-NN label vote — the serving shape of [[knnClassify]].
     * The brute form broadcasts the labeled set and scores every
@@ -1586,38 +1508,15 @@ object Embed {
                        hier: Option[CentroidIndex] = None): DataFrame = {
     require(k > 0 && probes > 0 && centroids.nonEmpty)
     require(probes <= centroids.size, "probes must be <= nCells")
-    require(hier.forall(_.fine == centroids),
-      "hier index was built over a different centroid set")
-    import org.apache.spark.sql.expressions.Window
-    val probeCells = hier.map(centroidTopCellsHier(col(vecCol), _, probes))
-      .getOrElse(graft.functions.VecMath.centroidTopCells(col(vecCol),
-        centroids, probes))
-    val oneCell = hier.map(centroidTopCellsHier(col(vecCol), _, 1))
-      .getOrElse(graft.functions.VecMath.centroidTopCells(col(vecCol),
-        centroids, 1))
-    val lab = labeled.filter(dot(col(vecCol), col(vecCol)) > 0.0)
-      .select(col(idCol).as("__nid"), col(vecCol).as("__nv"),
-        col(labelCol).as("__nl"), element_at(oneCell, 1).as("__cell"))
-    val votes = queries.filter(dot(col(vecCol), col(vecCol)) > 0.0)
-      .select(col(idCol).as("qid"), col(vecCol).as("__qv"),
-        explode(probeCells).as("__cell"))
-      .join(lab, "__cell")
-      .filter(col("__nid") =!= col("qid"))
-      .withColumn("__score", round(cosine(col("__qv"), col("__nv")), 6))
-      // vectors off before the top-k window (the knnGraph payload rule)
-      .select(col("qid"), col("__nid"), col("__nl"), col("__score"))
-      .withColumn("__rnk", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("__score").desc, col("__nid").asc)))
-      .filter(col("__rnk") <= k)
-      .groupBy(col("qid"), col("__nl").as("pred_label"))
-      .agg(count(lit(1)).as("n_votes"))
-    votes
-      .withColumn("__vr", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("n_votes").desc, col("pred_label").asc)))
-      .filter(col("__vr") === 1)
-      .select(col("qid"), col("pred_label"), col("n_votes"))
+    vote(nearest(cellPairs(
+        nonZero(labeled, vecCol).select(col(idCol).as("nid"),
+          col(vecCol).as("__nv"), col(labelCol).as("__nl"),
+          element_at(cells(col(vecCol), centroids, hier, 1), 1)
+            .as("ivf_cell")),
+        nonZero(queries, vecCol).select(col(idCol).as("qid"),
+          col(vecCol).as("__qv"),
+          cells(col(vecCol), centroids, hier, probes).as("__cells")),
+        Some(col("nid") =!= col("qid"))), k, "__nl"))
   }
 
   /** Embedding outlier report: vectors whose BEST centroid cosine is
@@ -1630,19 +1529,11 @@ object Embed {
     * most alien first after the caller's orderBy. */
   def embedOutliers(corpus: DataFrame, centroids: Seq[Seq[Double]],
                     threshold: Double, vecCol: String = "embedding",
-                    idCol: String = "vec_id"): DataFrame = {
-    require(centroids.nonEmpty)
-    val nonZero = corpus.filter(dot(col(vecCol), col(vecCol)) > 0.0)
-    val scored = centroids.zipWithIndex.map { case (c, i) =>
-      struct(round(cosine(col(vecCol), array(c.map(lit): _*)), 6)
-        .as("score"), lit(i).as("cid"))
-    }
-    val win = if (centroids.size == 1) scored.head else greatest(scored: _*)
-    nonZero
-      .select(col(idCol), win.getField("cid").as("best_cell"),
-        win.getField("score").as("best_cos"))
+                    idCol: String = "vec_id"): DataFrame =
+    nearestCell(corpus, centroids, vecCol)
+      .select(col(idCol), col("__cell").as("best_cell"),
+        col("__cos").as("best_cos"))
       .filter(col("best_cos") < threshold)
-  }
 
   /** ANN recall measurement — "measure, don't guess" for the IVF
     * probe-count trade: for a batch of query ids, compare the celled
@@ -1660,31 +1551,19 @@ object Embed {
                 vecCol: String = "embedding",
                 idCol: String = "vec_id"): DataFrame = {
     require(k > 0 && probes > 0 && queryIds.nonEmpty)
-    import org.apache.spark.sql.expressions.Window
     val spark = corpus.sparkSession
-    val nonZero = corpus.filter(dot(col(vecCol), col(vecCol)) > 0.0)
-    val q = nonZero.filter(col(idCol).isin(queryIds: _*))
+    val rows = nonZero(corpus, vecCol)
+    val q = rows.filter(col(idCol).isin(queryIds: _*))
       .select(col(idCol).as("qid"), col(vecCol).as("__qv"))
-    def topK(scored: DataFrame) = scored
-      // vectors off before the top-k window (the knnGraph payload rule)
-      .select(col("qid"), col("nid"), col("__s"))
-      .withColumn("__rnk", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("__s").desc, col("nid").asc)))
-      .filter(col("__rnk") <= k).select(col("qid"), col("nid"))
-    val brute = topK(nonZero
-      .select(col(idCol).as("nid"), col(vecCol).as("__nv"))
-      .join(broadcast(q), col("nid") =!= col("qid"))
-      .withColumn("__s", round(cosine(col("__qv"), col("__nv")), 6)))
-    val qCells = q.withColumn("__cell", explode(
-      graft.functions.VecMath.centroidTopCells(col("__qv"), centroids,
-        probes)))
-    val assigned = nonZero.select(col(idCol).as("nid"),
-      col(vecCol).as("__nv"),
-      centroidIdRounded(col(vecCol), centroids).as("__cell"))
-    val celled = topK(qCells.join(assigned, "__cell")
-      .filter(col("nid") =!= col("qid"))
-      .withColumn("__s", round(cosine(col("__qv"), col("__nv")), 6)))
+    val nbrs = rows.select(col(idCol).as("nid"), col(vecCol).as("__nv"))
+    val notSelf = Some(col("nid") =!= col("qid"))
+    def ids(pairs: DataFrame) = nearest(pairs, k).select(col("qid"), col("nid"))
+    val brute = ids(allPairs(nbrs, q, notSelf))
+    val celled = ids(cellPairs(
+      nbrs.withColumn("ivf_cell",
+        element_at(cells(col("__nv"), centroids, None, 1), 1)),
+      q.withColumn("__cells", cells(col("__qv"), centroids, None, probes)),
+      notSelf))
     val nTruth = brute.count()
     val nHits = brute.join(celled, Seq("qid", "nid"), "left_semi").count()
     val nQ = q.count()
@@ -1708,25 +1587,13 @@ object Embed {
     *
     * Output: `cell`, `n`, `mean_cos`, `min_cos`, `max_cos` (rounded 6). */
   def clusterStats(corpus: DataFrame, centroids: Seq[Seq[Double]],
-                   vecCol: String = "embedding"): DataFrame = {
-    require(centroids.nonEmpty)
-    val nonZero = corpus.filter(dot(col(vecCol), col(vecCol)) > 0.0)
-    val scored = centroids.zipWithIndex.map { case (c, i) =>
-      struct(round(cosine(col(vecCol), array(c.map(lit): _*)), 6)
-        .as("score"), lit(i).as("cid"))
-    }
-    val win =
-      if (centroids.size == 1) scored.head
-      else greatest(scored: _*)
-    nonZero
-      .select(win.getField("cid").as("cell"),
-        win.getField("score").as("__s"))
-      .groupBy(col("cell"))
+                   vecCol: String = "embedding"): DataFrame =
+    nearestCell(corpus, centroids, vecCol)
+      .groupBy(col("__cell").as("cell"))
       .agg(count(lit(1)).as("n"),
-        round(avg(col("__s")), 6).as("mean_cos"),
-        min(col("__s")).as("min_cos"),
-        max(col("__s")).as("max_cos"))
-  }
+        round(avg(col("__cos")), 6).as("mean_cos"),
+        min(col("__cos")).as("min_cos"),
+        max(col("__cos")).as("max_cos"))
 
   /** Mutual-kNN clustering over a neighbor graph (the output of
     * [[knnGraph]] or [[knnGraphCells]]): keep only RECIPROCATED edges
@@ -1779,14 +1646,14 @@ object Embed {
     require(iters >= 1)
     val spark = corpus.sparkSession
     val dim = dimOf(corpus, vecCol)
-    val nonZero = corpus.filter(dot(col(vecCol), col(vecCol)) > 0.0)
-    val n = nonZero.count()
+    val rows = nonZero(corpus, vecCol)
+    val n = rows.count()
     require(n > 0, "no non-zero vectors")
     var v: Seq[Double] = Seq.fill(dim)(1.0 / math.sqrt(dim.toDouble))
     var sNorm = 0.0
     for (_ <- 0 until iters) {
       val vLit = array(v.map(lit): _*)
-      val sums = nonZero
+      val sums = rows
         .select(posexplode(col(vecCol)).as(Seq("dim", "__xi")),
           dot(col(vecCol), vLit).as("__dv"))
         .groupBy(col("dim"))

@@ -56,7 +56,8 @@ class BatchRetrievalSpec extends SparkFunSuite {
     val cellOf = stored.select($"vec_id", $"ivf_cell".cast("int"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val qCell = queries.select($"query_id",
-      Embed.centroidId($"embedding", cents).as("c"))
+      element_at(graft.functions.VecMath.centroidTopCells($"embedding",
+        cents, 1, rounded = false), 1).as("c"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     // probe-cell choice rounds the cosine; allow equality with the
     // unrounded assignment's cell only when they agree (they do here)

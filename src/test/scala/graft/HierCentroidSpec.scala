@@ -21,6 +21,14 @@ import graft.llm.Embed
   * deterministic so assignments replay across runs. */
 class HierCentroidSpec extends AnyFunSuite {
 
+  /** The routed kernel over a built index (the `hier` branch of the
+    * engine's cell assignment). */
+  private def hierCells(v: org.apache.spark.sql.Column,
+                        idx: Embed.CentroidIndex, probes: Int,
+                        rounded: Boolean = true) =
+    VecMath.hierCentroidTopCells(v, idx.fine, idx.coarse, idx.children,
+      idx.coarseProbes, probes, rounded)
+
   private def randVecs(n: Int, dim: Int, seed: Int) = {
     val rnd = new scala.util.Random(seed)
     (0 until n).map { i =>
@@ -66,7 +74,7 @@ class HierCentroidSpec extends AnyFunSuite {
     val df = Seq((1L, Seq(1.0f, 0.0f, 0.0f)), (2L, Seq(0.0f, 1.0f, 0.0f)))
       .toDF("id", "v")
     val nulls = df.select(element_at(
-        Embed.centroidTopCellsHier(col("v"), idx, 1), 1).as("c"))
+        hierCells(col("v"), idx, 1), 1).as("c"))
       .filter(col("c").isNull).count()
     assert(nulls == 0, "null cell leaked from the filtered index")
   }
@@ -92,7 +100,7 @@ class HierCentroidSpec extends AnyFunSuite {
       val idx = idx0.copy(coarseProbes = idx0.coarse.size) // probe ALL
       for (probes <- Seq(1, 2, 5); rounded <- Seq(true, false)) {
         val got = df.select(col("id"),
-          Embed.centroidTopCellsHier(col("v"), idx, probes, rounded)
+          hierCells(col("v"), idx, probes, rounded)
             .as("c"))
         val want = df.select(col("id"),
           VecMath.centroidTopCells(col("v"), cents, probes, rounded)
@@ -116,7 +124,7 @@ class HierCentroidSpec extends AnyFunSuite {
       (3L, Seq[java.lang.Double](0.0, 1.0, 0.0))
     ).toDF("id", "v")
     val out = df.select(col("id"),
-      Embed.centroidTopCellsHier(col("v"), idx, 1).as("c")).collect()
+      hierCells(col("v"), idx, 1).as("c")).collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null
         else r.getSeq[Int](1))).toMap
     assert(out(1L) == null && out(2L) == null)
@@ -151,7 +159,7 @@ class HierCentroidSpec extends AnyFunSuite {
     }
     val df = rows.toDF("id", "v").localCheckpoint()
     val hier = df.select(col("id"),
-      element_at(Embed.centroidTopCellsHier(col("v"), idx, 1), 1)
+      element_at(hierCells(col("v"), idx, 1), 1)
         .as("cell"))
     val flat = df.select(col("id"),
       element_at(VecMath.centroidTopCells(col("v"), cents, 1), 1)
@@ -191,7 +199,7 @@ class HierCentroidSpec extends AnyFunSuite {
     }
     val idx = Embed.buildCentroidIndex(cents, nc, cp)
     val want = b.select(col("vec_id"),
-      element_at(Embed.centroidTopCellsHier(col("embedding"), idx, 1), 1)
+      element_at(hierCells(col("embedding"), idx, 1), 1)
         .as("cell"))
     val stored = sp.read.parquet(tmp).filter(col("vec_id") >= 300)
       .select(col("vec_id"), col("ivf_cell").cast("int").as("cell"))
